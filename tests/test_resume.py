@@ -10,7 +10,7 @@ import os
 import pandas as pd
 import pytest
 
-from yams_spark.plans.er_pipeline import PipelineConfig, run_pipeline
+from yams_spark.plans.er_pipeline import METRICS_SCHEMA, PipelineConfig, run_pipeline
 from yams_spark.sources.pages import generate_pages_pdf
 
 
@@ -45,6 +45,8 @@ def test_metrics_lineage_rows(spark, small_corpus, tmp_path_factory) -> None:
     ckpt = str(tmp_path_factory.mktemp("ckpt_metrics"))
     pages = spark.createDataFrame(small_corpus[["url", "warc_ts", "html", "text", "lang"]])
     out = run_pipeline(spark, pages, PipelineConfig(checkpoint_dir=ckpt, run_id="mrun"))
+    # the lineage table is exactly METRICS_SCHEMA: names, order and types
+    assert out["metrics"].dtypes == spark.createDataFrame([], METRICS_SCHEMA).dtypes
     metrics = out["metrics"].toPandas()
     stages = set(metrics["stage"])
     assert {"sign", "block", "pair", "score"}.issubset(stages)
@@ -54,3 +56,24 @@ def test_metrics_lineage_rows(spark, small_corpus, tmp_path_factory) -> None:
     assert sum(hist) == score_rows.iloc[0]["pair_count"]
     # per-partition rows carry watermarks
     assert metrics["watermark_ts"].notna().all()
+
+
+def test_block_oversize_lineage_rows(spark, small_corpus, tmp_path_factory) -> None:
+    """A block_cap below the hot-key sizes salts those keys and reports each
+    one as a block_oversize row: key, dropped-pair bound, size, fan-out."""
+    cap = 3
+    ckpt = str(tmp_path_factory.mktemp("ckpt_oversize"))
+    pages = spark.createDataFrame(small_corpus[["url", "warc_ts", "html", "text", "lang"]])
+    out = run_pipeline(
+        spark, pages, PipelineConfig(checkpoint_dir=ckpt, run_id="orun", block_cap=cap)
+    )
+    assert out["metrics"].dtypes == spark.createDataFrame([], METRICS_SCHEMA).dtypes
+    rows = out["metrics"].where("stage = 'block_oversize'").toPandas()
+    assert len(rows) > 0
+    assert rows[["block_id", "pair_count", "rows_in", "rows_out"]].notna().all().all()
+    assert (rows["run_id"] == "orun").all() and (rows["partition_id"] == -1).all()
+    assert rows["block_id"].is_unique
+    assert (rows["rows_in"] > cap).all()
+    # rows_out is the salt fan-out: ceil(block_size / cap) sub-blocks
+    assert (rows["rows_out"] == -(-rows["rows_in"] // cap)).all()
+    assert (rows["pair_count"] >= 0).all()

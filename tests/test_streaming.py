@@ -1,97 +1,12 @@
-"""Structured-Streaming ingest tests: file-source micro-batches through the
-signature stage with checkpointed resume (PostIngestQueue recast)."""
+"""Structured-Streaming ER test: file-source micro-batches through
+incremental entity resolution with checkpointed, idempotent replay
+(PostIngestQueue recast)."""
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from yams_spark.sources.pages import generate_pages_pdf
-from yams_spark.streaming.ingest import start_ingest_stream, windowed_event_counts
-
-
-@pytest.fixture(scope="module")
-def staged_pages(spark, sf_dir, tmp_path_factory):
-    docs = pd.read_parquet(f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "lang"])
-    corpus = generate_pages_pdf(docs.head(30), replicate=1)
-    in_dir = str(tmp_path_factory.mktemp("stream_in"))
-    pages = spark.createDataFrame(corpus[["url", "warc_ts", "html", "text", "lang"]])
-    # two file batches
-    pages.where("length(url) % 2 = 0").coalesce(1).write.mode("append").parquet(in_dir)
-    pages.where("length(url) % 2 = 1").coalesce(1).write.mode("append").parquet(in_dir)
-    return in_dir, pages.count()
-
-
-def test_stream_ingest_processes_all_and_resumes(spark, staged_pages, tmp_path_factory) -> None:
-    in_dir, n_pages = staged_pages
-    out_dir = str(tmp_path_factory.mktemp("stream_out"))
-    ckpt = str(tmp_path_factory.mktemp("stream_ckpt"))
-
-    q = start_ingest_stream(spark, in_dir, out_dir, ckpt, trigger_once=True)
-    q.awaitTermination(120)
-    sig = spark.read.parquet(os.path.join(out_dir, "signatures.parquet"))
-    assert sig.count() == n_pages
-    metrics = spark.read.parquet(os.path.join(out_dir, "stream_metrics.parquet"))
-    assert metrics.count() >= 1
-
-    # resume: nothing new -> no duplicate processing (exactly-once per file)
-    q2 = start_ingest_stream(spark, in_dir, out_dir, ckpt, trigger_once=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(os.path.join(out_dir, "signatures.parquet")).count() == n_pages
-
-
-def test_stream_ingest_replay_is_idempotent(spark, staged_pages, tmp_path_factory) -> None:
-    """foreachBatch is at-least-once: a full replay (fresh checkpoint, same
-    output dir) must rewrite each batch_id partition in place — counts stay
-    identical instead of doubling (blind-append would duplicate)."""
-    in_dir, n_pages = staged_pages
-    out_dir = str(tmp_path_factory.mktemp("stream_out_replay"))
-
-    q = start_ingest_stream(
-        spark, in_dir, out_dir, str(tmp_path_factory.mktemp("ck1")), trigger_once=True
-    )
-    q.awaitTermination(120)
-    sig_path = os.path.join(out_dir, "signatures.parquet")
-    first = spark.read.parquet(sig_path).count()
-    assert first == n_pages
-
-    # simulate replay-after-lost-offsets: new checkpoint, same output
-    q2 = start_ingest_stream(
-        spark, in_dir, out_dir, str(tmp_path_factory.mktemp("ck2")), trigger_once=True
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(sig_path).count() == n_pages
-    metrics = spark.read.parquet(os.path.join(out_dir, "stream_metrics.parquet"))
-    assert metrics.groupBy("batch_id").count().where("count > 1").count() == 0
-
-
-def test_windowed_event_counts_stream(spark, sf_dir) -> None:
-    # run the watermarked windowed agg over the events table via a
-    # memory-source-like replay: availableNow on a parquet stream
-    import tempfile
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    with tempfile.TemporaryDirectory() as d:
-        in_dir = os.path.join(d, "in")
-        events.coalesce(2).write.parquet(in_dir)
-        stream = spark.readStream.schema(events.schema).parquet(in_dir)
-        agg = windowed_event_counts(stream, "1 hour", "2 hours")
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("wincounts")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .start()
-        )
-        q.awaitTermination(120)
-        # append mode emits only closed windows; at least validates the
-        # plan runs with watermark + window (the final windows stay open)
-        got = spark.sql("select * from wincounts")
-        assert {"window", "event_type", "n_events", "sum_value"} <= set(got.columns)
 
 
 def test_incremental_er_equals_batch(spark, sf_dir, tmp_path_factory) -> None:
@@ -144,62 +59,3 @@ def test_incremental_er_equals_batch(spark, sf_dir, tmp_path_factory) -> None:
     }
     assert again == want
 
-
-def test_incremental_kg_equals_batch(spark, sf_dir, tmp_path_factory) -> None:
-    """Stream-accumulated mentions + derive-on-demand equal batch
-    populate_kg over the union corpus; replay with a fresh checkpoint is
-    idempotent (same store partitions rewritten)."""
-    from yams_spark.operators.kg import populate_kg
-    from yams_spark.streaming.incremental_kg import (
-        kg_tables_from_store,
-        start_incremental_kg,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id",
-        F.expr(
-            "array_join(transform(filter(split(text, ' '), x -> x <> ''), "
-            "x -> CASE WHEN substring(x, 1, 1) IN ('s', 't') "
-            "THEN concat(upper(substring(x, 1, 1)), substring(x, 2)) "
-            "ELSE x END), ' ')"
-        ).alias("text"),
-    ).limit(60)
-
-    in_dir = str(tmp_path_factory.mktemp("ikg_in"))
-    docs.where("doc_id % 2 = 0").coalesce(1).write.mode("append").parquet(in_dir)
-    docs.where("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(in_dir)
-
-    store = str(tmp_path_factory.mktemp("ikg_store"))
-    q = start_incremental_kg(
-        spark, in_dir, store, str(tmp_path_factory.mktemp("ikg_ck")),
-        trigger_once=True,
-    )
-    q.awaitTermination(240)
-    derived = kg_tables_from_store(spark, store, pagerank_iters=3)
-    batch = populate_kg(docs, pagerank_iters=3)
-
-    def rows(df, cols):
-        return sorted(tuple(r[c] for c in cols) for r in df.collect())
-
-    assert rows(derived["kg_doc_entities"],
-                ["document_id", "entity_text", "start_offset"]) == rows(
-        batch["kg_doc_entities"], ["document_id", "entity_text", "start_offset"])
-    assert rows(derived["kg_nodes"], ["node_key", "label", "times_seen"]) == rows(
-        batch["kg_nodes"], ["node_key", "label", "times_seen"])
-    assert rows(derived["kg_aliases"], ["node_key", "alias", "confidence"]) == rows(
-        batch["kg_aliases"], ["node_key", "alias", "confidence"])
-    assert rows(derived["kg_edges"], ["src", "dst", "weight"]) == rows(
-        batch["kg_edges"], ["src", "dst", "weight"])
-    sd = rows(derived["kg_node_stats"], ["node", "degree"])
-    assert sd == rows(batch["kg_node_stats"], ["node", "degree"]) and sd
-
-    # replay: fresh checkpoint, same store -> identical mention set
-    q2 = start_incremental_kg(
-        spark, in_dir, store, str(tmp_path_factory.mktemp("ikg_ck2")),
-        trigger_once=True,
-    )
-    q2.awaitTermination(240)
-    again = kg_tables_from_store(spark, store, pagerank_iters=3)
-    assert rows(again["kg_doc_entities"], ["document_id", "entity_text",
-                                           "start_offset"]) == rows(
-        batch["kg_doc_entities"], ["document_id", "entity_text", "start_offset"])

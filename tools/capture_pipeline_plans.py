@@ -1,8 +1,11 @@
 """Capture .explain("formatted") for every ER-pipeline stage DataFrame
-(pre-commit, so the real stage plan shows — not the checkpoint re-read).
+(pre-commit, so the real stage plan shows — not the checkpoint re-read),
+and optionally for ``__spark_entry__.queries()`` entries.
 
-Usage: python tools/capture_pipeline_plans.py <suffix> [sf_dir]
-Writes plans/r06/er_pipeline_<stage>_<suffix>.txt
+Usage: python tools/capture_pipeline_plans.py <suffix> [sf_dir] [--queries q1,q2,...]
+Writes plans/r06/er_pipeline_<stage>_<suffix>.txt, plus
+plans/r06/<query>_<suffix>.txt for each query named by --queries.
+Timings come from perfbench (``perfbench/run.py --trace 1``), not from here.
 """
 
 from __future__ import annotations
@@ -22,6 +25,11 @@ def explain_str(df) -> str:
 
 
 def main() -> None:
+    query_names: list[str] = []
+    if "--queries" in sys.argv:
+        i = sys.argv.index("--queries")
+        query_names = sys.argv[i + 1].split(",")
+        del sys.argv[i:i + 2]
     suffix = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
     from yams_spark.session import get_spark
@@ -41,8 +49,8 @@ def main() -> None:
     out_dir = os.path.join(_REPO, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
 
-    def dump(name, df):
-        with open(os.path.join(out_dir, f"er_pipeline_{name}_{suffix}.txt"), "w") as f:
+    def dump(name, df, prefix="er_pipeline_"):
+        with open(os.path.join(out_dir, f"{prefix}{name}_{suffix}.txt"), "w") as f:
             f.write(explain_str(df))
         print("wrote", name)
 
@@ -61,6 +69,13 @@ def main() -> None:
     clusters, members = clusters_stage(signatures, accepted, cfg.threshold, cfg.strategy)
     dump("cluster_groups", clusters)
     dump("cluster_members", members)
+
+    if query_names:
+        import __spark_entry__
+
+        qs = __spark_entry__.queries()
+        for name in query_names:
+            dump(name, qs[name](spark, sf_dir), prefix="")
     spark.stop()
 
 

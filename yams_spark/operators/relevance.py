@@ -97,16 +97,3 @@ def mean_relevance_metrics(results: DataFrame, qrels: DataFrame, k: int = 10) ->
         F.avg("map").alias("map"),
     )
 
-
-def relevance_rewards(
-    results: DataFrame, qrels: DataFrame, k: int = 10
-) -> DataFrame:
-    """(query_id, reward): per-query nDCG@k as the labeled reward signal
-    for the adaptive tuner and bandit (the reference's Labels reward
-    source: relevance sessions feed SearchTuner.observeRelevanceFeedback,
-    search_tuner.cpp:707-741, and TunerMAB rewards with
-    RewardSource::Labels, tuner_mab.cpp:60-70). nDCG is already in
-    [0, 1], matching the consumers' clamp."""
-    return relevance_metrics(results, qrels, k).select(
-        "query_id", F.col("ndcg").alias("reward")
-    )

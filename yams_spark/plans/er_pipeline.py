@@ -16,12 +16,11 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from yams_spark.functions.chunker import PAGE_CHUNKING, ChunkingConfig
@@ -36,13 +35,12 @@ from yams_spark.operators.clustering import clusters_stage
 from yams_spark.operators.scoring import attach_pair_features, scored_pairs_stage
 from yams_spark.operators.signatures import signatures_stage
 
-STAGES = ["sign", "block", "pair", "score", "cluster_groups", "cluster_members"]
-
 METRICS_SCHEMA = (
     "run_id string, stage string, partition_id int, block_id string, "
     "pair_count long, score_histogram array<long>, rows_in long, "
     "rows_out long, watermark_ts timestamp"
 )
+_METRICS_COLUMNS = [c.split(" ", 1) for c in METRICS_SCHEMA.split(", ")]
 
 
 @dataclass
@@ -140,22 +138,34 @@ def _commit_stage(
     return spark.read.parquet(path)
 
 
+def _lineage_rows(
+    df: DataFrame, run_id: str, stage: str, **cols: Column
+) -> DataFrame:
+    """Project ``df`` onto METRICS_SCHEMA lineage rows. ``cols`` maps
+    metrics columns to expressions over ``df``; run_id, stage and
+    watermark_ts are filled in, partition_id defaults to -1 (a row that is
+    not per-partition), every other column is null."""
+    cols = {
+        "run_id": F.lit(run_id),
+        "stage": F.lit(stage),
+        "partition_id": F.lit(-1),
+        "watermark_ts": F.current_timestamp(),
+        **cols,
+    }
+    return df.select(*[
+        cols.get(name, F.lit(None)).cast(dtype).alias(name)
+        for name, dtype in _METRICS_COLUMNS
+    ])
+
+
 def _partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:
     """Per-partition lineage rows (rows_out per partition + watermark)."""
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows_out"))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.col("partition_id"),
-            F.lit(None).cast("string").alias("block_id"),
-            F.lit(None).cast("long").alias("pair_count"),
-            F.lit(None).cast("array<long>").alias("score_histogram"),
-            F.lit(None).cast("long").alias("rows_in"),
-            F.col("rows_out").cast("long"),
-            F.current_timestamp().alias("watermark_ts"),
-        )
+    counts = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+        F.count("*").alias("rows_out")
+    )
+    return _lineage_rows(
+        counts, run_id, stage,
+        partition_id=F.col("partition_id"), rows_out=F.col("rows_out"),
     )
 
 
@@ -177,14 +187,12 @@ def _score_histogram_metrics(scored: DataFrame, run_id: str) -> DataFrame:
     bins = {r["bin"]: r["c"] for r in counts}
     hist = [int(bins.get(i, 0)) for i in range(20)]
     total = sum(hist)
-    return scored.sparkSession.createDataFrame(
-        [(run_id, "score", -1, None, total, hist, None, total)],
-        (
-            "run_id string, stage string, partition_id int, block_id string, "
-            "pair_count long, score_histogram array<long>, rows_in long, "
-            "rows_out long"
-        ),
-    ).withColumn("watermark_ts", F.current_timestamp())
+    return _lineage_rows(
+        scored.sparkSession.range(1), run_id, "score",
+        pair_count=F.lit(total),
+        score_histogram=F.array(*[F.lit(h) for h in hist]),
+        rows_out=F.lit(total),
+    )
 
 
 def _append_metrics(cfg: PipelineConfig, metrics: DataFrame) -> None:
@@ -220,21 +228,6 @@ class _MetricsPump:
         self._pool.shutdown()
 
 
-def _stage_timer():
-    """Env-gated per-stage wall-clock tracing (YAMS_TIMING=1): prints
-    'TIMING <stage> <sec>' lines for bench forensics; no-op otherwise."""
-    if os.environ.get("YAMS_TIMING") != "1":
-        return lambda _stage: None
-    state = {"t": time.time()}
-
-    def mark(stage: str) -> None:
-        now = time.time()
-        print(f"TIMING {stage} {now - state['t']:.2f}", flush=True)
-        state["t"] = now
-
-    return mark
-
-
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -254,7 +247,6 @@ def run_pipeline(
     """
     cfg = cfg or PipelineConfig()
     out: dict[str, DataFrame] = {}
-    mark = _stage_timer()
 
     # A small-file input (one parquet split) would serialize the extraction
     # UDF; at 100TB there are plenty of splits and this no-ops. File count
@@ -308,7 +300,6 @@ def run_pipeline(
         pump.submit(lambda df=signatures: _append_metrics(
             cfg, _partition_metrics(df, cfg.run_id, "sign")))
     out["signatures"] = signatures
-    mark("sign")
 
     # --- optional KG population (PostIngestQueue stage position) ---
     if cfg.build_kg:
@@ -332,7 +323,6 @@ def run_pipeline(
                 out[name] = _commit_stage(spark, cfg, name, df)
                 pump.submit(lambda d=out[name], n=name: _append_metrics(
                     cfg, _partition_metrics(d, cfg.run_id, n)))
-        mark("kg")
 
     # --- block (+salting report) ---
     if _stage_done(cfg, "block"):
@@ -348,20 +338,15 @@ def run_pipeline(
         pump.submit(lambda df=blocks: _append_metrics(
             cfg, _partition_metrics(df, cfg.run_id, "block")))
         if cfg.checkpoint_dir is not None:
-            oversize_rows = oversize.select(
-                F.lit(cfg.run_id).alias("run_id"),
-                F.lit("block_oversize").alias("stage"),
-                F.lit(-1).alias("partition_id"),
-                F.col("block_key").alias("block_id"),
-                F.col("dropped_pairs_upper_bound").alias("pair_count"),
-                F.lit(None).cast("array<long>").alias("score_histogram"),
-                F.col("block_size").cast("long").alias("rows_in"),
-                F.col("n_salt").cast("long").alias("rows_out"),
-                F.current_timestamp().alias("watermark_ts"),
+            oversize_rows = _lineage_rows(
+                oversize, cfg.run_id, "block_oversize",
+                block_id=F.col("block_key"),
+                pair_count=F.col("dropped_pairs_upper_bound"),
+                rows_in=F.col("block_size"),
+                rows_out=F.col("n_salt"),
             )
             pump.submit(lambda df=oversize_rows: _append_metrics(cfg, df))
     out["blocks"] = blocks
-    mark("block")
 
     # --- pair ---
     if _stage_done(cfg, "pair"):
@@ -372,7 +357,6 @@ def run_pipeline(
         pump.submit(lambda df=pairs: _append_metrics(
             cfg, _partition_metrics(df, cfg.run_id, "pair")))
     out["pairs"] = pairs
-    mark("pair")
 
     # --- score ---
     if _stage_done(cfg, "score"):
@@ -388,7 +372,6 @@ def run_pipeline(
             pump.submit(lambda df=scored: _append_metrics(
                 cfg, _score_histogram_metrics(df, cfg.run_id)))
     out["scored_pairs"] = scored
-    mark("score")
 
     # --- cluster + publish ---
     accepted = scored.where(F.col("accepted"))
@@ -419,27 +402,21 @@ def run_pipeline(
         if cfg.max_component_docs is not None and cfg.checkpoint_dir is not None:
             # lineage: one row per split parent component (labels look like
             # "<component>#<i>"), rows_out = sub-clusters it produced
-            split_rows = (
+            splits = (
                 clusters.where(F.col("component").contains("#"))
                 .withColumn("parent", F.substring_index("component", "#", 1))
                 .groupBy("parent")
                 .agg(F.count("*").alias("n_sub"), F.sum("member_count").alias("n_docs"))
-                .select(
-                    F.lit(cfg.run_id).alias("run_id"),
-                    F.lit("cluster_split").alias("stage"),
-                    F.lit(-1).alias("partition_id"),
-                    F.col("parent").alias("block_id"),
-                    F.lit(None).cast("long").alias("pair_count"),
-                    F.lit(None).cast("array<long>").alias("score_histogram"),
-                    F.col("n_docs").cast("long").alias("rows_in"),
-                    F.col("n_sub").cast("long").alias("rows_out"),
-                    F.current_timestamp().alias("watermark_ts"),
-                )
+            )
+            split_rows = _lineage_rows(
+                splits, cfg.run_id, "cluster_split",
+                block_id=F.col("parent"),
+                rows_in=F.col("n_docs"),
+                rows_out=F.col("n_sub"),
             )
             pump.submit(lambda df=split_rows: _append_metrics(cfg, df))
     out["clusters"] = clusters
     out["members"] = members
-    mark("cluster")
 
     pump.close()
     if cfg.checkpoint_dir is not None:

@@ -16,7 +16,7 @@ the dedupe trace). The Structured-Streaming recast:
 
 All writes are partitioned by ``batch_id`` with dynamic partition
 overwrite, so an at-least-once replay rewrites its own partition instead
-of duplicating state (same idempotency contract as streaming/ingest.py).
+of duplicating state.
 
 **Equivalence**: after the stream drains, accepted pairs over all batches
 equal the batch pipeline's accepted pairs on the same corpus — the pair
