@@ -3757,10 +3757,9 @@ def _er_mini_outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             F.lit("en").alias("lang"),
         )
         pages = base.unionByName(dups)
-        out = run_pipeline(spark, pages, PipelineConfig(families=("exact",)))
-        out["clusters"] = out["clusters"].persist()
-        out["members"] = out["members"].persist()
-        _ER_MINI_CACHE[key] = out
+        _ER_MINI_CACHE[key] = run_pipeline(
+            spark, pages, PipelineConfig(families=("exact",))
+        )
     return _ER_MINI_CACHE[key]
 
 
@@ -3837,7 +3836,7 @@ def _er_semantic_outputs(
             [(p["url"], embedding_for(p)) for p in spec],
             "url string, embedding array<float>",
         )
-        out = run_pipeline(
+        _ER_SEMANTIC_CACHE[key] = run_pipeline(
             spark,
             pages,
             PipelineConfig(
@@ -3846,9 +3845,6 @@ def _er_semantic_outputs(
             ),
             precomputed_embeddings=pre,
         )
-        out["clusters"] = out["clusters"].persist()
-        out["members"] = out["members"].persist()
-        _ER_SEMANTIC_CACHE[key] = out
     return _ER_SEMANTIC_CACHE[key]
 
 

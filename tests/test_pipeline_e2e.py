@@ -150,6 +150,13 @@ def test_oracle_reproduces_family_labels(oracle_result, corpus) -> None:
     assert merged / total >= 0.97, (merged, total)
 
 
+def test_in_memory_run_pins_every_table(pipeline_result) -> None:
+    """Without a checkpoint_dir every returned stage table is pinned, so
+    neither later stages nor the caller recompute it."""
+    for name in ("signatures", "blocks", "pairs", "scored_pairs", "clusters", "members"):
+        assert pipeline_result[name].is_cached, name
+
+
 def test_pipeline_deterministic(spark, corpus, pipeline_result) -> None:
     pages = spark.createDataFrame(corpus[["url", "warc_ts", "html", "text", "lang"]])
     second = run_pipeline(spark, pages, PipelineConfig())
@@ -158,19 +165,13 @@ def test_pipeline_deterministic(spark, corpus, pipeline_result) -> None:
     assert a == b
 
 
-def test_oversized_component_split_wired(spark, tmp_path) -> None:
-    """A forced mega-family (identical text => one exact block => dense
-    accepted pairs) must publish bounded clusters when max_component_docs
-    is set, and emit a cluster_split lineage row; with the flag off the
-    mega-cluster publishes whole (oracle equality preserved by default)."""
-    import pandas as pd
-
-    n = 24
+def _boilerplate_pages(spark, n: int):
+    """n pages with identical text: one exact block, dense accepted pairs,
+    so every page lands in one mega-component unless it is split."""
     shared = "identical boilerplate page body " * 20
-    rows = []
-    for i in range(n):
-        html = f"<html><title>Mega Page</title><body><p>{shared}</p></body></html>"
-        rows.append(
+    html = f"<html><title>Mega Page</title><body><p>{shared}</p></body></html>"
+    pdf = pd.DataFrame(
+        [
             {
                 "url": f"https://mega.example/p{i:03d}",
                 "warc_ts": pd.Timestamp("2024-01-01") + pd.Timedelta(hours=i),
@@ -178,12 +179,21 @@ def test_oversized_component_split_wired(spark, tmp_path) -> None:
                 "text": None,
                 "lang": "en",
             }
-        )
-    pdf = pd.DataFrame(rows)
-    pdf["text"] = None
-    pages = spark.createDataFrame(
+            for i in range(n)
+        ]
+    )
+    return spark.createDataFrame(
         pdf, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
+
+
+def test_oversized_component_split_wired(spark, tmp_path) -> None:
+    """A forced mega-family (identical text => one exact block => dense
+    accepted pairs) must publish bounded clusters when max_component_docs
+    is set, and emit a cluster_split lineage row; with the flag off the
+    mega-cluster publishes whole (oracle equality preserved by default)."""
+    n = 24
+    pages = _boilerplate_pages(spark, n)
 
     # flag off: one component of 24
     out_off = run_pipeline(spark, pages, PipelineConfig())
@@ -205,6 +215,27 @@ def test_oversized_component_split_wired(spark, tmp_path) -> None:
     # membership is preserved: every page lands in exactly one sub-cluster
     mem = out_on["members"].select("url").collect()
     assert len({r["url"] for r in mem}) == len(mem)
+
+
+def test_scale_profile_e2e(spark, tmp_path) -> None:
+    """PipelineConfig.scale(): the one-switch 100-TB profile — component
+    cap on (64), split lineage rows present, every published cluster
+    bounded."""
+    assert PipelineConfig.scale().max_component_docs == 64
+    assert PipelineConfig.scale(max_component_docs=8).max_component_docs == 8
+
+    # block_cap salting already bounds a single block at 64 docs, so to
+    # force the split path e2e the test lowers the cap under the profile
+    # (the profile's own default stays 64, asserted above)
+    pages = _boilerplate_pages(spark, 24)
+    ckpt = str(tmp_path / "ck_scale")
+    out = run_pipeline(
+        spark, pages, PipelineConfig.scale(checkpoint_dir=ckpt, max_component_docs=8)
+    )
+    clusters = out["clusters"].collect()
+    assert clusters and max(r["member_count"] for r in clusters) <= 8
+    split_rows = out["metrics"].where("stage = 'cluster_split'").collect()
+    assert len(split_rows) >= 1
 
 
 def test_pipeline_edge_inputs(spark) -> None:
@@ -235,47 +266,6 @@ def test_pipeline_edge_inputs(spark) -> None:
     assert out2["clusters"].count() == 0
     sigs = {r["url"]: r for r in out2["signatures"].collect()}
     assert len(sigs) == 3 and all(s["doc_hash"] for s in sigs.values())
-
-
-def test_scale_profile_e2e(spark, tmp_path) -> None:
-    """PipelineConfig.scale(): the one-switch 100-TB profile — component
-    cap on (64), split lineage rows present, every published cluster
-    bounded. (Round-2 judge: 'document a scale profile so the safe config
-    is one switch rather than folklore'.)"""
-    import pandas as pd
-
-    cfg_probe = PipelineConfig.scale()
-    assert cfg_probe.max_component_docs == 64
-    assert PipelineConfig.scale(max_component_docs=8).max_component_docs == 8
-
-    # block_cap salting already bounds a single block at 64 docs, so to
-    # force the split path e2e the test lowers the cap under the profile
-    # (the profile's own default stays 64, asserted above)
-    n = 24
-    shared = "identical boilerplate page body " * 20
-    rows = [
-        {
-            "url": f"https://scale.example/p{i:03d}",
-            "warc_ts": pd.Timestamp("2024-01-01") + pd.Timedelta(hours=i),
-            "html": f"<html><title>Scale</title><body><p>{shared}</p></body></html>".encode(),
-            "text": None,
-            "lang": "en",
-        }
-        for i in range(n)
-    ]
-    pdf = pd.DataFrame(rows)
-    pdf["text"] = None
-    pages = spark.createDataFrame(
-        pdf, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    ckpt = str(tmp_path / "ck_scale")
-    out = run_pipeline(
-        spark, pages, PipelineConfig.scale(checkpoint_dir=ckpt, max_component_docs=8)
-    )
-    clusters = out["clusters"].collect()
-    assert clusters and max(r["member_count"] for r in clusters) <= 8
-    split_rows = out["metrics"].where("stage = 'cluster_split'").collect()
-    assert len(split_rows) >= 1
 
 
 def test_embed_fn_seam(spark) -> None:

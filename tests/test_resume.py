@@ -5,11 +5,14 @@ stage's watermark recomputes only that stage and yields identical outputs
 
 from __future__ import annotations
 
+import json
 import os
+import threading
 
 import pandas as pd
 import pytest
 
+from yams_spark.plans import er_pipeline
 from yams_spark.plans.er_pipeline import METRICS_SCHEMA, PipelineConfig, run_pipeline
 from yams_spark.sources.pages import generate_pages_pdf
 
@@ -20,7 +23,13 @@ def small_corpus(sf_dir):
     return generate_pages_pdf(docs.head(40), replicate=1)
 
 
-def test_resume_skips_completed_stages(spark, small_corpus, tmp_path_factory) -> None:
+def _watermark_run(ckpt: str, stage: str) -> str:
+    with open(os.path.join(ckpt, f"{stage}.watermark.json")) as f:
+        return json.load(f)["run_id"]
+
+
+@pytest.mark.parametrize("lost", ["cluster_groups", "cluster_members"])
+def test_resume_skips_completed_stages(spark, small_corpus, tmp_path_factory, lost) -> None:
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
     pages = spark.createDataFrame(small_corpus[["url", "warc_ts", "html", "text", "lang"]])
 
@@ -30,15 +39,41 @@ def test_resume_skips_completed_stages(spark, small_corpus, tmp_path_factory) ->
 
     sign_mtime = os.path.getmtime(os.path.join(ckpt, "sign.watermark.json"))
 
-    # lose the cluster stage -> rerun recomputes only clustering
-    os.remove(os.path.join(ckpt, "cluster_groups.watermark.json"))
+    # lose either cluster table -> rerun rebuilds both, and only clustering
+    os.remove(os.path.join(ckpt, f"{lost}.watermark.json"))
     cfg2 = PipelineConfig(checkpoint_dir=ckpt, run_id="run2")
     second = run_pipeline(spark, pages, cfg2)
     clusters2 = sorted(second["clusters"].toPandas()["group_key"])
 
     assert clusters1 == clusters2
+    assert _watermark_run(ckpt, "cluster_groups") == "run2"
+    assert _watermark_run(ckpt, "cluster_members") == "run2"
     # earlier stages untouched (watermark not rewritten)
+    assert _watermark_run(ckpt, "sign") == "run1"
     assert os.path.getmtime(os.path.join(ckpt, "sign.watermark.json")) == sign_mtime
+
+
+def test_failed_stage_propagates_and_releases_lineage_thread(
+    spark, small_corpus, tmp_path_factory, monkeypatch
+) -> None:
+    """A stage build that raises surfaces its error, and the lineage
+    worker thread is shut down rather than left behind."""
+    ckpt = str(tmp_path_factory.mktemp("ckpt_fail"))
+    pages = spark.createDataFrame(small_corpus[["url", "warc_ts", "html", "text", "lang"]])
+
+    def boom(blocks):
+        raise RuntimeError("pair stage failed")
+
+    monkeypatch.setattr(er_pipeline, "candidate_pairs_stage", boom)
+
+    def pool_threads():
+        return {t for t in threading.enumerate()
+                if t.name.startswith("ThreadPoolExecutor") and t.is_alive()}
+
+    before = pool_threads()
+    with pytest.raises(RuntimeError, match="pair stage failed"):
+        run_pipeline(spark, pages, PipelineConfig(checkpoint_dir=ckpt, run_id="frun"))
+    assert pool_threads() - before == set()
 
 
 def test_metrics_lineage_rows(spark, small_corpus, tmp_path_factory) -> None:

@@ -85,7 +85,6 @@ def _embedding_matrix(col, n: int) -> np.ndarray:
 def scored_pairs_stage(
     pairs_with_features: DataFrame,
     threshold: float = 0.92,
-    with_extra_features: bool = True,
 ) -> DataFrame:
     import pyarrow as pa
 
@@ -136,7 +135,7 @@ def scored_pairs_stage(
             # dominate the stage at scale
             jw = np.zeros(n)
             lev = np.zeros(n, dtype=np.int32)
-            if with_extra_features and accepted.any():
+            if accepted.any():
                 idx = np.nonzero(accepted)[0]
                 take = pa.array(idx)
                 ua_acc = col("url_a").take(take).to_pylist()

@@ -5,11 +5,14 @@ Stage DAG (mirrors the reference ingest→dedupe dataflow, SURVEY.md §3.1/§3.3
 
     extract+sign → block → (salt) → pair → score → cluster → publish
 
-Every stage is a pure function of its input table. When a ``checkpoint_dir``
-is given, each stage writes its output parquet plus a watermark row to the
-metrics table; a rerun skips any stage whose watermark + output already
-exist (idempotent resume — the WAL/recovery analog of wal_manager.h:23-80,
-done the Spark way via durable table commits).
+Every stage is a pure function of its input tables and follows one rule,
+written once (``stage`` in ``run_pipeline``): it resumes only when ALL of its
+tables are committed (output parquet + watermark under ``checkpoint_dir``);
+otherwise it is rebuilt and each table is committed, or, without a
+``checkpoint_dir``, pinned in memory. Lineage rows are written to the
+metrics table for checkpointed runs only. (Idempotent resume: the
+WAL/recovery analog of wal_manager.h:23-80, done the Spark way via durable
+table commits.)
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -31,7 +35,7 @@ from yams_spark.operators.blocking import (
     candidate_pairs_stage,
     salt_blocks,
 )
-from yams_spark.operators.clustering import clusters_stage
+from yams_spark.operators.clustering import DRIVER_CC_MAX_EDGES, clusters_stage
 from yams_spark.operators.scoring import attach_pair_features, scored_pairs_stage
 from yams_spark.operators.signatures import signatures_stage
 
@@ -41,6 +45,10 @@ METRICS_SCHEMA = (
     "rows_out long, watermark_ts timestamp"
 )
 _METRICS_COLUMNS = [c.split(" ", 1) for c in METRICS_SCHEMA.split(", ")]
+
+#: the optional KG stage's tables (``populate_kg`` with doc embeddings)
+_KG_TABLES = ("kg_doc_entities", "kg_nodes", "kg_aliases", "kg_edges",
+              "kg_node_stats", "kg_node_embeddings")
 
 
 @dataclass
@@ -121,9 +129,12 @@ def _stage_done(cfg: PipelineConfig, stage: str) -> bool:
 def _commit_stage(
     spark: SparkSession, cfg: PipelineConfig, stage: str, df: DataFrame
 ) -> DataFrame:
-    """Write stage output + watermark; return the durable re-read DataFrame."""
+    """Write stage output + watermark; return the durable re-read DataFrame.
+    Without a checkpoint_dir the table is pinned in memory instead, so no
+    downstream consumer (or the caller) recomputes it — the module's only
+    pin site."""
     if cfg.checkpoint_dir is None:
-        return df
+        return df.persist()
     path = _stage_path(cfg, stage)
     df.write.mode("overwrite").parquet(path)
     with open(_watermark_path(cfg, stage), "w") as f:
@@ -169,7 +180,7 @@ def _partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:
     )
 
 
-def _score_histogram_metrics(scored: DataFrame, run_id: str) -> DataFrame:
+def _score_histogram_metrics(scored: DataFrame, run_id: str, stage: str) -> DataFrame:
     """20-bin histogram of pair scores over [0,1] as a lineage row.
 
     One job: the 20 bin counts are collected (tiny) and the row is built
@@ -188,44 +199,11 @@ def _score_histogram_metrics(scored: DataFrame, run_id: str) -> DataFrame:
     hist = [int(bins.get(i, 0)) for i in range(20)]
     total = sum(hist)
     return _lineage_rows(
-        scored.sparkSession.range(1), run_id, "score",
+        scored.sparkSession.range(1), run_id, stage,
         pair_count=F.lit(total),
         score_histogram=F.array(*[F.lit(h) for h in hist]),
         rows_out=F.lit(total),
     )
-
-
-def _append_metrics(cfg: PipelineConfig, metrics: DataFrame) -> None:
-    if cfg.checkpoint_dir is None:
-        return
-    metrics.write.mode("append").parquet(os.path.join(cfg.checkpoint_dir, "metrics.parquet"))
-
-
-class _MetricsPump:
-    """Run lineage-metrics side jobs on ONE background thread (guide §2.6:
-    overlap independent jobs) so stage-N metrics scans back-fill the cores
-    while stage N+1 computes, instead of serializing ~6 extra Spark jobs
-    onto the critical path. A single worker keeps the parquet appends to
-    metrics.parquet strictly ordered; ``join()`` re-raises any failure and
-    must be called before the metrics table is read."""
-
-    def __init__(self) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        self._pool = ThreadPoolExecutor(max_workers=1)
-        self._futures: list = []
-
-    def submit(self, fn) -> None:
-        self._futures.append(self._pool.submit(fn))
-
-    def join(self) -> None:
-        for f in self._futures:
-            f.result()
-        self._futures.clear()
-
-    def close(self) -> None:
-        self.join()
-        self._pool.shutdown()
 
 
 def run_pipeline(
@@ -273,152 +251,123 @@ def run_pipeline(
     if 0 < cur_parts < 2 * par:
         spark.conf.set("spark.sql.shuffle.partitions", str(2 * par))
 
-    pump = _MetricsPump()
+    # The one stage rule (module docstring). Lineage jobs run on ONE thread
+    # (guide §2.6): stage-N metrics scans back-fill the cores while stage N+1
+    # computes, and a single worker keeps the metrics appends ordered.
+    lineage_jobs: list = []
 
-    # --- sign (extract + signatures; narrow, no shuffle) ---
-    if _stage_done(cfg, "sign"):
-        signatures = spark.read.parquet(_stage_path(cfg, "sign"))
-    else:
-        signatures = signatures_stage(pages, cfg.chunk_cfg, embed_fn=cfg.embed_fn)
+    def stage(names, build, lineage=_partition_metrics) -> list[DataFrame]:
+        if all(_stage_done(cfg, n) for n in names):
+            return [spark.read.parquet(_stage_path(cfg, n)) for n in names]
+        tables = [_commit_stage(spark, cfg, n, df) for n, df in zip(names, build())]
+        if cfg.checkpoint_dir is not None:
+            metrics_path = os.path.join(cfg.checkpoint_dir, "metrics.parquet")
+            for n, df in zip(names, tables):
+                lineage_jobs.append(pool.submit(
+                    lambda n=n, df=df: lineage(df, cfg.run_id, n)
+                    .write.mode("append").parquet(metrics_path)))
+        return tables
+
+    def sign():  # extract + signatures; narrow, no shuffle
+        sig = signatures_stage(pages, cfg.chunk_cfg, embed_fn=cfg.embed_fn)
         if precomputed_embeddings is not None:
             pre = precomputed_embeddings.select(
                 "url", F.col("embedding").alias("_pre_embedding")
             )
-            signatures = (
-                signatures.join(pre, "url", "left")
+            sig = (
+                sig.join(pre, "url", "left")
                 .withColumn(
                     "embedding",
                     F.coalesce(F.col("_pre_embedding"), F.col("embedding")),
                 )
                 .drop("_pre_embedding")
             )
-        if cfg.checkpoint_dir is None:
-            # several downstream branches (blocks, pair-feature joins,
-            # cluster windows) would otherwise re-run the extraction UDF
-            signatures = signatures.persist()
-        signatures = _commit_stage(spark, cfg, "sign", signatures)
-        pump.submit(lambda df=signatures: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "sign")))
-    out["signatures"] = signatures
+        return [sig]
 
-    # --- optional KG population (PostIngestQueue stage position) ---
-    if cfg.build_kg:
+    def kg():  # optional KG population (PostIngestQueue stage position)
         from yams_spark.operators.kg import populate_kg
 
-        kg_docs = signatures.select(
-            F.xxhash64("url").alias("doc_id"),
-            F.col("extracted_text").alias("text"),
-        )
-        kg = populate_kg(
-            kg_docs,
+        tables = populate_kg(
+            signatures.select(
+                F.xxhash64("url").alias("doc_id"),
+                F.col("extracted_text").alias("text"),
+            ),
             pagerank_iters=cfg.kg_pagerank_iters,
             doc_embeddings=signatures.select(
                 F.xxhash64("url").alias("vec_id"), "embedding"
             ),
         )
-        for name, df in kg.items():
-            if _stage_done(cfg, name):
-                out[name] = spark.read.parquet(_stage_path(cfg, name))
-            else:
-                out[name] = _commit_stage(spark, cfg, name, df)
-                pump.submit(lambda d=out[name], n=name: _append_metrics(
-                    cfg, _partition_metrics(d, cfg.run_id, n)))
+        return [tables[n] for n in _KG_TABLES]
 
-    # --- block (+salting report) ---
-    if _stage_done(cfg, "block"):
-        blocks = spark.read.parquet(_stage_path(cfg, "block"))
-    else:
-        raw_blocks = blocks_stage(signatures, cfg.families)
-        blocks, oversize = salt_blocks(raw_blocks, cfg.block_cap)
-        if cfg.checkpoint_dir is None:
-            # the pair stage re-aggregates blocks; without a durable commit
-            # the key explode + salting join would be recomputed per consumer
-            blocks = blocks.persist()
-        blocks = _commit_stage(spark, cfg, "block", blocks)
-        pump.submit(lambda df=blocks: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "block")))
-        if cfg.checkpoint_dir is not None:
-            oversize_rows = _lineage_rows(
-                oversize, cfg.run_id, "block_oversize",
-                block_id=F.col("block_key"),
-                pair_count=F.col("dropped_pairs_upper_bound"),
-                rows_in=F.col("block_size"),
-                rows_out=F.col("n_salt"),
-            )
-            pump.submit(lambda df=oversize_rows: _append_metrics(cfg, df))
-    out["blocks"] = blocks
+    salted: dict[str, DataFrame] = {}
 
-    # --- pair ---
-    if _stage_done(cfg, "pair"):
-        pairs = spark.read.parquet(_stage_path(cfg, "pair"))
-    else:
-        pairs = candidate_pairs_stage(blocks)
-        pairs = _commit_stage(spark, cfg, "pair", pairs)
-        pump.submit(lambda df=pairs: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "pair")))
-    out["pairs"] = pairs
-
-    # --- score ---
-    if _stage_done(cfg, "score"):
-        scored = spark.read.parquet(_stage_path(cfg, "score"))
-    else:
-        scored = scored_pairs_stage(
-            attach_pair_features(pairs, signatures), cfg.threshold
+    def block():  # + salting; the oversize report joins the block's lineage
+        blocks, salted["oversize"] = salt_blocks(
+            blocks_stage(signatures, cfg.families), cfg.block_cap
         )
-        if cfg.checkpoint_dir is None:
-            scored = scored.persist()
-        scored = _commit_stage(spark, cfg, "score", scored)
-        if cfg.checkpoint_dir is not None:
-            pump.submit(lambda df=scored: _append_metrics(
-                cfg, _score_histogram_metrics(df, cfg.run_id)))
-    out["scored_pairs"] = scored
+        return [blocks]
 
-    # --- cluster + publish ---
-    accepted = scored.where(F.col("accepted"))
-    if _stage_done(cfg, "cluster_groups") and _stage_done(cfg, "cluster_members"):
-        clusters = spark.read.parquet(_stage_path(cfg, "cluster_groups"))
-        members = spark.read.parquet(_stage_path(cfg, "cluster_members"))
-    else:
-        from yams_spark.operators.clustering import DRIVER_CC_MAX_EDGES
+    def block_lineage(df: DataFrame, run_id: str, name: str) -> DataFrame:
+        return _partition_metrics(df, run_id, name).unionByName(_lineage_rows(
+            salted["oversize"], run_id, "block_oversize",
+            block_id=F.col("block_key"),
+            pair_count=F.col("dropped_pairs_upper_bound"),
+            rows_in=F.col("block_size"),
+            rows_out=F.col("n_salt"),
+        ))
 
-        cc_stats: dict = {}
-        clusters, members = clusters_stage(
-            signatures, accepted, cfg.threshold, cfg.strategy,
+    def cluster():  # cluster + publish
+        cc_max_edges = cfg.driver_cc_max_edges
+        out["cc_stats"] = {}
+        return clusters_stage(
+            signatures, scored.where(F.col("accepted")), cfg.threshold, cfg.strategy,
             max_component_docs=cfg.max_component_docs,
-            driver_cc_max_edges=(
-                DRIVER_CC_MAX_EDGES
-                if cfg.driver_cc_max_edges < 0
-                else cfg.driver_cc_max_edges
-            ),
-            cc_stats=cc_stats,
+            driver_cc_max_edges=DRIVER_CC_MAX_EDGES if cc_max_edges < 0 else cc_max_edges,
+            cc_stats=out["cc_stats"],
         )
-        out["cc_stats"] = cc_stats
-        clusters = _commit_stage(spark, cfg, "cluster_groups", clusters)
-        members = _commit_stage(spark, cfg, "cluster_members", members)
-        pump.submit(lambda df=clusters: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "cluster_groups")))
-        pump.submit(lambda df=members: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "cluster_members")))
-        if cfg.max_component_docs is not None and cfg.checkpoint_dir is not None:
-            # lineage: one row per split parent component (labels look like
-            # "<component>#<i>"), rows_out = sub-clusters it produced
-            splits = (
-                clusters.where(F.col("component").contains("#"))
-                .withColumn("parent", F.substring_index("component", "#", 1))
-                .groupBy("parent")
-                .agg(F.count("*").alias("n_sub"), F.sum("member_count").alias("n_docs"))
-            )
-            split_rows = _lineage_rows(
-                splits, cfg.run_id, "cluster_split",
-                block_id=F.col("parent"),
-                rows_in=F.col("n_docs"),
-                rows_out=F.col("n_sub"),
-            )
-            pump.submit(lambda df=split_rows: _append_metrics(cfg, df))
-    out["clusters"] = clusters
-    out["members"] = members
 
-    pump.close()
+    def cluster_lineage(df: DataFrame, run_id: str, name: str) -> DataFrame:
+        rows = _partition_metrics(df, run_id, name)
+        if name != "cluster_groups" or cfg.max_component_docs is None:
+            return rows
+        # one row per split parent component (labels look like
+        # "<component>#<i>"), rows_out = sub-clusters it produced
+        splits = (
+            df.where(F.col("component").contains("#"))
+            .withColumn("parent", F.substring_index("component", "#", 1))
+            .groupBy("parent")
+            .agg(F.count("*").alias("n_sub"), F.sum("member_count").alias("n_docs"))
+        )
+        return rows.unionByName(_lineage_rows(
+            splits, run_id, "cluster_split",
+            block_id=F.col("parent"),
+            rows_in=F.col("n_docs"),
+            rows_out=F.col("n_sub"),
+        ))
+
+    # queued lineage still lands if a later stage fails: its stage committed
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        (signatures,) = stage(["sign"], sign)
+        if cfg.build_kg:
+            out.update(zip(_KG_TABLES, stage(_KG_TABLES, kg)))
+        (blocks,) = stage(["block"], block, block_lineage)
+        (pairs,) = stage(["pair"], lambda: [candidate_pairs_stage(blocks)])
+        (scored,) = stage(
+            ["score"],
+            lambda: [scored_pairs_stage(
+                attach_pair_features(pairs, signatures), cfg.threshold
+            )],
+            _score_histogram_metrics,
+        )
+        clusters, members = stage(
+            ["cluster_groups", "cluster_members"], cluster, cluster_lineage
+        )
+        for job in lineage_jobs:
+            job.result()
+    out.update(
+        signatures=signatures, blocks=blocks, pairs=pairs, scored_pairs=scored,
+        clusters=clusters, members=members,
+    )
     if cfg.checkpoint_dir is not None:
         out["metrics"] = spark.read.parquet(
             os.path.join(cfg.checkpoint_dir, "metrics.parquet")
