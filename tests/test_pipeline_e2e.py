@@ -6,6 +6,7 @@ byte-identical extraction, pairwise F1 vs ground-truth family labels
 from __future__ import annotations
 
 import itertools
+from datetime import datetime
 
 import pandas as pd
 import pytest
@@ -80,9 +81,8 @@ def test_scored_pairs_match_oracle_exactly(pipeline_result, oracle_result) -> No
         assert r.pair_score == w["pair_score"]
 
 
-def test_clusters_match_oracle(pipeline_result, oracle_result) -> None:
-    got = pipeline_result["clusters"].toPandas()
-    want = pd.DataFrame(oracle_result.clusters)
+def _assert_clusters_equal(got: pd.DataFrame, oracle) -> None:
+    want = pd.DataFrame(oracle.clusters)
     assert set(got["group_key"]) == set(want["group_key"])
     g = got.set_index("group_key").sort_index()
     w = want.set_index("group_key").sort_index()
@@ -92,9 +92,8 @@ def test_clusters_match_oracle(pipeline_result, oracle_result) -> None:
         assert g.loc[k, "max_pair_score"] == pytest.approx(w.loc[k, "max_pair_score"], abs=0)
 
 
-def test_members_match_oracle(pipeline_result, oracle_result) -> None:
-    got = pipeline_result["members"].toPandas()
-    want = pd.DataFrame(oracle_result.members)
+def _assert_members_equal(got: pd.DataFrame, oracle) -> None:
+    want = pd.DataFrame(oracle.members)
     key = ["group_key", "url"]
     g = got.sort_values(key).reset_index(drop=True)
     w = want.sort_values(key).reset_index(drop=True)
@@ -109,6 +108,76 @@ def test_members_match_oracle(pipeline_result, oracle_result) -> None:
                 assert x is None or pd.isna(x)
             else:
                 assert x == pytest.approx(y, abs=0)
+
+
+def test_clusters_match_oracle(pipeline_result, oracle_result) -> None:
+    _assert_clusters_equal(pipeline_result["clusters"].toPandas(), oracle_result)
+
+
+def test_members_match_oracle(pipeline_result, oracle_result) -> None:
+    _assert_members_equal(pipeline_result["members"].toPandas(), oracle_result)
+
+
+@pytest.fixture(scope="module")
+def tie_corpus(corpus):
+    """The corpus with every member of each even family stamped with one
+    warc_ts, so keep-newest and keep-oldest fall through to the url tie-break;
+    byte-identical members already tie on size for keep-largest."""
+    tied = corpus.copy()
+    even = tied["family_id"] % 2 == 0
+    first_ts = tied.groupby("family_id")["warc_ts"].transform("min")
+    tied.loc[even, "warc_ts"] = first_ts[even]
+    tied["size"] = tied["html"].map(len)
+    fams = tied[tied.groupby("family_id")["url"].transform("size") >= 2].groupby("family_id")
+    assert sum((f["warc_ts"] == f["warc_ts"].max()).sum() > 1 for _, f in fams) > 5
+    assert sum((f["size"] == f["size"].max()).sum() > 1 for _, f in fams) > 5
+    return tied
+
+
+@pytest.mark.parametrize("strategy", ["keep-newest", "keep-oldest", "keep-largest"])
+def test_canonical_strategies_match_oracle(
+    spark, pipeline_result, tie_corpus, strategy
+) -> None:
+    """clusters_stage on the pipeline's signatures and accepted pairs, with
+    warc_ts and size ties, publishes exactly the oracle's clusters and
+    members under every canonical strategy (url asc breaks the ties)."""
+    from yams_spark.operators.clustering import clusters_stage
+
+    ts = spark.createDataFrame(tie_corpus[["url", "warc_ts"]])
+    sigs = pipeline_result["signatures"].drop("warc_ts").join(ts, "url")
+    accepted = pipeline_result["scored_pairs"].where("accepted")
+    clusters, members = clusters_stage(sigs, accepted, strategy=strategy)
+    oracle = run_oracle(tie_corpus.to_dict("records"), strategy=strategy)
+    _assert_clusters_equal(clusters.toPandas(), oracle)
+    _assert_members_equal(members.toPandas(), oracle)
+
+
+@pytest.mark.parametrize(
+    "strategy,field",
+    [("keep-newest", "warc_ts"), ("keep-oldest", "warc_ts"), ("keep-largest", "size")],
+)
+def test_null_strategy_key_fails_loudly(spark, strategy, field) -> None:
+    """A two-member component whose member lacks the strategy's key raises
+    an error naming the strategy instead of publishing that page as the
+    canonical (nulls sort first in a struct)."""
+    from yams_spark.operators.clustering import clusters_stage
+
+    ts = datetime(2024, 1, 1)
+    sigs = spark.createDataFrame(
+        [
+            ("u://a", ts, 10, "h1"),
+            ("u://b", None if field == "warc_ts" else ts, None if field == "size" else 20, "h2"),
+        ],
+        "url string, warc_ts timestamp, size long, doc_hash string",
+    )
+    pairs = spark.createDataFrame(
+        [("u://a", "u://b", 0.99, 1.0, 1.0, 0.99)],
+        "url_a string, url_b string, cosine double, title_overlap double, "
+        "path_overlap double, pair_score double",
+    )
+    clusters, _ = clusters_stage(sigs, pairs, strategy=strategy)
+    with pytest.raises(Exception, match=f"canonical strategy {strategy}: null {field}"):
+        clusters.collect()
 
 
 def test_pairwise_f1_on_labeled_block_pairs(pipeline_result, oracle_result, corpus) -> None:

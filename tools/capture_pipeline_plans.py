@@ -3,6 +3,7 @@
 and optionally for ``__spark_entry__.queries()`` entries.
 
 Usage: python tools/capture_pipeline_plans.py <suffix> [sf_dir] [--queries q1,q2,...]
+Runs at local[<cores>] with 2 x cores shuffle partitions, like perfbench.
 Writes plans/r06/er_pipeline_<stage>_<suffix>.txt, plus
 plans/r06/<query>_<suffix>.txt for each query named by --queries.
 Timings come from perfbench (``perfbench/run.py --trace 1``), not from here.
@@ -41,8 +42,9 @@ def main() -> None:
     from yams_spark.operators.clustering import clusters_stage
     from pyspark.sql import functions as F
 
-    spark = get_spark(app_name="plan_capture", master="local[8]",
-                      shuffle_partitions=16)
+    cores = len(os.sched_getaffinity(0))  # the host's cores, as perfbench
+    spark = get_spark(app_name="plan_capture", master=f"local[{cores}]",
+                      shuffle_partitions=2 * cores)
     pages, _ = materialize_pages(spark, sf_dir, f"/tmp/yams_plans_pages_{os.path.basename(sf_dir)}")
     cfg = PipelineConfig()
 

@@ -9,7 +9,9 @@ Components in MapReduce and Beyond") over self-joined edge DataFrames:
 each iteration is two shuffles, converges in O(log n) rounds, and the
 lineage is truncated every round with ``localCheckpoint`` so plans don't
 blow up. Node ids are urls; the component label is the lexicographic min
-url, which makes results deterministic.
+url, which makes results deterministic. Publication packs each
+component's members and accepted pairs in one aggregation and derives every
+published column with JVM array expressions over the packed lists.
 """
 
 from __future__ import annotations
@@ -190,6 +192,24 @@ def connected_components(
     )
 
 
+def _pack_components(
+    labels: DataFrame, members: DataFrame, pairs: DataFrame
+) -> DataFrame:
+    """(component, mems, prs): member rows joined to ``labels`` on ``url``
+    and pair rows on ``url_a`` (both endpoints of an accepted edge share a
+    component by construction), unioned and packed by ONE groupBy —
+    collect_list skips the nulls the union adds, so lists are never null."""
+    m = members.join(labels, "url").select(
+        "component", F.struct(*members.columns).alias("m")
+    )
+    p = pairs.join(labels.withColumnRenamed("url", "url_a"), "url_a").select(
+        "component", F.struct(*pairs.columns).alias("p")
+    )
+    return m.unionByName(p, allowMissingColumns=True).groupBy("component").agg(
+        F.collect_list("m").alias("mems"), F.collect_list("p").alias("prs")
+    )
+
+
 def clusters_stage(
     signatures: DataFrame,
     accepted_pairs: DataFrame,
@@ -202,11 +222,10 @@ def clusters_stage(
     """Publish (clusters, members) mirroring semantic_duplicate_groups /
     _members (migration.cpp:2598-2663; trace dedupe.cpp:217-350).
 
-    After labeling, members and pairs are packed per component with
-    collect_list and the whole publication (canonical selection, group_key,
-    max_pair_score, direct-pair member metrics) runs in one Arrow-batched
-    mapInPandas pass — plain python per component, no per-group pandas
-    frame construction, two shuffles total.
+    After labeling, members and accepted pairs are packed per component in
+    one aggregation and the whole publication (canonical selection,
+    group_key, max_pair_score, direct-pair member metrics) is JVM array
+    expressions over the packed lists — no Python pass.
 
     ``max_component_docs`` (default off, preserving oracle equality) bounds
     the packed collect_list rows: components larger than the cap are split
@@ -215,113 +234,62 @@ def clusters_stage(
     never become a single-task OOM. Split sub-components are visible as
     ``<component>#<i>`` labels in the published output.
     """
-    import pandas as pd
-
     labels = connected_components(
         accepted_pairs, driver_max_edges=driver_cc_max_edges, stats=cc_stats
     )
-    # labels feed two packed aggregations (three with the oversize split):
-    # pin them once — without this, the driver path re-converts the local
-    # pandas relation per consumer and the distributed path re-runs the
-    # final label aggregation per consumer
+    # labels feed both sides of the pack (and the oversize split): pin them
+    # once — without this, the driver path re-converts the local pandas
+    # relation per consumer and the distributed path re-runs the final
+    # label aggregation per consumer
     labels = labels.localCheckpoint(eager=True)
     if max_component_docs is not None:
         labels = split_oversized_components(
             labels, accepted_pairs, max_component_docs
         )
-
-    members_packed = (
-        signatures.select("url", "warc_ts", "size", "doc_hash")
-        .join(labels, "url", "inner")
-        .groupBy("component")
-        .agg(F.collect_list(F.struct("url", "warc_ts", "size", "doc_hash")).alias("mems"))
-    )
-    # both endpoints of an accepted edge share a component by construction;
-    # alias label columns so the self-join lineage isn't ambiguous
-    labels_for_pairs = labels.select(
-        F.col("url").alias("url_a"), F.col("component").alias("comp")
-    )
-    pairs_packed = (
+    packed = _pack_components(
+        labels,
+        signatures.select("url", "warc_ts", "size", "doc_hash"),
         accepted_pairs.select(
             "url_a", "url_b", "cosine", "title_overlap", "path_overlap", "pair_score"
-        )
-        .join(labels_for_pairs, "url_a")
-        .groupBy("comp")
-        .agg(
-            F.collect_list(
-                F.struct("url_a", "url_b", "cosine", "title_overlap",
-                         "path_overlap", "pair_score")
-            ).alias("prs")
-        )
+        ),
     )
-    packed = members_packed.join(
-        pairs_packed, members_packed["component"] == pairs_packed["comp"], "left"
-    ).select("component", "mems", "prs")
 
-    out_schema = (
-        "component string, group_key string, canonical_url string, "
-        "member_count long, max_pair_score double, url string, role string, "
-        "similarity_to_canonical double, title_overlap double, "
-        "path_overlap double, pair_score double"
+    # canonical selection (dedupe.cpp:223-240): the stable sort "url asc,
+    # then strategy" is the min of struct(key, url). A null key fails
+    # loudly; struct ordering would put it first and make it canonical.
+    field = "size" if strategy == "keep-largest" else "warc_ts"
+
+    def rank(m):
+        key = m["size"] if field == "size" else F.unix_micros(m["warc_ts"])
+        fail = F.raise_error(F.concat(
+            F.lit(f"canonical strategy {strategy}: null {field} at "), m["url"]))
+        key = F.when(m[field].isNull(), fail).otherwise(
+            key if strategy == "keep-oldest" else -key)
+        return F.struct(key.alias("k"), m["url"].alias("url"))
+
+    # direct-canonical pair metrics (dedupe.cpp:324-337) by other endpoint
+    canon = F.col("canonical_url")
+    direct = F.map_from_entries(F.transform(
+        F.filter("prs", lambda p: (p["url_a"] == canon) | (p["url_b"] == canon)),
+        lambda p: F.struct(F.when(p["url_a"] == canon, p["url_b"]).otherwise(p["url_a"]), p),
+    ))
+    hashes = F.array_sort(F.transform("mems", lambda m: m["doc_hash"]))
+    full = (
+        packed.where(F.size("mems") >= 2)
+        .withColumn("canonical_url", F.array_min(F.transform("mems", rank))["url"])
+        .select(
+            "component",
+            F.concat(F.lit(f"semantic:{strategy}:{threshold:.3f}:"),
+                     F.array_join(hashes, ",")).alias("group_key"),
+            "canonical_url",
+            F.size("mems").cast("long").alias("member_count"),
+            F.coalesce(F.array_max(F.transform("prs", lambda p: p["pair_score"])),
+                       F.lit(0.0)).alias("max_pair_score"),
+            "mems",
+            direct.alias("direct"),
+        )
+        .persist()
     )
-    prefix = f"semantic:{strategy}:{threshold:.3f}:"
-
-    def publish(iterator):
-        for pdf in iterator:
-            rows = []
-            for component, mems, prs in zip(pdf["component"], pdf["mems"], pdf["prs"]):
-                mems = list(mems)
-                if len(mems) < 2:
-                    continue
-                # canonical selection (dedupe.cpp:223-240), url asc tie-break
-                mems.sort(key=lambda r: r["url"])
-                if strategy == "keep-oldest":
-                    mems.sort(key=lambda r: r["warc_ts"])
-                elif strategy == "keep-largest":
-                    mems.sort(key=lambda r: r["size"], reverse=True)
-                else:
-                    mems.sort(key=lambda r: r["warc_ts"], reverse=True)
-                canonical_url = mems[0]["url"]
-
-                group_key = prefix + ",".join(sorted(m["doc_hash"] for m in mems))
-                pair_list = list(prs) if prs is not None else []
-                max_pair_score = (
-                    max(p["pair_score"] for p in pair_list) if pair_list else 0.0
-                )
-
-                # direct-canonical pair metrics (dedupe.cpp:324-337)
-                direct = {}
-                for p in pair_list:
-                    if p["url_a"] == canonical_url:
-                        direct.setdefault(p["url_b"], p)
-                    elif p["url_b"] == canonical_url:
-                        direct.setdefault(p["url_a"], p)
-
-                n = len(mems)
-                for m in mems:
-                    d = direct.get(m["url"])
-                    rows.append(
-                        (
-                            component, group_key, canonical_url, n,
-                            max_pair_score, m["url"],
-                            "canonical" if m["url"] == canonical_url else "duplicate",
-                            d["cosine"] if d is not None else None,
-                            d["title_overlap"] if d is not None else None,
-                            d["path_overlap"] if d is not None else None,
-                            d["pair_score"] if d is not None else None,
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "component", "group_key", "canonical_url", "member_count",
-                        "max_pair_score", "url", "role", "similarity_to_canonical",
-                        "title_overlap", "path_overlap", "pair_score",
-                    ],
-                )
-
-    full = packed.mapInPandas(publish, schema=out_schema).persist()
 
     clusters = (
         full.select(
@@ -334,9 +302,15 @@ def clusters_stage(
             "component",
         ).dropDuplicates(["group_key"])
     )
-    members = full.select(
-        "group_key", "url", "role", "similarity_to_canonical",
-        "title_overlap", "path_overlap", "pair_score", "component",
+    exploded = full.select("group_key", "canonical_url", "direct", "component",
+                           F.explode("mems").alias("m"))
+    d = F.col("direct")[F.col("m.url")]
+    members = exploded.select(
+        "group_key", "m.url",
+        F.when(F.col("m.url") == canon, "canonical").otherwise("duplicate").alias("role"),
+        d["cosine"].alias("similarity_to_canonical"),
+        *(d[c].alias(c) for c in ("title_overlap", "path_overlap", "pair_score")),
+        "component",
     )
     return clusters, members
 
@@ -358,7 +332,8 @@ def cluster_metrics(
                    orders ties by hash descending inside max_element)
     centroid     = mean member embedding (topology_build_utils.h)
 
-    Packed per component with collect_list, computed in one Arrow pass.
+    Packed per component by ``_pack_components``; the per-component
+    numeric kernel runs in one Arrow pass.
 
     ``sgc_hops > 0`` runs the reference's SGC smoothing pre-pass over the
     accepted-pair graph before the topology build (topology_sgc.cpp is
@@ -371,7 +346,7 @@ def cluster_metrics(
     import pandas as pd
 
     labels = connected_components(accepted_pairs)
-    labels = labels.localCheckpoint(eager=True)  # reused by both packed aggs
+    labels = labels.localCheckpoint(eager=True)  # both sides of the pack
 
     sig_emb = signatures.select("url", "doc_hash", "embedding")
     if sgc_hops > 0:
@@ -393,24 +368,11 @@ def cluster_metrics(
             )
         )
 
-    mems = (
-        sig_emb.select("url", "doc_hash", "embedding")
-        .join(labels, "url", "inner")
-        .groupBy("component")
-        .agg(F.collect_list(F.struct("url", "doc_hash", "embedding")).alias("mems"))
-    )
-    labels_for_pairs = labels.select(
-        F.col("url").alias("url_a"), F.col("component").alias("comp")
-    )
-    prs = (
-        accepted_pairs.select("url_a", "url_b", F.col(weight_col).alias("w"))
-        .join(labels_for_pairs, "url_a")
-        .groupBy("comp")
-        .agg(F.collect_list(F.struct("url_a", "url_b", "w")).alias("prs"))
-    )
-    packed = mems.join(prs, mems["component"] == prs["comp"], "left").select(
-        "component", "mems", "prs"
-    )
+    packed = _pack_components(
+        labels,
+        sig_emb.select("url", "doc_hash", "embedding"),
+        accepted_pairs.select("url_a", "url_b", F.col(weight_col).alias("w")),
+    ).where(F.size("mems") > 0)  # pair urls with no signature row have no members
 
     schema = (
         "component string, member_count long, internal_edges long, "
@@ -425,7 +387,7 @@ def cluster_metrics(
             for component, members, pairs in zip(pdf["component"], pdf["mems"], pdf["prs"]):
                 members = list(members)
                 n = len(members)
-                pair_list = list(pairs) if pairs is not None else []
+                pair_list = list(pairs)
                 wdeg: dict[str, float] = {m["url"]: 0.0 for m in members}
                 deg: dict[str, int] = {m["url"]: 0 for m in members}
                 cohesion_sum = 0.0
