@@ -9,22 +9,25 @@ Every stage is a pure function of its input tables and follows one rule,
 written once (``stage`` in ``run_pipeline``): it resumes only when ALL of its
 tables are committed (output parquet + watermark under ``checkpoint_dir``);
 otherwise it is rebuilt and each table is committed, or, without a
-``checkpoint_dir``, pinned in memory. Lineage rows are written to the
-metrics table for checkpointed runs only. (Idempotent resume: the
-WAL/recovery analog of wal_manager.h:23-80, done the Spark way via durable
-table commits.)
+``checkpoint_dir``, pinned in memory. A checkpointed run takes its lineage
+rows from the commits themselves (parquet footers, an ``Observation`` on the
+score write, each commit's watermark) and appends them to the metrics table
+once, also when a later stage fails. (Idempotent resume: the WAL/recovery
+analog of wal_manager.h:23-80, done the Spark way via durable table commits.)
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from yams_spark.functions.chunker import PAGE_CHUNKING, ChunkingConfig
@@ -45,6 +48,11 @@ METRICS_SCHEMA = (
     "rows_out long, watermark_ts timestamp"
 )
 _METRICS_COLUMNS = [c.split(" ", 1) for c in METRICS_SCHEMA.split(", ")]
+#: lineage rows read from the commits, sent to Spark as one JSON literal
+_COMMIT_ROWS = (
+    "array<struct<stage:string,partition_id:int,pair_count:bigint,"
+    "score_histogram:array<bigint>,rows_out:bigint,watermark_ts:string>>"
+)
 
 #: the optional KG stage's tables (``populate_kg`` with doc embeddings)
 _KG_TABLES = ("kg_doc_entities", "kg_nodes", "kg_aliases", "kg_edges",
@@ -128,82 +136,35 @@ def _stage_done(cfg: PipelineConfig, stage: str) -> bool:
 
 def _commit_stage(
     spark: SparkSession, cfg: PipelineConfig, stage: str, df: DataFrame
-) -> DataFrame:
-    """Write stage output + watermark; return the durable re-read DataFrame.
+) -> tuple[DataFrame, datetime | None]:
+    """Write stage output + watermark; return the durable re-read DataFrame
+    and the watermark's timestamp (its lineage rows carry the same value).
     Without a checkpoint_dir the table is pinned in memory instead, so no
     downstream consumer (or the caller) recomputes it — the module's only
     pin site."""
     if cfg.checkpoint_dir is None:
-        return df.persist()
+        return df.persist(), None
     path = _stage_path(cfg, stage)
     df.write.mode("overwrite").parquet(path)
+    ts = datetime.now(timezone.utc)
     with open(_watermark_path(cfg, stage), "w") as f:
         json.dump(
-            {
-                "run_id": cfg.run_id,
-                "stage": stage,
-                "watermark_ts": datetime.now(timezone.utc).isoformat(),
-            },
+            {"run_id": cfg.run_id, "stage": stage, "watermark_ts": ts.isoformat()},
             f,
         )
-    return spark.read.parquet(path)
+    return spark.read.parquet(path), ts
 
 
-def _lineage_rows(
-    df: DataFrame, run_id: str, stage: str, **cols: Column
-) -> DataFrame:
+def _lineage_rows(df: DataFrame, run_id: str, **cols: Column) -> DataFrame:
     """Project ``df`` onto METRICS_SCHEMA lineage rows. ``cols`` maps
-    metrics columns to expressions over ``df``; run_id, stage and
-    watermark_ts are filled in, partition_id defaults to -1 (a row that is
-    not per-partition), every other column is null."""
-    cols = {
-        "run_id": F.lit(run_id),
-        "stage": F.lit(stage),
-        "partition_id": F.lit(-1),
-        "watermark_ts": F.current_timestamp(),
-        **cols,
-    }
+    metrics columns to expressions over ``df``; run_id is filled in,
+    partition_id defaults to -1 (a row that is not per-partition), every
+    other column is null."""
+    cols = {"run_id": F.lit(run_id), "partition_id": F.lit(-1), **cols}
     return df.select(*[
         cols.get(name, F.lit(None)).cast(dtype).alias(name)
         for name, dtype in _METRICS_COLUMNS
     ])
-
-
-def _partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:
-    """Per-partition lineage rows (rows_out per partition + watermark)."""
-    counts = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("rows_out")
-    )
-    return _lineage_rows(
-        counts, run_id, stage,
-        partition_id=F.col("partition_id"), rows_out=F.col("rows_out"),
-    )
-
-
-def _score_histogram_metrics(scored: DataFrame, run_id: str, stage: str) -> DataFrame:
-    """20-bin histogram of pair scores over [0,1] as a lineage row.
-
-    One job: the 20 bin counts are collected (tiny) and the row is built
-    driver-side — the total is the bin sum, not a second full count()
-    action over the scored table.
-    """
-    counts = (
-        scored.withColumn(
-            "bin", F.least(F.floor(F.col("pair_score") * 20).cast("int"), F.lit(19))
-        )
-        .groupBy("bin")
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )
-    bins = {r["bin"]: r["c"] for r in counts}
-    hist = [int(bins.get(i, 0)) for i in range(20)]
-    total = sum(hist)
-    return _lineage_rows(
-        scored.sparkSession.range(1), run_id, stage,
-        pair_count=F.lit(total),
-        score_histogram=F.array(*[F.lit(h) for h in hist]),
-        rows_out=F.lit(total),
-    )
 
 
 def run_pipeline(
@@ -251,22 +212,34 @@ def run_pipeline(
     if 0 < cur_parts < 2 * par:
         spark.conf.set("spark.sql.shuffle.partitions", str(2 * par))
 
-    # The one stage rule (module docstring). Lineage jobs run on ONE thread
-    # (guide §2.6): stage-N metrics scans back-fill the cores while stage N+1
-    # computes, and a single worker keeps the metrics appends ordered.
-    lineage_jobs: list = []
+    # The one stage rule (module docstring). Lineage is read once all of a
+    # stage's tables are committed, and appended in the ``finally`` below.
+    commit_rows: list[dict] = []
+    report_rows: list[DataFrame] = []  # projected from small report tables
 
-    def stage(names, build, lineage=_partition_metrics) -> list[DataFrame]:
+    def partition_rows(name: str, df: DataFrame, ts: datetime) -> None:
+        """One row per write task that wrote rows, from the parquet footers
+        (no Spark job): partition_id is the task's partition index, the
+        NNNNN of part-NNNNN-*.parquet, and rows_out its row count."""
+        counts: dict[int, int] = {}
+        for f in glob.glob(os.path.join(_stage_path(cfg, name), "part-*.parquet")):
+            n = pq.read_metadata(f).num_rows
+            if n:
+                pid = int(os.path.basename(f).split("-")[1])
+                counts[pid] = counts.get(pid, 0) + n
+        commit_rows.extend(
+            {"stage": name, "partition_id": p, "rows_out": n, "watermark_ts": ts.isoformat()}
+            for p, n in sorted(counts.items())
+        )
+
+    def stage(names, build, lineage=partition_rows) -> list[DataFrame]:
         if all(_stage_done(cfg, n) for n in names):
             return [spark.read.parquet(_stage_path(cfg, n)) for n in names]
-        tables = [_commit_stage(spark, cfg, n, df) for n, df in zip(names, build())]
+        committed = [_commit_stage(spark, cfg, n, df) for n, df in zip(names, build())]
         if cfg.checkpoint_dir is not None:
-            metrics_path = os.path.join(cfg.checkpoint_dir, "metrics.parquet")
-            for n, df in zip(names, tables):
-                lineage_jobs.append(pool.submit(
-                    lambda n=n, df=df: lineage(df, cfg.run_id, n)
-                    .write.mode("append").parquet(metrics_path)))
-        return tables
+            for n, (df, ts) in zip(names, committed):
+                lineage(n, df, ts)
+        return [df for df, _ in committed]
 
     def sign():  # extract + signatures; narrow, no shuffle
         sig = signatures_stage(pages, cfg.chunk_cfg, embed_fn=cfg.embed_fn)
@@ -307,14 +280,35 @@ def run_pipeline(
         )
         return [blocks]
 
-    def block_lineage(df: DataFrame, run_id: str, name: str) -> DataFrame:
-        return _partition_metrics(df, run_id, name).unionByName(_lineage_rows(
-            salted["oversize"], run_id, "block_oversize",
+    def block_lineage(name: str, df: DataFrame, ts: datetime) -> None:
+        partition_rows(name, df, ts)
+        report_rows.append(_lineage_rows(
+            salted["oversize"], cfg.run_id,
+            stage=F.lit("block_oversize"), watermark_ts=F.lit(ts),
             block_id=F.col("block_key"),
             pair_count=F.col("dropped_pairs_upper_bound"),
             rows_in=F.col("block_size"),
             rows_out=F.col("n_salt"),
         ))
+
+    histogram = Observation()
+
+    def score():  # observes the 20-bin pair_score histogram on the write
+        # clamped to [0, 19]: negative scores (cosine < 0) land in bin 0, so
+        # the bins always sum to the row count
+        b = F.least(F.greatest(F.floor(F.col("pair_score") * 20), F.lit(0)), F.lit(19))
+        return [scored_pairs_stage(
+            attach_pair_features(pairs, signatures), cfg.threshold
+        ).observe(histogram, F.count("*").alias("n"),
+                  F.array(*[F.count_if(b == i) for i in range(20)]).alias("bins"))]
+
+    def score_lineage(name: str, df: DataFrame, ts: datetime) -> None:
+        got = histogram.get
+        commit_rows.append({
+            "stage": name, "partition_id": -1, "pair_count": got["n"],
+            "score_histogram": got["bins"], "rows_out": got["n"],
+            "watermark_ts": ts.isoformat(),
+        })
 
     def cluster():  # cluster + publish
         cc_max_edges = cfg.driver_cc_max_edges
@@ -326,10 +320,10 @@ def run_pipeline(
             cc_stats=out["cc_stats"],
         )
 
-    def cluster_lineage(df: DataFrame, run_id: str, name: str) -> DataFrame:
-        rows = _partition_metrics(df, run_id, name)
+    def cluster_lineage(name: str, df: DataFrame, ts: datetime) -> None:
+        partition_rows(name, df, ts)
         if name != "cluster_groups" or cfg.max_component_docs is None:
-            return rows
+            return
         # one row per split parent component (labels look like
         # "<component>#<i>"), rows_out = sub-clusters it produced
         splits = (
@@ -338,32 +332,36 @@ def run_pipeline(
             .groupBy("parent")
             .agg(F.count("*").alias("n_sub"), F.sum("member_count").alias("n_docs"))
         )
-        return rows.unionByName(_lineage_rows(
-            splits, run_id, "cluster_split",
+        report_rows.append(_lineage_rows(
+            splits, cfg.run_id, stage=F.lit("cluster_split"), watermark_ts=F.lit(ts),
             block_id=F.col("parent"),
             rows_in=F.col("n_docs"),
             rows_out=F.col("n_sub"),
         ))
 
-    # queued lineage still lands if a later stage fails: its stage committed
-    with ThreadPoolExecutor(max_workers=1) as pool:
+    # the stages that committed keep their lineage when a later one fails
+    try:
         (signatures,) = stage(["sign"], sign)
         if cfg.build_kg:
             out.update(zip(_KG_TABLES, stage(_KG_TABLES, kg)))
         (blocks,) = stage(["block"], block, block_lineage)
         (pairs,) = stage(["pair"], lambda: [candidate_pairs_stage(blocks)])
-        (scored,) = stage(
-            ["score"],
-            lambda: [scored_pairs_stage(
-                attach_pair_features(pairs, signatures), cfg.threshold
-            )],
-            _score_histogram_metrics,
-        )
+        (scored,) = stage(["score"], score, score_lineage)
         clusters, members = stage(
             ["cluster_groups", "cluster_members"], cluster, cluster_lineage
         )
-        for job in lineage_jobs:
-            job.result()
+    finally:
+        if commit_rows or report_rows:
+            rows = spark.range(1).select(F.inline(
+                F.from_json(F.lit(json.dumps(commit_rows)), _COMMIT_ROWS)
+            ))
+            rows = reduce(DataFrame.unionByName, report_rows, _lineage_rows(
+                rows, cfg.run_id, **{c: F.col(c) for c in rows.columns}
+            ))
+            # one task: the run appends one small file
+            rows.coalesce(1).write.mode("append").parquet(
+                os.path.join(cfg.checkpoint_dir, "metrics.parquet")
+            )
     out.update(
         signatures=signatures, blocks=blocks, pairs=pairs, scored_pairs=scored,
         clusters=clusters, members=members,
