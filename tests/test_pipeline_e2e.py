@@ -234,26 +234,72 @@ def test_pipeline_deterministic(spark, corpus, pipeline_result) -> None:
     assert a == b
 
 
-def _boilerplate_pages(spark, n: int):
-    """n pages with identical text: one exact block, dense accepted pairs,
-    so every page lands in one mega-component unless it is split."""
+def _identical_pages(spark, urls: list[str]):
+    """One page per url, all with the same html: one exact block and every
+    candidate pair accepted."""
     shared = "identical boilerplate page body " * 20
     html = f"<html><title>Mega Page</title><body><p>{shared}</p></body></html>"
     pdf = pd.DataFrame(
         [
             {
-                "url": f"https://mega.example/p{i:03d}",
+                "url": url,
                 "warc_ts": pd.Timestamp("2024-01-01") + pd.Timedelta(hours=i),
                 "html": html.encode(),
                 "text": None,
                 "lang": "en",
             }
-            for i in range(n)
+            for i, url in enumerate(urls)
         ]
     )
     return spark.createDataFrame(
         pdf, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
+
+
+def _boilerplate_pages(spark, n: int):
+    """n pages with identical text, so every page lands in one
+    mega-component unless it is split."""
+    return _identical_pages(spark, [f"https://mega.example/p{i:03d}" for i in range(n)])
+
+
+def test_levenshtein_url_on_accepted_pairs(pipeline_result) -> None:
+    """levenshtein_url is the scalar edit distance of the urls on accepted
+    pairs and 0 on rejected ones."""
+    from yams_spark.functions.similarity import levenshtein
+
+    rows = pipeline_result["scored_pairs"].select(
+        "url_a", "url_b", "levenshtein_url", "accepted"
+    ).collect()
+    assert any(r["accepted"] for r in rows) and not all(r["accepted"] for r in rows)
+    for r in rows:
+        want = levenshtein(r["url_a"], r["url_b"]) if r["accepted"] else 0
+        assert r["levenshtein_url"] == want, (r["url_a"], r["url_b"])
+
+
+def test_levenshtein_url_counts_code_points(spark) -> None:
+    """Non-ASCII urls: the distance counts code points (é→e, ü→u is 2),
+    like similarity.levenshtein, not UTF-8 bytes (4)."""
+    pages = _identical_pages(spark, ["https://é.example/ü", "https://e.example/u"])
+    (row,) = run_pipeline(spark, pages, PipelineConfig())["scored_pairs"].collect()
+    assert row["accepted"] and row["levenshtein_url"] == 2
+
+
+def test_precomputed_embedding_of_another_dim(spark) -> None:
+    """A precomputed vector whose length differs from the computed ones
+    scores cosine 0.0 against them (cosine_similarity's length-mismatch
+    rule), so its pairs are rejected and the other pages still cluster."""
+    urls = [f"https://dim.example/p{i}" for i in range(4)]
+    pre = spark.createDataFrame([(urls[0], [1.0] * 8)], "url string, embedding array<float>")
+    out = run_pipeline(spark, _identical_pages(spark, urls), PipelineConfig(),
+                       precomputed_embeddings=pre)
+    scored = out["scored_pairs"].collect()
+    assert len(scored) == 6
+    for r in scored:
+        odd = urls[0] in (r["url_a"], r["url_b"])
+        assert r["accepted"] != odd and (r["cosine"] == 0.0) == odd
+    (cluster,) = out["clusters"].collect()
+    assert cluster["member_count"] == 3
+    assert {r["url"] for r in out["members"].collect()} == set(urls[1:])
 
 
 def test_oversized_component_split_wired(spark, tmp_path) -> None:
@@ -371,48 +417,3 @@ def test_embed_fn_seam(spark) -> None:
     for url, _, html, _, _ in rows:
         want = np.asarray(compute_signature_row(url, html)["embedding"], dtype=np.float32)
         assert np.array_equal(np.asarray(default[url], dtype=np.float32), want)
-
-
-def test_kg_stage_in_pipeline(spark, tmp_path) -> None:
-    """PipelineConfig(build_kg=True): the KG-population stage runs at the
-    PostIngestQueue stage position, commits per-table checkpoints +
-    lineage rows, and resumes like any stage."""
-    import pandas as pd
-
-    rows = [
-        {
-            "url": f"https://kg.example/p{i}",
-            "warc_ts": pd.Timestamp("2024-01-01") + pd.Timedelta(hours=i),
-            "html": (
-                "<html><title>Entity Page</title><body><p>"
-                f"Alpha Beta visited New York City chapter {i} today"
-                "</p></body></html>"
-            ).encode(),
-            "text": None,
-            "lang": "en",
-        }
-        for i in range(6)
-    ]
-    pdf = pd.DataFrame(rows)
-    pdf["text"] = None
-    pages = spark.createDataFrame(
-        pdf, "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    ckpt = str(tmp_path / "ck_kg")
-    cfg = PipelineConfig(checkpoint_dir=ckpt, build_kg=True, kg_pagerank_iters=2)
-    out = run_pipeline(spark, pages, cfg)
-    for t in ("kg_doc_entities", "kg_nodes", "kg_aliases", "kg_edges",
-              "kg_node_stats", "kg_node_embeddings"):
-        assert t in out, t
-    ents = {r["entity_text"] for r in out["kg_doc_entities"].collect()}
-    assert "Alpha Beta" in ents and "New York City" in ents
-    assert out["kg_node_stats"].where("pagerank IS NULL").count() == 0
-    # every kg table produced a lineage row
-    stages = {r["stage"] for r in out["metrics"].collect()}
-    assert {"kg_doc_entities", "kg_nodes", "kg_edges"} <= stages
-    # resume: second run reuses the committed kg tables, identical nodes
-    out2 = run_pipeline(spark, pages, PipelineConfig(
-        checkpoint_dir=ckpt, run_id=cfg.run_id, build_kg=True, kg_pagerank_iters=2))
-    a = sorted(r["node_key"] for r in out["kg_nodes"].collect())
-    b = sorted(r["node_key"] for r in out2["kg_nodes"].collect())
-    assert a == b

@@ -3,9 +3,9 @@
 Each optimization that changed an operator's internals this round gets a
 direct committed check against an independent reference implementation:
 
-* ``levenshtein_batch`` — common prefix/suffix stripping + batched DP vs a
-  plain two-row byte-wise DP (edit distance is byte-wise over UTF-8 by
-  contract; similarity.py:134).
+* url Levenshtein — the score stage uses Spark's built-in ``levenshtein``;
+  it must equal the scalar ``similarity.levenshtein`` (code-point edit
+  distance), multi-byte UTF-8 included.
 * ``cosine_matrix`` — einsum(dtype=float64) accumulation vs the old
   explicit-float64-copy path it replaced (claimed bit-equal; the scalar
   ``cosine_similarity`` now delegates to the matrix kernel, so the older
@@ -32,24 +32,6 @@ from yams_spark.functions.sketches import kgram_hashes
 
 # ---------------------------------------------------------------- levenshtein
 
-def _byte_dp(a: bytes, b: bytes) -> int:
-    """Independent two-row DP over raw bytes (no stripping)."""
-    if a == b:
-        return 0
-    if not a:
-        return len(b)
-    if not b:
-        return len(a)
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, start=1):
-        cur = [i] + [0] * len(b)
-        for j, cb in enumerate(b, start=1):
-            cost = 0 if ca == cb else 1
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-        prev = cur
-    return prev[-1]
-
-
 def _lev_cases() -> list[tuple[str, str]]:
     rng = random.Random(1234)
     alpha = "ab/.:-xyz"
@@ -58,13 +40,14 @@ def _lev_cases() -> list[tuple[str, str]]:
         ("kitten", "sitting"), ("flaw", "lawn"),
         # shared prefix only / suffix only / both
         ("http://a.com/x", "http://a.com/y"),
-        ("prefix-mid-suffix", "prefix-suffix"),          # one side empty after strip
+        ("prefix-mid-suffix", "prefix-suffix"),          # pure deletion / insertion
         ("prefix-suffix", "prefix-mid-suffix"),
         ("same-everything", "same-everything"),
         ("aaaa", "aaa"),                                 # overlap of prefix and suffix runs
         ("aaa", "aaaa"),
         ("abab", "bab"), ("xaax", "xax"),
-        ("é-fin", "è-fin"), ("ü", "u"),                  # multi-byte UTF-8 (byte-wise contract)
+        ("é-fin", "è-fin"), ("ü", "u"),                  # multi-byte UTF-8: one code point each
+        ("https://é.com/ü", "https://e.com/u"),
         ("a", "b"), ("a", "a"), ("ab", "ba"),
     ]
     for _ in range(300):
@@ -80,27 +63,13 @@ def _lev_cases() -> list[tuple[str, str]]:
     return cases
 
 
-def test_levenshtein_batch_matches_scalar_dp() -> None:
+def test_spark_levenshtein_matches_scalar(spark) -> None:
+    from pyspark.sql import functions as F
+
     cases = _lev_cases()
-    a_list = [a for a, _ in cases]
-    b_list = [b for _, b in cases]
-    got = similarity.levenshtein_batch(a_list, b_list)
-    expected = [_byte_dp(a.encode("utf-8"), b.encode("utf-8")) for a, b in cases]
-    assert got.tolist() == expected
-
-
-def test_levenshtein_batch_singletons_equal_batch() -> None:
-    # batch width/padding must not leak between rows
-    cases = _lev_cases()[:40]
-    batch = similarity.levenshtein_batch([a for a, _ in cases], [b for _, b in cases])
-    for k, (a, b) in enumerate(cases):
-        single = similarity.levenshtein_batch([a], [b])
-        assert single[0] == batch[k], (a, b)
-
-
-def test_levenshtein_batch_empty_batch() -> None:
-    out = similarity.levenshtein_batch([], [])
-    assert out.shape == (0,) and out.dtype == np.int32
+    df = spark.createDataFrame(cases, "a string, b string")
+    got = [r[0] for r in df.select(F.levenshtein("a", "b")).collect()]
+    assert got == [similarity.levenshtein(a, b) for a, b in cases]
 
 
 # --------------------------------------------------------------------- cosine

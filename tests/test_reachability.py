@@ -29,8 +29,6 @@ TEST_ONLY_ALLOWLIST = {
         "pandas reference implementation the pipeline e2e tests compare against",
     "yams_spark.operators.retrieve":
         "CAS manifest/reassembly read path (PAPER.md §1.1), exercised by its tests",
-    "yams_spark.streaming.incremental_er":
-        "streaming ER recast, tested equal to the batch pipeline",
 }
 
 

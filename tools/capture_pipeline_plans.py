@@ -1,6 +1,8 @@
 """Capture .explain("formatted") for every ER-pipeline stage DataFrame
-(pre-commit, so the real stage plan shows — not the checkpoint re-read),
-and optionally for ``__spark_entry__.queries()`` entries.
+that an uncheckpointed ``run_pipeline(spark, pages, PipelineConfig())``
+returns (each is pinned in memory, so its plan is the stage's build plan,
+not a checkpoint re-read), and optionally for ``__spark_entry__.queries()``
+entries.
 
 Usage: python tools/capture_pipeline_plans.py <suffix> [sf_dir] [--queries q1,q2,...]
 Runs at local[<cores>] with 2 x cores shuffle partitions, like perfbench.
@@ -16,6 +18,14 @@ import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+
+
+#: (plan file name, run_pipeline output key), in stage order
+STAGE_TABLES = [
+    ("sign", "signatures"), ("block", "blocks"), ("pair", "pairs"),
+    ("score", "scored_pairs"), ("cluster_groups", "clusters"),
+    ("cluster_members", "members"),
+]
 
 
 def explain_str(df) -> str:
@@ -35,18 +45,12 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
     from yams_spark.session import get_spark
     from yams_spark.sources.pages import materialize_pages
-    from yams_spark.plans.er_pipeline import PipelineConfig
-    from yams_spark.operators.blocking import blocks_stage, salt_blocks, candidate_pairs_stage
-    from yams_spark.operators.signatures import signatures_stage
-    from yams_spark.operators.scoring import attach_pair_features, scored_pairs_stage
-    from yams_spark.operators.clustering import clusters_stage
-    from pyspark.sql import functions as F
+    from yams_spark.plans.er_pipeline import PipelineConfig, run_pipeline
 
     cores = len(os.sched_getaffinity(0))  # the host's cores, as perfbench
     spark = get_spark(app_name="plan_capture", master=f"local[{cores}]",
                       shuffle_partitions=2 * cores)
     pages, _ = materialize_pages(spark, sf_dir, f"/tmp/yams_plans_pages_{os.path.basename(sf_dir)}")
-    cfg = PipelineConfig()
 
     out_dir = os.path.join(_REPO, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
@@ -56,21 +60,9 @@ def main() -> None:
             f.write(explain_str(df))
         print("wrote", name)
 
-    signatures = signatures_stage(pages, cfg.chunk_cfg).persist()
-    dump("sign", signatures)
-    raw_blocks = blocks_stage(signatures, cfg.families)
-    blocks, oversize = salt_blocks(raw_blocks, cfg.block_cap)
-    blocks = blocks.persist()
-    dump("block", blocks)
-    dump("block_oversize", oversize)
-    pairs = candidate_pairs_stage(blocks)
-    dump("pair", pairs)
-    scored = scored_pairs_stage(attach_pair_features(pairs, signatures), cfg.threshold).persist()
-    dump("score", scored)
-    accepted = scored.where(F.col("accepted"))
-    clusters, members = clusters_stage(signatures, accepted, cfg.threshold, cfg.strategy)
-    dump("cluster_groups", clusters)
-    dump("cluster_members", members)
+    out = run_pipeline(spark, pages, PipelineConfig())
+    for name, key in STAGE_TABLES:
+        dump(name, out[key])
 
     if query_names:
         import __spark_entry__

@@ -99,14 +99,6 @@ def kgram_hashes(th: np.ndarray, k: int) -> np.ndarray:
     return out
 
 
-def shingles(tokens: list[str], k: int = SHINGLE_SIZE) -> list[str]:
-    """String k-gram shingles (kept for tests / readability; the hot path
-    uses kgram_hashes)."""
-    if len(tokens) < k:
-        return [" ".join(tokens)] if tokens else []
-    return [" ".join(tokens[i : i + k]) for i in range(len(tokens) - k + 1)]
-
-
 def minhash_signature_from_hashes(sh: np.ndarray) -> np.ndarray:
     """128 fixed-seed min-hashes over a shingle-hash array (uint64)."""
     if len(sh) == 0:

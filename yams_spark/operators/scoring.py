@@ -15,9 +15,12 @@ Split across the JVM/Python boundary by what each side is good at
   Python for them;
 * the cosine (whose double-accumulation einsum order is the shared
   pipeline/oracle definition — CLAUDE.md invariant) plus the accepted-only
-  Jaro-Winkler/Levenshtein extras run in ONE ``mapInArrow`` pass; the
-  embedding matrices are reshaped zero-copy from the Arrow list buffers,
-  never stacked row-by-row.
+  Jaro-Winkler extra run in ONE ``mapInArrow`` pass; the embedding matrices
+  are reshaped zero-copy from the Arrow list buffers;
+* the accepted-only url Levenshtein is Spark's built-in ``levenshtein`` in
+  the projection after that pass (code-point edit distance, the same
+  definition as ``similarity.levenshtein``), so the urls never cross to
+  Python.
 
 score     = 0.8·cosine + 0.15·title_overlap + 0.05·path_overlap  (:197)
 accepted  = cosine ≥ threshold AND
@@ -32,8 +35,8 @@ from pyspark.sql import functions as F
 
 from yams_spark.functions.similarity import (
     cosine_matrix,
+    cosine_similarity,
     jaro_winkler,
-    levenshtein_batch,
 )
 
 SCORED_SCHEMA = (
@@ -41,6 +44,9 @@ SCORED_SCHEMA = (
     "path_overlap double, jaro_winkler_title double, levenshtein_url int, "
     "simhash_hamming int, pair_score double, accepted boolean"
 )
+_SCORED_COLUMNS = [c.split(" ")[0] for c in SCORED_SCHEMA.split(", ")]
+#: the Python pass returns SCORED_SCHEMA less the JVM-side levenshtein_url
+_PY_SCHEMA = SCORED_SCHEMA.replace(" levenshtein_url int,", "")
 
 PAIR_SIDE_COLS = ["url", "title_norm", "url_norm", "simhash64", "embedding"]
 
@@ -69,17 +75,26 @@ def _jaccard_tokens_expr(a: str, b: str):
     )
 
 
-def _embedding_matrix(col, n: int) -> np.ndarray:
-    """(n, d) float32 view over an Arrow list<float> column — a zero-copy
-    reshape of the flat values buffer when the lists are uniform width
-    (they are: one embedding dim per run), else a per-row stack fallback."""
-    flat = col.flatten()
-    offs = np.diff(col.offsets.to_numpy())
-    if n > 0 and (offs == offs[0]).all() and offs[0] > 0:
-        return flat.to_numpy(zero_copy_only=False).reshape(n, int(offs[0]))
-    return np.stack(
-        [np.asarray(v, dtype=np.float32) for v in col.to_pylist()]
-    ) if n else np.zeros((0, 1), dtype=np.float32)
+def _batch_cosine(emb_a, emb_b, n: int) -> np.ndarray:
+    """Row-wise cosine of two Arrow list<float> columns. When every
+    embedding in the batch has one length d (one embedding dim per run),
+    ``cosine_matrix`` over zero-copy (n, d) reshapes of the flat value
+    buffers; otherwise (a ``precomputed_embeddings`` override of another
+    dim) ``cosine_similarity`` row by row, which is 0.0 on a length
+    mismatch (vector_database.cpp:1786-1810) and bit-equal to the matrix
+    path on equal lengths."""
+    la = np.diff(emb_a.offsets.to_numpy())
+    lb = np.diff(emb_b.offsets.to_numpy())
+    d = int(la[0])
+    if (la == d).all() and (lb == d).all():
+        return cosine_matrix(
+            emb_a.flatten().to_numpy(zero_copy_only=False).reshape(n, d),
+            emb_b.flatten().to_numpy(zero_copy_only=False).reshape(n, d),
+        )
+    return np.fromiter(
+        (cosine_similarity(x, y) for x, y in zip(emb_a.to_pylist(), emb_b.to_pylist())),
+        dtype=np.float64, count=n,
+    )
 
 
 def scored_pairs_stage(
@@ -120,9 +135,7 @@ def scored_pairs_stage(
             def col(name):
                 return batch.column(cidx[name])
 
-            emb_a = _embedding_matrix(col("embedding_a"), n)
-            emb_b = _embedding_matrix(col("embedding_b"), n)
-            cosine = cosine_matrix(emb_a, emb_b)
+            cosine = _batch_cosine(col("embedding_a"), col("embedding_b"), n)
 
             title_overlap = col("title_overlap").to_numpy(zero_copy_only=False)
             path_overlap = col("path_overlap").to_numpy(zero_copy_only=False)
@@ -130,17 +143,12 @@ def scored_pairs_stage(
             accepted = (cosine >= threshold) & (
                 (title_overlap > 0.0) | (path_overlap > 0.0) | (cosine >= 0.975)
             )
-            # extra (non-gating) features: computed only for accepted pairs —
-            # the quadratic-DP Levenshtein over every rejected candidate would
-            # dominate the stage at scale
+            # extra (non-gating) feature: computed only for accepted pairs,
+            # like levenshtein_url below
             jw = np.zeros(n)
-            lev = np.zeros(n, dtype=np.int32)
             if accepted.any():
                 idx = np.nonzero(accepted)[0]
                 take = pa.array(idx)
-                ua_acc = col("url_a").take(take).to_pylist()
-                ub_acc = col("url_b").take(take).to_pylist()
-                lev[idx] = levenshtein_batch(ua_acc, ub_acc)
                 ta_acc = col("title_norm_a").take(take).to_pylist()
                 tb_acc = col("title_norm_b").take(take).to_pylist()
                 jw[idx] = np.fromiter(
@@ -153,16 +161,20 @@ def scored_pairs_stage(
                     pa.array(cosine, type=pa.float64()),
                     col("title_overlap"), col("path_overlap"),
                     pa.array(jw, type=pa.float64()),
-                    pa.array(lev, type=pa.int32()),
                     col("simhash_hamming"),
                     pa.array(score_v, type=pa.float64()),
                     pa.array(accepted),
                 ],
                 names=[
                     "url_a", "url_b", "cosine", "title_overlap",
-                    "path_overlap", "jaro_winkler_title", "levenshtein_url",
+                    "path_overlap", "jaro_winkler_title",
                     "simhash_hamming", "pair_score", "accepted",
                 ],
             )
 
-    return hydrated.mapInArrow(score, schema=SCORED_SCHEMA)
+    # the quadratic-DP Levenshtein over every rejected candidate would
+    # dominate the stage at scale, so it is computed for accepted pairs only
+    return hydrated.mapInArrow(score, schema=_PY_SCHEMA).withColumn(
+        "levenshtein_url",
+        F.when(F.col("accepted"), F.levenshtein("url_a", "url_b")).otherwise(0),
+    ).select(*_SCORED_COLUMNS)

@@ -71,16 +71,6 @@ def blocking_keys_from_signature(
     return keys
 
 
-def embed_hashes(tokens: list[str]):
-    """(values, counts) of 3-gram shingle hashes — the embedding features."""
-    import numpy as np
-
-    return np.unique(
-        sketches.kgram_hashes(sketches.hash_tokens(tokens), EMBED_SHINGLE),
-        return_counts=True,
-    )
-
-
 def title_block_key(title_norm: str) -> str | None:
     """Exact normalized-title-set blocking key: the whole sorted token set
     (order-invariant, so title token swaps still collide); capped to bound

@@ -54,11 +54,6 @@ _COMMIT_ROWS = (
     "score_histogram:array<bigint>,rows_out:bigint,watermark_ts:string>>"
 )
 
-#: the optional KG stage's tables (``populate_kg`` with doc embeddings)
-_KG_TABLES = ("kg_doc_entities", "kg_nodes", "kg_aliases", "kg_edges",
-              "kg_node_stats", "kg_node_embeddings")
-
-
 @dataclass
 class PipelineConfig:
     threshold: float = 0.92  # dedupe.h:16
@@ -80,13 +75,6 @@ class PipelineConfig:
     #: picklable ``list[str] -> vectors`` batch callable; None keeps the
     #: deterministic feature-hash stand-in the oracles share
     embed_fn: object | None = None
-    #: run the KG-population stage after signatures (the PostIngestQueue
-    #: KnowledgeGraph/Entity stage position, PostIngestQueue.cpp:289-500):
-    #: emits kg_doc_entities/nodes/aliases/edges/node_stats keyed by
-    #: xxhash64(url) (the Spark-native analog of the reference's numeric
-    #: document rowid), checkpointed + lineage-tracked like any stage
-    build_kg: bool = False
-    kg_pagerank_iters: int = 5
     checkpoint_dir: str | None = None
     run_id: str = ""
 
@@ -257,21 +245,6 @@ def run_pipeline(
             )
         return [sig]
 
-    def kg():  # optional KG population (PostIngestQueue stage position)
-        from yams_spark.operators.kg import populate_kg
-
-        tables = populate_kg(
-            signatures.select(
-                F.xxhash64("url").alias("doc_id"),
-                F.col("extracted_text").alias("text"),
-            ),
-            pagerank_iters=cfg.kg_pagerank_iters,
-            doc_embeddings=signatures.select(
-                F.xxhash64("url").alias("vec_id"), "embedding"
-            ),
-        )
-        return [tables[n] for n in _KG_TABLES]
-
     salted: dict[str, DataFrame] = {}
 
     def block():  # + salting; the oversize report joins the block's lineage
@@ -342,8 +315,6 @@ def run_pipeline(
     # the stages that committed keep their lineage when a later one fails
     try:
         (signatures,) = stage(["sign"], sign)
-        if cfg.build_kg:
-            out.update(zip(_KG_TABLES, stage(_KG_TABLES, kg)))
         (blocks,) = stage(["block"], block, block_lineage)
         (pairs,) = stage(["pair"], lambda: [candidate_pairs_stage(blocks)])
         (scored,) = stage(["score"], score, score_lineage)
