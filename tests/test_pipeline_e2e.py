@@ -226,6 +226,13 @@ def test_in_memory_run_pins_every_table(pipeline_result) -> None:
         assert pipeline_result[name].is_cached, name
 
 
+def test_uncheckpointed_score_has_no_histogram_observation(pipeline_result) -> None:
+    """The pair_score histogram feeds only checkpointed lineage, so an
+    in-memory run's scored_pairs plan carries no observation node."""
+    plan = pipeline_result["scored_pairs"]._jdf.queryExecution().analyzed().toString()
+    assert "CollectMetrics" not in plan
+
+
 def test_pipeline_deterministic(spark, corpus, pipeline_result) -> None:
     pages = spark.createDataFrame(corpus[["url", "warc_ts", "html", "text", "lang"]])
     second = run_pipeline(spark, pages, PipelineConfig())

@@ -116,6 +116,13 @@ def test_metrics_lineage_rows(spark, small_corpus, tmp_path_factory) -> None:
         assert rows["partition_id"].is_unique, stage
         files = table.select(F.input_file_name().alias("f")).distinct().collect()
         assert set(rows["partition_id"]) == {_part_index(r["f"]) for r in files}, stage
+    # committed tables come back with the schema they were written with,
+    # which is the one parquet inference reads (top-level columns nullable)
+    tables = {"sign": "signatures", "block": "blocks", "pair": "pairs", "score": "scored_pairs",
+              "cluster_groups": "clusters", "cluster_members": "members", "metrics": "metrics"}
+    for stage, key in tables.items():
+        inferred = spark.read.parquet(os.path.join(ckpt, f"{stage}.parquet")).schema
+        assert out[key].schema == inferred, stage
     score_rows = metrics[metrics["stage"] == "score"]
     assert len(score_rows) == 1
     hist = score_rows.iloc[0]["score_histogram"]

@@ -1,6 +1,6 @@
 """Driver-style comparison: Spark queries vs DuckDB oracle at a given sf."""
 import sys, os, math, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 import numpy as np
@@ -11,7 +11,8 @@ ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 import __spark_entry__ as entrymod
 from yams_spark.session import get_spark
 
-spark = get_spark(app_name="check_entry", master="local[8]", shuffle_partitions=16)
+CORES = len(os.sched_getaffinity(0))
+spark = get_spark(app_name="check_entry", master=f"local[{CORES}]", shuffle_partitions=2 * CORES)
 
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():

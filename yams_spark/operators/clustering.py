@@ -5,11 +5,13 @@ The reference closes accepted pairs with an in-memory union-find
 (dedupe.cpp:135-155) and, in the topology engine, BFS components
 (topology_baseline.cpp:266-333). At 10^12 documents that becomes the
 iterative **large-star / small-star** algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond") over self-joined edge DataFrames:
-each iteration is two shuffles, converges in O(log n) rounds, and the
-lineage is truncated every round with ``localCheckpoint`` so plans don't
-blow up. Node ids are urls; the component label is the lexicographic min
-url, which makes results deterministic. Publication packs each
+Components in MapReduce and Beyond") over edge DataFrames: each star is a
+groupBy(min) joined back to its edges (skew-splittable by AQE, unlike a
+window over a hub's partition), the loop stops as soon as the edges form
+stars around their component minimum (O(log n) rounds), and the lineage is
+truncated every round with ``localCheckpoint`` so plans don't blow up. Node
+ids are urls; the component label is the lexicographic min url, which
+makes results deterministic. Publication packs each
 component's members and accepted pairs in one aggregation and derives every
 published column with JVM array expressions over the packed lists.
 """
@@ -29,11 +31,11 @@ def _large_star(edges: DataFrame) -> DataFrame:
     )
     mins = bidir.groupBy("u").agg(F.min("v").alias("mn"))
     mins = mins.withColumn("mn", F.least(F.col("mn"), F.col("u")))
+    # duplicate edges change no min, and _small_star ends in distinct()
     return (
         bidir.join(mins, "u")
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("src"), F.col("mn").alias("dst"))
-        .distinct()
     )
 
 
@@ -132,17 +134,24 @@ def connected_components(
     """edges -> (url, component) where component = min url in the component.
 
     Includes only nodes that appear in at least one edge (singletons are
-    handled by the caller via a left join). One Spark job per round: the
-    checkpoint is lazy and materialized by the same aggregation that
-    computes the convergence signature and the driver-finish gate (an
-    eager checkpoint plus a separate signature job would double the fixed
-    per-round latency).
+    handled by the caller via a left join).
+
+    Distributed rounds: a large star and a small star, then one
+    aggregation over the lazily checkpointed edges that materializes the
+    checkpoint and returns the edge count (the driver-finish gate) and the
+    stop rule. After ``_small_star`` every edge points from the larger url
+    to the smaller; the loop stops when no node has both an in-edge and an
+    out-edge and no node has two out-edges. Every component is then a star
+    centred on its minimum, and another round would return the same edges,
+    so none is run to confirm it. That matters: a round is about ten Spark
+    jobs, because AQE submits every shuffle stage of the two stars and of
+    the stop-rule aggregation as its own job.
 
     ``driver_max_edges=0`` disables the driver union-find entirely — the
-    star rounds run to convergence (the pure 10^12-scale path; the bench
-    forces this once per round to time it, VERDICT r4 ask #2). ``stats``
+    star rounds run to convergence (the pure 10^12-scale path). ``stats``
     (optional dict) is filled with {mode, rounds, edges_initial} for
-    bench/lineage reporting.
+    bench/lineage reporting. Raises ``RuntimeError`` when ``max_iter``
+    rounds end short of the star state.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col("src") != F.col("dst")
@@ -157,39 +166,41 @@ def connected_components(
     if driver_max_edges and n0 <= driver_max_edges:
         return _driver_union_find(e)
 
-    prev_sig = None
-    for rnd in range(max_iter):
-        e = _large_star(e)
-        e = _small_star(e)
-        e = e.localCheckpoint(eager=False)
-        sig_row = e.agg(
-            F.count("*").alias("cnt"),
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("chk"),
+    cnt = n0
+    for rnd in range(1, max_iter + 1):
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        # per node: out-edges (as src) and in-edges (as dst)
+        deg = e.select(F.col("src").alias("u"), F.lit(1).alias("o"), F.lit(0).alias("i")).unionAll(
+            e.select("dst", F.lit(0), F.lit(1))
+        ).groupBy("u").agg(F.sum("o").alias("o"), F.sum("i").alias("i"))
+        cnt, bad = deg.agg(
+            F.coalesce(F.sum("o"), F.lit(0)),
+            F.coalesce(F.bool_or(((F.col("o") > 0) & (F.col("i") > 0)) | (F.col("o") > 1)),
+                       F.lit(False)),
         ).collect()[0]
         if stats is not None:
-            stats["rounds"] = rnd + 1
+            stats["rounds"] = rnd
         # star rounds preserve both connectivity and the endpoint set, so
         # once the contracted graph fits the driver budget the tail is a
-        # single union-find instead of more O(log n) two-shuffle rounds
-        if driver_max_edges and sig_row["cnt"] <= driver_max_edges:
+        # single union-find instead of more O(log n) star rounds
+        if driver_max_edges and cnt <= driver_max_edges:
             if stats is not None:
                 stats["mode"] = "hybrid"
             return _driver_union_find(e)
-        sig = (sig_row["cnt"], sig_row["chk"])
-        if sig == prev_sig:
+        if not bad:
             break
-        prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds "
+            f"({cnt} edges left)"
+        )
     if stats is not None:
         stats["mode"] = "distributed"
 
-    # converged star edges: src node -> dst root; roots label themselves
-    labels = e.select(F.col("src").alias("url"), F.col("dst").alias("component"))
-    roots = e.select(F.col("dst").alias("url")).distinct().withColumn(
-        "component", F.col("url")
-    )
-    return labels.unionByName(roots).groupBy("url").agg(
-        F.min("component").alias("component")
-    )
+    # star edges: leaf src -> root dst; roots label themselves
+    return e.select(F.col("src").alias("url"), F.col("dst").alias("component")).unionAll(
+        e.select(F.col("dst").alias("url"), F.col("dst").alias("component"))
+    ).groupBy("url").agg(F.min("component").alias("component"))
 
 
 def _pack_components(

@@ -140,7 +140,8 @@ def _commit_stage(
             {"run_id": cfg.run_id, "stage": stage, "watermark_ts": ts.isoformat()},
             f,
         )
-    return spark.read.parquet(path), ts
+    # the known schema spares a schema-inference job per commit
+    return spark.read.schema(df.schema).parquet(path), ts
 
 
 def _lineage_rows(df: DataFrame, run_id: str, **cols: Column) -> DataFrame:
@@ -266,14 +267,16 @@ def run_pipeline(
 
     histogram = Observation()
 
-    def score():  # observes the 20-bin pair_score histogram on the write
+    def score():  # a checkpointed write observes the 20-bin pair_score histogram
+        scored = scored_pairs_stage(attach_pair_features(pairs, signatures), cfg.threshold)
+        if cfg.checkpoint_dir is None:  # no lineage reads it
+            return [scored]
         # clamped to [0, 19]: negative scores (cosine < 0) land in bin 0, so
         # the bins always sum to the row count
         b = F.least(F.greatest(F.floor(F.col("pair_score") * 20), F.lit(0)), F.lit(19))
-        return [scored_pairs_stage(
-            attach_pair_features(pairs, signatures), cfg.threshold
-        ).observe(histogram, F.count("*").alias("n"),
-                  F.array(*[F.count_if(b == i) for i in range(20)]).alias("bins"))]
+        return [scored.observe(
+            histogram, F.count("*").alias("n"),
+            F.array(*[F.count_if(b == i) for i in range(20)]).alias("bins"))]
 
     def score_lineage(name: str, df: DataFrame, ts: datetime) -> None:
         got = histogram.get
@@ -338,7 +341,7 @@ def run_pipeline(
         clusters=clusters, members=members,
     )
     if cfg.checkpoint_dir is not None:
-        out["metrics"] = spark.read.parquet(
+        out["metrics"] = spark.read.schema(METRICS_SCHEMA).parquet(
             os.path.join(cfg.checkpoint_dir, "metrics.parquet")
         )
     return out
