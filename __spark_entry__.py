@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.types import StructType
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 import sys
@@ -38,8 +39,20 @@ _BM25_TERMS = ["query", "table", "stream"]
 _STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
 
 
+_SCHEMA_CACHE: dict[str, StructType] = {}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Source table reader. Schema inference is a Spark job, so it runs once
+    per table path per process; like ``_ROWCOUNT_CACHE`` this assumes a table
+    does not change under its path within one process."""
+    path = f"{sf_dir}/{name}.parquet"
+    key = os.path.normpath(path)
+    if key not in _SCHEMA_CACHE:
+        df = spark.read.parquet(path)
+        _SCHEMA_CACHE[key] = df.schema
+        return df
+    return spark.read.schema(_SCHEMA_CACHE[key]).parquet(path)
 
 
 _ROWCOUNT_CACHE: dict[tuple[str, str], int] = {}

@@ -91,3 +91,27 @@ def test_spark_submit_py_files_runs_pipeline(spark, tmp_path):
     # stage checkpoints + lineage metrics landed as durable parquet
     assert os.path.exists(os.path.join(out_dir, "stages", "sign.parquet"))
     assert os.path.exists(os.path.join(out_dir, "stages", "metrics.parquet"))
+
+
+def test_package_ships_once_per_context(spark):
+    """``get_spark`` and every ``__spark_entry__`` call site ship the
+    package; after the first, a call adds no task dependency and no driver
+    ``sys.path`` entry. Executors still import the package."""
+    from pyspark.sql import functions as F
+
+    from yams_spark.session import _ship_package
+
+    sc = spark.sparkContext
+    _ship_package(spark)
+    path, includes = list(sys.path), list(sc._python_includes)
+    _ship_package(spark)
+    assert (sys.path, sc._python_includes) == (path, includes)
+
+    @F.udf("string")
+    def where(_):
+        import yams_spark.sources.pages as pages
+
+        return pages.__name__
+
+    (row,) = spark.range(1).select(where("id").alias("m")).collect()
+    assert row.m == "yams_spark.sources.pages"

@@ -66,13 +66,18 @@ def get_spark(
 
 def _ship_package(spark: SparkSession) -> None:
     """Make yams_spark importable on executors regardless of driver cwd —
-    the addPyFile equivalent of ``spark-submit --py-files yams_spark.zip``."""
+    the addPyFile equivalent of ``spark-submit --py-files yams_spark.zip``.
+    Ships once per SparkContext: every shipped zip rides along with each
+    Python task and adds one more ``sys.path`` entry on the driver."""
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
         os.environ.get("TMPDIR", "/tmp"), f"yams_spark_pkg_{os.getpid()}.zip"
     )
+    sc = spark.sparkContext
+    if os.path.basename(zip_path) in sc._python_includes:
+        return
     if not os.path.exists(zip_path):
         with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
@@ -83,4 +88,4 @@ def _ship_package(spark: SparkSession) -> None:
                             "yams_spark", os.path.relpath(full, pkg_dir)
                         )
                         zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    sc.addPyFile(zip_path)

@@ -20,11 +20,12 @@ has exactly the 5 required columns.
 
 from __future__ import annotations
 
-import math
+import os
 from datetime import datetime, timedelta, timezone
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import types as T
 
 from yams_spark.functions.html_extract import extract_text_from_html
 
@@ -202,24 +203,26 @@ def generate_pages_pdf(docs: pd.DataFrame, replicate: int = 1, seed: int = 42) -
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
+_GENERATED_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("family_id", T.LongType()),
+    ]
+)
+PAGES_SCHEMA = T.StructType([_GENERATED_SCHEMA[c] for c in PAGES_COLUMNS])
+TRUTH_SCHEMA = T.StructType([_GENERATED_SCHEMA[c] for c in ("url", "family_id")])
+
 
 def build_pages(spark, sf_dir: str, replicate: int = 1, seed: int = 42):
-    """Distributed pages generation: documents parquet -> (pages DF, truth DF)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
+    """Distributed pages generation: documents parquet -> one lazy DataFrame
+    of the page columns plus ``family_id`` (the ground truth). Each action
+    on it runs the HTML synthesis again."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("html", T.BinaryType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("family_id", T.LongType()),
-        ]
     )
 
     def gen(iterator):
@@ -229,20 +232,29 @@ def build_pages(spark, sf_dir: str, replicate: int = 1, seed: int = 42):
                 yield out
 
     n_part = max(spark.sparkContext.defaultParallelism, 8)
-    full = docs.repartition(n_part, "doc_id").mapInPandas(gen, schema=schema)
-    pages = full.select(*PAGES_COLUMNS)
-    truth = full.select("url", "family_id")
-    return pages, truth
+    return docs.repartition(n_part, "doc_id").mapInPandas(gen, schema=_GENERATED_SCHEMA)
 
 
 def materialize_pages(spark, sf_dir: str, out_dir: str, replicate: int = 1, seed: int = 42):
-    """Generate once and cache to parquet (pages + truth)."""
-    import os
+    """Generate once and write ``pages.parquet`` + ``truth.parquet`` under
+    ``out_dir``; return (pages, truth) read back with their known schemas.
 
+    A directory pair is reused only if both hold Spark's ``_SUCCESS``
+    marker, so the output of a write that died midway is regenerated, and
+    reuse issues no Spark job. Otherwise the generator runs once: its
+    output is persisted across the two writes and released afterwards."""
     pages_path = os.path.join(out_dir, "pages.parquet")
     truth_path = os.path.join(out_dir, "truth.parquet")
-    if not (os.path.exists(pages_path) and os.path.exists(truth_path)):
-        pages, truth = build_pages(spark, sf_dir, replicate=replicate, seed=seed)
-        pages.write.mode("overwrite").parquet(pages_path)
-        truth.write.mode("overwrite").parquet(truth_path)
-    return spark.read.parquet(pages_path), spark.read.parquet(truth_path)
+    if not all(
+        os.path.exists(os.path.join(p, "_SUCCESS")) for p in (pages_path, truth_path)
+    ):
+        full = build_pages(spark, sf_dir, replicate=replicate, seed=seed).persist()
+        try:
+            full.select(*PAGES_COLUMNS).write.mode("overwrite").parquet(pages_path)
+            full.select(*TRUTH_SCHEMA.names).write.mode("overwrite").parquet(truth_path)
+        finally:
+            full.unpersist()
+    return (
+        spark.read.schema(PAGES_SCHEMA).parquet(pages_path),
+        spark.read.schema(TRUTH_SCHEMA).parquet(truth_path),
+    )
