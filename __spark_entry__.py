@@ -11,6 +11,7 @@ rounded to stable precision on both sides.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -24,6 +25,8 @@ import sys
 
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+from yams_spark import session  # after the sys.path insert above
 
 # ---------- helpers ----------
 
@@ -67,18 +70,12 @@ def _table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     return _ROWCOUNT_CACHE[key]
 
 
-def _ship_package(spark: SparkSession) -> None:
-    from yams_spark.session import _ship_package as ship
-
-    ship(spark)
-
-
 # ---------- flagship ----------
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full ER pipeline over pages derived from sf0.001."""
-    _ship_package(spark)
+    session._ship_package(spark)
     from yams_spark.plans.er_pipeline import PipelineConfig, run_pipeline
     from yams_spark.sources.pages import materialize_pages
 
@@ -98,17 +95,11 @@ _ER_CACHE: dict[str, dict[str, DataFrame]] = {}
 
 
 def _code_fingerprint() -> str:
-    """Short hash over the yams_spark sources + this file, so on-disk entry
+    """Short hash over the package fingerprint + this file, so on-disk entry
     caches from older code versions are never reused."""
     import hashlib
 
-    h = hashlib.blake2b(digest_size=6)
-    pkg = os.path.join(_REPO, "yams_spark")
-    for root, _dirs, files in sorted(os.walk(pkg)):
-        for name in sorted(files):
-            if name.endswith(".py"):
-                with open(os.path.join(root, name), "rb") as f:
-                    h.update(f.read())
+    h = hashlib.blake2b(session.package_fingerprint().encode(), digest_size=6)
     with open(os.path.abspath(__file__), "rb") as f:
         h.update(f.read())
     return h.hexdigest()
@@ -117,7 +108,6 @@ def _code_fingerprint() -> str:
 def _er_outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     key = os.path.normpath(sf_dir)
     if key not in _ER_CACHE:
-        _ship_package(spark)
         from yams_spark.plans.er_pipeline import PipelineConfig, run_pipeline
         from yams_spark.sources.pages import materialize_pages
 
@@ -350,7 +340,6 @@ def q12_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rrfK=12): two signals = n_chars rank and doc_id-hash rank. Global ranks
     via the range-partition + offset pattern (operators.search.global_rank)
     — no single-partition window at any scale."""
-    _ship_package(spark)
     from yams_spark.operators.search import global_rank
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -521,7 +510,6 @@ def q18_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q19_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline (EmbeddingService.cpp:555-610),
     broadcast-matmul pattern (no per-row JVM lambda evaluation)."""
-    _ship_package(spark)
     from yams_spark.operators.ann import cosine_topk
 
     e = _t(spark, sf_dir, "embeddings")
@@ -536,7 +524,6 @@ def q19_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q20_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (training-data dedup op):
     broadcast-matmul with per-batch top-n pruning before the global top-n."""
-    _ship_package(spark)
     from yams_spark.operators.ann import near_dup_pairs_topn
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -551,7 +538,6 @@ def q31_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside buckets (ann.py near_dup_pairs_bucketed — no driver collect
     anywhere on the plan; the exact/ANN switch mirrors
     EmbeddingService.cpp:556-558)."""
-    _ship_package(spark)
     from yams_spark.operators.ann import near_dup_pairs_bucketed
 
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -562,7 +548,6 @@ def q32_grep_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grep/content scan with the literal-prefilter cascade
     (grep_service.cpp:412-446, the two-phase ripgrep strategy): substring
     prefilter on the extracted literal, full regex only on survivors."""
-    _ship_package(spark)
     from yams_spark.operators.grep import grep_scan
 
     d = _t(spark, sf_dir, "documents")
@@ -575,7 +560,6 @@ def q33_snippet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FTS5-style snippet(documents_fts, 0, '<b>', '</b>', '...', 16)
     analog (search_ops.cpp:191): 16-token window around the first query-
     term hit with <b> wrapping, pure Catalyst array ops."""
-    _ship_package(spark)
     from yams_spark.operators.grep import with_snippets
 
     d = _t(spark, sf_dir, "documents")
@@ -588,7 +572,6 @@ def q34_path_tree_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     path_tree_ops.cpp:220-275): per-prefix doc_count, centroid_weight and
     the per-dimension centroid mean, exploded to scalar rows for the
     cross-engine hash."""
-    _ship_package(spark)
     from yams_spark.operators.pathtree import path_tree_rollup
 
     d = _t(spark, sf_dir, "documents")
@@ -612,7 +595,6 @@ def q35_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank for kg_node_stats (migration.cpp:924): 3 damped iterations
     over a deterministic 20-node graph derived from orders; the oracle
     unrolls the same 3 iterations in SQL."""
-    _ship_package(spark)
     from yams_spark.operators.graph import pagerank
 
     o = _t(spark, sf_dir, "orders")
@@ -635,7 +617,6 @@ def q36_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real 7-strategy operator — SLIDING_WINDOW (200 chars, 50 overlap)
     chosen for the oracle because char windows are SQL-expressible; the
     other 6 strategies are pytest-covered with exact-offset properties."""
-    _ship_package(spark)
     from yams_spark.functions.doc_chunker import DocChunkingConfig, chunk_documents
 
     d = _t(spark, sf_dir, "documents").select(
@@ -657,7 +638,6 @@ def q36_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q37_relevance_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BEIR-style MRR@10 / nDCG@10 / MAP@10 (docs/benchmarks/index.md:52-66)
     over a deterministic ranking (md5 order per query) and graded qrels."""
-    _ship_package(spark)
     from yams_spark.operators.relevance import relevance_metrics
 
     d = _t(spark, sf_dir, "documents").select("doc_id")
@@ -691,7 +671,6 @@ def q38_tag_metadata_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/(1+0.1·rank), search_engine.cpp:5510-5553; queryMetadata conjunctive
     filters scored 1.0, :5556+) — the producers for the declared tag /
     metadata fusion weights."""
-    _ship_package(spark)
     from yams_spark.operators.components import metadata_component, tag_component
 
     d = _t(spark, sf_dir, "documents")
@@ -730,7 +709,6 @@ def q39_sgc_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings table, exploded to (node, pos, val). Compared in float64
     (cast_float32=False): near-zero dims otherwise flip a float32 rounding
     boundary under each engine's summation order."""
-    _ship_package(spark)
     from yams_spark.operators.sgc import sgc_smooth
 
     e = _t(spark, sf_dir, "embeddings")
@@ -761,7 +739,6 @@ def q40_hotzone_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real batch operator; the oracle states the fold in closed form —
     score = Σ w_i · 0.5^(minutes-after-i / half-life-minutes) with
     per-step minute truncation, boost = soft saturation."""
-    _ship_package(spark)
     from yams_spark.streaming.hotzone import hotzone_batch
 
     ev = (
@@ -837,7 +814,6 @@ def q42_resolve_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Name-resolution cascade (document_service.cpp:230-300): exact path >
     basename > suffix > hash prefix, ambiguity newest-wins — over a
     deterministic path layout with colliding basenames."""
-    _ship_package(spark)
     from yams_spark.operators.resolve import resolve_documents
 
     d = _t(spark, sf_dir, "documents").select(
@@ -899,7 +875,6 @@ def q43_kg_doc_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic capitalized-span extractor, aggregated to (document,
     entity, node_key, n_mentions, confidence). Offsets are pytest-verified
     (regexp_extract_all can't surface match positions in SQL)."""
-    _ship_package(spark)
     from yams_spark.operators.kg import extract_doc_entities
 
     ents = extract_doc_entities(_kg_docs(spark, sf_dir))
@@ -915,7 +890,6 @@ def q44_kg_node_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     mentioned_in graph. Document nodes are pure sinks, so this oracle
     exercises the dangling-mass redistribution end-to-end (3 damped
     iterations, unrolled in SQL like q35)."""
-    _ship_package(spark)
     from yams_spark.operators.kg import (
         build_kg_edges,
         extract_doc_entities,
@@ -935,7 +909,6 @@ def q45_kg_aliases(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic alias variants (surface / lowercase / acronym) written
     per entity node for query-time resolution
     (buildNlAliasVariants, PostIngestQueue.cpp:2684-2691)."""
-    _ship_package(spark)
     from yams_spark.operators.kg import build_kg_aliases, extract_doc_entities
 
     ents = extract_doc_entities(_kg_docs(spark, sf_dir))
@@ -950,7 +923,6 @@ def q53_kg_node_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents (document-centroid stand-in for the reference's node
     embedding service), exploded to scalar rows for the cross-engine
     hash like q34."""
-    _ship_package(spark)
     from yams_spark.operators.kg import build_kg_node_embeddings, extract_doc_entities
 
     ents = extract_doc_entities(_kg_docs(spark, sf_dir))
@@ -972,7 +944,6 @@ def q46_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase "table scan" with occurrence counts — a strict subset of the
     AND query (34 vs 324 docs at sf0.01), which is exactly what the
     phrase operator adds over q11-style term matching."""
-    _ship_package(spark)
     from yams_spark.operators.search import build_positional_postings, phrase_match
 
     d = _t(spark, sf_dir, "documents")
@@ -988,7 +959,6 @@ def q47_snippet_multiterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     either term, scored by (distinct terms covered, total hits), earliest
     wins — the real multi-term contract q33's single-term variant
     approximated."""
-    _ship_package(spark)
     from yams_spark.operators.grep import with_snippets_multi
 
     d = _t(spark, sf_dir, "documents")
@@ -1002,7 +972,6 @@ def q48_grep_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded lines, never a global sort. Fixture folds each document into
     8-token lines (the corpus is single-line), identically in both
     engines."""
-    _ship_package(spark)
     from yams_spark.operators.grep import grep_lines_context
 
     base = _t(spark, sf_dir, "documents").where(
@@ -1025,7 +994,6 @@ def q49_merkle_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree_builder.cpp:22-110): every directory node's hash over the
     deterministic /corpus/<source>/<lang>/<doc_id>.txt layout, bottom-up
     — one keyed aggregation per tree level. The root is the path='' row."""
-    _ship_package(spark)
     from yams_spark.operators.snapshots import merkle_tree
 
     files = _t(spark, sf_dir, "documents").select(
@@ -1044,7 +1012,6 @@ def q50_tree_diff_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     listings; renames are the maximal per-hash pairing of deleted and
     added paths (tree_differ.cpp:204-243) and are removed from the
     add/delete counts."""
-    _ship_package(spark)
     from yams_spark.operators.snapshots import tree_diff_summary
 
     d = _t(spark, sf_dir, "documents")
@@ -1070,7 +1037,6 @@ def q51_hotzone_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     101-110) through the shared ``apply_hotzone_boost`` operator — the
     same code path hybrid_search uses. Documents whose id matches a
     recently-active user key outrank their cold twins."""
-    _ship_package(spark)
     from yams_spark.operators.search import (
         apply_hotzone_boost,
         fuse_evidence,
@@ -1121,7 +1087,6 @@ def q52_prefix_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND the prefix term 'tab*' — the prefix behaves as one query term
     whose tf sums every matching vocabulary term and whose df counts
     documents containing any of them, exactly FTS5's prefix index."""
-    _ship_package(spark)
     from yams_spark.operators.search import bm25_scores, build_posting_lists
 
     d = _t(spark, sf_dir, "documents")
@@ -1144,7 +1109,6 @@ def q54_minhash_estimate_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified by estimated Jaccard = matching permutations / 8 — the
     block → estimate cascade of sketch dedup (the production ER path
     verifies with exact cosine; this is the cheap estimate-only mode)."""
-    _ship_package(spark)
     from yams_spark.operators.ann import minhash_estimate_pairs
 
     d = _t(spark, sf_dir, "documents").withColumn(
@@ -1172,7 +1136,6 @@ def q55_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit / punctuation runs) without the trailing-space lookahead so the
     pattern runs identically under Java regex and RE2; whitespace runs are
     glue, not tokens."""
-    _ship_package(spark)
     from yams_spark.functions.textnorm import BPE_TOKEN_PATTERN
 
     d = _t(spark, sf_dir, "documents")
@@ -1228,7 +1191,6 @@ def q57_phrase_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the positional index (member tokens do not contribute
     separately) combined with the loose term — the scoring half of the
     phrase feature on top of q46's matching half."""
-    _ship_package(spark)
     from yams_spark.operators.search import (
         bm25_scores,
         build_positional_postings,
@@ -1255,7 +1217,6 @@ def q58_snippet_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     term 'fast' wraps individually outside phrase spans, window selection
     prefers full phrase occurrences — completing round-2 judge item #10
     (multi-term + phrase highlight)."""
-    _ship_package(spark)
     from yams_spark.operators.grep import with_snippets_phrase
 
     d = _t(spark, sf_dir, "documents")
@@ -1272,7 +1233,6 @@ def q59_stemmed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "query", "tables"→tabl matches "table", "merged"→merg matches
     "merge". Stemming runs over the DISTINCT vocabulary (O(|vocab|)
     Arrow batch), never per corpus token."""
-    _ship_package(spark)
     from yams_spark.functions.fts_tokenizer import porter_stem
     from yams_spark.operators.search import bm25_scores, build_posting_lists
 
@@ -1296,7 +1256,6 @@ def q60_unicode61_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Naïve-Café → naive-cafe). The decorated column is synthesized
     identically on both sides; output = top-40 terms by document
     frequency."""
-    _ship_package(spark)
     from yams_spark.functions.fts_tokenizer import unicode61_tokens_spark_expr
 
     d = _t(spark, sf_dir, "documents")
@@ -1334,7 +1293,6 @@ def q61_kg_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard overlap with the 1-hop neighborhood of the query's entities
     over the co-mention entity graph. Query entities come from the same
     capitalized-span extractor the documents use."""
-    _ship_package(spark)
     from yams_spark.operators.components import kg_component
     from yams_spark.operators.kg import (
         build_co_mention_edges,
@@ -1361,7 +1319,6 @@ def q62_path_tree_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap pathTreeMaxResults=150 :370): path seeds from the query, docs
     scored by seed position/coverage in their (synthesized, both-sides-
     identical) path, best seed per doc."""
-    _ship_package(spark)
     from yams_spark.operators.components import path_tree_component
 
     d = _t(spark, sf_dir, "documents").select(
@@ -1382,7 +1339,6 @@ def q63_simeon_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     concepts mined from document co-occurrence, pool docs scored by
     z(bm25)/z(concept) blend, non-pool candidates below the floor via
     the saturating BM25 map."""
-    _ship_package(spark)
     from yams_spark.operators.search import build_posting_lists
     from yams_spark.operators.simeon import simeon_text_component
 
@@ -1402,7 +1358,6 @@ def q64_facet_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample (1/16) with counts scaled back, per-field (count desc, value
     asc) ranking — the Spark recast samples by content hash instead of
     ranked prefix so no global sort is paid."""
-    _ship_package(spark)
     from yams_spark.operators.facets import facet_counts
 
     d = _t(spark, sf_dir, "documents")
@@ -1441,7 +1396,6 @@ def q65_graph_expansion_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     via exact alias match, seeds + 1-hop co-mention neighbors emit their
     alias surfaces with relation/edge/source weighting, max per term,
     top 12."""
-    _ship_package(spark)
     out = _q65_terms(spark, sf_dir)
     return out.select(
         "term", F.round("score", 6).cast("double").alias("score")
@@ -1453,7 +1407,6 @@ def q66_graph_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     penalty 0.78 + admission floor, search_engine_config.h:365-367):
     disjunctive BM25 re-query over the q65 expansion terms,
     range-normalized, penalized, floored."""
-    _ship_package(spark)
     from yams_spark.operators.graph_expansion import graph_text_component
     from yams_spark.operators.search import build_posting_lists
 
@@ -1473,7 +1426,6 @@ def q67_chunk_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed, AVG-pooled, coverage = contributing/total when the
     per-document chunk total is known. Fixture: user#event_type chunk
     ids over the events table."""
-    _ship_package(spark)
     from yams_spark.operators.search import chunk_coverage_stats
 
     ev = _t(spark, sf_dir, "events")
@@ -1504,7 +1456,6 @@ def q68_concept_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the KG stage) boost ranked results whose text or synthesized path
     contains a concept term, budget spent top-rank-first
     (prefix-sum-clamped), then the list re-sorts."""
-    _ship_package(spark)
     from yams_spark.operators.concepts import (
         apply_concept_boost,
         extract_query_concepts,
@@ -1533,7 +1484,6 @@ def topology_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     death sweep is not SQL-expressible; the algorithm is pytest-pinned
     against hand-computed MSTs. Pseudo-clusters = vec_id % 37 over the
     embeddings table."""
-    _ship_package(spark)
     from yams_spark.operators.topology import topology_quality_stats
 
     e = _t(spark, sf_dir, "embeddings").select(
@@ -1551,7 +1501,6 @@ def q70_mab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-event reward clamp :64; best arm = max mean, id-asc ties
     :73-94): final arm stats from a reward log — arm = event_type,
     reward = value/10 clamped — equals the sequential fold exactly."""
-    _ship_package(spark)
     from yams_spark.operators.tuner import mab_stats
 
     ev = _t(spark, sf_dir, "events").select(
@@ -1574,7 +1523,6 @@ def q71_graph_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     score-weighted centroid of their node embeddings (doc-centroid node
     vectors, migration.cpp:903-910), cosine over the embeddings table ×
     penalty, positives only, top-150."""
-    _ship_package(spark)
     from yams_spark.operators.graph_expansion import (
         graph_expansion_seeds,
         graph_vector_component,
@@ -1610,7 +1558,6 @@ def q72_entity_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     search_engine_config.h:85, cap 100 :373): cosine(query, node
     embedding) for every KG node vector, top-100 nodes, mapped to their
     documents, best score per doc. Query = embeddings row vec_id=0."""
-    _ship_package(spark)
     from yams_spark.operators.components import entity_vector_component
     from yams_spark.operators.kg import (
         build_kg_node_embeddings,
@@ -1688,7 +1635,6 @@ def q73_topology_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid)+1)/2, 0, 1). All three scoring modes emitted with the
     reference's exact constants (0.05 persistence, 0.05/0.05·size_damp,
     0.10 dense) plus the per-route cost/penalty columns."""
-    _ship_package(spark)
     from yams_spark.operators.topo_routing import route_clusters
 
     clusters, memberships, qe, seeds = _topo_fixture(spark, sf_dir)
@@ -1726,7 +1672,6 @@ def q74_routed_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_metrics and are pytest-verified there). Selection uses
     select_routes_for_narrowing with (min=1, max=2, gap=0) ⇒ exactly the
     top-2 routes, which the DuckDB oracle states as a rank-≤-2 window."""
-    _ship_package(spark)
     from yams_spark.operators.search import global_rank
     from yams_spark.operators.topo_routing import (
         route_clusters,
@@ -1775,7 +1720,6 @@ def q75_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks whose hash starts 00/01/02 and drops 03/04 (simulated bit rot
     + loss). Validation is ONE left join + JVM-side sha2; the per-file
     report carries the reference's counters and success/error rates."""
-    _ship_package(spark)
     from yams_spark.operators.integrity import integrity_report, validate_chunks
 
     d = _t(spark, sf_dir, "documents")
@@ -1836,7 +1780,6 @@ def q77_integrity_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     01-prefix chunks; 02-corrupt and 04-missing have no candidate and
     stay broken. Report = IntegrityReport with blocksRepaired and the
     (passed+repaired)/verified success rate (verifier.h:71-75)."""
-    _ship_package(spark)
     from yams_spark.operators.integrity import (
         integrity_report_with_repairs,
         repair_chunks,
@@ -1908,7 +1851,6 @@ def q78_verification_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     events table plays the verification event stream — status from the
     value sign, repairs from event_type — tumbling event-time windows,
     per-window rates, and the alert predicate."""
-    _ship_package(spark)
     from yams_spark.operators.integrity import monitor_metrics
 
     e = _t(spark, sf_dir, "events")
@@ -1950,7 +1892,6 @@ def q76_verification_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority formula failures·1000 + age_h/24 + access/10; 'by_age'
     orders on staleness alone. Top-100 per strategy as
     orderBy().limit() — no queue, no global sort."""
-    _ship_package(spark)
     from yams_spark.operators.integrity import verification_schedule
 
     d = _t(spark, sf_dir, "documents")
@@ -1997,7 +1938,6 @@ def _gc_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks — exclusive blocks fall to ref_count 0, the GC population.
     Sizes/timestamps derive from the block HASH alone, so blocks shared
     across documents stay engine-independent."""
-    _ship_package(spark)
     from yams_spark.operators.storage_gc import build_block_references
 
     d = _t(spark, sf_dir, "documents")
@@ -2102,7 +2042,6 @@ def q82_transaction_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the user, op direction from the event type, delta 1-3), plus
     five op-less PENDING transactions exercising the view's zero-count
     branch."""
-    _ship_package(spark)
     from yams_spark.operators.storage_gc import transaction_history
 
     e = _t(spark, sf_dir, "events")
@@ -2147,7 +2086,6 @@ def q83_kg_relation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically (portable across engines): node existence and edge
     relations keyed off doc_id/hash so resolution-miss, synthetic-id and
     duplicate-edge branches all fire."""
-    _ship_package(spark)
     from yams_spark.operators.kg_summary import file_relation_summaries
 
     d = _t(spark, sf_dir, "documents").select(
@@ -2230,7 +2168,6 @@ def q84_kg_topology_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     :103-104). Components run through the shared hybrid
     connected_components; the summary is one row of the reference's
     KGTopologySummary counters."""
-    _ship_package(spark)
     from yams_spark.operators.kg_summary import analyze_document_topology
 
     d = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node_id"))
@@ -2303,7 +2240,6 @@ def q69_query_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query routing (query_router.cpp): intent (:92-123) / retrieval
     mode (:198-232) / community (:125-182) classified for a synthetic
     query per document — the whole router is one Catalyst projection."""
-    _ship_package(spark)
     from yams_spark.operators.router import route_queries
 
     d = _t(spark, sf_dir, "documents").select(
@@ -2349,7 +2285,6 @@ def q91_fallback_concepts(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed remainder, then salience-ranked tokens, deduped on the
     graph surface and typed by the vocabulary cascade — the pure-Catalyst
     dataflow twin over one synthetic query per document."""
-    _ship_package(spark)
     from yams_spark.operators.concept_fallback import fallback_concepts_df
 
     d = _t(spark, sf_dir, "documents").select(
@@ -2390,7 +2325,6 @@ def q92_tuning_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     11-dim [-1,1] featurization and the c/d/e/m/ce/te handoff bucket
     over one synthetic TuningContext per document — pure per-row
     Catalyst, zero exchanges."""
-    _ship_package(spark)
     from yams_spark.operators.tuning_signals import bucketize, featurize
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -2438,7 +2372,6 @@ def q93_reward_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/tuning_signals.combine_reward): non-finite inputs zeroed,
     0.6/0.2/0.2 proxy blend, over-budget penalty floored at 0, clamp01,
     and Labels/Mixed/Proxy source attribution."""
-    _ship_package(spark)
     from yams_spark.operators.tuning_signals import combine_reward
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -2483,7 +2416,6 @@ def q94_topology_seed_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-discounted per-doc best weights for the lexical and vector
     component families, then the tier1-first merge with the
     vector-added budget."""
-    _ship_package(spark)
     from yams_spark.operators.topo_routing import (
         LEXICAL_SEED_SOURCES,
         VECTOR_SEED_SOURCES,
@@ -2538,7 +2470,6 @@ def q95_path_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions/pathnorm.py): lexically_normal as one F.aggregate fold,
     parent prefix, parent/path sha256 hashes, reverse path, and the
     component-count depth — the six columns every ingest row derives."""
-    _ship_package(spark)
     from yams_spark.functions.pathnorm import with_path_derived
 
     d = _t(spark, sf_dir, "documents").select(
@@ -2583,7 +2514,6 @@ def q96_composed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.45 gate), MinHash bucket-count sketch (dim 4), weighted concat
     with alpha_d = max(0, 1-0.25-0.10) in float32 — one row per
     (doc, position) of the composed vector."""
-    _ship_package(spark)
     from yams_spark.operators.topo_inputs import (
         FeatureComposition,
         compose_features,
@@ -2660,7 +2590,6 @@ def q97_topology_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     bidirectional edge view, outgoing max-weight dedup, reciprocal
     detection, doc:-prefixed destinations only, score-desc/hash-asc
     order capped at 3 per document."""
-    _ship_package(spark)
     from yams_spark.operators.topo_inputs import collect_topology_neighbors
 
     edges, nodes = _q97_graph(spark, sf_dir)
@@ -2682,7 +2611,6 @@ def q98_protected_observations(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates over the q97 neighbor view. The FNV-1a fingerprint over this
     table is pytest-verified against an independent byte stream
     (test_topo_inputs)."""
-    _ship_package(spark)
     from yams_spark.operators.topo_inputs import (
         collect_topology_neighbors,
         protected_relation_observations,
@@ -2750,7 +2678,6 @@ def q99_compression_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     level selection, with the reference's reason strings (the reason
     step reuses the since-access age while the algorithm uses total
     age)."""
-    _ship_package(spark)
     from yams_spark.operators.compression import compression_decisions
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -2811,7 +2738,6 @@ def q100_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio estimate for both algorithms — Arrow-batched over a binary
     column, restated in DuckDB as integer-list folds (table-driven CRC
     via list_reduce)."""
-    _ship_package(spark)
     from yams_spark.operators.compression import (
         crc32_col,
         estimate_compression_ratio_col,
@@ -2853,7 +2779,6 @@ def q101_plain_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     30% non-printable), strict-vs-lenient UTF-8 walks, BOM encoding
     detection, and the whole-word stopword language detector with
     std::to_string confidences."""
-    _ship_package(spark)
     from yams_spark.functions.plain_extract import extract_plain_text_col
 
     cases = []
@@ -2899,7 +2824,6 @@ def archive_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory, ustar TAR, RFC-1952 GZIP walks and RAR signature rows —
     rows-only (compressed sizes depend on deflate output; the parsers
     are stdlib-cross-checked in pytest)."""
-    _ship_package(spark)
     from yams_spark.operators.multimodal import (
         extract_archive_listing,
         synth_archive_table,
@@ -2916,7 +2840,6 @@ def q102_archive_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     their directory structures and inflates every member; the oracle
     re-derives the member names, sizes and texts from the shared
     fixture spec — any parse or inflate corruption breaks the hash."""
-    _ship_package(spark)
     from yams_spark.operators.multimodal import (
         explode_archive_members,
         synth_archive_table,
@@ -2959,7 +2882,6 @@ def q103_dim_resolver(spark: SparkSession, sf_dir: str) -> DataFrame:
     table in check order, the config-JSON field cascade with the
     integer gate, and the sentinel > generator > default resolution —
     all zero-exchange Catalyst."""
-    _ship_package(spark)
     from yams_spark.functions.embed_models import (
         dim_from_model_config_col,
         dim_from_model_name_col,
@@ -3008,7 +2930,6 @@ def q104_gliner_concepts(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalization with the alias map, the 0.4 confidence floor and
     noise gates, requested-type filtering, first-wins best-confidence
     dedup on type|normalized-text, and the final rank ordering."""
-    _ship_package(spark)
     from yams_spark.operators.gliner_concepts import gliner_query_concepts
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -3069,7 +2990,6 @@ def q105_header_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     version ceiling, known-algorithm, the overflow-safe integer-division
     2x size rule and the zstd level cap, as one Catalyst predicate over
     a parsed-header table (pack/parse round-trips are pytest-pinned)."""
-    _ship_package(spark)
     from yams_spark.operators.compression import (
         validate_compression_header_col,
     )
@@ -3090,7 +3010,6 @@ def q106_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean, even-count-average median, linear-interpolation p95/p99 on
     the (n-1)*p rule, and the sample stddev — over the events table
     keyed by event_type."""
-    _ship_package(spark)
     from yams_spark.operators.bench_history import latency_stats
 
     ev = _t(spark, sf_dir, "events").select(
@@ -3115,7 +3034,6 @@ def q107_wal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     zlib CRC over the zero-checksum bytes) and decoded back; the oracle
     rebuilds the exact byte stream in SQL and folds the CRC itself, so
     a single byte of drift in the layout breaks the hash."""
-    _ship_package(spark)
     import pandas as pd
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
@@ -3189,7 +3107,6 @@ def q108_manifest_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     total-size equality — one Catalyst predicate per manifest row.
     The byte codec itself (serialize/deserialize + legacy u64-flag
     dual-read + the field-string CRC) is pytest-pinned."""
-    _ship_package(spark)
     from yams_spark.functions.manifest_codec import validate_manifest_col
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -3245,7 +3162,6 @@ def q109_derive_title(spark: SparkSession, sf_dir: str) -> DataFrame:
     <title> window scan, markdown first-heading, comment-unwrapping
     code-signature and first-meaningful-line cascade with the filename
     fallback, every candidate through normalizeTitleCandidate."""
-    _ship_package(spark)
     from yams_spark.functions.title_util import derive_title_col
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -3289,7 +3205,6 @@ def q110_document_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
     body fallbacks. The oracle hand-derives each field from the shared
     construction spec (the algorithm's expected output on that input,
     encoded independently in SQL)."""
-    _ship_package(spark)
     from yams_spark.functions.title_util import detect_sections_col
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -3332,7 +3247,6 @@ def q111_compression_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.1 / error-rate > 0.05 / throughput < 100 MB/s gates with their
     zero guards, one alert row per fired gate in the reference's
     check order."""
-    _ship_package(spark)
     from yams_spark.operators.compression import compression_health_alerts
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -3359,7 +3273,6 @@ def q112_surface_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined forms, and the camelCase/delimiter code-symbol split with
     suffix chains, capped at 8. The oracle hand-derives every branch's
     variant list from the construction spec."""
-    _ship_package(spark)
     from yams_spark.operators.gliner_concepts import surface_variants_col
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -3391,7 +3304,6 @@ def q113_metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     name match, required/any/exclude tag keys over a tag map, closed
     timestamp gates, custom key=value equality — four configured
     predicates evaluated per document."""
-    _ship_package(spark)
     from yams_spark.operators.qualifiers import metadata_query_filter
 
     d = _t(spark, sf_dir, "documents").selectExpr(
@@ -3432,7 +3344,6 @@ def q114_file_type_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-8 text walk, and the octet-stream fallback — one Arrow pass
     over a synthesized binary corpus; the oracle derives the expected
     classification per branch from the construction spec."""
-    _ship_package(spark)
     import pandas as pd
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
@@ -3492,7 +3403,6 @@ def q115_doc_embedding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatched records skipped. Five records per doc across 50 docs;
     exact 1/8-multiple values keep the float32-cast mean bit-identical
     in both engines."""
-    _ship_package(spark)
     from yams_spark.operators.topo_inputs import aggregate_doc_embeddings
 
     # records: doc h{doc_id%50}; seq doc_id div 50 (0..9); per-doc mix
@@ -3526,7 +3436,6 @@ def q115_doc_embedding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q21_chunk_score_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk→doc score aggregation WEIGHTED_TOP_K_AVG k=3 decay 0.6
     (search_vector_pipeline.cpp:100-140) over per-user event values."""
-    _ship_package(spark)
     from yams_spark.operators.search import aggregate_chunk_scores
 
     ev = _t(spark, sf_dir, "events").select(
@@ -3543,7 +3452,6 @@ def q21_chunk_score_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q22_fusion_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted-RRF evidence fusion with per-source best-rank/raw aggregation
     (evidence_search_pipeline.cpp:49-56,184-229) over two synthetic signals."""
-    _ship_package(spark)
     from yams_spark.operators.search import fuse_evidence, global_rank
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -3578,7 +3486,6 @@ def q23_symspell_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SymSpell fuzzy match: delete-variant candidate join + Levenshtein
     verify, distance<=1, ordered by (distance, frequency desc)
     (symspell_search.cpp:25-29,84-94)."""
-    _ship_package(spark)
     from yams_spark.operators.fuzzy import symspell_match
 
     d = _t(spark, sf_dir, "documents").withColumn(
@@ -3691,7 +3598,6 @@ def q27_minhash_band_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q28_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph BFS <= depth 2 (graph_query_service.cpp:521-605): customers ->
     their orders -> suppliers on those orders, via iterative frontier joins."""
-    _ship_package(spark)
     from yams_spark.operators.graph import bfs_traverse
 
     orders = _t(spark, sf_dir, "orders")
@@ -3747,7 +3653,6 @@ def _er_mini_outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The er_mini pipeline run (see er_mini docstring), cached per sf."""
     key = os.path.normpath(sf_dir)
     if key not in _ER_MINI_CACHE:
-        _ship_package(spark)
         from yams_spark.plans.er_pipeline import PipelineConfig, run_pipeline
 
         docs = _t(spark, sf_dir, "documents")
@@ -3824,7 +3729,6 @@ def _er_semantic_outputs(
     union-find (same published clusters by construction — and by oracle)."""
     key = f"out_{driver_cc_max_edges}"
     if key not in _ER_SEMANTIC_CACHE:
-        _ship_package(spark)
         from yams_spark.oracle.semantic_mini import (
             embedding_for,
             semantic_mini_spec,
@@ -3956,7 +3860,6 @@ def search_topo_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     confined to routed candidates via the route_gate semi-join. Rows-only
     (k-means-free but the pipeline corpus has no SQL twin); every stage
     it composes is individually oracle- or pytest-verified."""
-    _ship_package(spark)
     from yams_spark.operators.clustering import cluster_metrics
     from yams_spark.operators.neighbors import hybrid_search
     from yams_spark.operators.topo_routing import (
@@ -4021,7 +3924,6 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a bounded sample, encode the corpus to m small codes, ADC LUT scan
     + exact rerank for a fixed query. No DuckDB oracle (k-means training
     is not SQL-expressible); pytest pins determinism + recall."""
-    _ship_package(spark)
     from yams_spark.operators.pq import pq_adc_topk, pq_encode, train_pq
 
     e = _t(spark, sf_dir, "embeddings").orderBy("vec_id")
@@ -4040,7 +3942,6 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed query probing 4 of 16 lists — the partition-pruning ANN layout.
     Rows-only (k-means training is not SQL-expressible); pytest pins the
     nprobe=n_lists ≡ exact property."""
-    _ship_package(spark)
     from yams_spark.operators.ivf import ivf_assign, ivf_topk, train_ivf
 
     e = _t(spark, sf_dir, "embeddings")
@@ -4060,7 +3961,6 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank. Batched over 3 queries at nprobe=4/16 lists. Rows-only
     (k-means + PQ training aren't SQL); pytest pins full-probe ≡ exact
     and clustered recall."""
-    _ship_package(spark)
     from yams_spark.operators.ivf import ivf_pq_index, ivf_pq_topk_multi
 
     e = _t(spark, sf_dir, "embeddings")
@@ -4084,7 +3984,6 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (avc1) use the documented deterministic stand-in. No DuckDB oracle
     (binary codecs aren't SQL); pytest pins encode/decode round-trips and
     signal-content features."""
-    _ship_package(spark)
     from yams_spark.operators.multimodal import extract_media_features, synth_media_table
 
     media = synth_media_table(spark, n=48)
@@ -4100,7 +3999,6 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def er_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-rule metric: pairwise P/R/F1 on labeled same-block pairs."""
-    _ship_package(spark)
     from yams_spark.operators.evaluation import labeled_pairs, pairwise_f1
     from yams_spark.sources.pages import materialize_pages
 
@@ -4117,7 +4015,6 @@ def er_cluster_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline's accepted pairs. Rows-only (the packed metric computation is
     not ANSI-SQL-expressible); pytest pins the math against hand-computed
     values (test_cluster_metrics_hand_computed)."""
-    _ship_package(spark)
     from yams_spark.operators.clustering import cluster_metrics
 
     out = _er_outputs(spark, sf_dir)
@@ -4140,7 +4037,6 @@ def simhash_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole, see blocking.simhash_multiprobe_pairs). Rows-only — the
     BLAKE2-backed simhash is not SQL-expressible; pytest verifies pair
     sets against brute-force Hamming."""
-    _ship_package(spark)
     from yams_spark.operators.blocking import simhash_multiprobe_pairs
 
     sig = _er_outputs(spark, sf_dir)["signatures"]
@@ -4153,7 +4049,6 @@ def er_neighbor_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-neighbor graph (kg_edges analog, EmbeddingService.cpp:555-812):
     top-8 neighbors per page from the scored candidate pairs, symmetric,
     weight clamped to [threshold, 1]."""
-    _ship_package(spark)
     from yams_spark.operators.neighbors import semantic_neighbor_edges
 
     scored = _er_outputs(spark, sf_dir)["scored_pairs"]
@@ -4170,7 +4065,6 @@ def search_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> weighted-RRF fusion (search_engine_config.h:78-96 weights,
     :369-377 caps) -> top-10. The query is re-cased like the KG fixture
     so the entity extractor finds query entities; BM25 lowercases anyway."""
-    _ship_package(spark)
     from yams_spark.functions.sketches import feature_hash_embedding
     from yams_spark.operators.graph_expansion import co_mention_relation_edges
     from yams_spark.operators.kg import (
@@ -4287,7 +4181,6 @@ def q85_routing_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     one. The DuckDB oracle unrolls the two selection steps over the
     2-sparse fixture in closed form, including the NaN-member filter and
     the one-candidate early break."""
-    _ship_package(spark)
     from yams_spark.operators.topo_reps import select_routing_representatives
     from yams_spark.oracle.spill_mini import (
         REP_COUNT,
@@ -4330,7 +4223,6 @@ def q86_boundary_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the at-centroid skip, the outlier radius branch, a pre-existing
     overlap skip, and an unknown-cluster drop — all DuckDB-hash-verified
     in closed form over the 2-sparse embeddings."""
-    _ship_package(spark)
     from yams_spark.operators.topo_reps import orthogonal_boundary_spill
     from yams_spark.oracle.spill_mini import (
         SPILL_LIMIT,
@@ -4368,7 +4260,6 @@ def er_semantic_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-trivially populated (tp=34 fp=8 fn=18 tn=12 at this corpus) and
     the oracle independently re-derives the blocking join, the published
     clusters, the truth map and the GREATEST(…,1)-guarded metrics."""
-    _ship_package(spark)
     from yams_spark.operators.evaluation import labeled_pairs, pairwise_f1
     from yams_spark.oracle.semantic_mini import (
         eval_truth_family,
@@ -4429,7 +4320,6 @@ def q87_kmeans_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
     converged assignment from the unrolled 3-step seeding + one
     nearest-centroid pass, valid under the fixture's pinned blob margins
     (yams_spark/oracle/engines_mini.py)."""
-    _ship_package(spark)
     from yams_spark.operators.topo_engines import kmeans_assign
     from yams_spark.oracle.engines_mini import (
         KMEANS_K,
@@ -4461,7 +4351,6 @@ def q89_louvain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     components, which DuckDB re-derives with the recursive min-label
     CTE; the pytest replica pins ≥1e-6 gain gaps at every greedy
     decision so tie order can never alter the result."""
-    _ship_package(spark)
     from yams_spark.operators.topo_engines import (
         build_pair_weights,
         louvain_assign,
@@ -4501,7 +4390,6 @@ def q88_topology_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-hash tie rule (the lc0/lc1 tie is EXACT in the fixture). All
     keyed aggregations + one per-cluster window; edge weights are
     multiples of 1/64 so every sum is order-exact on both engines."""
-    _ship_package(spark)
     from yams_spark.operators.topo_engines import (
         build_batch_from_assignment,
         build_pair_weights,
@@ -4534,7 +4422,6 @@ def q90_topology_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-member bridge score (weighted degree / (size-1)) and role
     (outlier for singletons, medoid, bridge when size>2 ∧ wd≥2.0, else
     core) — same CTE stack as q88 on the DuckDB side."""
-    _ship_package(spark)
     from yams_spark.operators.topo_engines import (
         build_batch_from_assignment,
         build_pair_weights,
@@ -4555,6 +4442,21 @@ def q90_topology_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _shipping(
+    query: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """``query`` behind the package ship. ``queries()`` and ``entry()`` are
+    the only ways a driver reaches a query, so this is the one ship on the
+    query side and the query bodies need none."""
+
+    @functools.wraps(query)
+    def dispatch(spark_session: SparkSession, sf_dir: str) -> DataFrame:
+        session._ship_package(spark_session)
+        return query(spark_session, sf_dir)
+
+    return dispatch
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Ordered so the driver's first-50 correctness window covers the
     newest, least-established entries (the late-round-5 q95-q106 cohort
@@ -4562,8 +4464,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     stable oracles that were driver-green in two consecutive windows
     rotate behind (q51-q56 this round, q01-q42 earlier) — every entry
     stays covered by the full tools/check_entry.py sweep committed as
-    BENCH/SWEEP_rNN.txt."""
-    return {
+    BENCH/SWEEP_rNN.txt. Each entry ships the package when dispatched."""
+    return {name: _shipping(query) for name, query in {
         # --- round-5 additions: newest first, inside the driver window
         "q95_path_derived": q95_path_derived,
         "q99_compression_policy": q99_compression_policy,
@@ -4710,7 +4612,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q34_path_tree_centroid": q34_path_tree_centroid,
         "q38_tag_metadata_components": q38_tag_metadata_components,
         "q39_sgc_smoothing": q39_sgc_smoothing,
-    }
+    }.items()}
 
 
 def _q61_oracle_sql() -> str:

@@ -1,71 +1,7 @@
-"""Benchmark history store (benchmark_history_store.cpp replica):
-atomic append, corrupt-file degradation, tail reads, regression trend."""
+"""Benchmark latency statistics (internal_benchmark.cpp LatencyStats)
+against a plain-Python restatement of the C++ rule."""
 
 from __future__ import annotations
-
-import json
-import os
-
-import pytest
-
-from yams_spark.operators.bench_history import BenchmarkHistoryStore, BenchmarkRow
-
-
-def _row(i: int, mrr: float) -> BenchmarkRow:
-    return BenchmarkRow(
-        mrr=mrr, recall_at_k=0.7, precision_at_k=0.5, k=10,
-        queries_run=20, queries_succeeded=20, total_time_ms=100 + i,
-        timestamp=f"2026-08-{10 + i:02d}T00:00:00Z",
-        latency={"mean_ms": 5.0 + i, "p95_ms": 9.0},
-        tuning_state="GENERAL" if i % 2 else None,
-        config_hash=f"cfg{i}", lexical_epoch=i,
-    )
-
-
-def test_append_read_roundtrip(tmp_path) -> None:
-    store = BenchmarkHistoryStore(str(tmp_path / "d" / "hist.json"))
-    for i in range(4):
-        store.append(_row(i, 0.5 + 0.1 * i))
-    rows = store.read(limit=3)  # newest 3, oldest first
-    assert [r.config_hash for r in rows] == ["cfg1", "cfg2", "cfg3"]
-    r = rows[-1]
-    assert r.mrr == pytest.approx(0.8) and r.latency["mean_ms"] == 8.0
-    assert r.lexical_epoch == 3 and r.topology_epoch is None
-    # the file is a plain JSON array, atomically written (no .tmp left)
-    with open(store.path) as f:
-        assert isinstance(json.load(f), list)
-    assert not os.path.exists(store.path + ".tmp")
-
-
-def test_corrupt_file_degrades_to_fresh(tmp_path) -> None:
-    store = BenchmarkHistoryStore(str(tmp_path / "hist.json"))
-    with open(store.path, "w") as f:
-        f.write("{ corrupt")
-    assert store.read() == []
-    store.append(_row(0, 0.5))  # append starts fresh, doesn't raise
-    assert len(store.read()) == 1
-    # non-array JSON also degrades
-    with open(store.path, "w") as f:
-        f.write('{"not": "array"}')
-    assert store.read() == []
-    store.clear()
-    store.clear()  # idempotent
-
-
-def test_trend_regression_detection(tmp_path) -> None:
-    store = BenchmarkHistoryStore(str(tmp_path / "hist.json"))
-    assert store.trend()["regressed"] is False  # empty history
-    for i in range(5):
-        store.append(_row(i, 0.80))
-    assert store.trend()["regressed"] is False  # single-row baseline ok
-    store.append(_row(9, 0.70))  # drops 0.10 below the 0.80 baseline
-    t = store.trend(metric="mrr", window=5, tolerance=0.05)
-    assert t["latest"] == pytest.approx(0.70)
-    assert t["baseline"] == pytest.approx(0.80)
-    assert t["regressed"] is True
-    # within tolerance -> not a regression
-    store.append(_row(10, 0.78))
-    assert store.trend(window=5, tolerance=0.05)["regressed"] is False
 
 
 def test_latency_stats_matches_cpp_rule(spark):

@@ -8,7 +8,6 @@ import math
 import zlib
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from yams_spark.operators.compression import (
@@ -266,36 +265,12 @@ def test_estimate_compression_ratio(spark):
     assert got == {n: w for n, _, _, w in cases}
 
 
-def test_compression_header_roundtrip_and_validate(spark):
+def test_compression_header_validate(spark):
     from yams_spark.operators.compression import (
         HEADER_MAGIC,
-        HEADER_SIZE,
-        pack_compression_header,
-        parse_compression_header,
         validate_compression_header_col,
         validate_compression_header_py,
     )
-
-    blob = pack_compression_header(
-        algorithm="Zstandard", level=3, uncompressed_size=1000,
-        compressed_size=400, uncompressed_crc32=0xDEADBEEF,
-        compressed_crc32=0x12345678, timestamp=1_700_000_000,
-    )
-    assert len(blob) == HEADER_SIZE == 64
-    assert blob[:4] == b"CNRK"  # 0x4B524E43 little-endian
-    h = parse_compression_header(blob + b"payload")
-    assert h["algorithm"] == "Zstandard" and h["level"] == 3
-    assert h["uncompressed_size"] == 1000 and h["compressed_size"] == 400
-    assert h["uncompressed_crc32"] == 0xDEADBEEF
-    assert h["timestamp"] == 1_700_000_000
-
-    with pytest.raises(ValueError, match="Insufficient"):
-        parse_compression_header(b"short")
-    with pytest.raises(ValueError, match="Invalid"):
-        parse_compression_header(
-            pack_compression_header(magic=0x1111, algorithm="LZMA",
-                                    uncompressed_size=1, compressed_size=1)
-        )
 
     # validate() branch battery, scalar == column
     rows = [

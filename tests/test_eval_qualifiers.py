@@ -1,13 +1,9 @@
-"""Tests for the evaluation operator and query-qualifier parsing."""
+"""Tests for the evaluation operator and the metadata query filter."""
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
 import pytest
-from pyspark.sql import functions as F
 
-from yams_spark.operators import qualifiers
 from yams_spark.operators.evaluation import labeled_pairs, pairwise_f1
 
 
@@ -26,53 +22,6 @@ def test_pairwise_f1_hand_computed(spark) -> None:
     # matches: (a,b) tp; (d,e) tp; (a,c) pred F label F tn; (b,c) tn; (a,d) tn
     assert (row["tp"], row["fp"], row["fn"], row["tn"]) == (2, 0, 0, 3)
     assert row["f1"] == pytest.approx(1.0)
-
-
-def test_parse_qualifiers() -> None:
-    p = qualifiers.parse_qualifiers('ext:html lang:en find me site:example.com "x"')
-    assert p.qualifiers == {"ext": "html", "lang": "en", "site": "example.com"}
-    assert p.text == 'find me "x"'
-    p2 = qualifiers.parse_qualifiers('name:"some file" rest')
-    assert p2.qualifiers["name"] == "some file"
-
-
-def test_parse_time_relative_and_natural() -> None:
-    now = datetime(2024, 6, 15, 12, 0, 0, tzinfo=timezone.utc)
-    assert qualifiers.parse_time("7d", now) == datetime(2024, 6, 8, 12, 0, tzinfo=timezone.utc)
-    assert qualifiers.parse_time("30m", now) == datetime(2024, 6, 15, 11, 30, tzinfo=timezone.utc)
-    assert qualifiers.parse_time("yesterday", now) == datetime(2024, 6, 14, 0, 0, tzinfo=timezone.utc)
-    assert qualifiers.parse_time("2024-01-02T03:04:05") == datetime(2024, 1, 2, 3, 4, 5)
-
-
-def test_apply_qualifiers_filters(spark) -> None:
-    df = spark.createDataFrame(
-        [
-            ("https://a.example/x.html", datetime(2024, 1, 5), "en"),
-            ("https://b.example/y.pdf", datetime(2024, 1, 1), "de"),
-        ],
-        "url string, warc_ts timestamp, lang string",
-    )
-    out, text = qualifiers.apply_qualifiers(df, "ext:html lang:en after:2024-01-02 hello")
-    assert text == "hello"
-    rows = out.collect()
-    assert len(rows) == 1 and rows[0]["url"].endswith("x.html")
-
-
-def test_workspace_scope_filter(spark) -> None:
-    from yams_spark.operators.qualifiers import workspace_scope_filter
-
-    df = spark.createDataFrame(
-        [("https://a.example/x",), ("https://b.example/y",), ("file:///ws/z",)],
-        ["url"],
-    )
-    got = {
-        r["url"]
-        for r in workspace_scope_filter(
-            df, ["https://a.example/", "file:///ws/"]
-        ).collect()
-    }
-    assert got == {"https://a.example/x", "file:///ws/z"}
-    assert workspace_scope_filter(df, []).count() == 3  # unscoped
 
 
 def test_metadata_query_filter(spark):

@@ -94,12 +94,7 @@ def test_surface_variants():
     from yams_spark.operators.gliner_concepts import (
         generate_surface_variants,
         split_code_symbol_tokens,
-        surface_variant_kind,
     )
-
-    assert surface_variant_kind("Gene") == "biomedical"
-    assert surface_variant_kind("Tool") == "code_symbol"  # ->method
-    assert surface_variant_kind("person") == "general"
 
     assert split_code_symbol_tokens("FooBar::baz_qux v2") == [
         "foo", "bar", "baz", "qux", "v2",

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from yams_spark.operators.grep import (
     extract_literal,
-    grep_lines,
     grep_scan,
     snippet_expr,
     with_snippets,
@@ -56,17 +55,6 @@ def test_grep_scan_matches_python_re(spark) -> None:
         literal_text=True,
     ).collect()
     assert {(r["doc_id"], r["n_matches"]) for r in lit} == {(1, 2)}
-
-
-def test_grep_lines(spark) -> None:
-    docs = spark.createDataFrame(
-        [(1, "first line\nerror: boom\nlast line"), (2, "all quiet")],
-        "doc_id long, text string",
-    )
-    got = grep_lines(docs, "error: [a-z]+").collect()
-    assert [(r["doc_id"], r["line_no"], r["line"]) for r in got] == [
-        (1, 2, "error: boom")
-    ]
 
 
 def test_snippet_window_and_wrapping(spark) -> None:
@@ -148,7 +136,7 @@ def test_pagerank_matches_power_iteration(spark) -> None:
 def test_relevance_metrics_hand_computed(spark) -> None:
     import math
 
-    from yams_spark.operators.relevance import mean_relevance_metrics, relevance_metrics
+    from yams_spark.operators.relevance import relevance_metrics
 
     results = spark.createDataFrame(
         [(1, "a", 1), (1, "b", 2), (1, "c", 3), (1, "d", 4), (1, "e", 5),
@@ -168,10 +156,6 @@ def test_relevance_metrics_hand_computed(spark) -> None:
     assert got[1]["ndcg"] == pytest.approx(dcg / idcg)
     assert got[1]["map"] == pytest.approx((1 / 2 + 2 / 4) / 3)
     assert got[2]["mrr"] == 0.0 and got[2]["ndcg"] == 0.0 and got[2]["map"] == 0.0
-
-    mean = mean_relevance_metrics(results, qrels, k=10).collect()[0]
-    assert mean["n_queries"] == 2
-    assert mean["mrr"] == pytest.approx(0.25)
 
 
 def test_sgc_smoothing_matches_numpy(spark) -> None:
@@ -241,11 +225,7 @@ def test_resolve_documents_cascade(spark) -> None:
     """document_service.cpp:230-300: exact path beats basename beats suffix
     beats hash prefix; hash strategy only fires for hashy queries;
     ambiguity settles newest-wins; no match -> no row."""
-    from yams_spark.operators.resolve import (
-        expansion_candidates,
-        resolve_documents,
-        token_salience,
-    )
+    from yams_spark.operators.resolve import resolve_documents
 
     docs = spark.createDataFrame(
         [
@@ -275,15 +255,6 @@ def test_resolve_documents_cascade(spark) -> None:
     assert out["deadbeef00"]["matched_via"] == "hash_prefix"
     assert out["deadbeef00"]["doc_hash"] == "deadbeef0001"
     assert "nope.md" not in out
-
-    # salience goldens (query_expansion.cpp:32-49)
-    assert token_salience("v2") == pytest.approx(0.05 + 1.25)
-    assert token_salience("internationalization") == pytest.approx(0.05 + 0.75)
-    assert token_salience("tokens") == pytest.approx(0.05 + 0.35)
-    assert token_salience("abc") == pytest.approx(0.05 + 0.10)
-    assert token_salience("ab") == pytest.approx(0.05)
-    cands = expansion_candidates(["shows", "42", "retrieval2024", "cat"])
-    assert [c[0] for c in cands] == ["retrieval2024", "cat"]  # weak+numeric dropped
 
 
 def test_resolve_cascade_cheap_path_no_scan(spark) -> None:

@@ -1,11 +1,8 @@
 """Hotzone decay operator tests (reference semantics
-hotzone_manager.cpp:18-61) — pure-math goldens, batch twin, and the
-stateful-streaming path with cross-batch state."""
+hotzone_manager.cpp:18-61) — pure-math goldens and the batch operator."""
 
 from __future__ import annotations
 
-import math
-import os
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -55,46 +52,6 @@ def test_hotzone_batch(spark) -> None:
     assert got["a"]["score"] == pytest.approx(3.5)
     assert got["b"]["score"] == pytest.approx(2.0)
     assert got["a"]["boost"] == pytest.approx(hz.boost_from_score(3.5))
-
-
-def test_hotzone_stateful_across_batches(spark, tmp_path) -> None:
-    """Two micro-batches through applyInPandasWithState: state carries the
-    decayed score between batches."""
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    b1 = spark.createDataFrame(
-        [("a", T0.replace(tzinfo=None), 1.0)], "key string, ts timestamp, weight double"
-    )
-    b1.coalesce(1).write.mode("append").parquet(in_dir)
-    b2 = spark.createDataFrame(
-        [("a", (T0 + timedelta(hours=24)).replace(tzinfo=None), 3.0)],
-        "key string, ts timestamp, weight double",
-    )
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-
-    stream = spark.readStream.schema("key string, ts timestamp, weight double").option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(in_dir)
-    out = hz.hotzone_stateful(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("hotzone_out")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "select * from hotzone_out order by last_ts"
-    ).collect()
-    assert len(rows) >= 1
-    final = rows[-1]
-    assert final["key"] == "a"
-    # folding depends on file->batch assignment; final score is either the
-    # cross-batch fold (1*0.5+3=3.5) or, if both files landed in one batch,
-    # the same value — the recurrence is order-deterministic
-    assert final["score"] == pytest.approx(3.5)
 
 
 def test_fold_events_out_of_order_never_amplifies() -> None:

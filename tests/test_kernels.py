@@ -11,6 +11,19 @@ from hypothesis import strategies as st
 from yams_spark.functions import sketches, similarity, textnorm
 
 
+def _minhash(tokens: list[str]) -> np.ndarray:
+    """The signatures stage's MinHash over ``tokens``' 5-gram shingles."""
+    th = sketches.hash_tokens(tokens)
+    return sketches.minhash_signature_from_hashes(
+        sketches.kgram_hashes(th, sketches.SHINGLE_SIZE))
+
+
+def _simhash(tokens: list[str]) -> int:
+    """SimHash over the token multiset, through the stage's kernel."""
+    vals, counts = np.unique(sketches.hash_tokens(tokens), return_counts=True)
+    return sketches.simhash64_from_hashes(vals, counts)
+
+
 # --- textnorm (dedupe.cpp:60-111) ---
 
 def test_normalize_text_for_tokens() -> None:
@@ -66,21 +79,12 @@ def test_jaro_winkler() -> None:
     assert similarity.jaro_winkler("", "x") == 0.0
 
 
-def test_hamming() -> None:
-    assert similarity.hamming64(0, 0) == 0
-    assert similarity.hamming64(0b1011, 0b0001) == 2
-    assert similarity.hamming64(-1 & 0xFFFFFFFFFFFFFFFF, 0) == 64
-    x = np.array([0, 0b1011, 2**63], dtype=np.uint64)
-    y = np.array([0, 0b0001, 0], dtype=np.uint64)
-    assert similarity.hamming64_array(x, y).tolist() == [0, 2, 1]
-
-
 # --- sketches ---
 
 def test_minhash_identical_docs_match() -> None:
     toks = "the quick brown fox jumps over the lazy dog again and again".split()
-    s1 = sketches.minhash_signature(toks)
-    s2 = sketches.minhash_signature(list(toks))
+    s1 = _minhash(toks)
+    s2 = _minhash(list(toks))
     assert np.array_equal(s1, s2)
     assert len(s1) == sketches.NUM_PERM
 
@@ -89,9 +93,9 @@ def test_minhash_similarity_tracks_jaccard() -> None:
     rng = np.random.default_rng(0)
     base = [f"tok{i}" for i in range(300)]
     variant = base[:270] + [f"new{i}" for i in range(30)]  # ~82% shingle overlap
-    s_base = sketches.minhash_signature(base)
-    s_var = sketches.minhash_signature(variant)
-    s_rand = sketches.minhash_signature([f"other{i}" for i in range(300)])
+    s_base = _minhash(base)
+    s_var = _minhash(variant)
+    s_rand = _minhash([f"other{i}" for i in range(300)])
     sim_near = (s_base == s_var).mean()
     sim_far = (s_base == s_rand).mean()
     assert sim_near > 0.5
@@ -100,23 +104,23 @@ def test_minhash_similarity_tracks_jaccard() -> None:
 
 def test_minhash_band_keys() -> None:
     toks = "a b c d e f g h".split()
-    keys = sketches.minhash_band_keys(sketches.minhash_signature(toks))
+    keys = sketches.minhash_band_keys(_minhash(toks))
     assert len(keys) == sketches.MINHASH_BANDS
     assert len(set(keys)) == sketches.MINHASH_BANDS  # band index prefix differs
     assert keys[0].startswith("mh0:")
 
 
 def test_simhash_properties() -> None:
-    a = sketches.simhash64("the quick brown fox".split() * 5)
-    b = sketches.simhash64("the quick brown fox".split() * 5)
+    a = _simhash("the quick brown fox".split() * 5)
+    b = _simhash("the quick brown fox".split() * 5)
     assert a == b
     assert -(2**63) <= a < 2**63
-    near = sketches.simhash64(("the quick brown fox".split() * 5) + ["extra"])
-    far = sketches.simhash64("completely different words here now".split() * 5)
-    from yams_spark.functions.similarity import hamming64
-    assert hamming64(a & (2**64 - 1), near & (2**64 - 1)) < hamming64(
-        a & (2**64 - 1), far & (2**64 - 1)
-    )
+    near = _simhash(("the quick brown fox".split() * 5) + ["extra"])
+    far = _simhash("completely different words here now".split() * 5)
+    def hamming(x: int, y: int) -> int:
+        return bin((x ^ y) & (2**64 - 1)).count("1")
+
+    assert hamming(a, near) < hamming(a, far)
 
 
 def test_embedding_deterministic_normalized() -> None:

@@ -1,104 +1,11 @@
-"""Binary manifest codec (manifest_manager.cpp) — round-trips, legacy
-dual-read, corruption, validation batteries."""
+"""Manifest validation (manifest_manager.cpp validateManifest) as one
+Catalyst predicate over manifest rows."""
 
 from __future__ import annotations
 
-import struct
-import zlib
-
-import pytest
-
-from yams_spark.functions.manifest_codec import (
-    deserialize_manifest,
-    manifest_checksum,
-    manifest_is_valid,
-    serialize_manifest,
-    validate_manifest,
-    validate_manifest_col,
-)
+from yams_spark.functions.manifest_codec import validate_manifest_col
 
 _H = "ab" * 32  # 64-char hash
-
-
-def _manifest(**kw):
-    m = {
-        "version": 1,
-        "file_hash": _H,
-        "file_size": 300,
-        "original_name": "doc.html",
-        "mime_type": "text/html",
-        "chunks": [
-            {"hash": "cd" * 32, "offset": 0, "size": 100, "flags": 0},
-            {"hash": "ef" * 32, "offset": 100, "size": 200, "flags": 1},
-        ],
-    }
-    m.update(kw)
-    return m
-
-
-def test_roundtrip_and_layout():
-    m = _manifest()
-    blob = serialize_manifest(m)
-    assert blob[:4] == b"YAMS"
-    # magic + ver + (len+hash) + size + (len+name) + (len+mime) + n
-    # + 2 * (len+hash + 8 + 4 + 4)
-    want_len = (
-        4 + 4 + (4 + 64) + 8 + (4 + 8) + (4 + 9) + 4 + 2 * (4 + 64 + 16)
-    )
-    assert len(blob) == want_len
-    back = deserialize_manifest(blob)
-    assert back == m
-
-
-def test_legacy_u64_flags_dual_read():
-    m = _manifest()
-    blob = bytearray(b"YAMS")
-    blob += struct.pack("<I", 1)
-    blob += struct.pack("<I", 64) + m["file_hash"].encode()
-    blob += struct.pack("<Q", 300)
-    blob += struct.pack("<I", 8) + b"doc.html"
-    blob += struct.pack("<I", 9) + b"text/html"
-    blob += struct.pack("<I", 2)
-    for c in m["chunks"]:
-        blob += struct.pack("<I", 64) + c["hash"].encode()
-        blob += struct.pack("<QIQ", c["offset"], c["size"], c["flags"])
-    back = deserialize_manifest(bytes(blob))
-    assert back == m
-    # legacy flags beyond u32 reject the record entirely
-    bad = bytes(blob[:-8]) + struct.pack("<Q", 1 << 40)
-    assert deserialize_manifest(bad) is None
-
-
-def test_corruption_and_validity():
-    m = _manifest()
-    blob = serialize_manifest(m)
-    assert deserialize_manifest(blob + b"x") is None  # trailing bytes
-    assert deserialize_manifest(blob[:-1]) is None    # truncated
-    assert deserialize_manifest(b"NOPE" + blob[4:]) is None
-    # invalid manifests fail deserialization's isValid gate
-    bad = serialize_manifest(_manifest(file_size=0))
-    assert deserialize_manifest(bad) is None
-    assert not manifest_is_valid(_manifest(file_hash="short"))
-    assert not manifest_is_valid(_manifest(chunks=[]))
-
-
-def test_validate_manifest_rules():
-    assert validate_manifest(_manifest())
-    assert not validate_manifest(_manifest(version=2))
-    gap = _manifest()
-    gap["chunks"][1]["offset"] = 99
-    assert not validate_manifest(gap)
-    short = _manifest(file_size=299)
-    assert not validate_manifest(short)
-    # checksum: zlib CRC over field-string concatenation
-    m = _manifest()
-    want = zlib.crc32(
-        (_H + "300" + "cd" * 32 + "0" + "100" + "ef" * 32 + "100"
-         + "200").encode()
-    ) & 0xFFFFFFFF
-    assert manifest_checksum(m) == want
-    assert validate_manifest(m, expected_checksum=want)
-    assert not validate_manifest(m, expected_checksum=want ^ 1)
 
 
 def test_validate_manifest_col(spark):

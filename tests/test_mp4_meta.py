@@ -1,5 +1,5 @@
 """MP4/ISO-BMFF container metadata (functions/mp4_meta.py): box walk vs
-the structural builder oracle, both mvhd/mdhd versions, Spark pass."""
+the structural builder oracle, both mvhd/mdhd versions."""
 
 from __future__ import annotations
 
@@ -38,41 +38,6 @@ def test_parse_errors() -> None:
     good = build_mp4()
     with pytest.raises(ValueError):
         parse_mp4(good[: len(good) // 2])
-
-
-def test_container_metadata_spark_pass(spark) -> None:
-    from yams_spark.operators.multimodal import (
-        extract_container_metadata,
-        synth_media_table,
-    )
-
-    media = synth_media_table(spark, n=24)
-    meta = {r["media_id"]: r for r in
-            extract_container_metadata(media).collect()}
-    vids = [m for m in meta.values() if m["brand"] == "isom"]
-    # every video row parses: 2 tracks, avc1 (or the rotated-in MJPEG
-    # rows with their small real-frame dims), the synthesized durations
-    assert len(vids) == 8  # kinds rotate image/audio/video over 24 rows
-    assert {v["video_codec"] for v in vids} == {"avc1", "jpeg"}
-    for v in vids:
-        assert v["n_tracks"] == 2
-        if v["video_codec"] == "avc1":
-            assert v["width"] >= 320 and v["height"] >= 240
-        else:
-            assert v["width"] == 16 and v["height"] == 16
-        assert v["duration_ms"] and v["duration_ms"] % 750 == 0
-    # MPEG-audio rows surface the stream-metadata tier
-    mp2 = [m for m in meta.values() if m["brand"] == "mpeg1-layer2"]
-    assert len(mp2) == 2 and all(m["video_codec"] == "L2@192kbps" for m in mp2)
-    # image / wav / flac rows yield nulls (no container walk for them)
-    assert any(m["brand"] is None for m in meta.values())
-    # MJPEG rows now decode pixels for REAL; avc1 stays honestly stubbed
-    from yams_spark.operators.multimodal import extract_media_features
-
-    feats = {r["media_id"]: r for r in
-             extract_media_features(media).collect()}
-    for v in vids:
-        assert feats[v["media_id"]]["decoded"] == (v["video_codec"] == "jpeg")
 
 
 def test_sample_tables_roundtrip_and_mjpeg_decode():

@@ -16,7 +16,6 @@ from yams_spark.functions.mpeg_audio import (
     encode_layer1,
     encode_layer2,
     parse_frame_header,
-    stream_metadata,
     synthesize,
 )
 
@@ -90,24 +89,21 @@ def test_filterbank_roundtrip_and_band_isolation():
 def test_layer1_roundtrip():
     pcm = _tone(384 * 18)
     bs = encode_layer1(pcm, 44100, 448)
-    md = stream_metadata(bs)
-    assert md == {
-        "layer": 1, "sample_rate": 44100, "n_channels": 1,
-        "bitrate_kbps": 448, "n_frames": 18,
-        "duration_ms": int(round(18 * 384 * 1000 / 44100)),
-    }
+    fh = parse_frame_header(bs)
+    assert (fh.layer, fh.sample_rate, fh.n_channels, fh.bitrate_kbps) == (
+        1, 44100, 1, 448,
+    )
     out, sr = decode_mpeg_audio(bs)
-    assert sr == 44100 and out.shape[1] == 1
+    assert sr == 44100 and out.shape == (18 * 384, 1)
     assert _snr(pcm[: len(out) - DELAY], out[DELAY:, 0]) >= 45.0
 
 
 def test_layer2_roundtrip_and_grouped_codes():
     pcm = _tone(1152 * 6)
     bs = encode_layer2(pcm, 44100, 192)
-    md = stream_metadata(bs)
-    assert md["layer"] == 2 and md["n_frames"] == 6
-    assert md["duration_ms"] == int(round(6 * 1152 * 1000 / 44100))
+    assert parse_frame_header(bs).layer == 2
     out, sr = decode_mpeg_audio(bs)
+    assert len(out) == 6 * 1152
     # static allocation: 255-level low bands / 15-level mid / grouped
     # 3-level top — quantization-limited, filterbank measures ~70 dB
     assert _snr(pcm[: len(out) - DELAY], out[DELAY:, 0]) >= 25.0
@@ -120,22 +116,19 @@ def test_layer2_roundtrip_and_grouped_codes():
 def test_id3_skip_and_resync():
     bs = encode_layer2(_tone(1152 * 2), 44100, 192)
     tagged = b"ID3\x04\x00\x00\x00\x00\x00\x0a" + b"x" * 10 + b"\xff" + bs
-    md = stream_metadata(tagged)
-    assert md["n_frames"] == 2
     out, sr = decode_mpeg_audio(tagged)
     assert sr == 44100 and len(out) == 1152 * 2
 
 
 def test_layer3_is_metadata_only():
-    """A Layer III stream: header/duration metadata parses; sample decode
-    raises the documented strict NotImplementedError."""
+    """A Layer III stream: the frame header parses; sample decode raises
+    the documented strict NotImplementedError."""
     # hand-built L3 header: sync|MPEG1|layer3|no-crc, 128kbps, 44.1kHz
     h = 0xFFF << 20 | 0x3 << 19 | 0x1 << 17 | 1 << 16 | 9 << 12 | 0 << 10 | 3 << 6
     frame_bytes = 144 * 128000 // 44100
     frame = h.to_bytes(4, "big") + b"\x00" * (frame_bytes - 4)
-    md = stream_metadata(frame * 3)
-    assert md["layer"] == 3 and md["n_frames"] == 3
-    assert md["duration_ms"] == int(round(3 * 1152 * 1000 / 44100))
+    fh = parse_frame_header(frame)
+    assert fh.layer == 3 and fh.frame_bytes == frame_bytes
     with pytest.raises(NotImplementedError, match="Layer III"):
         decode_mpeg_audio(frame * 3)
 
@@ -150,30 +143,6 @@ def test_media_codecs_dispatch():
     assert feats[2] == pytest.approx(2 * 1152 / 44100, rel=1e-3)
 
 
-def test_container_metadata_covers_mpeg_audio(spark):
-    """extract_container_metadata parses MPEG-audio stream headers — for
-    Layer II rows AND a hand-built Layer III stream (metadata-only
-    format)."""
-    from yams_spark.operators.multimodal import extract_container_metadata
-
-    l2 = encode_layer2(_tone(1152 * 2), 44100, 192)
-    h = 0xFFF << 20 | 0x3 << 19 | 0x1 << 17 | 1 << 16 | 9 << 12 | 0 << 10 | 3 << 6
-    l3 = (h.to_bytes(4, "big") + b"\x00" * (144 * 128000 // 44100 - 4)) * 2
-    media = spark.createDataFrame(
-        [("a2", "audio", bytearray(l2), "audio/mpeg", None, None, None),
-         ("a3", "audio", bytearray(l3), "audio/mpeg", None, None, None)],
-        "media_id string, kind string, payload binary, mime string, "
-        "width int, height int, duration_ms long",
-    )
-    meta = {r["media_id"]: r for r in
-            extract_container_metadata(media).collect()}
-    assert meta["a2"]["brand"] == "mpeg1-layer2"
-    assert meta["a2"]["video_codec"] == "L2@192kbps"
-    assert meta["a2"]["duration_ms"] == int(round(2 * 1152 * 1000 / 44100))
-    assert meta["a3"]["brand"] == "mpeg1-layer3"
-    assert meta["a3"]["n_tracks"] == 1  # mono
-
-
 def test_layer2_stereo_roundtrip():
     """Stereo (mode=0) frames: channel-interleaved allocation/scalefactor/
     sample layout per §2.4.1.6; both channels reconstruct independently."""
@@ -183,10 +152,9 @@ def test_layer2_stereo_roundtrip():
     right = 0.4 * np.sin(2 * np.pi * 1320 * t / 44100)
     pcm = np.stack([left, right], axis=1)
     bs = encode_layer2(pcm, 44100, 384)
-    md = stream_metadata(bs)
-    assert md["n_channels"] == 2 and md["n_frames"] == 4
+    assert parse_frame_header(bs).n_channels == 2
     out, sr = decode_mpeg_audio(bs)
-    assert out.shape[1] == 2
+    assert out.shape == (4 * 1152, 2)
     for ch, ref in ((0, left), (1, right)):
         got = out[DELAY:, ch]
         assert _snr(ref[: len(got)], got) >= 25.0, ch

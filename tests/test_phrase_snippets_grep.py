@@ -1,5 +1,5 @@
 """Phrase queries over positional postings, multi-term snippets, grep
-option surface (whole-word / invert / ignore-case / context / globs) —
+option surface (whole-word / ignore-case / context / globs) —
 round-3 operators vs plain-Python references."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from yams_spark.operators.grep import (
-    grep_lines,
     grep_lines_context,
     grep_scan,
     with_snippets_multi,
@@ -153,14 +152,12 @@ def test_grep_whole_word_and_ignore_case(spark) -> None:
     assert fwm_null == {2}
 
 
-def test_grep_invert_and_glob_scope(spark) -> None:
+def test_grep_glob_scope(spark) -> None:
     docs = spark.createDataFrame(
         [(1, "/src/a.py", "ok line\nerror here\nfine"),
          (2, "/doc/b.md", "error everywhere")],
         "doc_id long, path string, text string",
     )
-    inv = grep_lines(docs, "error", invert=True).collect()
-    assert {(r["doc_id"], r["line_no"]) for r in inv} == {(1, 1), (1, 3)}
     scoped = grep_scan(docs, "error", path_glob="/src/*.py", path_col="path").collect()
     assert {r["doc_id"] for r in scoped} == {1}
 

@@ -15,7 +15,6 @@ from yams_spark.functions.plain_extract import (
     extract_plain_text_col,
     is_binary_file,
     is_parseable_text,
-    process_text_by_type,
 )
 
 
@@ -145,30 +144,3 @@ def test_spark_batch_matches_scalar(spark):
     for name, data in corpus:
         want = extract_from_buffer(data)
         assert got[name] == want, name
-
-
-def test_process_text_by_type(spark):
-    rows = [
-        ("a.md", "# Title\n\ncontent  here\n"),
-        ("b.TXT", "keep   exact\n\nspacing\t."),
-        ("c.py", "import os\nprint(1)"),
-        ("dir/.hidden", "x\ny"),
-        ("d.csv", " lead and trail "),
-    ]
-    df = spark.createDataFrame(rows, "name string, text string")
-    out = {
-        r["name"]: (
-            r["file_type"], r["line_count"], r["format"],
-            r["programming_language"], r["text"],
-        )
-        for r in process_text_by_type(df).collect()
-    }
-    # .md: 3 newlines, terminated -> 3 lines; normalized
-    assert out["a.md"] == (".md", 3, "markdown", None, "# Title content here")
-    # .txt preserves formatting; unterminated last line counts
-    assert out["b.TXT"] == (".txt", 3, None, None, "keep   exact\n\nspacing\t.")
-    assert out["c.py"] == (".py", 2, "source_code", "py", "import os print(1)")
-    # dotfile: no extension -> no format; still normalized
-    assert out["dir/.hidden"] == ("", 2, None, None, "x y")
-    # single leading space survives collapse; one trailing removed
-    assert out["d.csv"] == (".csv", 1, "csv", None, " lead and trail")

@@ -94,38 +94,6 @@ def test_ivf_probe_recall_and_exact_degenerate(spark, clustered_corpus) -> None:
     assert [r["cosine"] for r in full] == [r["cosine"] for r in exact]
 
 
-def test_ivf_topk_multi_matches_exact_at_full_probe(spark, clustered_corpus) -> None:
-    """Batched IVF: nprobe = n_lists degrades to exact search per query —
-    results equal cosine_topk for every query in the batch; a 1-probe
-    query still recalls its own cluster."""
-    from pyspark.sql import functions as F
-
-    from yams_spark.operators.ann import cosine_topk
-    from yams_spark.operators.ivf import ivf_assign, ivf_topk_multi, train_ivf
-
-    corpus, rows = clustered_corpus
-    corpus = corpus.orderBy("vec_id")
-    cent = train_ivf(corpus, n_lists=10, train_limit=50, iters=8)
-    assigned = ivf_assign(corpus, cent).persist()
-
-    queries = corpus.where("vec_id IN (0, 17, 33)").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    full = ivf_topk_multi(assigned, cent, queries, k=5, nprobe=len(cent))
-    exact = cosine_topk(spark, corpus, queries, k=5)
-    got = sorted(map(tuple, full.collect()))
-    want = sorted(map(tuple, exact.collect()))
-    assert got == want
-
-    # nprobe=1: each query's own cluster is recalled
-    near = ivf_topk_multi(assigned, cent, queries, k=4, nprobe=1)
-    by_q = {}
-    for r in near.collect():
-        by_q.setdefault(r["query_id"], set()).add(r["vec_id"])
-    assert by_q[0] == {1, 2, 3, 4}
-    assert by_q[17] <= set(range(15, 20))
-
-
 def test_ivf_pq_full_probe_equals_exact(spark) -> None:
     """IVFADC with nprobe=n_lists and a rerank pool covering the corpus
     must EQUAL exact search — the final rerank is exact cosine."""

@@ -15,20 +15,12 @@ import pytest
 
 
 def _build_zip(tmp: str) -> str:
-    import yams_spark
+    from yams_spark.session import _package_sources
 
-    pkg_dir = os.path.dirname(os.path.abspath(yams_spark.__file__))
     zip_path = os.path.join(tmp, "yams_spark.zip")
     with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for name in files:
-                if name.endswith(".py"):
-                    full = os.path.join(root, name)
-                    zf.write(
-                        full,
-                        os.path.join("yams_spark",
-                                     os.path.relpath(full, pkg_dir)),
-                    )
+        for arcname, full in _package_sources():
+            zf.write(full, arcname)
     return zip_path
 
 
@@ -94,7 +86,7 @@ def test_spark_submit_py_files_runs_pipeline(spark, tmp_path):
 
 
 def test_package_ships_once_per_context(spark):
-    """``get_spark`` and every ``__spark_entry__`` call site ship the
+    """``get_spark``, ``entry()`` and every ``queries()`` dispatch ship the
     package; after the first, a call adds no task dependency and no driver
     ``sys.path`` entry. Executors still import the package."""
     from pyspark.sql import functions as F
@@ -115,3 +107,60 @@ def test_package_ships_once_per_context(spark):
 
     (row,) = spark.range(1).select(where("id").alias("m")).collect()
     assert row.m == "yams_spark.sources.pages"
+
+
+def test_shipped_zip_is_named_by_content(spark):
+    """The shipped zip's name carries the package fingerprint, and its
+    members are the current sources byte for byte, so a zip left by an
+    older run (or another process) is never shipped in their place."""
+    from yams_spark import session
+
+    session._ship_package(spark)
+    name = f"yams_spark_pkg_{session.package_fingerprint()}.zip"
+    assert name in spark.sparkContext._python_includes
+    path = os.path.join(os.environ.get("TMPDIR", "/tmp"), name)
+    with zipfile.ZipFile(path) as zf:
+        shipped = {n: zf.read(n) for n in zf.namelist()}
+    current = {}
+    for arcname, full in session._package_sources():
+        with open(full, "rb") as f:
+            current[arcname] = f.read()
+    assert shipped == current
+
+
+def test_queries_ship_the_package_at_dispatch(spark, sf_dir, monkeypatch):
+    """A query reached through ``queries()`` ships the package for its
+    session before it builds its plan (here: before it reads a table)."""
+    import __spark_entry__ as entry
+    from yams_spark import session
+
+    events = []
+    monkeypatch.setattr(session, "_ship_package",
+                        lambda s: events.append(("ship", s)))
+    read = entry._t
+    monkeypatch.setattr(entry, "_t",
+                        lambda *a: events.append(("read", a[2])) or read(*a))
+    df = entry.queries()["q101_plain_extract"](spark, sf_dir)
+    assert events[:2] == [("ship", spark), ("read", "documents")]
+    assert df.count() > 0
+
+
+def test_only_dispatch_ships_the_package():
+    """No query body ships the package itself: in ``__spark_entry__.py``
+    only ``entry()`` and the ``queries()`` dispatch wrapper call
+    ``_ship_package``."""
+    import ast
+
+    import __spark_entry__ as entry
+
+    with open(entry.__file__) as f:
+        tree = ast.parse(f.read())
+    callers = {
+        fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None))
+        == "_ship_package"
+    }
+    assert callers == {"entry", "_shipping"}
+

@@ -1,7 +1,7 @@
 """Topology input extraction + Phase V feature composer + protected
-relation cover (topology_input_extractor.cpp / protected_relation_cover
-.cpp) — Spark vs bit-exact numpy float32 replicas and hand-computed
-goldens."""
+relation observations (topology_input_extractor.cpp /
+protected_relation_cover.cpp) — Spark vs bit-exact numpy float32
+replicas and hand-computed goldens."""
 
 from __future__ import annotations
 
@@ -13,15 +13,11 @@ import pytest
 from yams_spark.operators.topo_inputs import (
     FeatureComposition,
     aggregate_doc_embeddings,
-    build_protected_relation_cover,
     collect_topology_neighbors,
     compose_features,
-    composed_space_identity,
     entity_type_index,
     entity_type_signatures,
-    feature_projection_fingerprint,
     minhash_bucket_sketch_col,
-    protected_relation_identity,
     protected_relation_observations,
     variance_weights,
 )
@@ -83,17 +79,6 @@ def _compose_ref(dense, weights, entity_sig, sketch, cfg):
     if minhash_on:
         parts.append(sketch * a_m)
     return np.concatenate(parts).astype(np.float32)
-
-
-def _fnv64(data: bytes) -> int:
-    h = 14695981039346656037
-    for b in data:
-        h = ((h ^ b) * 1099511628211) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
-def _fmt(v) -> str:
-    return f"{float(np.float32(v)):.9g}"
 
 
 # --- fixtures --------------------------------------------------------------
@@ -342,36 +327,6 @@ def test_entity_type_signatures(spark):
     assert 13 not in sigs and 14 not in sigs
 
 
-def test_fingerprints_match_independent_byte_stream():
-    cfg = FeatureComposition(
-        enable_entity_fusion=True,
-        enable_matryoshka=True,
-        matryoshka_target_dim=64,
-        enable_minhash_sketch=True,
-    )
-    weights = [0.5, 0.0, 0.45]
-    axes = ["org", "gene"]
-    desc = (
-        "schema=v1;entity=1;entity_k=16"
-        f";entity_alpha={_fmt(0.25)};entity_min_confidence={_fmt(0.45)}"
-        ";matryoshka=1;matryoshka_dim=64;minhash=1;minhash_dim=16"
-        f";minhash_alpha={_fmt(0.10)}"
-        f";w={_fmt(0.5)};w={_fmt(0.0)};w={_fmt(0.45)}"
-        ";entity_axis=3:org;entity_axis=4:gene"
-    )
-    want = f"{_fnv64(desc.encode()):016x}"
-    assert feature_projection_fingerprint(cfg, weights, axes) == want
-    # 0.45f prints with its float32 round (not '0.45')
-    assert _fmt(0.45) == "0.449999988"
-    ident = composed_space_identity("modelX", cfg, 3, 7, weights, axes)
-    assert ident.startswith("topology-coordinate:v1;raw=modelX;raw_dim=3")
-    assert ident.endswith(f";projection=fnv1a64:{want}")
-    # pass-through branches (:72-74)
-    assert composed_space_identity("", cfg, 3, 7, weights, axes) == ""
-    off = FeatureComposition()
-    assert composed_space_identity("m", off, 3, 3, [], []) == "m"
-
-
 def _mk_neighbor_rows(spark):
     rows = [
         # (doc, neighbor, score, reciprocal)
@@ -390,7 +345,7 @@ def _mk_neighbor_rows(spark):
     )
 
 
-def test_protected_relation_observations_and_identity(spark):
+def test_protected_relation_observations(spark):
     nb = _mk_neighbor_rows(spark)
     obs = protected_relation_observations(
         nb, reciprocal_only=True, min_edge_score=0.25
@@ -399,17 +354,6 @@ def test_protected_relation_observations_and_identity(spark):
         (r["lhs"], r["rhs"]): round(r["score"], 6) for r in obs.collect()
     }
     assert got == {("h1", "h2"): 0.9, ("h2", "h3"): 0.5}
-    ident = protected_relation_identity(obs)
-    desc = (
-        "relation=semantic_neighbor;provenance=topology_input;version=1;"
-        "split=construction"
-        f";lhs=2:h1;rhs=2:h2;score={_fmt(np.float32(0.9))}"
-        f";lhs=2:h2;rhs=2:h3;score={_fmt(np.float32(0.5))}"
-    )
-    want = f"semantic_neighbor:v1:construction:fnv1a64:{_fnv64(desc.encode()):016x}"
-    assert ident == want
-    with pytest.raises(ValueError, match="gather gate"):
-        protected_relation_identity(obs, max_observations=1)
     # reciprocal gate off admits the one-way 0.7 edge
     loose = protected_relation_observations(
         nb, reciprocal_only=False, min_edge_score=0.25
@@ -435,34 +379,3 @@ def test_q96_fixture_variance_margins():
     )
     var = np.sort(emb.var(axis=0))
     assert np.min(np.diff(var)) > 1e-6
-
-
-def test_protected_relation_cover(spark):
-    clusters = spark.createDataFrame(
-        [("c2", ["h3"]), ("c1", ["h2", "h1"])],
-        "cluster_id string, member_doc_hashes array<string>",
-    )
-    members = spark.createDataFrame(
-        [("h1",), ("h3",)], "doc_hash string"
-    )
-    out = build_protected_relation_cover(clusters, members)
-    fibers = {
-        r["fiber_id"]: (r["fiber_index"], r["doc_hashes"])
-        for r in out["fibers"].collect()
-    }
-    assert fibers == {"c1": (0, ["h1", "h2"]), "c2": (1, ["h3"])}
-
-    def bad(rows, members_rows=(("h1",),), match=""):
-        c = spark.createDataFrame(
-            rows, "cluster_id string, member_doc_hashes array<string>"
-        )
-        m = spark.createDataFrame(list(members_rows), "doc_hash string")
-        with pytest.raises(ValueError, match=match):
-            build_protected_relation_cover(c, m)
-
-    bad([("", ["h1"])], match="has no id")
-    bad([("c1", ["h1"]), ("c1", ["h2"])], match="duplicate fiber id")
-    bad([("c1", ["h1", "h1"])], match="duplicate document membership")
-    bad([("c1", [])], match="fiber is empty")
-    bad([("c1", ["h1", ""])], match="empty document")
-    bad([("c1", ["h1"])], members_rows=[("zz",)], match="absent from the cover")

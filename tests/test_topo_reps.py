@@ -242,30 +242,6 @@ def test_spill_config_guards(spark, frames):
     ).count() == 0
 
 
-def test_spill_member_counts(spark, frames):
-    from yams_spark.operators.topo_reps import (
-        orthogonal_boundary_spill,
-        spill_member_counts,
-    )
-
-    memberships, clusters, documents = frames
-    spills = orthogonal_boundary_spill(
-        memberships, clusters, documents,
-        overlap_limit=SPILL_LIMIT, boundary_ratio=SPILL_RATIO,
-        residual_penalty=SPILL_PENALTY,
-    )
-    counts = {
-        r["cluster_id"]: r["member_count"]
-        for r in spill_member_counts(memberships, spills).collect()
-    }
-    # base sizes: tc_a 5 (sa0..sa4), tc_b/tc_c/tc_e/tc_d 2 each, tc_zz 1;
-    # spills add: tc_c += {sa0, sa2}, tc_e += {sa0, sa2},
-    #             tc_a += {sc0, se0}, tc_b += {sc0, se0}
-    assert counts == {
-        "tc_a": 7, "tc_b": 4, "tc_c": 4, "tc_e": 4, "tc_d": 2, "tc_zz": 1,
-    }
-
-
 def test_spill_mini_margins():
     """Fixture safety invariants: every ratio-gate comparison keeps
     ≥ 1e-2 relative margin, and per-doc candidate losses are either

@@ -4,14 +4,12 @@ topology_routing_session.cpp:130-160, 782-806, 1382-1459)."""
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from yams_spark.operators.topo_routing import (
-    construction_fingerprint,
     route_clusters,
     routed_members,
     select_routes_for_narrowing,
@@ -119,76 +117,6 @@ def test_narrowing_adaptive_gap_and_abstention():
     assert len(sel["routes"]) == 4 and sel["boundary_score_margin"] == 0.0
 
 
-def test_fingerprint_matches_independent_byte_stream():
-    """Cross-check the FNV-1a replica against an independently built byte
-    stream (little-endian lengths, float32/float64 bit patterns) folded
-    with the textbook FNV-1a loop."""
-    cluster = {
-        "cluster_id": "c1",
-        "member_count": 2,
-        "persistence": 0.25,
-        "cohesion": 0.5,
-        "density": 0.0,
-        "bridge_mass": 0.0,
-        "medoid_hash": "m",
-        "members": ["b", "a"],
-        "centroid": [0.5, -1.0],
-    }
-    mem = [{"doc_hash": "a", "cluster_id": "c1"},
-           {"doc_hash": "b", "cluster_id": "c1"}]
-    got = construction_fingerprint([cluster], mem, algorithm="alg")
-
-    def le(v, n=8):
-        return struct.pack("<Q", v & ((1 << 64) - 1))[:n]
-
-    def s(x):
-        return le(len(x)) + x.encode()
-
-    stream = b""
-    stream += s("alg") + le(0, 1) + s("") + s("")
-    stream += le(1)  # one cluster
-    stream += s("c1") + s("") + le(0) + le(2)
-    for d in (0.25, 0.5, 0.0, 0.0):
-        stream += struct.pack("<Q", struct.unpack("<Q", struct.pack("<d", d))[0])
-    stream += le(0) + le(0) + s("m")
-    stream += le(2) + s("a") + s("b")  # members sorted
-    stream += le(0)  # overlaps
-    stream += le(2)  # centroid
-    for f in (0.5, -1.0):
-        # fingerprintFloat folds the float32 bit pattern as FOUR bytes
-        stream += struct.pack("<I", struct.unpack("<I", struct.pack("<f", f))[0])
-    stream += le(2)  # memberships
-    for dh in ("a", "b"):
-        stream += s(dh) + s("c1") + s("") + le(0)
-        for d in (0.0, 0.0, 0.0):
-            stream += struct.pack("<d", d)
-        stream += le(0, 1) + le(0)
-    h = 14695981039346656037
-    for b in stream:
-        h = ((h ^ b) * 1099511628211) & ((1 << 64) - 1)
-    assert got == format(h, "016x")
-
-
-def test_fingerprint_sensitive_and_order_invariant():
-    c = [{"cluster_id": "c1", "member_count": 1, "members": ["a"],
-          "centroid": [1.0]}]
-    m = [{"doc_hash": "a", "cluster_id": "c1"}]
-    base = construction_fingerprint(c, m)
-    assert base == construction_fingerprint(c, m)
-    # member order is sorted before hashing -> invariant
-    c2 = [{"cluster_id": "c1", "member_count": 2, "members": ["b", "a"],
-           "centroid": [1.0]}]
-    c2r = [{"cluster_id": "c1", "member_count": 2, "members": ["a", "b"],
-            "centroid": [1.0]}]
-    m2 = [{"doc_hash": "a", "cluster_id": "c1"},
-          {"doc_hash": "b", "cluster_id": "c1"}]
-    assert construction_fingerprint(c2, m2) == construction_fingerprint(c2r, m2)
-    # any field change moves the hash
-    c3 = [{"cluster_id": "c1", "member_count": 1, "members": ["a"],
-           "centroid": [1.0], "persistence": 0.1}]
-    assert construction_fingerprint(c3, m) != base
-
-
 def test_routed_members_comparator_and_cap(spark):
     mem = spark.createDataFrame(
         [("s1", "c0"), ("m0", "c0"), ("z9", "c0"), ("a1", "c1"), ("s2", "c1")],
@@ -294,23 +222,3 @@ def test_rank_seed_evidence_and_merge(spark):
     assert merge_topology_seed_hashes(lex, vec, 0).count() == 2
     one = merge_topology_seed_hashes(lex, vec, 1).orderBy("ord").collect()
     assert [r["doc_hash"] for r in one] == ["a", "b", "e"]
-
-
-def test_fill_topology_skip_reason_cascade():
-    """search_topology_stage.cpp:114-140 — every branch in cascade
-    order."""
-    from yams_spark.operators.topo_routing import fill_topology_skip_reason
-
-    f = fill_topology_skip_reason
-    # pre-set reason always wins, even over 'disabled'
-    assert f("epoch_mismatch", "disabled", True, True, True, True, 3) == "epoch_mismatch"
-    assert f("", "disabled", True, True, True, True, 3) == "disabled"
-    assert f("", "weak_query_only", False, True, True, True, 3) == "strong_tier1_query"
-    # weak query under weak_query_only falls through to the store check
-    assert f("", "weak_query_only", True, False, True, True, 3) == "missing_store"
-    assert f("", "always", True, False, True, True, 3) == "missing_store"
-    # applied session: success, reason stays empty
-    assert f("", "always", True, True, True, True, 3) == ""
-    assert f("", "always", True, True, False, True, 3) == "no_added_candidates"
-    assert f("", "always", True, True, False, True, 0) == "no_routes"
-    assert f("", "always", True, True, False, False, 0) == "not_loaded"

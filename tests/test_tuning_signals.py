@@ -4,16 +4,12 @@ and search_tuner.h:770-803."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from yams_spark.operators.tuning_signals import (
     bucketize,
     combine_reward,
     featurize,
-    fill_corpus_features,
-    query_token_count_log2,
 )
 
 _CTX_SCHEMA = (
@@ -61,37 +57,6 @@ def test_bucketize_goldens(spark):
     assert got[1] == "c2/d0/e2/m0/ce0/te0"
     # 6.5 caps at 6; ratio 1.5 clamps -> q3; coverage clamps low -> t0
     assert got[2] == "c3/d6/e0/m1/ce1/te1"
-
-
-def test_fill_corpus_features_and_query_tokens(spark):
-    stats = spark.createDataFrame(
-        [
-            (1000, 0.2, 0.7, 0.5, 3.0, 2.0, 0.1, 0.0, 4.0, 1234),
-            (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 5.0, 9.0, 99),
-        ],
-        "doc_count long, code_ratio double, prose_ratio double, "
-        "embedding_coverage double, native_symbol_density double, "
-        "path_relative_depth_avg double, binary_ratio double, "
-        "kg_edge_density double, symbol_density double, computed_at_ms long",
-    )
-    got = fill_corpus_features(stats).collect()
-    assert got[0]["doc_count_log10"] == pytest.approx(3.0)
-    assert got[0]["kg_edge_density"] == pytest.approx(4.0)  # fallback fires
-    assert got[0]["corpus_epoch"] == 1234
-    assert got[1]["doc_count_log10"] == 0.0  # zero docs -> 0, not -inf
-    assert got[1]["kg_edge_density"] == pytest.approx(5.0)  # real value kept
-
-    from pyspark.sql import functions as F
-
-    q = spark.createDataFrame(
-        [("a b  c",), ("single",), ("",), ("  \t\n ",), ("one\ttwo\nthree four",)],
-        "query string",
-    )
-    toks = [
-        r["t"]
-        for r in q.select(query_token_count_log2(F.col("query")).alias("t")).collect()
-    ]
-    assert toks == pytest.approx([math.log2(3), 0.0, 0.0, 0.0, 2.0])
 
 
 def test_combine_reward_branches(spark):

@@ -1,5 +1,5 @@
 """WAL record codec (wal_entry.cpp) — round-trips, validity gates,
-corruption, stream walk, payload codecs. No Spark session needed (the
+corruption, the StoreBlock payload codec. No Spark session needed (the
 scalar codec is the wire-format surface)."""
 
 from __future__ import annotations
@@ -10,14 +10,9 @@ import zlib
 from yams_spark.streaming.wal_codec import (
     WAL_HEADER_SIZE,
     WAL_MAGIC,
-    decode_delete_block,
     decode_store_block,
-    decode_update_reference,
     decode_wal_entry,
-    decode_wal_stream,
-    encode_delete_block,
     encode_store_block,
-    encode_update_reference,
     encode_wal_entry,
 )
 
@@ -64,78 +59,16 @@ def test_validity_gates():
     ) is None
     # corrupt payload byte -> checksum mismatch
     blob = bytearray(
-        encode_wal_entry("DeleteBlock", 5, payload=encode_delete_block("h1"))
+        encode_wal_entry("StoreBlock", 5, payload=encode_store_block("h1", 1))
     )
     blob[WAL_HEADER_SIZE] ^= 0xFF
     assert decode_wal_entry(bytes(blob)) is None
 
 
-def test_stream_walk_stops_at_torn_tail():
-    entries = [
-        encode_wal_entry("BeginTransaction", 1, 10),
-        encode_wal_entry(
-            "StoreBlock", 2, 10, payload=encode_store_block("h", 10)
-        ),
-        encode_wal_entry("CommitTransaction", 3, 10),
-    ]
-    stream = b"".join(entries)
-    out = decode_wal_stream(stream)
-    assert [e["op"] for e in out] == [
-        "BeginTransaction", "StoreBlock", "CommitTransaction",
-    ]
-    # torn tail: half an entry appended -> walk stops after 3
-    out = decode_wal_stream(stream + entries[0][:20])
-    assert len(out) == 3
-    # corruption mid-stream ends the walk there
-    broken = bytearray(stream)
-    broken[len(entries[0]) + 50] ^= 0x01
-    assert len(decode_wal_stream(bytes(broken))) == 1
-
-
 def test_payload_codecs():
-    assert decode_delete_block(encode_delete_block("short")) == {
-        "hash": "short"
+    assert decode_store_block(encode_store_block("short", 7, 2)) == {
+        "hash": "short", "size": 7, "ref_count": 2,
     }
-    assert decode_update_reference(encode_update_reference("h", -3)) == {
-        "hash": "h", "delta": -3,
-    }
-    assert decode_update_reference(encode_update_reference("h", 7))[
-        "delta"
-    ] == 7
     assert decode_store_block(b"short") is None
-    # struct sizes match the C layouts (40 / 32 / 36)
+    # struct size matches the C layout
     assert len(encode_store_block("h", 1, 1)) == 40
-    assert len(encode_delete_block("h")) == 32
-    assert len(encode_update_reference("h", 1)) == 36
-
-
-def test_metadata_transaction_checkpoint_payloads():
-    from yams_spark.streaming.wal_codec import (
-        decode_checkpoint,
-        decode_transaction,
-        decode_update_metadata,
-        encode_checkpoint,
-        encode_transaction,
-        encode_update_metadata,
-    )
-
-    blob = encode_update_metadata("h" * 64, "lang", "en")
-    assert len(blob) == 32 + 8 + 4 + 2
-    assert decode_update_metadata(blob) == {
-        "hash": "h" * 32, "key": "lang", "value": "en",
-    }
-    assert decode_update_metadata(blob[:-1]) is None
-
-    t = encode_transaction(42, 7)
-    assert len(t) == 16  # u64 + u32 + 4-byte struct tail pad
-    assert decode_transaction(t) == {
-        "transaction_id": 42, "participant_count": 7,
-    }
-    c = encode_checkpoint(99, 1_700_000_000)
-    assert decode_checkpoint(c) == {
-        "sequence_num": 99, "timestamp": 1_700_000_000,
-    }
-    # full entry round-trip through the frame
-    entry = encode_wal_entry("UpdateMetadata", 5, 10, payload=blob)
-    e = decode_wal_entry(entry)
-    assert decode_update_metadata(e["data"])["key"] == "lang"

@@ -1,142 +1,10 @@
-"""Real-model adapters for the pipeline's ``embed_fn`` seam.
+"""Embedding-dimension resolution (``reference src/vector/dim_resolver.cpp``).
 
-``signatures_stage(embed_fn=...)`` accepts any picklable
-``list[str] -> vectors`` callable (operators/signatures.py:146). The
-default stays the deterministic feature-hash stand-in the correctness
-oracles share; this module supplies the production adapters mirroring
-the reference's daemon-backed generator
-(``reference src/vector/embedding_generator.cpp:386-447``):
-
-* ``batched_embed_fn`` — the adaptive sub-batching wrapper: split the
-  Arrow batch into sub-batches, retry a failed sub-batch up to 4
-  attempts, halving the sub-batch size on retryable failures (floor 4,
-  :442-444), optional L2 normalization (``req.normalize``, :387).
-* ``sentence_transformer_embed_fn`` — an import-guarded example binding
-  a public sentence-transformers model into that contract with lazy
-  per-executor model loading (models are not picklable; the returned
-  closure carries only the model NAME and loads/caches on first call
-  inside each worker).
-
-Executors each hold one model instance; inference cost is spread across
-partitions exactly like the stand-in — the seam changes WHAT computes
-the vector, never the Spark plan around it.
+Each rule comes as a scalar function and as the Catalyst column twin the
+driver queries use; the tests pin the two against each other.
 """
 
 from __future__ import annotations
-
-import time
-
-import numpy as np
-
-#: reference defaults (embedding_generator.cpp:392-394,439-444)
-DEFAULT_BATCH_SIZE = 32
-MAX_ATTEMPTS = 4
-MIN_BATCH = 4
-
-
-class EmbeddingError(RuntimeError):
-    """A sub-batch failed all retry attempts."""
-
-
-def batched_embed_fn(
-    model_encode,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    max_attempts: int = MAX_ATTEMPTS,
-    min_batch: int = MIN_BATCH,
-    normalize: bool = True,
-    retryable=(TimeoutError, ConnectionError, MemoryError),
-    sleep_fn=time.sleep,
-):
-    """Wrap a ``list[str] -> vectors`` model call into the embed_fn
-    contract with the reference's adaptive sub-batching
-    (embedding_generator.cpp:398-447): texts are fed in sub-batches of
-    ``batch_size``; a sub-batch hitting a ``retryable`` error is retried
-    up to ``max_attempts`` with exponential backoff (100·2^k ms) and the
-    sub-batch size halved each retry (floor ``min_batch``);
-    non-retryable errors propagate immediately. ``normalize`` L2-unit-
-    normalizes rows (zero vectors pass through). The wrapper is
-    picklable as long as ``model_encode`` is."""
-    if batch_size < 1 or min_batch < 1 or max_attempts < 1:
-        raise ValueError("batch_size, min_batch, max_attempts must be >= 1")
-
-    def embed(texts):
-        out: list[np.ndarray] = []
-        i = 0
-        current = batch_size
-        while i < len(texts):
-            chunk = texts[i : i + current]
-            attempt = 0
-            while True:
-                attempt += 1
-                try:
-                    vecs = np.asarray(model_encode(list(chunk)), dtype=np.float32)
-                    break
-                except retryable as exc:
-                    if attempt >= max_attempts:
-                        raise EmbeddingError(
-                            f"sub-batch of {len(chunk)} failed after "
-                            f"{max_attempts} attempts: {exc}"
-                        ) from exc
-                    sleep_fn(0.1 * (1 << (attempt - 1)))
-                    if current > min_batch:
-                        current = max(min_batch, current // 2)
-                    chunk = texts[i : i + current]
-            if vecs.ndim != 2 or vecs.shape[0] != len(chunk):
-                raise EmbeddingError(
-                    f"model returned shape {vecs.shape} for {len(chunk)} texts"
-                )
-            if normalize:
-                norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-                vecs = np.where(norms > 0, vecs / np.where(norms > 0, norms, 1.0), vecs)
-            out.extend(vecs)
-            i += len(chunk)
-        return out
-
-    return embed
-
-
-_MODEL_CACHE: dict = {}
-
-
-def _load_sentence_transformer(model_name: str):
-    """Per-executor lazy model load (one instance per worker process)."""
-    if model_name not in _MODEL_CACHE:
-        try:
-            from sentence_transformers import SentenceTransformer
-        except ImportError as exc:  # pragma: no cover - env-dependent
-            raise ImportError(
-                "sentence-transformers is not installed; install it (and a "
-                "torch backend) to use sentence_transformer_embed_fn, or "
-                "keep the default feature-hash embedding"
-            ) from exc
-        _MODEL_CACHE[model_name] = SentenceTransformer(model_name)
-    return _MODEL_CACHE[model_name]
-
-
-def sentence_transformer_embed_fn(
-    model_name: str = "sentence-transformers/all-MiniLM-L6-v2",
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    normalize: bool = True,
-):
-    """embed_fn bound to a public sentence-transformers model. Usage::
-
-        cfg = PipelineConfig(embed_fn=sentence_transformer_embed_fn())
-        run_pipeline(spark, pages, cfg)
-
-    The closure ships only the model name; each executor loads and
-    caches its own instance on first batch. Import of the library is
-    deferred to the worker, so the driver needs nothing installed."""
-
-    def encode(texts, _name=model_name):
-        model = _load_sentence_transformer(_name)
-        return model.encode(list(texts), batch_size=batch_size, convert_to_numpy=True)
-
-    return batched_embed_fn(encode, batch_size=batch_size, normalize=normalize)
-
-
-# ---------------------------------------------------------------------------
-# Embedding-dimension resolution (src/vector/dim_resolver.cpp)
-# ---------------------------------------------------------------------------
 
 #: dim_resolver.cpp:21-43 — substring table in the reference's check
 #: order (the first match wins: a name containing several markers

@@ -1,202 +1,20 @@
-"""Binary manifest codec + validation — the reference's on-disk chunk
-manifest format (``src/manifest/manifest_manager.cpp``).
+"""Manifest validation — the reference's chunk-manifest rules
+(``src/manifest/manifest_manager.cpp``) over manifest rows.
 
-The engine's manifests are parquet rows (operators/retrieve.py
-``build_manifest``); this codec reads/writes the reference's binary
-form for parity:
-
-* serialize (:279-360): ``YAMS`` magic, u32 version, length-prefixed
-  fileHash, u64 fileSize, length-prefixed originalName and mimeType,
-  u32 chunk count (capped at ``maxChunksPerManifest``, default 1M —
-  manifest_manager.h:175), then per chunk the length-prefixed hash,
-  u64 offset, u32 size, u32 flags. Little-endian throughout; the
-  in-memory ``checksum`` field is NOT part of the wire format.
-* deserialize (:89-162): canonical u32-flag read with a legacy
-  u64-flag dual-read fallback; trailing bytes are corruption; the
-  parsed manifest must pass ``Manifest::isValid``.
-* isValid (manifest_manager.h:58-105): 64-char hashes
-  (HASH_STRING_SIZE, types.h:279), non-empty chunks, positive sizes.
-* validateManifest (:438-486): isValid + version ceiling + strictly
-  sequential chunk offsets + total-size equality + the optional
-  checksum (:705-730 — the zlib CRC over fileHash, str(fileSize) and
-  each chunk's hash/str(offset)/str(size) concatenated).
-
-``validate_manifest_col`` expresses the same rules as one Catalyst
-predicate over manifest ROWS (chunks as ``array<struct>``) using an
-``F.aggregate`` fold for the sequential-offset walk — the shape a
-100 TB store audit scans.
+``validate_manifest_col`` expresses validateManifest (:438-486) as one
+Catalyst predicate over manifest ROWS (chunks as ``array<struct>``):
+isValid's 64-char hashes (HASH_STRING_SIZE, types.h:279), non-empty
+chunks and positive sizes (manifest_manager.h:58-105), the version
+ceiling, strictly sequential chunk offsets (an ``F.aggregate`` fold)
+and total-size equality — the shape a 100 TB store audit scans.
 """
 
 from __future__ import annotations
 
-import struct
-import zlib
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = [
-    "serialize_manifest",
-    "deserialize_manifest",
-    "manifest_is_valid",
-    "validate_manifest",
-    "manifest_checksum",
-    "validate_manifest_col",
-    "MAX_CHUNKS_PER_MANIFEST",
-]
-
-MAX_CHUNKS_PER_MANIFEST = 1_000_000
 _HASH_STRING_SIZE = 64
-
-
-def _pstr(s: str) -> bytes:
-    raw = s.encode("utf-8")
-    return struct.pack("<I", len(raw)) + raw
-
-
-def serialize_manifest(
-    manifest: dict, max_chunks: int = MAX_CHUNKS_PER_MANIFEST
-) -> bytes:
-    chunks = manifest.get("chunks", [])
-    if len(chunks) > max_chunks:
-        raise ValueError("manifest: too many chunks")
-    out = bytearray(b"YAMS")
-    out += struct.pack("<I", manifest.get("version", 1))
-    out += _pstr(manifest["file_hash"])
-    out += struct.pack("<Q", manifest["file_size"])
-    out += _pstr(manifest.get("original_name", ""))
-    out += _pstr(manifest.get("mime_type", ""))
-    out += struct.pack("<I", len(chunks))
-    for c in chunks:
-        out += _pstr(c["hash"])
-        out += struct.pack("<QII", c["offset"], c["size"],
-                           c.get("flags", 0))
-    return bytes(out)
-
-
-def _read_str(data: bytes, off: int) -> tuple[str, int] | None:
-    if off + 4 > len(data):
-        return None
-    (n,) = struct.unpack_from("<I", data, off)
-    off += 4
-    if off + n > len(data):
-        return None
-    return data[off : off + n].decode("utf-8", "replace"), off + n
-
-
-def _deser(
-    data: bytes, max_chunks: int, legacy_flags: bool
-) -> dict | None:
-    if len(data) < 4 or data[:4] != b"YAMS":
-        return None
-    off = 4
-    if off + 4 > len(data):
-        return None
-    (version,) = struct.unpack_from("<I", data, off)
-    off += 4
-    r = _read_str(data, off)
-    if r is None:
-        return None
-    file_hash, off = r
-    if off + 8 > len(data):
-        return None
-    (file_size,) = struct.unpack_from("<Q", data, off)
-    off += 8
-    r = _read_str(data, off)
-    if r is None:
-        return None
-    name, off = r
-    r = _read_str(data, off)
-    if r is None:
-        return None
-    mime, off = r
-    if off + 4 > len(data):
-        return None
-    (n_chunks,) = struct.unpack_from("<I", data, off)
-    off += 4
-    if n_chunks > max_chunks:
-        return None
-    chunks = []
-    for _ in range(n_chunks):
-        r = _read_str(data, off)
-        if r is None:
-            return None
-        h, off = r
-        tail = "<QIQ" if legacy_flags else "<QII"
-        need = struct.calcsize(tail)
-        if off + need > len(data):
-            return None
-        offset, size, flags = struct.unpack_from(tail, data, off)
-        off += need
-        if legacy_flags and flags > 0xFFFFFFFF:
-            return None
-        chunks.append(
-            {"hash": h, "offset": offset, "size": size,
-             "flags": int(flags)}
-        )
-    if off != len(data):
-        return None
-    m = {
-        "version": version, "file_hash": file_hash,
-        "file_size": file_size, "original_name": name,
-        "mime_type": mime, "chunks": chunks,
-    }
-    if not manifest_is_valid(m):
-        return None
-    return m
-
-
-def deserialize_manifest(
-    data: bytes, max_chunks: int = MAX_CHUNKS_PER_MANIFEST
-) -> dict | None:
-    """Canonical u32-flag read, then the legacy u64 dual-read
-    (:150-162); None = CorruptedData/ManifestInvalid."""
-    m = _deser(data, max_chunks, legacy_flags=False)
-    if m is not None:
-        return m
-    return _deser(data, max_chunks, legacy_flags=True)
-
-
-def manifest_is_valid(m: dict) -> bool:
-    """Manifest::isValid (manifest_manager.h:100-105)."""
-    if len(m.get("file_hash", "")) != _HASH_STRING_SIZE:
-        return False
-    chunks = m.get("chunks", [])
-    if not chunks or m.get("file_size", 0) <= 0:
-        return False
-    return all(
-        len(c["hash"]) == _HASH_STRING_SIZE and c["size"] > 0
-        for c in chunks
-    )
-
-
-def manifest_checksum(m: dict) -> int:
-    """calculateChecksum (:705-730) — the zlib CRC over the essential
-    fields' string concatenation."""
-    parts = [m["file_hash"], str(m["file_size"])]
-    for c in m["chunks"]:
-        parts.extend((c["hash"], str(c["offset"]), str(c["size"])))
-    return zlib.crc32("".join(parts).encode()) & 0xFFFFFFFF
-
-
-def validate_manifest(
-    m: dict, current_version: int = 1, expected_checksum: int = 0
-) -> bool:
-    """validateManifest (:438-486)."""
-    if not manifest_is_valid(m):
-        return False
-    if m.get("version", 1) > current_version:
-        return False
-    expected = 0
-    for c in m["chunks"]:
-        if c["offset"] != expected:
-            return False
-        expected += c["size"]
-    if expected != m["file_size"]:
-        return False
-    if expected_checksum != 0 and manifest_checksum(m) != expected_checksum:
-        return False
-    return True
 
 
 def validate_manifest_col(

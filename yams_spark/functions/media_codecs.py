@@ -94,14 +94,6 @@ def encode_ppm(img: np.ndarray) -> bytes:
     return b"P5\n%d %d\n255\n" % (w, h) + img.tobytes()
 
 
-def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize (index-map gather — pure numpy)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 def image_features(img: np.ndarray, bins: int = IMAGE_FEATURE_BINS) -> np.ndarray:
     """Per-channel mean + std (scaled to [0,1]) followed by a per-channel
     ``bins``-bucket normalized histogram; grayscale is treated as one

@@ -6,9 +6,8 @@ numpy/stdlib — the audio tier behind ``media_codecs.decode_features``
 What is EXACT per the public spec:
 
 * Frame header parsing (sync/version/layer/bitrate/samplerate/padding/
-  mode), frame sizing (Layer I: (12·br/sr + pad)·4; II/III: 144·br/sr +
-  pad), and whole-stream metadata (frame count, duration) — for ALL
-  layers including III.
+  mode) and frame sizing (Layer I: (12·br/sr + pad)·4; II/III:
+  144·br/sr + pad) — for ALL layers including III.
 * Layer I decode: 4-bit allocations (nb = alloc+1), 6-bit scalefactors,
   12 samples/subband, requantization s'' = (2^nb/(2^nb−1))·(s''' +
   2^(1−nb)) with s''' = code·2^(1−nb) − 1 (§2.4.3.3).
@@ -27,8 +26,7 @@ the encoder's analysis and the decoder's synthesis — the matched pair
 round-trips band-limited audio at high SNR (pytest asserts it), and
 decoding third-party MP2 streams stays structurally correct with a
 small window-ripple error. Layer III (hybrid filterbank + Huffman)
-remains the strict decode boundary — header/duration metadata IS parsed
-for it (see COVERAGE.md).
+remains the strict decode boundary (see COVERAGE.md).
 """
 
 from __future__ import annotations
@@ -45,7 +43,6 @@ BITRATES_KBPS = {
     3: [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320],
 }
 SAMPLE_RATES = [44100, 48000, 32000]
-SAMPLES_PER_FRAME = {1: 384, 2: 1152, 3: 1152}
 
 
 class MpegAudioError(ValueError):
@@ -92,43 +89,6 @@ def parse_frame_header(b: bytes, off: int = 0) -> FrameHeader:
     else:
         nbytes = 144 * bitrate * 1000 // sr + padding
     return FrameHeader(layer, bitrate, sr, padding, mode, crc, nbytes)
-
-
-def stream_metadata(payload: bytes) -> dict:
-    """Whole-stream walk (ALL layers incl. III): frame count, duration,
-    layer/mode/rates — the metadata tier a 100-TB ingest needs even when
-    sample decode is out of scope for the format."""
-    off = 0
-    # tolerate an ID3v2 prefix
-    if payload[:3] == b"ID3" and len(payload) >= 10:
-        size = 0
-        for i in range(6, 10):
-            size = (size << 7) | (payload[i] & 0x7F)
-        off = 10 + size
-    n_frames = 0
-    total_samples = 0
-    first: FrameHeader | None = None
-    while off + 4 <= len(payload):
-        try:
-            fh = parse_frame_header(payload, off)
-        except MpegAudioError:
-            off += 1  # resync
-            continue
-        if first is None:
-            first = fh
-        n_frames += 1
-        total_samples += SAMPLES_PER_FRAME[fh.layer]
-        off += fh.frame_bytes
-    if first is None:
-        raise MpegAudioError("no MPEG audio frames found")
-    return {
-        "layer": first.layer,
-        "sample_rate": first.sample_rate,
-        "n_channels": first.n_channels,
-        "bitrate_kbps": first.bitrate_kbps,
-        "n_frames": n_frames,
-        "duration_ms": int(round(total_samples * 1000 / first.sample_rate)),
-    }
 
 
 class _BitReader:
@@ -544,8 +504,7 @@ def decode_mpeg_audio(payload: bytes) -> tuple[np.ndarray, int]:
 
     Layers I and II decode for real; a Layer III stream raises
     NotImplementedError (the documented strict boundary — its hybrid
-    MDCT filterbank + Huffman tables are out of scope; header/duration
-    metadata for it comes from ``stream_metadata``)."""
+    MDCT filterbank + Huffman tables are out of scope)."""
     off = 0
     if payload[:3] == b"ID3" and len(payload) >= 10:
         size = 0
@@ -563,8 +522,7 @@ def decode_mpeg_audio(payload: bytes) -> tuple[np.ndarray, int]:
         if fh.layer == 3:
             raise NotImplementedError(
                 "MPEG-1 Layer III sample decode is the documented strict "
-                "boundary (COVERAGE.md); use stream_metadata for its "
-                "header/duration tier"
+                "boundary (COVERAGE.md)"
             )
         if off + fh.frame_bytes > len(payload):
             break

@@ -1,6 +1,6 @@
 """Plain-text extraction tier: encoding detection, UTF-16/Latin-1 →
 UTF-8 conversion, binary/parseable gates, the reference's tiny
-stopword language detector, and per-type text post-processing.
+stopword language detector.
 
 Reference:
 
@@ -25,20 +25,17 @@ Reference:
   >30% non-printable (integer percent) over the first 8192 bytes.
   ``isParseableText`` (:259-297): UTF-8 walk over the first 8192
   bytes where a sequence truncated AT the check boundary counts as
-  valid. ``processTextByType`` (:169-231): line count (unterminated
-  last line counts), the extension→format map, and whitespace
-  normalization (collapse runs to one space, trim one trailing)
-  unless preserving or ``.txt``.
+  valid.
 
 The byte walks are inherently sequential per row; the Spark surface is
 an Arrow-batched pandas UDF over the binary column (the media-codec
-seam), while ``process_text_by_type`` is pure Catalyst.
+seam).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -50,7 +47,6 @@ __all__ = [
     "detect_language_simple",
     "extract_from_buffer",
     "extract_plain_text_col",
-    "process_text_by_type",
     "LANGUAGE_STOPWORDS",
 ]
 
@@ -63,16 +59,6 @@ LANGUAGE_STOPWORDS = (
     ("fr", ("le", "de", "un", "une", "et", "est", "pour", "dans",
             "que", "avec")),
 )
-
-#: plain_text_extractor.cpp:186-202 — extension → format metadata.
-FORMAT_BY_EXTENSION = {
-    ".md": "markdown",
-    ".json": "json",
-    ".xml": "xml", ".html": "xml", ".htm": "xml",
-    ".csv": "csv",
-    ".cpp": "source_code", ".h": "source_code", ".hpp": "source_code",
-    ".py": "source_code", ".js": "source_code", ".java": "source_code",
-}
 
 
 def _valid_utf8_walk(data: bytes, limit: int, truncated_ok: bool) -> bool:
@@ -278,51 +264,3 @@ def extract_plain_text_col(
         return pd.DataFrame(rows)
 
     return _extract(c)
-
-
-def process_text_by_type(
-    df: DataFrame,
-    text_col: str = "text",
-    name_col: str = "name",
-    preserve_formatting: bool = False,
-) -> DataFrame:
-    """processTextByType (plain_text_extractor.cpp:169-231) as pure
-    Catalyst: file_type (lowercased extension), line_count (an
-    unterminated final line counts), format classification, and the
-    collapse-whitespace normalization unless preserving or ``.txt``."""
-    # std::filesystem::path::extension semantics: last-dot suffix of the
-    # filename, but dotfiles (".hidden") and "."/".." have none.
-    ext = F.lower(
-        F.regexp_extract(F.col(name_col), r"(?<=[^\\/])(\.[^.\\/]+)$", 1)
-    )
-    t = F.col(text_col)
-    nl = F.length(t) - F.length(F.regexp_replace(t, "\n", ""))
-    line_count = F.when(F.length(t) == 0, nl).otherwise(
-        nl + F.when(F.substring(t, -1, 1) != "\n", F.lit(1)).otherwise(F.lit(0))
-    )
-    fmt = F.when(F.lit(False), F.lit(""))
-    for e, name in FORMAT_BY_EXTENSION.items():
-        fmt = fmt.when(ext == e, F.lit(name))
-    fmt = fmt.otherwise(F.lit(None).cast("string"))
-    # :206-229 — collapse every whitespace run (C isspace: space \t \n
-    # \v \f \r) to one space, drop one trailing space.
-    normalized = F.regexp_replace(t, "[ \\t\\n\\x0b\\f\\r]+", " ")
-    normalized = F.regexp_replace(normalized, " $", "")
-    out_text = (
-        t
-        if preserve_formatting
-        else F.when(ext == ".txt", t).otherwise(normalized)
-    )
-    return (
-        df.withColumn("file_type", ext)
-        .withColumn("line_count", line_count.cast("long"))
-        .withColumn("format", fmt)
-        .withColumn(
-            "programming_language",
-            F.when(
-                fmt == "source_code",
-                ext.substr(F.lit(2), F.length(ext)),
-            ).otherwise(F.lit(None).cast("string")),
-        )
-        .withColumn(text_col, out_text)
-    )

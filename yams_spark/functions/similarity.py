@@ -9,7 +9,6 @@
   required by the north star; the reference has SymSpell edit distance,
   src/search/symspell_search.cpp:25-29, which bounds distance ≤2 — our
   full DP is a superset used for pair features).
-* ``hamming64`` — bit distance between 64-bit SimHash signatures.
 """
 
 from __future__ import annotations
@@ -119,14 +118,3 @@ def jaro_winkler(a: str, b: str, prefix_scale: float = 0.1, max_prefix: int = 4)
             break
         prefix += 1
     return base + prefix * prefix_scale * (1.0 - base)
-
-
-def hamming64(x: int, y: int) -> int:
-    return int(bin((x ^ y) & 0xFFFFFFFFFFFFFFFF).count("1"))
-
-
-def hamming64_array(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Vectorized 64-bit Hamming distance over int64/uint64 arrays."""
-    z = (x.astype(np.uint64) ^ y.astype(np.uint64)).view(np.uint8)
-    return np.unpackbits(z.reshape(len(x), 8), axis=1).sum(axis=1).astype(np.int32)
-

@@ -108,10 +108,6 @@ def minhash_signature_from_hashes(sh: np.ndarray) -> np.ndarray:
     return permuted.min(axis=0)
 
 
-def minhash_signature(tokens: list[str], k: int = SHINGLE_SIZE) -> np.ndarray:
-    return minhash_signature_from_hashes(kgram_hashes(hash_tokens(tokens), k))
-
-
 def minhash_band_keys(sig: np.ndarray) -> list[str]:
     """LSH band keys: hash of each 4-row band, prefixed by band index."""
     raw = sig.tobytes()
@@ -138,15 +134,6 @@ def simhash64_from_hashes(vals: np.ndarray, counts: np.ndarray) -> int:
     if out >= 1 << 63:
         out -= 1 << 64
     return out
-
-
-def simhash64(tokens: list[str]) -> int:
-    """SimHash over the token multiset (public API; pipeline uses
-    simhash64_from_hashes on shingle hashes)."""
-    if not tokens:
-        return 0
-    vals, counts = np.unique(hash_tokens(tokens), return_counts=True)
-    return simhash64_from_hashes(vals, counts)
 
 
 def simhash_band_keys(sim: int, bands: int = 4) -> list[str]:

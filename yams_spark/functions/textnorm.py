@@ -34,11 +34,6 @@ def normalize_text_for_tokens(value: str) -> str:
     return b" ".join(raw.translate(_NORM_TABLE).split()).decode("ascii")
 
 
-def tokenize(text: str) -> list[str]:
-    """istream-extraction token split (dedupe.cpp:70-79): whitespace-delimited."""
-    return text.split()
-
-
 def token_set(text: str) -> frozenset[str]:
     """dedupe.cpp:83-91."""
     return frozenset(text.split())
@@ -57,15 +52,6 @@ def jaccard_overlap(lhs: str, rhs: str) -> float:
     return intersection / union
 
 
-def jaccard_token_sets(lt: frozenset[str], rt: frozenset[str]) -> float:
-    """Same as jaccard_overlap but over pre-built token sets (hot path)."""
-    if not lt or not rt:
-        return 0.0
-    intersection = len(lt & rt)
-    union = len(lt) + len(rt) - intersection
-    return intersection / union if union else 0.0
-
-
 _TOKENIZE_LOWER_RE = re.compile(r"[0-9a-z]+")
 
 
@@ -74,31 +60,8 @@ def tokenize_lower(text: str) -> list[str]:
     return _TOKENIZE_LOWER_RE.findall(text.lower())
 
 
-def url_path_tokens(url: str) -> list[str]:
-    """Tokens of a url for the 'path overlap' feature: the reference applies
-    normalizeTextForTokens to the document filePath (dedupe.cpp:128); our
-    analog normalizes the full url string the same way."""
-    return normalize_text_for_tokens(url).split()
-
-
-def normalize_title(title: str, max_len: int = 120) -> str:
-    """Title normalization (src/extraction/title_util.cpp:13-80): trim,
-    collapse internal whitespace, cap at ``max_len`` chars."""
-    collapsed = " ".join(title.split())
-    return collapsed[:max_len]
-
-
 #: BPE-style pre-tokenizer pattern (the GPT-2 pre-tokenization shape,
 #: simplified to drop the trailing-whitespace lookahead so it runs
 #: identically under Java regex and RE2): contraction suffixes, optional-
 #: space letter runs, digit runs, punctuation runs, whitespace runs.
 BPE_TOKEN_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+"
-
-_BPE_RE = re.compile(BPE_TOKEN_PATTERN)
-
-
-def bpe_tokens(text: str) -> list[str]:
-    """Non-whitespace BPE-style pre-tokens of ``text`` (token counting for
-    training-data budgeting; whitespace runs are tokenizer glue, not
-    tokens)."""
-    return [t for t in _BPE_RE.findall(text) if t.strip() != ""]

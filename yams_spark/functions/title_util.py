@@ -17,9 +17,8 @@ Reference: ``src/extraction/title_util.cpp`` and the ingest cascade in
 * the file name as the final fallback.
 
 Every candidate passes ``normalizeTitleCandidate`` (:70-80): trim,
-collapse whitespace, 120-byte cap (``functions/textnorm.normalize_title``
-is the shared twin). The GLiNER ML title path is the async model
-boundary (same stance as the embed adapters).
+collapse whitespace, 120-byte cap. The GLiNER ML title path is the
+async model boundary (same stance as the ``embed_fn`` seam).
 
 ``detect_document_sections`` (:180-355) is the language-agnostic
 structural splitter: a 200-line/16384-byte scan window, section

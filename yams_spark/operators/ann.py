@@ -414,17 +414,3 @@ def minhash_estimate_pairs(
         .where(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-
-
-def lsh_candidate_pairs(signatures: DataFrame, band_col: str = "minhash_bands") -> DataFrame:
-    """LSH-bucketed candidate pairs for the >250k regime: explode band keys,
-    self-join within band (the scale path used by the ER blocking stage)."""
-    b = signatures.select("url", F.explode(band_col).alias("band"))
-    left = b.select("band", F.col("url").alias("url_a"))
-    right = b.select("band", F.col("url").alias("url_b"))
-    return (
-        left.join(right, "band")
-        .where(F.col("url_a") < F.col("url_b"))
-        .select("url_a", "url_b")
-        .dropDuplicates(["url_a", "url_b"])
-    )

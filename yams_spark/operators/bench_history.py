@@ -1,153 +1,6 @@
-"""Benchmark history store: append-only quality/latency run records.
-
-Replica of ``reference src/search/benchmark_history_store.cpp`` /
-``include/yams/search/benchmark_history_store.h``: each row is one
-internal-benchmark run (mrr / recall@k / precision@k, query counts,
-latency stats, tuning state + params) stamped with a config hash and
-optional lexical/topology epochs. The file is a JSON array; appends
-rewrite it via temp-file + atomic rename so a crashed writer cannot
-leave a half-written row visible (.cpp:92-117); a corrupt or non-array
-file degrades to a fresh array with a warning (.cpp:66-89); reads
-return the newest ``limit`` rows, skipping malformed entries
-(.cpp:133-152). Deliberately file-based — zero schema migration, <10k
-rows expected (.h:22-28).
-
-``trend`` is the Spark-era addition the history exists for: compare the
-newest row's metric against the trailing window and flag regressions
-beyond a tolerance — the check a bench CI gate runs after appending.
-"""
+"""Benchmark latency statistics (reference ``src/search/internal_benchmark.cpp``)."""
 
 from __future__ import annotations
-
-import json
-import os
-from dataclasses import dataclass, field
-
-
-@dataclass
-class BenchmarkRow:
-    mrr: float = 0.0
-    recall_at_k: float = 0.0
-    precision_at_k: float = 0.0
-    k: int = 10
-    queries_run: int = 0
-    queries_succeeded: int = 0
-    queries_failed: int = 0
-    total_time_ms: int = 0
-    timestamp: str = ""
-    latency: dict = field(default_factory=dict)  # mean/median/p95/p99/max/min _ms
-    tuning_state: str | None = None
-    tuned_params: dict | None = None
-    config_hash: str = ""
-    lexical_epoch: int | None = None
-    topology_epoch: int | None = None
-
-    def to_json(self) -> dict:
-        j = {
-            "mrr": self.mrr,
-            "recall_at_k": self.recall_at_k,
-            "precision_at_k": self.precision_at_k,
-            "k": self.k,
-            "queries_run": self.queries_run,
-            "queries_succeeded": self.queries_succeeded,
-            "queries_failed": self.queries_failed,
-            "total_time_ms": self.total_time_ms,
-            "timestamp": self.timestamp,
-            "latency": dict(self.latency),
-            "config_hash": self.config_hash,
-        }
-        if self.tuning_state is not None:
-            j["tuning_state"] = self.tuning_state
-        if self.tuned_params is not None:
-            j["tuned_params"] = self.tuned_params
-        if self.lexical_epoch is not None:
-            j["lexical_epoch"] = self.lexical_epoch
-        if self.topology_epoch is not None:
-            j["topology_epoch"] = self.topology_epoch
-        return j
-
-    @classmethod
-    def from_json(cls, j: dict) -> "BenchmarkRow":
-        return cls(
-            mrr=float(j.get("mrr", 0.0)),
-            recall_at_k=float(j.get("recall_at_k", 0.0)),
-            precision_at_k=float(j.get("precision_at_k", 0.0)),
-            k=int(j.get("k", 10)),
-            queries_run=int(j.get("queries_run", 0)),
-            queries_succeeded=int(j.get("queries_succeeded", 0)),
-            queries_failed=int(j.get("queries_failed", 0)),
-            total_time_ms=int(j.get("total_time_ms", 0)),
-            timestamp=j.get("timestamp", ""),
-            latency=dict(j.get("latency", {})),
-            tuning_state=j.get("tuning_state"),
-            tuned_params=j.get("tuned_params"),
-            config_hash=j.get("config_hash", ""),
-            lexical_epoch=j.get("lexical_epoch"),
-            topology_epoch=j.get("topology_epoch"),
-        )
-
-
-class BenchmarkHistoryStore:
-    def __init__(self, path: str):
-        self.path = path
-
-    def _load_array(self) -> list:
-        if not os.path.exists(self.path):
-            return []
-        try:
-            with open(self.path, encoding="utf-8") as f:
-                j = json.load(f)
-            return j if isinstance(j, list) else []
-        except (ValueError, OSError):
-            return []  # corrupt -> fresh array (.cpp:80-88)
-
-    def append(self, row: BenchmarkRow) -> None:
-        arr = self._load_array()
-        arr.append(row.to_json())
-        parent = os.path.dirname(self.path)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(json.dumps(arr, indent=2))
-        os.replace(tmp, self.path)  # atomic rename (.cpp:92-117)
-
-    def read(self, limit: int = 100) -> list[BenchmarkRow]:
-        arr = self._load_array()
-        out = []
-        for j in arr[-limit:]:
-            try:
-                out.append(BenchmarkRow.from_json(j))
-            except (TypeError, ValueError):
-                continue
-        return out
-
-    def clear(self) -> None:
-        if os.path.exists(self.path):
-            os.remove(self.path)
-
-    def trend(
-        self, metric: str = "mrr", window: int = 5, tolerance: float = 0.05
-    ) -> dict:
-        """{'latest', 'baseline', 'delta', 'regressed'}: newest row's
-        ``metric`` vs the mean of the preceding ``window`` rows;
-        regressed when it fell more than ``tolerance`` below baseline.
-        Empty/short history -> regressed False, baseline None."""
-        rows = self.read(limit=window + 1)
-        if not rows:
-            return {"latest": None, "baseline": None, "delta": None, "regressed": False}
-        latest = float(getattr(rows[-1], metric))
-        prior = rows[:-1]
-        if not prior:
-            return {"latest": latest, "baseline": None, "delta": None, "regressed": False}
-        baseline = sum(float(getattr(r, metric)) for r in prior) / len(prior)
-        delta = latest - baseline
-        return {
-            "latest": latest,
-            "baseline": baseline,
-            "delta": delta,
-            "regressed": delta < -tolerance,
-        }
 
 
 def latency_stats(df, value_col: str = "latency_ms", group_cols=("bench",)):

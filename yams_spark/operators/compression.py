@@ -433,68 +433,15 @@ def estimate_compression_ratio_col(
 
 
 # ---------------------------------------------------------------------------
-# Wire header (compression_header.cpp / compression_header.h)
+# Header validation (compression_header.cpp / compression_header.h)
 # ---------------------------------------------------------------------------
 
-#: compression_header.h:33-52 — #pragma pack(1), 64 bytes little-endian.
+#: compression_header.h:33-52
 HEADER_MAGIC = 0x4B524E43  # "KRNC"
 HEADER_VERSION = 1
-HEADER_SIZE = 64
-_HEADER_FMT = "<IBBBBIQQIIQQ12s"
 
 _ALGO_NAMES = {0: "None", 1: "Zstandard", 2: "LZMA"}
 _ALGO_IDS = {v: k for k, v in _ALGO_NAMES.items()}
-
-
-def pack_compression_header(
-    algorithm: str = "None",
-    level: int = 0,
-    uncompressed_size: int = 0,
-    compressed_size: int = 0,
-    uncompressed_crc32: int = 0,
-    compressed_crc32: int = 0,
-    timestamp: int = 0,
-    dictionary_id: int = 0,
-    flags: int = 0,
-    magic: int = HEADER_MAGIC,
-    version: int = HEADER_VERSION,
-) -> bytes:
-    """serialize() / fromResult() (compression_header.cpp:46-108):
-    the packed little-endian 64-byte wire header."""
-    import struct as _struct
-
-    return _struct.pack(
-        _HEADER_FMT, magic, version, _ALGO_IDS.get(algorithm, 0), level,
-        flags, 0, uncompressed_size, compressed_size, uncompressed_crc32,
-        compressed_crc32, timestamp, dictionary_id, b"\0" * 12,
-    )
-
-
-def parse_compression_header(data: bytes) -> dict:
-    """parse() (compression_header.cpp:25-44): raises ValueError on a
-    short buffer or a header that fails validate()."""
-    import struct as _struct
-
-    if len(data) < HEADER_SIZE:
-        raise ValueError(
-            f"Insufficient data for header: {len(data)} bytes, "
-            f"need {HEADER_SIZE}"
-        )
-    (
-        magic, version, algorithm, level, flags, _res1, usize, csize,
-        ucrc, ccrc, ts, dict_id, _res2,
-    ) = _struct.unpack(_HEADER_FMT, data[:HEADER_SIZE])
-    header = {
-        "magic": magic, "version": version,
-        "algorithm": _ALGO_NAMES.get(algorithm, str(algorithm)),
-        "algorithm_id": algorithm, "level": level, "flags": flags,
-        "uncompressed_size": usize, "compressed_size": csize,
-        "uncompressed_crc32": ucrc, "compressed_crc32": ccrc,
-        "timestamp": ts, "dictionary_id": dict_id,
-    }
-    if not validate_compression_header_py(header):
-        raise ValueError("Invalid compression header")
-    return header
 
 
 def validate_compression_header_py(h: dict) -> bool:

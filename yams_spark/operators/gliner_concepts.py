@@ -219,29 +219,6 @@ GREEK_EXPANSIONS = (
     ("ν", " nu "), ("Ν", " nu "),
 )
 
-#: surfaceVariantKindForEntityType (:235-254)
-_BIOMEDICAL_TYPES = frozenset(
-    {"protein", "gene", "cell", "disease", "drug", "chemical",
-     "pathway", "biological_process", "biomarker", "anatomy",
-     "organism"}
-)
-_CODE_SYMBOL_TYPES = frozenset(
-    {"class", "function", "method", "namespace", "symbol", "module",
-     "field"}
-)
-
-
-def surface_variant_kind(entity_type: str) -> str:
-    """surfaceVariantKindForEntityType (:235-254) over the canonical
-    type."""
-    t = canonicalize_entity_type_py(entity_type)
-    if t in _BIOMEDICAL_TYPES:
-        return "biomedical"
-    if t in _CODE_SYMBOL_TYPES:
-        return "code_symbol"
-    return "general"
-
-
 def expand_common_greek_letters(s: str) -> str:
     """expandCommonGreekLetters (:28-54)."""
     for needle, repl in GREEK_EXPANSIONS:

@@ -10,8 +10,8 @@ FTS-style snippet generation.
   cascade is the difference between a regex over every byte and a regex
   over the (typically tiny) literal-hit subset — and both phases stay in
   whole-stage codegen, no Python.
-* ``grep_lines`` — per-line matches with line numbers (the CLI surface
-  shape: file/line/text), via posexplode over split lines.
+* ``grep_lines_context`` — per-line matches with line numbers and
+  -B/-A/-C context (the CLI surface shape: file/line/text).
 * ``snippet_expr`` / ``with_snippets`` — the FTS5
   ``snippet(documents_fts, 0, '<b>', '</b>', '...', 16)`` analog
   (``reference src/metadata/repository/search_ops.cpp:191``): a 16-token
@@ -131,7 +131,7 @@ def grep_scan(
     ``whole_word`` (-w), ``ignore_case`` (-i), ``files_without_match``
     (-L: ids with zero matches, n_matches = 0 — the prefilter is skipped
     because absence can't be prefiltered), ``path_glob``+``path_col``
-    (include-glob scoping, composable with workspace_scope_filter).
+    (include-glob scoping).
     """
     regex, literal = _effective_pattern(pattern, literal_text, whole_word, ignore_case)
     out = docs
@@ -155,34 +155,6 @@ def grep_scan(
             F.regexp_count(F.col(text_col), F.lit(regex)).alias("n_matches"),
         )
         .where(F.col("n_matches") > 0)
-    )
-
-
-def grep_lines(
-    docs: DataFrame,
-    pattern: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    literal_text: bool = False,
-    whole_word: bool = False,
-    ignore_case: bool = False,
-    invert: bool = False,
-) -> DataFrame:
-    """Line-level grep: (id, line_no, line) for matching lines — the CLI
-    output shape. Same literal cascade before the per-line regex; option
-    flags as in grep_scan plus ``invert`` (grep -v: NON-matching lines —
-    the prefilter is skipped, absence can't be prefiltered)."""
-    regex, literal = _effective_pattern(pattern, literal_text, whole_word, ignore_case)
-    out = docs
-    if not invert:
-        out = _prefiltered(out, literal, text_col, ignore_case)
-    lines = out.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "line"),
-    )
-    hit = F.col("line").rlike(regex)
-    return lines.where(~hit if invert else hit).select(
-        F.col(id_col), (F.col("idx") + 1).alias("line_no"), "line"
     )
 
 

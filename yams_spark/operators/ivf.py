@@ -76,72 +76,6 @@ def ivf_assign(
     )
 
 
-def ivf_topk_multi(
-    assigned: DataFrame,
-    centroids: np.ndarray,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    round_to: int = 5,
-) -> DataFrame:
-    """Batched IVF: top-k per query over each query's nprobe nearest
-    lists. Fully distributed — probe selection is one Arrow pass over the
-    query table (exploded to (query, list_id) rows), candidates come from
-    the equi-join on list_id (partition pruning under a list-partitioned
-    layout), exact cosine inside probed lists, rank window partitioned by
-    query. Returns (query_id, vec_id, cosine, rk)."""
-    from pyspark.sql import Window
-
-    from yams_spark.operators.ann import _pair_cosine
-
-    spark = assigned.sparkSession
-    bc = spark.sparkContext.broadcast(centroids.astype(np.float64))
-    np_probe = max(1, nprobe)
-
-    def probes(iterator):
-        cent = bc.value
-        c2 = np.einsum("ij,ij->i", cent, cent)
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d = c2[None, :] - 2.0 * (q @ cent.T)
-            lists = np.argsort(d, axis=1)[:, :np_probe]
-            out = pdf[[query_id_col, vec_col]].loc[
-                pdf.index.repeat(np_probe)
-            ].reset_index(drop=True)
-            out["list_id"] = lists.reshape(-1).astype(np.int32)
-            yield out
-
-    q_lists = queries.select(
-        F.col(query_id_col).cast("long"), F.col(vec_col)
-    ).mapInPandas(
-        probes, schema=f"{query_id_col} long, {vec_col} array<float>, list_id int"
-    )
-    cand = q_lists.join(
-        assigned.select(
-            "list_id", F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b")
-        ),
-        "list_id",
-    ).select(
-        F.col(query_id_col).alias("id_a"), F.col(vec_col).alias("vec_a"),
-        "id_b", "vec_b",
-    ).where(F.col("id_a") != F.col("id_b")).dropDuplicates(["id_a", "id_b"])
-    scored = _pair_cosine(cand, ("id_a", "id_b"), round_to)
-    w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            F.col("id_a").alias(query_id_col), F.col("id_b").alias(id_col),
-            "cosine", F.col("rk").cast("int"),
-        )
-    )
-
-
 def ivf_topk(
     assigned: DataFrame,
     centroids: np.ndarray,

@@ -9,8 +9,7 @@ video frames (``functions/media_codecs`` + ``jpeg_codec`` /
 ``flac_codec`` / ``mpeg_audio`` / ``mp4_meta``). The remaining strict
 boundaries — MP3 (Layer III) sample decode and inter-frame video codecs
 (avc1/hevc) — either raise ``NotImplementedError`` (strict mode) or
-produce a deterministic fake feature (test mode), while their
-container/header metadata still parses for real. This mirrors the
+produce a deterministic fake feature (test mode). This mirrors the
 reference's plugin extractor boundary
 (src/extraction/external_plugin_extractor.cpp): the engine defines the
 dataflow, the codec is a pluggable worker-side function.
@@ -23,7 +22,6 @@ import hashlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, mime string, "
@@ -110,80 +108,6 @@ def extract_media_features(
         compute,
         schema="media_id string, kind string, mime string, decoded boolean, "
         "feature array<float>, payload_sha256 string, n_bytes long",
-    )
-
-
-def extract_container_metadata(media: DataFrame) -> DataFrame:
-    """(media_id, brand, duration_ms, n_tracks, video_codec, width,
-    height): REAL container/stream metadata parsing — ISO-BMFF box walk
-    for video rows (functions/mp4_meta) and MPEG-audio frame-header walk
-    for audio/mpeg rows (functions/mpeg_audio.stream_metadata; works for
-    every layer incl. III, whose sample decode is the strict boundary;
-    brand='mpeg1-layerN', n_tracks=channels, codec='LN@NNNkbps'). This is
-    the metadata tier the reference's extractor surfaces without decoding
-    samples. Unparseable / uncovered rows yield nulls. One Arrow pass,
-    narrow."""
-
-    def compute(iterator):
-        from yams_spark.functions.mp4_meta import parse_mp4
-        from yams_spark.functions.mpeg_audio import (
-            MpegAudioError,
-            stream_metadata,
-        )
-
-        for pdf in iterator:
-            rows = []
-            for mid, payload, mime in zip(
-                pdf["media_id"], pdf["payload"], pdf["mime"]
-            ):
-                brand = dur = n_tracks = codec = w = h = None
-                if mime == "video/mp4" and payload is not None:
-                    try:
-                        meta = parse_mp4(bytes(payload))
-                        brand = meta["brand"]
-                        dur = meta["duration_ms"]
-                        n_tracks = len(meta["tracks"])
-                        vids = [t for t in meta["tracks"] if t["kind"] == "vide"]
-                        if vids:
-                            codec = vids[0]["codec"]
-                            w, h = vids[0]["width"], vids[0]["height"]
-                    except ValueError:
-                        pass
-                elif mime in ("audio/mpeg", "audio/mp2", "audio/mp3") and payload:
-                    # MPEG audio metadata parses for EVERY layer — incl.
-                    # Layer III, whose sample decode is the strict boundary
-                    try:
-                        md = stream_metadata(bytes(payload))
-                        brand = f"mpeg1-layer{md['layer']}"
-                        dur = md["duration_ms"]
-                        n_tracks = md["n_channels"]
-                        codec = f"L{md['layer']}@{md['bitrate_kbps']}kbps"
-                    except MpegAudioError:
-                        pass
-                rows.append((mid, brand, dur, n_tracks, codec, w, h))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["media_id", "brand", "duration_ms", "n_tracks",
-                             "video_codec", "width", "height"],
-                )
-
-    return media.select("media_id", "payload", "mime").mapInPandas(
-        compute,
-        schema="media_id string, brand string, duration_ms long, "
-        "n_tracks long, video_codec string, width long, height long",
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: (media_id, frame_ts_ms) rows from the
-    duration metadata — the schedule is real; frame decode is the stubbed
-    step."""
-    return media.where(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
     )
 
 

@@ -1,65 +1,14 @@
-"""Inline query-qualifier parsing → DataFrame predicates.
+"""Scan-level filter predicates.
 
-The reference strips inline qualifiers (``name:``, ``ext:``, ``mime:``,
-``lines:``, ``pages:``, ``section:``, ``selector:``) from a query string
-and turns them into filter hints (query_qualifiers.hpp:11-36,216-360); it
-also parses relative/natural time filters ("7d", "yesterday",
-src/cli/time_parser.cpp). Spark recast: parse driver-side, emit Column
-predicates; the query remainder feeds the lexical scorer.
+* ``_glob_to_rlike`` — a shell glob as an anchored regex, for the CLI's
+  and grep's include-glob scoping.
+* ``metadata_query_filter`` — MetadataQuery::matches as one Catalyst
+  predicate.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
-from datetime import datetime, timedelta, timezone
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-_QUALIFIER_RE = re.compile(
-    r"\b(name|ext|mime|lang|source|site|lines|pages|section|selector|before|after):(\"[^\"]*\"|'[^']*'|\S+)"
-)
-
-_REL_TIME_RE = re.compile(r"^(\d+)([smhdw])$")
-_UNIT_SECONDS = {"s": 1, "m": 60, "h": 3600, "d": 86400, "w": 604800}
-
-
-@dataclass
-class ParsedQuery:
-    text: str
-    qualifiers: dict[str, str] = field(default_factory=dict)
-
-
-def parse_qualifiers(query: str) -> ParsedQuery:
-    """Strip ``key:value`` qualifiers; return cleaned text + qualifier map.
-    Values may be quoted; later duplicates win (reference keeps last)."""
-    quals: dict[str, str] = {}
-
-    def strip(m: re.Match[str]) -> str:
-        value = m.group(2)
-        if value and value[0] in "\"'" and value[-1] == value[0]:
-            value = value[1:-1]
-        quals[m.group(1)] = value
-        return " "
-
-    cleaned = _QUALIFIER_RE.sub(strip, query)
-    cleaned = " ".join(cleaned.split())
-    return ParsedQuery(text=cleaned, qualifiers=quals)
-
-
-def parse_time(value: str, now: datetime | None = None) -> datetime:
-    """Relative ("7d", "30m"), natural ("yesterday", "today"), or ISO."""
-    now = now or datetime.now(timezone.utc)
-    v = value.strip().lower()
-    m = _REL_TIME_RE.match(v)
-    if m:
-        return now - timedelta(seconds=int(m.group(1)) * _UNIT_SECONDS[m.group(2)])
-    if v == "yesterday":
-        return (now - timedelta(days=1)).replace(hour=0, minute=0, second=0, microsecond=0)
-    if v == "today":
-        return now.replace(hour=0, minute=0, second=0, microsecond=0)
-    return datetime.fromisoformat(value)
 
 
 def _glob_to_rlike(glob: str) -> str:
@@ -72,57 +21,6 @@ def _glob_to_rlike(glob: str) -> str:
         else:
             out += re.escape(ch)
     return out + "$"
-
-
-def qualifier_predicates(
-    parsed: ParsedQuery,
-    url_col: str = "url",
-    lang_col: str = "lang",
-    ts_col: str = "warc_ts",
-    now: datetime | None = None,
-) -> list[Column]:
-    """Map the qualifier dict to Column predicates over the pages schema."""
-    preds: list[Column] = []
-    q = parsed.qualifiers
-    if "name" in q:
-        preds.append(F.col(url_col).rlike(_glob_to_rlike("*" + q["name"] + "*")))
-    if "ext" in q:
-        preds.append(F.col(url_col).endswith("." + q["ext"].lstrip(".")))
-    if "site" in q:
-        preds.append(F.col(url_col).contains("://" + q["site"]) | F.col(url_col).contains("://www." + q["site"]))
-    if "lang" in q:
-        preds.append(F.col(lang_col) == q["lang"])
-    if "after" in q:
-        preds.append(F.col(ts_col) >= F.lit(parse_time(q["after"], now)))
-    if "before" in q:
-        preds.append(F.col(ts_col) < F.lit(parse_time(q["before"], now)))
-    return preds
-
-
-def apply_qualifiers(df: DataFrame, query: str, **cols) -> tuple[DataFrame, str]:
-    """Filter ``df`` by the inline qualifiers of ``query``; return the
-    filtered frame and the cleaned query text."""
-    parsed = parse_qualifiers(query)
-    for pred in qualifier_predicates(parsed, **cols):
-        df = df.where(pred)
-    return df, parsed.text
-
-
-def workspace_scope_filter(
-    df: DataFrame, prefixes: list[str], path_col: str = "url"
-) -> DataFrame:
-    """Workspace scoping: keep rows whose path/url starts with one of the
-    workspace roots (the reference scopes every list/search/grep call to
-    the active workspace prefix set; empty prefix list = unscoped). A
-    prefix disjunction stays Catalyst-side and pushes down as
-    StringStartsWith into the scan."""
-    if not prefixes:
-        return df
-    pred = None
-    for p in prefixes:
-        c = F.col(path_col).startswith(p)
-        pred = c if pred is None else (pred | c)
-    return df.where(pred)
 
 
 def metadata_query_filter(

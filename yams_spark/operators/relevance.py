@@ -85,15 +85,3 @@ def relevance_metrics(
         )
     )
     return out
-
-
-def mean_relevance_metrics(results: DataFrame, qrels: DataFrame, k: int = 10) -> DataFrame:
-    """One row: (n_queries, mrr, ndcg, map) macro-averaged over queries."""
-    per = relevance_metrics(results, qrels, k)
-    return per.agg(
-        F.count("*").alias("n_queries"),
-        F.avg("mrr").alias("mrr"),
-        F.avg("ndcg").alias("ndcg"),
-        F.avg("map").alias("map"),
-    )
-

@@ -1,17 +1,13 @@
-"""Smart document resolution + query-token salience.
+"""Smart document resolution.
 
-* ``resolve_documents`` — the reference's name-resolution cascade
-  (``reference src/app/services/document_service.cpp:230-300``): exact
-  path → exact basename → path suffix → hash prefix (only when the query
-  looks like one), with ambiguity settled newest-wins (then path asc) —
-  the `yams cat <name>` / `yams get <name>` surface. One broadcast join
-  of the (tiny) query list against the docs table; the strategy is a
-  per-row match level and the winner per query is the minimum level's
-  newest row.
-* ``token_salience`` — query-expansion token weighting
-  (``reference src/search/query_expansion.cpp:16-49``): digit bonus,
-  length tiers, numeric-only and weak-verb tokens excluded from
-  expansion.
+``resolve_documents`` is the reference's name-resolution cascade
+(``reference src/app/services/document_service.cpp:230-300``): exact
+path → exact basename → path suffix → hash prefix (only when the query
+looks like one), with ambiguity settled newest-wins (then path asc) —
+the `yams cat <name>` / `yams get <name>` surface. One broadcast join
+of the (tiny) query list against the docs table; the strategy is a
+per-row match level and the winner per query is the minimum level's
+newest row.
 """
 
 from __future__ import annotations
@@ -21,47 +17,7 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: query_expansion.cpp:22-27
-WEAK_EXPANSION_TOKENS = frozenset(
-    {
-        "show", "shows", "showing", "shown", "demonstrate", "demonstrates",
-        "demonstrated", "indicate", "indicates", "indicated", "suggest",
-        "suggests", "reveals", "revealed",
-    }
-)
-
 _HASHY = re.compile(r"^[0-9a-f]{6,64}$")
-
-
-def token_salience(original: str, normalized: str | None = None) -> float:
-    """tokenFallbackSalience (query_expansion.cpp:32-49)."""
-    normalized = normalized if normalized is not None else original.lower()
-    score = 0.05
-    if any(c.isdigit() for c in original):
-        score += 1.25
-    n = len(normalized)
-    if n >= 10:
-        score += 0.75
-    elif n >= 6:
-        score += 0.35
-    elif n >= 3:
-        score += 0.10
-    return score
-
-
-def expansion_candidates(tokens: list[str]) -> list[tuple[str, float]]:
-    """(token, salience) for expansion-eligible tokens: numeric-only and
-    weak verbs are dropped (query_expansion.cpp:16-28), ordered salience
-    desc then token asc (deterministic)."""
-    out = []
-    seen = set()
-    for t in tokens:
-        n = t.lower()
-        if n in seen or n.isdigit() or n in WEAK_EXPANSION_TOKENS:
-            continue
-        seen.add(n)
-        out.append((n, token_salience(t, n)))
-    return sorted(out, key=lambda x: (-x[1], x[0]))
 
 
 def _pick_best(matched: DataFrame) -> DataFrame:

@@ -11,7 +11,7 @@ Split across the JVM/Python boundary by what each side is good at
 * title/path token-set Jaccard and the SimHash popcount run as codegen'd
   JVM expressions (``array_intersect``/``array_union`` sizes, ``bit_count``)
   — exact-int set sizes divided in double, bit-identical to the Python
-  ``jaccard_token_sets`` the oracle uses, with no strings crossing to
+  ``jaccard_overlap`` the oracle uses, with no strings crossing to
   Python for them;
 * the cosine (whose double-accumulation einsum order is the shared
   pipeline/oracle definition — CLAUDE.md invariant) plus the accepted-only
@@ -60,7 +60,7 @@ def attach_pair_features(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
 
 
 def _jaccard_tokens_expr(a: str, b: str):
-    """JVM token-set Jaccard, bit-equal to textnorm.jaccard_token_sets:
+    """JVM token-set Jaccard, bit-equal to textnorm.jaccard_overlap:
     ``array_intersect``/``array_union`` are set-semantic (dedup) like the
     frozensets, and int-set-size / int-set-size in double is the same IEEE
     division the Python kernel performs. Empty side -> 0.0 (the C++ rule,

@@ -1,5 +1,5 @@
 """Topology input extraction + the Phase V feature composer, and the
-protected relation cover — the last uncovered topology-build surfaces.
+protected relation observation set.
 
 Reference:
 
@@ -40,17 +40,13 @@ Reference:
     ``[α_d·dense | α_e·entity_sig | α_m·minhash_sketch]`` with
     ``α_d = max(0, 1-α_e-α_m)``; every branch a no-op when disabled or
     empty, all-off reproduces the dense-only V0 baseline.
-  - ``featureProjectionFingerprint`` / ``composedCoordinateSpaceIdentity``
-    (:39-87): FNV-1a-64 identity of the composed coordinate space.
 
 * ``src/topology/protected_relation_cover.cpp`` —
   ``protectedRelationConstructionIdentity`` (:13-63): the undirected
   max-score observation set (in-corpus, non-self, optionally
   reciprocal-only, ``score >= minEdgeScore``; TopologyBuildConfig
   defaults reciprocalOnly=true / minEdgeScore=0,
-  topology_artifacts.h:78-83), serialized lhs-asc/rhs-asc into an
-  FNV-1a-64 fingerprint; ``buildProtectedRelationCoverIndex`` (:65-121):
-  fiber table keyed by cluster id with the six validation error cases.
+  topology_artifacts.h:78-83).
 
 Float discipline: the C++ runs float32 with double accumulators for the
 L2 norms. Spark computes in double and casts to float at exactly the
@@ -60,7 +56,7 @@ rounded operation matches float32 arithmetic bit-for-bit whenever the
 inputs are float-representable, which the tests' numpy float32 twins
 assert. Everything per-row is Catalyst higher-order functions; the only
 driver-resident state is the full-dim weight vector (≤ embedding dim
-floats) and the bounded observation gather behind ``max_observations``.
+floats).
 """
 
 from __future__ import annotations
@@ -69,8 +65,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from yams_spark.operators.topo_routing import _FNV_OFFSET, _FNV_PRIME, _MASK64
 
 __all__ = [
     "FeatureComposition",
@@ -84,11 +78,7 @@ __all__ = [
     "entity_type_signatures",
     "compose_features",
     "l2_normalize_col",
-    "feature_projection_fingerprint",
-    "composed_space_identity",
     "protected_relation_observations",
-    "protected_relation_identity",
-    "build_protected_relation_cover",
 ]
 
 #: topology_input_extractor.cpp:92-96 — types uninformative for topical
@@ -529,82 +519,8 @@ def compose_features(
 
 
 # ---------------------------------------------------------------------------
-# Coordinate-space / protected-relation identities (FNV-1a-64)
+# Protected-relation observation set
 # ---------------------------------------------------------------------------
-
-
-def _fmt_f32(v: float) -> str:
-    """ostringstream << float under setprecision(max_digits10=9) —
-    %.9g over the float32 value (:43,76)."""
-    import numpy as np
-
-    return f"{float(np.float32(v)):.9g}"
-
-
-def _fnv_hex(descriptor: str) -> str:
-    """Raw-byte FNV-1a-64 fold (appendFingerprintBytes, :27-32) — unlike
-    the routing session's length-prefixed field folds."""
-    h = _FNV_OFFSET
-    for b in descriptor.encode("utf-8"):
-        h = ((h ^ b) * _FNV_PRIME) & _MASK64
-    return f"{h:016x}"
-
-
-def feature_projection_fingerprint(
-    cfg: FeatureComposition,
-    matryoshka_weights: list[float],
-    entity_axes: list[str],
-) -> str:
-    """featureProjectionFingerprint (:39-65), byte-faithful descriptor."""
-    parts = [
-        "schema=v1",
-        f";entity={int(cfg.enable_entity_fusion)}",
-        f";entity_k={cfg.entity_signature_k}",
-        f";entity_alpha={_fmt_f32(cfg.entity_fusion_alpha)}",
-        f";entity_min_confidence={_fmt_f32(cfg.entity_min_confidence)}",
-        f";matryoshka={int(cfg.enable_matryoshka)}",
-        f";matryoshka_dim={cfg.matryoshka_target_dim}",
-        f";minhash={int(cfg.enable_minhash_sketch)}",
-        f";minhash_dim={cfg.minhash_sketch_dim}",
-        f";minhash_alpha={_fmt_f32(cfg.minhash_alpha)}",
-    ]
-    parts.extend(f";w={_fmt_f32(w)}" for w in matryoshka_weights)
-    parts.extend(f";entity_axis={len(a)}:{a}" for a in entity_axes)
-    return _fnv_hex("".join(parts))
-
-
-def composed_space_identity(
-    raw_identity: str,
-    cfg: FeatureComposition,
-    raw_dim: int,
-    composed_dim: int,
-    matryoshka_weights: list[float],
-    entity_axes: list[str],
-) -> str:
-    """composedCoordinateSpaceIdentity (:67-87): raw identity passes
-    through untouched when empty or when no branch is enabled."""
-    has_composition = (
-        cfg.enable_entity_fusion
-        or cfg.enable_matryoshka
-        or cfg.enable_minhash_sketch
-    )
-    if not raw_identity or not has_composition:
-        return raw_identity
-    fp = feature_projection_fingerprint(cfg, matryoshka_weights, entity_axes)
-    return (
-        f"topology-coordinate:v1;raw={raw_identity};raw_dim={raw_dim}"
-        f";composed_dim={composed_dim}"
-        f";entity={int(cfg.enable_entity_fusion)}"
-        f";entity_k={cfg.entity_signature_k}"
-        f";entity_alpha={_fmt_f32(cfg.entity_fusion_alpha)}"
-        f";entity_min_confidence={_fmt_f32(cfg.entity_min_confidence)}"
-        f";matryoshka={int(cfg.enable_matryoshka)}"
-        f";matryoshka_dim={cfg.matryoshka_target_dim}"
-        f";minhash={int(cfg.enable_minhash_sketch)}"
-        f";minhash_dim={cfg.minhash_sketch_dim}"
-        f";minhash_alpha={_fmt_f32(cfg.minhash_alpha)}"
-        f";projection=fnv1a64:{fp}"
-    )
 
 
 def protected_relation_observations(
@@ -647,110 +563,3 @@ def protected_relation_observations(
         .groupBy("lhs", "rhs")
         .agg(F.max("score").alias("score"))
     )
-
-
-def protected_relation_identity(
-    observations: DataFrame, max_observations: int = 1_000_000
-) -> str:
-    """protectedRelationConstructionIdentity (:42-62): the lhs-asc /
-    rhs-asc descriptor stream through FNV-1a-64. The byte stream is
-    inherently sequential, so the (already deduped) observation table is
-    gathered behind an explicit gate — the reference computes this
-    identity per build region, never over an unbounded corpus."""
-    rows = (
-        observations.orderBy(F.col("lhs").asc(), F.col("rhs").asc())
-        .limit(max_observations + 1)
-        .collect()
-    )
-    if len(rows) > max_observations:
-        raise ValueError(
-            "protected_relation_identity: observation set exceeds the "
-            f"{max_observations}-row gather gate; fingerprint a bounded "
-            "build region instead"
-        )
-    parts = [
-        "relation=semantic_neighbor;provenance=topology_input;version=1;"
-        "split=construction"
-    ]
-    for r in rows:
-        parts.append(
-            f";lhs={len(r['lhs'])}:{r['lhs']}"
-            f";rhs={len(r['rhs'])}:{r['rhs']}"
-            f";score={_fmt_f32(r['score'])}"
-        )
-    return (
-        "semantic_neighbor:v1:construction:fnv1a64:"
-        + _fnv_hex("".join(parts))
-    )
-
-
-def build_protected_relation_cover(
-    clusters: DataFrame,
-    memberships: DataFrame,
-    cluster_col: str = "cluster_id",
-    members_col: str = "member_doc_hashes",
-    member_doc_col: str = "doc_hash",
-) -> dict[str, DataFrame]:
-    """buildProtectedRelationCoverIndex (:65-121): fibers ordered by
-    cluster id with sorted member lists, the doc→fiber index, and the
-    six validation errors raised as one bounded aggregation pass.
-
-    ``clusters``: (cluster_id, member_doc_hashes array). ``memberships``:
-    rows whose ``doc_hash`` must appear in some fiber.
-    """
-    checks = clusters.agg(
-        F.sum((F.col(cluster_col) == "").cast("int")).alias("empty_ids"),
-        (F.count("*") - F.countDistinct(cluster_col)).alias("dup_ids"),
-        F.sum((F.size(members_col) == 0).cast("int")).alias("empty_fibers"),
-        F.sum(
-            (
-                F.size(members_col)
-                > F.size(F.array_distinct(F.col(members_col)))
-            ).cast("int")
-        ).alias("dup_members"),
-        F.sum(
-            (F.size(F.array_remove(F.col(members_col), "")) <
-             F.size(F.col(members_col))).cast("int")
-        ).alias("empty_members"),
-    ).head()
-    if checks["empty_ids"]:
-        raise ValueError("protected relation fiber has no id")
-    if checks["dup_ids"]:
-        raise ValueError("protected relation cover has duplicate fiber id")
-    if checks["dup_members"]:
-        raise ValueError(
-            "protected relation fiber has duplicate document membership"
-        )
-    if checks["empty_fibers"]:
-        raise ValueError("protected relation fiber is empty")
-    if checks["empty_members"]:
-        raise ValueError("protected relation fiber has an empty document")
-
-    from yams_spark.operators.search import global_rank
-
-    fibers = global_rank(
-        clusters.select(
-            F.col(cluster_col).alias("fiber_id"),
-            F.array_sort(F.col(members_col)).alias("doc_hashes"),
-        ),
-        [F.col("fiber_id").asc()],
-        "_rk",
-    ).select(
-        "fiber_id", "doc_hashes", (F.col("_rk") - 1).alias("fiber_index")
-    )
-    by_doc = fibers.select(
-        F.explode("doc_hashes").alias("doc_hash"), "fiber_index", "fiber_id"
-    )
-    orphans = (
-        memberships.select(F.col(member_doc_col).alias("doc_hash"))
-        .where(F.col("doc_hash") != "")
-        .join(by_doc.select("doc_hash"), on="doc_hash", how="left_anti")
-        .limit(1)
-        .count()
-    )
-    empties = memberships.where(F.col(member_doc_col) == "").limit(1).count()
-    if orphans or empties:
-        raise ValueError(
-            "protected relation membership is absent from the cover"
-        )
-    return {"fibers": fibers, "fibers_by_doc": by_doc}

@@ -350,27 +350,3 @@ def orthogonal_boundary_spill(
             F.col("spill_rank").cast("int").alias("spill_rank"), "loss",
         )
     )
-
-
-def spill_member_counts(
-    memberships: DataFrame,
-    spills: DataFrame,
-    cluster_col: str = "cluster_id",
-    hash_col: str = "doc_hash",
-) -> DataFrame:
-    """(cluster_id, member_count): per-cluster counts after folding the
-    spill replicas in — the :274-281 member-list update (a spilled doc
-    already a member of the secondary cluster is not double-counted)."""
-    base = memberships.select(
-        F.col(cluster_col).alias("cluster_id"),
-        F.col(hash_col).alias("doc_hash"),
-    )
-    added = spills.select(
-        F.col("spill_cluster").alias("cluster_id"), "doc_hash"
-    )
-    return (
-        base.unionByName(added)
-        .distinct()
-        .groupBy("cluster_id")
-        .agg(F.count("*").alias("member_count"))
-    )

@@ -29,13 +29,6 @@ session (``/root/reference/src/topology/topology_baseline.cpp:771-985``
   topology_routing_session.cpp:782-806: seed anchors first, then seed
   weight, best route score, medoid flag, first-route order, hash) and
   caps with ``orderBy().limit()``.
-* **Construction fingerprint**: exact FNV-1a replica of
-  ``topologyRoutingConstructionFingerprint``
-  (topology_routing_session.cpp:1382-1459) over the sorted cluster
-  artifacts + memberships — a deterministic session identity for
-  snapshot caching. Driver-side by design (the snapshot is cluster-level
-  metadata, orders of magnitude smaller than the corpus); the collect is
-  size-gated so a pathological membership table can't OOM the driver.
 """
 
 from __future__ import annotations
@@ -47,12 +40,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 ROUTE_SCORING_MODES = ("current", "size_weighted", "seed_coverage")
-
-#: fingerprint collect gate — the routing snapshot is cluster metadata
-#: (id/level/scores/medoid + memberships), not documents; beyond this the
-#: caller should fingerprint a coarser rollup instead.
-FINGERPRINT_MAX_ROWS = 5_000_000
-
 
 def _dense_signal(centroid_col, query: list[float]):
     """clamp((cosine(query, centroid)+1)/2, 0, 1) as a Catalyst fold
@@ -349,144 +336,6 @@ def routed_members(
     return m
 
 
-# ---------------------------------------------------------------------------
-# Construction fingerprint (exact FNV-1a replica,
-# topology_routing_session.cpp:26-65, 1382-1459)
-# ---------------------------------------------------------------------------
-
-_FNV_OFFSET = 14695981039346656037
-_FNV_PRIME = 1099511628211
-_MASK64 = (1 << 64) - 1
-
-
-def _fp_byte(h: int, b: int) -> int:
-    return ((h ^ b) * _FNV_PRIME) & _MASK64
-
-
-def _fp_int(h: int, v: int, nbytes: int = 8) -> int:
-    bits = v & ((1 << (nbytes * 8)) - 1)
-    for _ in range(nbytes):
-        h = _fp_byte(h, bits & 0xFF)
-        bits >>= 8
-    return h
-
-
-def _fp_str(h: int, s: str) -> int:
-    raw = s.encode("utf-8")
-    h = _fp_int(h, len(raw))
-    for b in raw:
-        h = _fp_byte(h, b)
-    return h
-
-
-def _fp_float(h: int, v: float) -> int:
-    # bit_cast<uint32_t> -> fingerprintIntegral folds sizeof(T)=4 bytes
-    return _fp_int(h, int(np.float32(v).view(np.uint32)), 4)
-
-
-def _fp_double(h: int, v: float) -> int:
-    return _fp_int(h, int(np.float64(v).view(np.uint64)), 8)
-
-
-def construction_fingerprint(
-    clusters: list[dict],
-    memberships: list[dict],
-    algorithm: str = "semantic-dedupe-v1",
-    input_kind: int = 0,
-    embedding_space: str = "",
-    protected_relation: str = "",
-) -> str:
-    """16-hex-char FNV-1a session identity over the sorted topology
-    snapshot (topologyRoutingConstructionFingerprint). Cluster dicts:
-    cluster_id, member_count, persistence, cohesion, density, bridge_mass,
-    medoid_hash, members (list), centroid (list[float]); membership dicts:
-    doc_hash, cluster_id, role (int)."""
-    h = _FNV_OFFSET
-    h = _fp_str(h, algorithm)
-    h = _fp_int(h, input_kind, 1)
-    h = _fp_str(h, embedding_space)
-    h = _fp_str(h, protected_relation)
-
-    cs = sorted(clusters, key=lambda c: c["cluster_id"])
-    h = _fp_int(h, len(cs))
-    for c in cs:
-        h = _fp_str(h, c["cluster_id"])
-        h = _fp_str(h, c.get("parent_cluster_id") or "")
-        h = _fp_int(h, c.get("level", 0))
-        h = _fp_int(h, c["member_count"])
-        h = _fp_double(h, c.get("persistence", 0.0))
-        h = _fp_double(h, c.get("cohesion", 0.0))
-        h = _fp_double(h, c.get("density", 0.0))
-        h = _fp_double(h, c.get("bridge_mass", 0.0))
-        h = _fp_int(h, c.get("protected_pair_count", 0))
-        h = _fp_int(h, c.get("preserved_protected_pair_count", 0))
-        h = _fp_str(h, c.get("medoid_hash") or "")
-        members = sorted(c.get("members", []))
-        h = _fp_int(h, len(members))
-        for m in members:
-            h = _fp_str(h, m)
-        overlaps = sorted(c.get("overlap_cluster_ids", []))
-        h = _fp_int(h, len(overlaps))
-        for o in overlaps:
-            h = _fp_str(h, o)
-        centroid = c.get("centroid") or []
-        h = _fp_int(h, len(centroid))
-        for v in centroid:
-            h = _fp_float(h, v)
-
-    ms = sorted(memberships, key=lambda m: (m["doc_hash"], m["cluster_id"]))
-    h = _fp_int(h, len(ms))
-    for m in ms:
-        h = _fp_str(h, m["doc_hash"])
-        h = _fp_str(h, m["cluster_id"])
-        h = _fp_str(h, m.get("parent_cluster_id") or "")
-        h = _fp_int(h, m.get("cluster_level", 0))
-        h = _fp_double(h, m.get("persistence", 0.0))
-        h = _fp_double(h, m.get("cohesion", 0.0))
-        h = _fp_double(h, m.get("bridge_score", 0.0))
-        h = _fp_int(h, m.get("role", 0), 1)
-        overlaps = sorted(m.get("overlap_cluster_ids", []))
-        h = _fp_int(h, len(overlaps))
-        for o in overlaps:
-            h = _fp_str(h, o)
-    return format(h, "016x")
-
-
-def fingerprint_snapshot(clusters: DataFrame, memberships: DataFrame, **kw) -> str:
-    """Collect the (cluster-level, size-gated) snapshot and fingerprint it.
-
-    clusters: (cluster_id, member_count, persistence, cohesion[, density,
-    bridge_mass, medoid_hash, centroid]); memberships: (doc_hash,
-    cluster_id). The gate keeps the driver safe — the snapshot is cluster
-    metadata, ~1e4 rows per 1e6 docs in practice.
-    """
-    n = clusters.count() + memberships.count()
-    if n > FINGERPRINT_MAX_ROWS:
-        raise ValueError(
-            f"snapshot too large to fingerprint driver-side ({n} rows > "
-            f"{FINGERPRINT_MAX_ROWS}); fingerprint a rollup instead"
-        )
-    cpdf = clusters.toPandas()
-    mpdf = memberships.toPandas()
-    mem_by_cluster: dict[str, list[str]] = {}
-    for r in mpdf.itertuples(index=False):
-        mem_by_cluster.setdefault(r.cluster_id, []).append(r.doc_hash)
-    cl = []
-    for r in cpdf.to_dict("records"):
-        r = dict(r)
-        r.setdefault("density", 0.0)
-        r.setdefault("bridge_mass", 0.0)
-        cent = r.get("centroid")
-        r["centroid"] = list(cent) if cent is not None else []
-        r["members"] = mem_by_cluster.get(r["cluster_id"], [])
-        cl.append(r)
-    mem = [
-        {"doc_hash": r.doc_hash, "cluster_id": r.cluster_id}
-        for r in mpdf.itertuples(index=False)
-    ]
-    return construction_fingerprint(cl, mem, **kw)
-
-
 #: runTopologyAssistStage seed admission predicates
 #: (search_topology_stage.cpp:12-22)
 LEXICAL_SEED_SOURCES = ("text", "simeon_text", "graph_text")
@@ -571,34 +420,3 @@ def merge_topology_seed_hashes(
             "weight",
         )
     )
-
-
-def fill_topology_skip_reason(
-    skip_reason: str,
-    routing_mode: str,
-    weak_tier1_query: bool,
-    has_stores: bool,
-    session_applied: bool,
-    load_succeeded: bool,
-    routed_clusters: int,
-) -> str:
-    """Routing-skip diagnostics cascade (``fillTopologySkipReason``,
-    search_topology_stage.cpp:114-140): an already-set reason wins; then
-    disabled mode, strong-tier1 short-circuit under weak-query-only
-    mode, missing stores, applied-session success (empty reason), routed
-    clusters that added nothing, and the no-routes / not-loaded tail.
-    Driver-side scalar — it annotates the (single-query) session result,
-    exactly like the router's reason strings."""
-    if skip_reason:
-        return skip_reason
-    if routing_mode == "disabled":
-        return "disabled"
-    if routing_mode == "weak_query_only" and not weak_tier1_query:
-        return "strong_tier1_query"
-    if not has_stores:
-        return "missing_store"
-    if session_applied:
-        return ""
-    if load_succeeded and routed_clusters > 0:
-        return "no_added_candidates"
-    return "no_routes" if load_succeeded else "not_loaded"

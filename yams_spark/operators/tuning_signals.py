@@ -12,11 +12,6 @@ column math over a batch of ``TuningContext`` rows:
   codeRatio quartile, docCountLog10 decade floor (non-finite/<=0 -> 0,
   cap 6), embeddingCoverage tercile, binaryRatio media flag, epochs
   verbatim.
-* ``fill_corpus_features`` / ``query_token_count_log2``
-  (``include/yams/search/search_tuner.h:770-803``): CorpusStats ->
-  corpus-slow context fields (log10 doc count, kgEdgeDensity falling
-  back to symbolDensity, corpusEpoch = computedAtMs) and the
-  whitespace-token log2 query feature (empty query -> 0).
 * ``combine_reward`` (``tuning_reward.cpp:26-49``): label-vs-proxy
   blend — proxy = 0.6·kgUtility + 0.2·freshness + 0.2·agreement with
   non-finite inputs zeroed, latency-over-budget penalty floored at 0,
@@ -164,38 +159,6 @@ def bucketize(ctx: DataFrame, out_col: str = "bucket") -> DataFrame:
             _ctx(ctx, "topology_epoch").cast("long").cast("string"),
         ),
     )
-
-
-def fill_corpus_features(stats: DataFrame) -> DataFrame:
-    """CorpusStats columns -> corpus-slow TuningContext columns
-    (search_tuner.h:770-781): ``doc_count_log10`` = log10(docCount) for
-    positive counts else 0, ``kg_edge_density`` falls back to
-    ``symbol_density`` when not positive, ``corpus_epoch`` =
-    ``computed_at_ms``. Query-fast fields are untouched."""
-    docs = F.col("doc_count").cast("double")
-    out = stats.withColumn(
-        "doc_count_log10",
-        F.when(docs > 0.0, F.log10(docs)).otherwise(F.lit(0.0)),
-    ).withColumn(
-        "kg_edge_density",
-        F.when(F.col("kg_edge_density") > 0.0, F.col("kg_edge_density")).otherwise(
-            F.col("symbol_density")
-        ),
-    )
-    if "computed_at_ms" in stats.columns:
-        out = out.withColumn("corpus_epoch", F.col("computed_at_ms"))
-    return out
-
-
-def query_token_count_log2(query: Column) -> Column:
-    """Whitespace-split token count, log2, empty -> 0
-    (search_tuner.h:788-803; separators are exactly space/tab/CR/LF)."""
-    n = F.size(
-        F.filter(
-            F.split(query, "[ \t\n\r]+"), lambda x: x != F.lit("")
-        )
-    )
-    return F.when(n > 0, F.log2(n.cast("double"))).otherwise(F.lit(0.0))
 
 
 def combine_reward(

@@ -8,9 +8,13 @@
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 
 from pyspark.sql import SparkSession
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def get_spark(
@@ -64,28 +68,59 @@ def get_spark(
     return spark
 
 
+def _package_sources() -> list[tuple[str, str]]:
+    """(path inside the zip, file path) of every ``.py`` in the package,
+    sorted so the fingerprint does not depend on directory order."""
+    out = []
+    for root, _dirs, files in os.walk(_PKG_DIR):
+        for name in files:
+            if name.endswith(".py"):
+                full = os.path.join(root, name)
+                rel = os.path.relpath(full, _PKG_DIR)
+                out.append((os.path.join("yams_spark", rel), full))
+    return sorted(out)
+
+
+@functools.cache
+def package_fingerprint() -> str:
+    """Content hash of the package's ``.py`` sources (paths and bytes),
+    computed once per process: the shipped zip's name and the driver
+    entry's cache tag both derive from it."""
+    h = hashlib.blake2b(digest_size=8)
+    for arcname, full in _package_sources():
+        with open(full, "rb") as f:
+            data = f.read()
+        h.update(f"{arcname}\0{len(data)}\0".encode())
+        h.update(data)
+    return h.hexdigest()
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make yams_spark importable on executors regardless of driver cwd —
     the addPyFile equivalent of ``spark-submit --py-files yams_spark.zip``.
     Ships once per SparkContext: every shipped zip rides along with each
-    Python task and adds one more ``sys.path`` entry on the driver."""
+    Python task and adds one more ``sys.path`` entry on the driver. The
+    zip is named by ``package_fingerprint()``, so processes running the
+    same sources share one file and a stale zip is never reused; it is
+    written under a temporary name and renamed into place."""
+    import tempfile
     import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), f"yams_spark_pkg_{os.getpid()}.zip"
-    )
+    name = f"yams_spark_pkg_{package_fingerprint()}.zip"
     sc = spark.sparkContext
-    if os.path.basename(zip_path) in sc._python_includes:
+    if name in sc._python_includes:
         return
+    tmp_dir = os.environ.get("TMPDIR", "/tmp")
+    zip_path = os.path.join(tmp_dir, name)
     if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for name in files:
-                    if name.endswith(".py"):
-                        full = os.path.join(root, name)
-                        rel = os.path.join(
-                            "yams_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
+        fd, tmp = tempfile.mkstemp(prefix=f".{name}.", dir=tmp_dir)
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+                for arcname, full in _package_sources():
+                    zf.write(full, arcname)
+            os.chmod(tmp, 0o644)  # mkstemp's 0600 would keep it to this user
+            os.replace(tmp, zip_path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     sc.addPyFile(zip_path)

@@ -1,4 +1,4 @@
-"""Hotzone decay: custom stateful streaming operator.
+"""Hotzone decay: per-key decayed interest scores and boosts.
 
 Re-implements the reference's interest tracker
 (``include/yams/search/hotzone_manager.h:15-59``,
@@ -8,9 +8,8 @@ interaction, and a soft-saturating multiplicative boost
 
     boost = 1 + (max_boost-1) · clamp((1-e^-score)/(1-e^-1), 0, 1)
 
-Spark recast: ``applyInPandasWithState`` keeps (score, last_ts) per key —
-the canonical custom stateful operator; a batch variant with identical math
-serves non-streaming callers and the property tests.
+Spark recast: ``hotzone_batch`` folds each key's events in one
+``applyInPandas`` group with the reference recurrence (``fold_events``).
 """
 
 from __future__ import annotations
@@ -68,62 +67,7 @@ def fold_events(
     return score, last
 
 
-STATE_SCHEMA = "score double, last_ts timestamp"
 OUTPUT_SCHEMA = "key string, score double, boost double, last_ts timestamp"
-
-
-def hotzone_stateful(
-    events_stream,
-    key_col: str = "key",
-    ts_col: str = "ts",
-    weight_col: str = "weight",
-    half_life_hours: float = DEFAULT_HALF_LIFE_HOURS,
-    max_boost: float = DEFAULT_MAX_BOOST,
-    timeout: str = "NoTimeout",
-):
-    """Streaming groupBy(key).applyInPandasWithState: accumulates the
-    decayed score across micro-batches and emits (key, score, boost,
-    last_ts) per updated key."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            score, last_us = state.get
-            last = (
-                datetime.fromtimestamp(last_us / 1_000_000, tz=timezone.utc)
-                if last_us is not None
-                else None
-            )
-        else:
-            score, last = 0.0, None
-        events = []
-        for pdf in pdfs:
-            for ts, w in zip(pdf[ts_col], pdf[weight_col]):
-                t = ts.to_pydatetime()
-                if t.tzinfo is None:
-                    t = t.replace(tzinfo=timezone.utc)
-                events.append((t, float(w)))
-        score, last = fold_events(events, score, last, half_life_hours)
-        state.update((score, int(last.timestamp() * 1_000_000) if last else None))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "score": [score],
-                "boost": [boost_from_score(score, max_boost)],
-                "last_ts": [last],
-            }
-        )
-
-    return (
-        events_stream.groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType="score double, last_ts long",
-            outputMode="update",
-            timeoutConf=getattr(GroupStateTimeout, timeout),
-        )
-    )
 
 
 def hotzone_batch(

@@ -19,10 +19,9 @@ readable and writable for parity:
   deserialize (:112-148): size floor, isValid, dataSize bound,
   checksum verify (the legacy raw-padding fallback is byte-identical
   here because Python always writes zeroed padding — noted :183-189).
-* Payload codecs (:191-262 + types.h:278 HASH_SIZE=32): StoreBlockData
-  (hash char[32] — a 64-char hex digest TRUNCATES to its first 32
-  chars, faithfully; uint32 size; uint32 refCount), DeleteBlockData,
-  UpdateReferenceData (int32 delta).
+* The StoreBlockData payload codec (:191-262 + types.h:278
+  HASH_SIZE=32): hash char[32] — a 64-char hex digest TRUNCATES to its
+  first 32 chars, faithfully; uint32 size; uint32 refCount.
 """
 
 from __future__ import annotations
@@ -36,19 +35,8 @@ __all__ = [
     "OP_TYPES",
     "encode_wal_entry",
     "decode_wal_entry",
-    "decode_wal_stream",
     "encode_store_block",
     "decode_store_block",
-    "encode_delete_block",
-    "decode_delete_block",
-    "encode_update_reference",
-    "decode_update_reference",
-    "encode_update_metadata",
-    "decode_update_metadata",
-    "encode_transaction",
-    "decode_transaction",
-    "encode_checkpoint",
-    "decode_checkpoint",
 ]
 
 WAL_MAGIC = 0x57414C31  # "WAL1"
@@ -132,20 +120,6 @@ def decode_wal_entry(buffer: bytes) -> dict | None:
     }
 
 
-def decode_wal_stream(buffer: bytes) -> list[dict]:
-    """Sequential recovery walk: entries until the first invalid record
-    (the WAL-file replay stance — a torn tail ends the log)."""
-    out = []
-    pos = 0
-    while pos < len(buffer):
-        entry = decode_wal_entry(buffer[pos:])
-        if entry is None:
-            break
-        out.append(entry)
-        pos += entry["consumed"]
-    return out
-
-
 def _pack_hash(hash_str: str) -> bytes:
     raw = hash_str.encode("utf-8")[:_HASH_SIZE]
     return raw + b"\0" * (_HASH_SIZE - len(raw))
@@ -170,81 +144,3 @@ def decode_store_block(data: bytes) -> dict | None:
         "size": size,
         "ref_count": ref_count,
     }
-
-
-def encode_delete_block(hash_str: str) -> bytes:
-    return _pack_hash(hash_str)
-
-
-def decode_delete_block(data: bytes) -> dict | None:
-    if len(data) < _HASH_SIZE:
-        return None
-    return {"hash": _unpack_hash(data[:_HASH_SIZE])}
-
-
-def encode_update_reference(hash_str: str, delta: int) -> bytes:
-    return _pack_hash(hash_str) + struct.pack("<i", delta)
-
-
-def decode_update_reference(data: bytes) -> dict | None:
-    if len(data) < _HASH_SIZE + 4:
-        return None
-    (delta,) = struct.unpack("<i", data[_HASH_SIZE : _HASH_SIZE + 4])
-    return {"hash": _unpack_hash(data[:_HASH_SIZE]), "delta": delta}
-
-
-def encode_update_metadata(hash_str: str, key: str, value: str) -> bytes:
-    """UpdateMetadataData (:269-314 + wal_entry.h:140-150): fixed
-    header then the raw key/value bytes."""
-    kraw = key.encode("utf-8")
-    vraw = value.encode("utf-8")
-    if len(kraw) > 0xFFFFFFFF or len(vraw) > 0xFFFFFFFF:
-        raise ValueError("WAL metadata part exceeds uint32 size limit")
-    return (
-        _pack_hash(hash_str)
-        + struct.pack("<II", len(kraw), len(vraw))
-        + kraw + vraw
-    )
-
-
-def decode_update_metadata(data: bytes) -> dict | None:
-    if len(data) < _HASH_SIZE + 8:
-        return None
-    ksize, vsize = struct.unpack(
-        "<II", data[_HASH_SIZE : _HASH_SIZE + 8]
-    )
-    if len(data) < _HASH_SIZE + 8 + ksize + vsize:
-        return None
-    base = _HASH_SIZE + 8
-    return {
-        "hash": _unpack_hash(data[:_HASH_SIZE]),
-        "key": data[base : base + ksize].decode("utf-8", "replace"),
-        "value": data[base + ksize : base + ksize + vsize].decode(
-            "utf-8", "replace"
-        ),
-    }
-
-
-def encode_transaction(txn_id: int, participant_count: int = 0) -> bytes:
-    """TransactionData (:316-334; u64 + u32 with 4 tail-pad bytes —
-    natural struct alignment)."""
-    return struct.pack("<QI4x", txn_id, participant_count)
-
-
-def decode_transaction(data: bytes) -> dict | None:
-    if len(data) < 16:
-        return None
-    txn_id, count = struct.unpack_from("<QI", data)
-    return {"transaction_id": txn_id, "participant_count": count}
-
-
-def encode_checkpoint(seq_num: int, timestamp: int) -> bytes:
-    """CheckpointData (:336-345)."""
-    return struct.pack("<QQ", seq_num, timestamp)
-
-
-def decode_checkpoint(data: bytes) -> dict | None:
-    if len(data) < 16:
-        return None
-    seq, ts = struct.unpack_from("<QQ", data)
-    return {"sequence_num": seq, "timestamp": ts}
