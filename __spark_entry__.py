@@ -74,16 +74,10 @@ def _table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full ER pipeline over pages derived from sf0.001."""
+    """Flagship: full ER pipeline over pages derived from sf0.001 — the
+    same code-keyed checkpointed run the ``er_*`` entries read."""
     session._ship_package(spark)
-    from yams_spark.plans.er_pipeline import PipelineConfig, run_pipeline
-    from yams_spark.sources.pages import materialize_pages
-
-    pages, _truth = materialize_pages(
-        spark, "/root/testdata/sf0.001", "/tmp/yams_entry_pages_sf0.001"
-    )
-    out = run_pipeline(spark, pages, PipelineConfig())
-    return out["clusters"].select(
+    return _er_outputs(spark, "/root/testdata/sf0.001")["clusters"].select(
         "group_key", "algorithm_version", "canonical_url", "member_count",
         "max_pair_score", "threshold",
     )
@@ -105,13 +99,19 @@ def _code_fingerprint() -> str:
     return h.hexdigest()
 
 
+def _entry_tag(sf_dir: str) -> str:
+    """Names the on-disk pages and checkpoint of one corpus under this code,
+    so a directory written by other code is never reused."""
+    return f"{os.path.basename(os.path.normpath(sf_dir))}_{_code_fingerprint()}"
+
+
 def _er_outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     key = os.path.normpath(sf_dir)
     if key not in _ER_CACHE:
         from yams_spark.plans.er_pipeline import PipelineConfig, run_pipeline
         from yams_spark.sources.pages import materialize_pages
 
-        tag = f"{os.path.basename(key)}_{_code_fingerprint()}"
+        tag = _entry_tag(sf_dir)
         pages, _ = materialize_pages(spark, sf_dir, f"/tmp/yams_entry_pages_{tag}")
         ckpt = f"/tmp/yams_entry_ckpt_{tag}"
         os.makedirs(ckpt, exist_ok=True)
@@ -4003,8 +4003,7 @@ def er_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yams_spark.sources.pages import materialize_pages
 
     out = _er_outputs(spark, sf_dir)
-    tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{_code_fingerprint()}"
-    _, truth = materialize_pages(spark, sf_dir, f"/tmp/yams_entry_pages_{tag}")
+    _, truth = materialize_pages(spark, sf_dir, f"/tmp/yams_entry_pages_{_entry_tag(sf_dir)}")
     labeled = labeled_pairs(out["pairs"], truth)
     return pairwise_f1(labeled, out["members"].select("url", "group_key"))
 

@@ -15,6 +15,18 @@ name another module imports is used wherever that import runs, so Names
 bound by imports need no resolving. Docstrings and comments are not code
 and count for nothing. The defs no entry point reaches must be exactly
 ``DEF_ALLOWLIST``.
+
+Inside the reached library functions the walk goes down to parameters. A
+defaulted parameter is set where some call in the program (the roots, the
+library and the tests) passes it by keyword or position; a ``*``/``**``
+splat, or naming the function anywhere but as the callee (a Spark UDF, a
+``functools.partial``, a decorator), sets all of them. Calls match by bare
+name, so a collision counts as a set. A parameter no call sets is a
+constant with extra steps; the unset ones must be exactly
+``PARAM_ALLOWLIST``. Last, every module-level ``NAME = ...`` constant of a
+reached library module must be named by code or a test somewhere other
+than its own assignment. The oracles and the frozen extractor file are
+reference code and exempt from both walks.
 """
 
 from __future__ import annotations
@@ -79,6 +91,13 @@ DEF_ALLOWLIST = {
     "yams_spark.functions.html_extract.extract_meta_description":
         "part of the frozen, byte-identical extractor file",
 }
+
+#: defaulted parameters of reached library functions that no call sets,
+#: each with the reason it stays
+PARAM_ALLOWLIST: dict[str, str] = {}
+
+#: reference code the parameter and constant walks leave alone
+_EXEMPT = ("yams_spark.oracle.", "yams_spark.functions.html_extract.")
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
@@ -179,6 +198,91 @@ def _test_names() -> set[str]:
     return names
 
 
+def _program_trees(known: dict[str, Path]) -> dict[str, ast.Module]:
+    """Every file whose calls count: roots, library modules and tests."""
+    tests = [*(REPO / "tests").glob("*.py"), *(REPO / "perfbench" / "tests").glob("*.py")]
+    paths = {str(p): p for p in [*known.values(), *tests]}
+    return {k: ast.parse(p.read_text(), k) for k, p in paths.items()}
+
+
+def _reached_defs(known: dict[str, Path]) -> tuple[_Defs, set[str], set[str]]:
+    """The parsed defs, the reached ones and the reached modules."""
+    defs = _Defs(known)
+    reached_modules = _reach(ROOTS, known)
+    roots = {_module_name(p) for p in ROOTS}
+    # a reached module runs its module-level code; a root file is an entry
+    # point as a whole, and so is a module the module allowlist keeps
+    seeds = [s for m in reached_modules
+             for s in (defs.whole(m) if m in roots else defs.module_level(m))]
+    seeds += [s for m in TEST_ONLY_ALLOWLIST for s in defs.whole(m)]
+    return defs, defs.reach(seeds), reached_modules - roots
+
+
+def _defaulted(fn: ast.FunctionDef) -> tuple[list[str], list[str]]:
+    """The function's positional parameter names, and those with a default."""
+    a = fn.args
+    positional = [p.arg for p in [*a.posonlyargs, *a.args]]
+    kw = [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return positional, positional[len(positional) - len(a.defaults):] + kw
+
+
+def _set_params(trees: dict[str, ast.Module],
+                fns: dict[str, ast.FunctionDef]) -> dict[str, set[str]]:
+    """For each function name, the parameters some call sets; ``"*"`` when a
+    call splats or the function is named other than as a callee."""
+    names = {k.rpartition(".")[2] for k in fns}
+    out: dict[str, set[str]] = {n: set() for n in names}
+    positional: dict[str, list[list[str]]] = {}
+    for k, fn in fns.items():
+        positional.setdefault(k.rpartition(".")[2], []).append(_defaulted(fn)[0])
+
+    def name_of(node: ast.AST, alias: dict[str, str]) -> str | None:
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            return alias.get(node.id, node.id)
+        if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+            return node.attr
+        return None
+
+    for tree in trees.values():
+        # ``from m import f as g``: a call of g is a call of f
+        alias = {a.asname: a.name for n in ast.walk(tree)
+                 if isinstance(n, ast.ImportFrom) for a in n.names if a.asname}
+        callees = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            callees.add(id(node.func))
+            name = name_of(node.func, alias)
+            if name not in names:
+                continue
+            if (any(isinstance(a, ast.Starred) for a in node.args)
+                    or any(k.arg is None for k in node.keywords)):
+                out[name].add("*")
+                continue
+            out[name].update(k.arg for k in node.keywords)
+            for params in positional[name]:
+                out[name].update(params[:len(node.args)])
+        for node in ast.walk(tree):
+            name = name_of(node, alias)
+            if name in names and id(node) not in callees:
+                out[name].add("*")
+    return out
+
+
+def _module_constants(tree: ast.Module) -> list[str]:
+    out = []
+    for node in tree.body:
+        targets = (node.targets if isinstance(node, ast.Assign)
+                   else [node.target] if isinstance(node, ast.AnnAssign) else [])
+        while targets:
+            t = targets.pop()
+            if isinstance(t, (ast.Tuple, ast.List)):
+                targets.extend(t.elts)
+            elif isinstance(t, ast.Name) and not t.id.startswith("__"):
+                out.append(t.id)
+    return out
+
+
 def test_only_allowlisted_modules_are_unreachable() -> None:
     known = _modules()
     library = {m for m, p in known.items()
@@ -195,19 +299,10 @@ def test_only_allowlisted_modules_are_unreachable() -> None:
 
 
 def test_only_allowlisted_defs_are_unreachable() -> None:
-    known = _modules()
-    defs = _Defs(known)
-    reached_modules = _reach(ROOTS, known)
-    roots = {_module_name(p) for p in ROOTS}
-    # a reached module runs its module-level code; a root file is an entry
-    # point as a whole, and so is a module the module allowlist keeps
-    seeds = [s for m in reached_modules
-             for s in (defs.whole(m) if m in roots else defs.module_level(m))]
-    seeds += [s for m in TEST_ONLY_ALLOWLIST for s in defs.whole(m)]
-    reached = defs.reach(seeds)
+    defs, reached, library_modules = _reached_defs(_modules())
     library = {k for k in defs.nodes
                if k.startswith("yams_spark.")
-               and k.rpartition(".")[0] in reached_modules - roots}
+               and k.rpartition(".")[0] in library_modules}
     unreached = library - reached
     kept = set(DEF_ALLOWLIST) | defs.reach(
         [(k.rpartition(".")[0], defs.nodes[k]) for k in DEF_ALLOWLIST])
@@ -217,3 +312,45 @@ def test_only_allowlisted_defs_are_unreachable() -> None:
     # like the module allowlist: a test still uses each allowlisted def
     assert sorted(k for k in DEF_ALLOWLIST
                   if k.rpartition(".")[2] not in _test_names()) == []
+
+
+def test_every_default_parameter_is_set() -> None:
+    known = _modules()
+    defs, reached, library_modules = _reached_defs(known)
+    fns = {k: defs.nodes[k] for k in reached
+           if k.startswith("yams_spark.") and not k.startswith(_EXEMPT)
+           and k.rpartition(".")[0] in library_modules and k not in DEF_ALLOWLIST
+           and isinstance(defs.nodes[k], (ast.FunctionDef, ast.AsyncFunctionDef))}
+    set_by_calls = _set_params(_program_trees(known), fns)
+    unset = set()
+    for k, fn in fns.items():
+        passed = set_by_calls[k.rpartition(".")[2]]
+        if "*" not in passed:
+            unset.update(f"{k}({p})" for p in _defaulted(fn)[1] if p not in passed)
+    assert sorted(unset - set(PARAM_ALLOWLIST)) == []
+    assert sorted(set(PARAM_ALLOWLIST) - unset) == []
+
+
+def test_every_module_constant_is_read() -> None:
+    known = _modules()
+    _, _, library_modules = _reached_defs(known)
+    trees = _program_trees(known)
+    # a Load of the name in its own module, or an attribute or import of
+    # it anywhere; the bare name elsewhere is a different binding
+    named_anywhere = set()
+    for tree in trees.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Attribute):
+                named_anywhere.add(n.attr)
+            elif isinstance(n, ast.alias):
+                named_anywhere.add(n.name)
+    unread = []
+    for mod in sorted(library_modules):
+        if f"{mod}.".startswith(_EXEMPT):
+            continue
+        tree = trees[str(known[mod])]
+        loaded = {n.id for n in ast.walk(tree)
+                  if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)}
+        unread += [f"{mod}.{c}" for c in _module_constants(tree)
+                   if c not in loaded and c not in named_anywhere]
+    assert unread == []

@@ -1,6 +1,7 @@
 """Source tables are generated and read once: ``materialize_pages`` runs the
 page generator in one pass and reuses only committed output, and the entry
-reader ``__spark_entry__._t`` infers each table's schema once per process.
+reader ``__spark_entry__._t`` infers each table's schema once per process;
+the entry pages are named by the code that generates them.
 Spark jobs are counted per job group once the listener bus has drained."""
 
 from __future__ import annotations
@@ -114,3 +115,26 @@ def test_entry_reader_infers_each_schema_once(spark, sf_dir):
     again, jobs = _count_jobs(spark, lambda: entry._t(spark, sf_dir, "orders"))
     assert jobs == 0
     assert again.schema == first.schema
+
+
+def test_entry_pages_are_keyed_by_code(spark, monkeypatch):
+    """The flagship ``entry()`` writes its pages under a directory named by
+    the code fingerprint, so pages generated by older code are never
+    clustered again after the generator changes."""
+    import __spark_entry__ as entry
+    from yams_spark.sources import pages
+
+    class Recorded(Exception):
+        pass
+
+    out_dirs = []
+
+    def record(spark, sf_dir, out_dir):
+        out_dirs.append(out_dir)
+        raise Recorded
+
+    monkeypatch.setattr(pages, "materialize_pages", record)
+    monkeypatch.setattr(entry, "_ER_CACHE", {})
+    with pytest.raises(Recorded):
+        entry.entry(spark)
+    assert len(out_dirs) == 1 and entry._code_fingerprint() in out_dirs[0]

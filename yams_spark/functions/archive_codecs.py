@@ -263,9 +263,7 @@ def extract_tar_member(data: bytes, name: str) -> bytes:
     return data[entry["data_offset"] : entry["data_offset"] + entry["size"]]
 
 
-def build_tar(
-    entries: list[tuple[str, bytes]], mtime: int = 1_600_000_000
-) -> bytes:
+def build_tar(entries: list[tuple[str, bytes]]) -> bytes:
     out = bytearray()
     for name, payload in entries:
         raw = name.encode("utf-8")
@@ -277,7 +275,7 @@ def build_tar(
         block[108:116] = b"0000000\0"
         block[116:124] = b"0000000\0"
         block[124:136] = (f"{len(payload):011o}").encode() + b"\0"
-        block[136:148] = (f"{mtime:011o}").encode() + b"\0"
+        block[136:148] = (f"{1_600_000_000:011o}").encode() + b"\0"
         block[148:156] = b" " * 8
         block[156] = ord("0")
         block[257:263] = b"ustar\0"

@@ -228,8 +228,7 @@ CHUNK_SPARK_SCHEMA = (
 )
 
 
-def chunk_documents(docs, cfg: DocChunkingConfig | None = None,
-                    id_col: str = "doc_hash", text_col: str = "text"):
+def chunk_documents(docs, cfg: DocChunkingConfig | None = None):
     """docs -> one row per chunk (DocumentChunk analog). One Arrow pass,
     narrow; chunk_id = <document_hash>:<index> (unique per document)."""
     import pandas as pd
@@ -239,7 +238,7 @@ def chunk_documents(docs, cfg: DocChunkingConfig | None = None,
     def compute(iterator):
         for pdf in iterator:
             rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_hash"], pdf["text"]):
                 for c in chunk_text(text or "", cfg):
                     rows.append(
                         (
@@ -257,4 +256,4 @@ def chunk_documents(docs, cfg: DocChunkingConfig | None = None,
                     ],
                 )
 
-    return docs.select(id_col, text_col).mapInPandas(compute, schema=CHUNK_SPARK_SCHEMA)
+    return docs.select("doc_hash", "text").mapInPandas(compute, schema=CHUNK_SPARK_SCHEMA)

@@ -44,11 +44,11 @@ EXTENSION_MIME: dict[str, str] = {
 }
 
 
-def is_valid_utf8_text(data: bytes, sample: int = 512) -> bool:
+def is_valid_utf8_text(data: bytes) -> bool:
     """The reference's strict UTF-8 continuation walk
-    (file_type_detector.cpp:115-145) over a prefix sample, plus a
+    (file_type_detector.cpp:115-145) over a 512-byte prefix sample, plus a
     control-byte veto (NUL ⇒ binary)."""
-    chunk = data[:sample]
+    chunk = data[:512]
     if b"\x00" in chunk:
         return False
     i, n = 0, len(chunk)

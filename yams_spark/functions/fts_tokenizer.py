@@ -405,8 +405,8 @@ def porter_duckdb_steps(col: str = "w") -> list[str]:
     return steps
 
 
-def stem_terms(terms, term_col: str = "term", out_col: str = "stem"):
-    """Add ``out_col`` = Porter stem of ``term_col`` via an Arrow-batched
+def stem_terms(terms):
+    """Add ``stem`` = Porter stem of ``term`` via an Arrow-batched
     mapInPandas pass. Intended for the DISTINCT vocabulary (stemming cost
     O(|vocab|), never O(corpus tokens)); the result joins back onto the
     posting lists."""
@@ -414,7 +414,7 @@ def stem_terms(terms, term_col: str = "term", out_col: str = "stem"):
     def fn(it):
         for pdf in it:
             pdf = pdf.copy()
-            pdf[out_col] = [porter_stem(t) for t in pdf[term_col]]
+            pdf["stem"] = [porter_stem(t) for t in pdf["term"]]
             yield pdf
 
     # fresh StructType: .add() would mutate the input DataFrame's cached
@@ -422,7 +422,7 @@ def stem_terms(terms, term_col: str = "term", out_col: str = "stem"):
     from pyspark.sql.types import StringType, StructField, StructType
 
     schema = StructType(
-        list(terms.schema.fields) + [StructField(out_col, StringType())]
+        list(terms.schema.fields) + [StructField("stem", StringType())]
     )
     return terms.mapInPandas(fn, schema=schema)
 
@@ -432,19 +432,19 @@ def porter_domain_sql(col: str) -> str:
     return f"(length({col}) BETWEEN 3 AND 64 AND regexp_matches({col}, '^[a-z]+$'))"
 
 
-def porter_duckdb_cte(term_source: str, term_col: str = "term") -> str:
-    """A full DuckDB CTE body mapping DISTINCT ``term_col`` from
+def porter_duckdb_cte(term_source: str) -> str:
+    """A full DuckDB CTE body mapping DISTINCT ``term`` from
     ``term_source`` (a CTE/table name) to its Porter stem: SELECT term,
     stem FROM ... Chained stages s0..sN so each step evaluates once."""
     steps = porter_duckdb_steps("w")
     sql = (
-        f"SELECT {term_col} AS term, {term_col} AS w FROM {term_source} "
-        f"WHERE {porter_domain_sql(term_col)}"
+        f"SELECT term AS term, term AS w FROM {term_source} "
+        f"WHERE {porter_domain_sql('term')}"
     )
     for step in steps:
         sql = f"SELECT term, {step} AS w FROM ({sql})"
     return (
         f"SELECT term, w AS stem FROM ({sql}) "
-        f"UNION ALL SELECT {term_col} AS term, {term_col} AS stem "
-        f"FROM {term_source} WHERE NOT {porter_domain_sql(term_col)}"
+        f"UNION ALL SELECT term AS term, term AS stem "
+        f"FROM {term_source} WHERE NOT {porter_domain_sql('term')}"
     )

@@ -17,20 +17,11 @@ from pyspark.sql import functions as F
 _HASH_STRING_SIZE = 64
 
 
-def validate_manifest_col(
-    file_hash: Column | str = "file_hash",
-    file_size: Column | str = "file_size",
-    version: Column | str = "version",
-    chunks: Column | str = "chunks",
-    current_version: int = 1,
-) -> Column:
+def validate_manifest_col() -> Column:
     """validateManifest as one Catalyst predicate over manifest rows
     (chunks: array<struct<hash,offset,size,flags>>). The sequential
     offset walk is an F.aggregate fold carrying (expected_offset, ok)."""
-    fh = F.col(file_hash) if isinstance(file_hash, str) else file_hash
-    fs = F.col(file_size) if isinstance(file_size, str) else file_size
-    ver = F.col(version) if isinstance(version, str) else version
-    ch = F.col(chunks) if isinstance(chunks, str) else chunks
+    fh, fs, ver, ch = (F.col(c) for c in ("file_hash", "file_size", "version", "chunks"))
     chunk_ok = F.forall(
         ch,
         lambda c: (F.length(c["hash"]) == _HASH_STRING_SIZE)
@@ -41,7 +32,7 @@ def validate_manifest_col(
         & (F.size(ch) > 0)
         & (fs > 0)
         & chunk_ok
-        & (ver <= F.lit(current_version))
+        & (ver <= F.lit(1))  # the current manifest version
     )
     walk = F.aggregate(
         ch,

@@ -94,10 +94,10 @@ def encode_ppm(img: np.ndarray) -> bytes:
     return b"P5\n%d %d\n255\n" % (w, h) + img.tobytes()
 
 
-def image_features(img: np.ndarray, bins: int = IMAGE_FEATURE_BINS) -> np.ndarray:
+def image_features(img: np.ndarray) -> np.ndarray:
     """Per-channel mean + std (scaled to [0,1]) followed by a per-channel
-    ``bins``-bucket normalized histogram; grayscale is treated as one
-    channel repeated. float32, length = 3*(2+bins)."""
+    ``IMAGE_FEATURE_BINS``-bucket normalized histogram; grayscale is treated
+    as one channel repeated. float32, length = 3*(2+IMAGE_FEATURE_BINS)."""
     if img.ndim == 2:
         img = np.repeat(img[:, :, None], 3, axis=2)
     feats: list[float] = []
@@ -105,7 +105,7 @@ def image_features(img: np.ndarray, bins: int = IMAGE_FEATURE_BINS) -> np.ndarra
         ch = img[:, :, c].astype(np.float64) / 255.0
         feats.append(float(ch.mean()))
         feats.append(float(ch.std()))
-        hist, _ = np.histogram(ch, bins=bins, range=(0.0, 1.0))
+        hist, _ = np.histogram(ch, bins=IMAGE_FEATURE_BINS, range=(0.0, 1.0))
         feats.extend((hist / max(1, ch.size)).tolist())
     return np.asarray(feats, dtype=np.float32)
 

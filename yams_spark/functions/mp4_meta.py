@@ -196,7 +196,7 @@ def extract_samples(payload: bytes, kind: str = "vide") -> list[dict]:
 MJPEG_CODECS = {"mjpa", "mjpb", "jpeg"}
 
 
-def decode_mjpeg_frames(payload: bytes, max_frames: int | None = None):
+def decode_mjpeg_frames(payload: bytes):
     """REAL video pixel decode for Motion-JPEG tracks: each sample is a
     baseline JPEG image decoded by ``functions/jpeg_codec``. Returns a
     list of (h, w, 3) uint8 frames. Non-MJPEG video codecs (avc1/hevc —
@@ -221,8 +221,7 @@ def decode_mjpeg_frames(payload: bytes, max_frames: int | None = None):
         )
     from yams_spark.functions.jpeg_codec import decode_jpeg
 
-    samples = t["samples"][:max_frames] if max_frames else t["samples"]
-    return [decode_jpeg(s) for s in samples]
+    return [decode_jpeg(s) for s in t["samples"]]
 
 
 # ---------- structural builder (the parser's oracle) ----------
@@ -240,7 +239,6 @@ def build_mp4(
     duration_ms: int = 5000,
     timescale: int = 1000,
     tracks: list[dict] | None = None,
-    brand: str = "isom",
     use_64bit: bool = False,
 ) -> bytes:
     """Minimal structural MP4: ftyp [+ mdat] + moov(mvhd + trak*). Each
@@ -265,7 +263,7 @@ def build_mp4(
 
     # mdat-first layout: concatenate every track's samples into one mdat
     # and remember each track's chunk offset (absolute file position)
-    ftyp = _box(b"ftyp", brand.encode() + struct.pack(">I", 0) + brand.encode())
+    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0) + b"isom")
     mdat_body = b""
     chunk_offsets: list[int | None] = []
     for t in tracks:

@@ -200,7 +200,7 @@ def detect_language_simple(text: str) -> tuple[str, float]:
     return best_lang, conf
 
 
-def extract_from_buffer(data: bytes, detect_language: bool = True) -> dict:
+def extract_from_buffer(data: bytes) -> dict:
     """extractFromBuffer (plain_text_extractor.cpp:76-124)."""
     if is_binary_file(data):
         return {
@@ -230,7 +230,7 @@ def extract_from_buffer(data: bytes, detect_language: bool = True) -> dict:
         "encoding": encoding, "encoding_confidence": f"{conf:.6f}",
         "language": None, "language_confidence": None,
     }
-    if detect_language and text:
+    if text:
         lang, lconf = detect_language_simple(text)
         out["language"] = lang
         out["language_confidence"] = f"{lconf:.6f}"
@@ -244,16 +244,14 @@ _RESULT_SCHEMA = (
 )
 
 
-def extract_plain_text_col(
-    data: Column | str, detect_language: bool = True
-) -> Column:
+def extract_plain_text_col(data: Column | str) -> Column:
     """extractFromBuffer over a binary column (Arrow-batched)."""
     c = F.col(data) if isinstance(data, str) else data
 
     @pandas_udf(_RESULT_SCHEMA)
     def _extract(series: pd.Series) -> pd.DataFrame:
         rows = [
-            extract_from_buffer(bytes(b), detect_language)
+            extract_from_buffer(bytes(b))
             if b is not None
             else dict.fromkeys(
                 ("success", "error", "text", "encoding",

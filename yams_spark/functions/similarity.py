@@ -110,11 +110,12 @@ def jaro(a: str, b: str) -> float:
     return (m / la + m / lb + (m - transpositions) / m) / 3.0
 
 
-def jaro_winkler(a: str, b: str, prefix_scale: float = 0.1, max_prefix: int = 4) -> float:
+def jaro_winkler(a: str, b: str) -> float:
+    # Winkler's standard prefix scale 0.1 over at most 4 prefix characters
     base = jaro(a, b)
     prefix = 0
     for ca, cb in zip(a, b):
-        if ca != cb or prefix >= max_prefix:
+        if ca != cb or prefix >= 4:
             break
         prefix += 1
-    return base + prefix * prefix_scale * (1.0 - base)
+    return base + prefix * 0.1 * (1.0 - base)

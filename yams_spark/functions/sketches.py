@@ -136,21 +136,17 @@ def simhash64_from_hashes(vals: np.ndarray, counts: np.ndarray) -> int:
     return out
 
 
-def simhash_band_keys(sim: int, bands: int = 4) -> list[str]:
-    """Split the 64-bit simhash into 16-bit bands as blocking keys."""
+def simhash_band_keys(sim: int) -> list[str]:
+    """Split the 64-bit simhash into four 16-bit bands as blocking keys."""
     u = sim & _MASK64
-    width = 64 // bands
-    mask = (1 << width) - 1
-    return [f"sh{i}:{(u >> (i * width)) & mask:04x}" for i in range(bands)]
+    return [f"sh{i}:{(u >> (i * 16)) & 0xFFFF:04x}" for i in range(4)]
 
 
-def feature_hash_embedding_from_hashes(
-    vals: np.ndarray, counts: np.ndarray, dim: int = EMBEDDING_DIM
-) -> np.ndarray:
+def feature_hash_embedding_from_hashes(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Deterministic L2-normalized feature-hash embedding (float32)."""
-    vec = np.zeros(dim, dtype=np.float64)
+    vec = np.zeros(EMBEDDING_DIM, dtype=np.float64)
     if len(vals):
-        idx = (vals % _U64(dim)).astype(np.int64)
+        idx = (vals % _U64(EMBEDDING_DIM)).astype(np.int64)
         sign = np.where((vals >> _U64(60)) & _U64(1) == 1, -1.0, 1.0)
         np.add.at(vec, idx, sign * counts.astype(np.float64))
         norm = np.sqrt(np.dot(vec, vec))
@@ -159,8 +155,8 @@ def feature_hash_embedding_from_hashes(
     return vec.astype(np.float32)
 
 
-def feature_hash_embedding(tokens: list[str], dim: int = EMBEDDING_DIM) -> np.ndarray:
+def feature_hash_embedding(tokens: list[str]) -> np.ndarray:
     if not tokens:
-        return np.zeros(dim, dtype=np.float32)
+        return np.zeros(EMBEDDING_DIM, dtype=np.float32)
     vals, counts = np.unique(hash_tokens(tokens), return_counts=True)
-    return feature_hash_embedding_from_hashes(vals, counts, dim)
+    return feature_hash_embedding_from_hashes(vals, counts)

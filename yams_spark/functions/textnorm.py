@@ -16,9 +16,6 @@ from __future__ import annotations
 
 import re
 
-_NON_ALNUM_RE = re.compile(r"[^0-9A-Za-z]+")
-
-
 _NORM_TABLE = bytes(
     (b + 0x20 if 0x41 <= b <= 0x5A else b)
     if (0x30 <= b <= 0x39) or (0x41 <= b <= 0x5A) or (0x61 <= b <= 0x7A)

@@ -34,7 +34,7 @@ All scalar (per-row text walks); the Spark surface is one Arrow batch.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -121,11 +121,11 @@ def extract_html_title(text: str) -> str:
     return _normalize_candidate(window[gt + 1 : close])
 
 
-def _iter_lines(text: str, max_lines: int = 200):
+def _iter_lines(text: str):
     pos = 0
     lines = 0
     n = len(text)
-    while pos < n and lines < max_lines:
+    while pos < n and lines < 200:
         end = text.find("\n", pos)
         if end < 0:
             end = n

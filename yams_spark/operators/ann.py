@@ -52,28 +52,22 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
     return ids, mat
 
 
-def sign_lsh_bands(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_bands: int = N_LSH_BANDS,
-    band_bits: int = LSH_BAND_BITS,
-    out_col: str = "lsh_band",
-) -> DataFrame:
-    """Explode each row to ``n_bands`` deterministic LSH band keys: band i
-    is ``"i:" + sign-bit string`` of embedding dims [i*band_bits,
-    (i+1)*band_bits). Axis-aligned hyperplane LSH for cosine — pure
-    Catalyst (no UDF) and byte-reproducible in DuckDB SQL."""
+def sign_lsh_bands(df: DataFrame) -> DataFrame:
+    """Explode each row to ``N_LSH_BANDS`` deterministic LSH band keys:
+    band i is ``"i:" + sign-bit string`` of embedding dims
+    [i*LSH_BAND_BITS, (i+1)*LSH_BAND_BITS). Axis-aligned hyperplane LSH for
+    cosine — pure Catalyst (no UDF) and byte-reproducible in DuckDB SQL."""
     keys = []
-    for i in range(n_bands):
+    for i in range(N_LSH_BANDS):
         bits = F.concat_ws(
             "",
             F.transform(
-                F.slice(vec_col, i * band_bits + 1, band_bits),
+                F.slice("embedding", i * LSH_BAND_BITS + 1, LSH_BAND_BITS),
                 lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0")),
             ),
         )
         keys.append(F.concat(F.lit(f"{i}:"), bits))
-    return df.withColumn(out_col, F.explode(F.array(*keys)))
+    return df.withColumn("lsh_band", F.explode(F.array(*keys)))
 
 
 def _pair_cosine(
@@ -109,18 +103,12 @@ def _pair_cosine(
     )
 
 
-def lsh_bucketed_pair_candidates(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bands: int = N_LSH_BANDS,
-    band_bits: int = LSH_BAND_BITS,
-) -> DataFrame:
+def lsh_bucketed_pair_candidates(corpus: DataFrame) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) sharing >=1 sign-LSH band —
     the scale path's candidate generation (shuffle on band key only)."""
-    b = sign_lsh_bands(
-        corpus.select(id_col, vec_col), vec_col, n_bands, band_bits
-    ).select("lsh_band", F.col(id_col).alias("id"))
+    b = sign_lsh_bands(corpus.select("vec_id", "embedding")).select(
+        "lsh_band", F.col("vec_id").alias("id")
+    )
     left = b.select("lsh_band", F.col("id").alias("id_a"))
     right = b.select("lsh_band", F.col("id").alias("id_b"))
     return (
@@ -135,20 +123,15 @@ def near_dup_pairs_bucketed(
     corpus: DataFrame,
     threshold: float = -1.0,
     n: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 5,
-    n_bands: int = N_LSH_BANDS,
-    band_bits: int = LSH_BAND_BITS,
 ) -> DataFrame:
     """LSH-bucketed near-dup pairs: candidates from shared sign bands,
     exact cosine inside buckets, filtered to >= threshold; optional global
     top-n via TakeOrderedAndProject (never a global window)."""
-    cand = lsh_bucketed_pair_candidates(corpus, id_col, vec_col, n_bands, band_bits)
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
+    cand = lsh_bucketed_pair_candidates(corpus)
+    a = corpus.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"))
+    b = corpus.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"))
     scored = _pair_cosine(
-        cand.join(a, "id_a").join(b, "id_b"), ("id_a", "id_b"), round_to
+        cand.join(a, "id_a").join(b, "id_b"), ("id_a", "id_b")
     ).where(F.col("cosine") >= threshold)
     ordered = scored.orderBy(
         F.col("cosine").desc(), F.col("id_a").asc(), F.col("id_b").asc()
@@ -161,37 +144,31 @@ def cosine_topk_bucketed(
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    round_to: int = 5,
-    n_bands: int = N_LSH_BANDS,
-    band_bits: int = LSH_BAND_BITS,
 ) -> DataFrame:
     """Approximate top-k per query over LSH candidates only; the rank
     window partitions by query_id (no global single-partition sort)."""
     qb = sign_lsh_bands(
-        queries.select(F.col(query_id_col).cast("long"), vec_col),
-        vec_col, n_bands, band_bits,
-    ).select("lsh_band", query_id_col, F.col(vec_col).alias("vec_a"))
+        queries.select(F.col("query_id").cast("long"), "embedding"),
+    ).select("lsh_band", "query_id", F.col("embedding").alias("vec_a"))
     cb = sign_lsh_bands(
-        corpus.select(id_col, vec_col), vec_col, n_bands, band_bits
-    ).select("lsh_band", id_col, F.col(vec_col).alias("vec_b"))
+        corpus.select(id_col, "embedding")
+    ).select("lsh_band", id_col, F.col("embedding").alias("vec_b"))
     cand = (
         qb.join(cb, "lsh_band")
-        .where(F.col(query_id_col) != F.col(id_col))
-        .dropDuplicates([query_id_col, id_col])
+        .where(F.col("query_id") != F.col(id_col))
+        .dropDuplicates(["query_id", id_col])
         .select(
-            F.col(query_id_col).alias("id_a"), F.col("vec_a"),
+            F.col("query_id").alias("id_a"), F.col("vec_a"),
             F.col(id_col).alias("id_b"), F.col("vec_b"),
         )
     )
-    scored = _pair_cosine(cand, ("id_a", "id_b"), round_to)
+    scored = _pair_cosine(cand, ("id_a", "id_b"))
     w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b").asc())
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .select(
-            F.col("id_a").alias(query_id_col), F.col("id_b").alias(id_col),
+            F.col("id_a").alias("query_id"), F.col("id_b").alias(id_col),
             "cosine", F.col("rk").cast("int"),
         )
     )
@@ -203,9 +180,6 @@ def cosine_topk(
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    round_to: int = 5,
     max_exact_rows: int = EXACT_MAX_CORPUS_ROWS,
     corpus_rows: int | None = None,
     lsh_max_rows: int | None = None,
@@ -244,18 +218,15 @@ def cosine_topk(
         )
 
         if ivf_pq_index is None:
-            ivf_pq_index = build_index(corpus, id_col, vec_col)
+            ivf_pq_index = build_index(corpus, id_col)
         centroids, codebooks, indexed = ivf_pq_index
         return ivf_pq_topk_multi(
             indexed, centroids, codebooks, queries, k,
             nprobe=nprobe or IVF_NPROBE, id_col=id_col,
-            query_id_col=query_id_col, vec_col=vec_col, round_to=round_to,
         )
     if max_exact_rows is not None and n_rows > max_exact_rows:
-        return cosine_topk_bucketed(
-            corpus, queries, k, id_col, query_id_col, vec_col, round_to
-        )
-    ids, mat = _collect_matrix(corpus, id_col, vec_col)
+        return cosine_topk_bucketed(corpus, queries, k, id_col)
+    ids, mat = _collect_matrix(corpus, id_col, "embedding")
     norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
     bc = spark.sparkContext.broadcast((ids, mat, norms))
 
@@ -264,13 +235,13 @@ def cosine_topk(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             qn = np.sqrt(np.einsum("ij,ij->i", q, q))
             denom = np.outer(qn, c_norms)
             denom[denom == 0.0] = np.inf
-            cos = round_half_away((q @ c_mat.T) / denom, round_to)
+            cos = round_half_away((q @ c_mat.T) / denom, 5)
             out_rows = []
-            qids = pdf[query_id_col].to_numpy()
+            qids = pdf["query_id"].to_numpy()
             for r in range(len(pdf)):
                 mask = c_ids != qids[r]
                 cand_cos = cos[r][mask]
@@ -281,14 +252,14 @@ def cosine_topk(
                     out_rows.append((int(qids[r]), int(cand_ids[j]), float(cand_cos[j]), rank))
             if out_rows:
                 yield pd.DataFrame(
-                    out_rows, columns=[query_id_col, id_col, "cosine", "rk"]
+                    out_rows, columns=["query_id", id_col, "cosine", "rk"]
                 )
 
     q_in = queries.select(
-        F.col(query_id_col).cast("long"), F.col(vec_col)
+        F.col("query_id").cast("long"), F.col("embedding")
     )
     return q_in.mapInPandas(
-        compute, schema=f"{query_id_col} long, {id_col} long, cosine double, rk int"
+        compute, schema=f"query_id long, {id_col} long, cosine double, rk int"
     )
 
 
@@ -296,9 +267,6 @@ def near_dup_pairs_topn(
     spark: SparkSession,
     corpus: DataFrame,
     n: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 5,
     max_exact_rows: int = EXACT_MAX_CORPUS_ROWS,
     corpus_rows: int | None = None,
 ) -> DataFrame:
@@ -316,13 +284,10 @@ def near_dup_pairs_topn(
         corpus.count() if max_exact_rows is not None else 0
     )
     if max_exact_rows is not None and n_rows > max_exact_rows:
-        return near_dup_pairs_bucketed(
-            corpus, threshold=-1.0, n=n, id_col=id_col, vec_col=vec_col,
-            round_to=round_to,
-        ).select(
+        return near_dup_pairs_bucketed(corpus, n=n).select(
             F.col("id_a"), F.col("id_b"), F.col("cosine")
         )
-    ids, mat = _collect_matrix(corpus, id_col, vec_col)
+    ids, mat = _collect_matrix(corpus, "vec_id", "embedding")
     norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
     bc = spark.sparkContext.broadcast((ids, mat, norms))
 
@@ -331,12 +296,12 @@ def near_dup_pairs_topn(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             qn = np.sqrt(np.einsum("ij,ij->i", q, q))
-            a_ids = pdf[id_col].to_numpy()
+            a_ids = pdf["vec_id"].to_numpy()
             denom = np.outer(qn, c_norms)
             denom[denom == 0.0] = np.inf
-            cos = round_half_away((q @ c_mat.T) / denom, round_to)
+            cos = round_half_away((q @ c_mat.T) / denom, 5)
             # keep only id_a < id_b
             keep = a_ids[:, None] < c_ids[None, :]
             ra, rb = np.nonzero(keep)
@@ -353,7 +318,7 @@ def near_dup_pairs_topn(
             if len(flat):
                 yield flat
 
-    out = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+    out = corpus.select(F.col("vec_id"), F.col("embedding")).mapInPandas(
         compute, schema="id_a long, id_b long, cosine double"
     )
     return out.orderBy(

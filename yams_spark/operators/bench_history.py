@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 
-def latency_stats(df, value_col: str = "latency_ms", group_cols=("bench",)):
+def latency_stats(df, group_cols=("bench",)):
     """LatencyStats::compute (src/search/internal_benchmark.cpp:19-74)
     for every benchmark group at once: count/min/max/mean, the
     even-count-average median, linear-interpolation p95/p99 (the
@@ -13,7 +13,7 @@ def latency_stats(df, value_col: str = "latency_ms", group_cols=("bench",)):
     keyed aggregation — one shuffle on the group key."""
     from pyspark.sql import functions as F
 
-    v = F.col(value_col).cast("double")
+    v = F.col("latency_ms").cast("double")
     pct = F.percentile(v, F.array(F.lit(0.5), F.lit(0.95), F.lit(0.99)))
     return (
         df.groupBy(*group_cols)

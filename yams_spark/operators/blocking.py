@@ -161,10 +161,6 @@ def simhash_probe_keys(
 def simhash_multiprobe_pairs(
     signatures: DataFrame,
     max_hamming: int = 3,
-    id_col: str = "url",
-    sim_col: str = "simhash64",
-    n_bands: int = 4,
-    band_bits: int = 16,
 ) -> DataFrame:
     """The web-scale SimHash blocker this module's own note called for:
     multi-probe band tables + Hamming verify (the plain 16-bit band family
@@ -172,16 +168,16 @@ def simhash_multiprobe_pairs(
     the fix is a popcount verify between banding and scoring, plus probes
     for recall past the pigeonhole bound).
 
-    Recall guarantee by pigeonhole over ``n_bands`` bands: a pair at
-    Hamming distance k has some band with <= floor(k/n_bands) differing
-    bits, so the exact band join is complete for k < n_bands, and 1-bit
-    probes (each band key also published with every single bit flipped,
-    on ONE side — bit flips are symmetric) are complete for
-    k <= 2*n_bands - 1. Candidates are verified with
+    Recall guarantee by pigeonhole over 4 bands of 16 bits: a pair at
+    Hamming distance k has some band with <= floor(k/4) differing bits,
+    so the exact band join is complete for k < 4, and 1-bit probes (each
+    band key also published with every single bit flipped, on ONE side —
+    bit flips are symmetric) are complete for k <= 7. Candidates are verified with
     ``bit_count(a XOR b) <= max_hamming`` — one cheap codegen popcount
     per candidate, so junk band collisions die before any scoring.
     Returns (id_a, id_b, hamming).
     """
+    n_bands, band_bits = 4, 16
     if max_hamming >= 2 * n_bands:
         raise ValueError(
             f"max_hamming={max_hamming} exceeds the 1-bit multi-probe recall "
@@ -189,7 +185,7 @@ def simhash_multiprobe_pairs(
             "or raise band count"
         )
     probe_bits = 0 if max_hamming < n_bands else 1
-    base = signatures.select(F.col(id_col).alias("id"), F.col(sim_col).alias("sim"))
+    base = signatures.select(F.col("url").alias("id"), F.col("simhash64").alias("sim"))
     left = base.select(
         F.col("id").alias("id_a"), F.col("sim").alias("sim_a"),
         F.explode(

@@ -329,7 +329,6 @@ def clusters_stage(
 def cluster_metrics(
     signatures: DataFrame,
     accepted_pairs: DataFrame,
-    weight_col: str = "pair_score",
     sgc_hops: int = 0,
 ) -> DataFrame:
     """Per-cluster topology metrics (topology_baseline.cpp:122-208):
@@ -367,7 +366,7 @@ def cluster_metrics(
             signatures.select(F.col("url").alias("node"), "embedding"),
             accepted_pairs.select(
                 F.col("url_a").alias("src"), F.col("url_b").alias("dst"),
-                F.col(weight_col).alias("weight"),
+                F.col("pair_score").alias("weight"),
             ),
             hops=sgc_hops,
         ).select(F.col("node").alias("url"), F.col("embedding").alias("__sm"))
@@ -382,7 +381,7 @@ def cluster_metrics(
     packed = _pack_components(
         labels,
         sig_emb.select("url", "doc_hash", "embedding"),
-        accepted_pairs.select("url_a", "url_b", F.col(weight_col).alias("w")),
+        accepted_pairs.select("url_a", "url_b", F.col("pair_score").alias("w")),
     ).where(F.size("mems") > 0)  # pair urls with no signature row have no members
 
     schema = (

@@ -36,13 +36,9 @@ from pyspark.sql import functions as F
 from yams_spark.operators.search import global_rank
 
 # per-component result caps (search_engine_config.h:369-377)
-TEXT_MAX_RESULTS = 300
 PATH_TREE_MAX_RESULTS = 150
 KG_MAX_RESULTS = 100
-VECTOR_MAX_RESULTS = 150
 ENTITY_VECTOR_MAX_RESULTS = 100
-TAG_MAX_RESULTS = 250
-METADATA_MAX_RESULTS = 200
 
 
 def tag_component(
@@ -50,14 +46,12 @@ def tag_component(
     tags: list[str],
     match_all: bool = True,
     limit: int = 100,
-    id_col: str = "doc_id",
-    tag_col: str = "tag",
 ) -> DataFrame:
     """(doc_id, source='tag', score, rank). doc_tags: one row per
     (document, tag). Deterministic order: match count desc, doc_id asc."""
-    hits = doc_tags.where(F.col(tag_col).isin(tags)).groupBy(
-        F.col(id_col).alias("doc_id")
-    ).agg(F.countDistinct(tag_col).alias("n_matched"))
+    hits = doc_tags.where(F.col("tag").isin(tags)).groupBy("doc_id").agg(
+        F.countDistinct("tag").alias("n_matched")
+    )
     if match_all:
         hits = hits.where(F.col("n_matched") == len(set(tags)))
     order = [F.col("n_matched").desc(), F.col("doc_id").asc()]
@@ -80,9 +74,6 @@ def metadata_component(
     doc_meta: DataFrame,
     filters: dict[str, str],
     limit: int = 100,
-    id_col: str = "doc_id",
-    key_col: str = "key",
-    value_col: str = "value",
 ) -> DataFrame:
     """(doc_id, source='metadata', score=1.0, rank). doc_meta: one row per
     (document, key, value); a document matches when EVERY filter key maps
@@ -98,12 +89,12 @@ def metadata_component(
         )
     cond = None
     for k, v in filters.items():
-        c = (F.col(key_col) == k) & (F.col(value_col) == v)
+        c = (F.col("key") == k) & (F.col("value") == v)
         cond = c if cond is None else (cond | c)
     hits = (
         doc_meta.where(cond)
-        .groupBy(F.col(id_col).alias("doc_id"))
-        .agg(F.countDistinct(key_col).alias("n_keys"))
+        .groupBy("doc_id")
+        .agg(F.countDistinct("key").alias("n_keys"))
         .where(F.col("n_keys") == len(filters))
     )
     order = [F.col("doc_id").asc()]
@@ -121,7 +112,6 @@ def kg_component(
     doc_entities: DataFrame,
     edges: DataFrame,
     query_nodes: list[str],
-    limit: int = KG_MAX_RESULTS,
 ) -> DataFrame:
     """(doc_id, source='kg', score, rank): per-document Jaccard overlap
     with the 1-hop neighborhood of the query's entity nodes
@@ -139,7 +129,7 @@ def kg_component(
     scored = one_hop_overlap_scores(doc_entities, query_nodes, edges)
     hits = scored.where(F.col("kg_score") > 0)
     order = [F.col("kg_score").desc(), F.col("doc_id").asc()]
-    pooled = hits.orderBy(*order).limit(limit)
+    pooled = hits.orderBy(*order).limit(KG_MAX_RESULTS)
     ranked = global_rank(pooled, order, "rk")
     return ranked.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -156,19 +146,19 @@ _SEED_STOPWORDS = frozenset(
 )
 
 
-def build_path_seeds(query: str, max_seeds: int = 8) -> list[tuple[str, str, float]]:
+def build_path_seeds(query: str) -> list[tuple[str, str, float]]:
     """Path seeds from a query (buildPathSeedsFromQuery,
     search_engine.cpp:1050-1110): [(text, kind, weight)] — the whole
     query (weight 1.0 structured / 0.82 short NL), path-ish tokens
     (0.95), content terms incl. separator-split subtokens (0.70), and
-    2-3-term content phrases (0.62); case-insensitive dedupe, first
-    ``max_seeds`` win. Pure driver-side string work on ONE query."""
+    2-3-term content phrases (0.62); case-insensitive dedupe, first 8
+    win. Pure driver-side string work on ONE query."""
     seeds: list[tuple[str, str, float]] = []
     seen: set[str] = set()
 
     def add(text: str, kind: str, weight: float) -> None:
         text = text.strip()
-        if len(text) < 2 or len(seeds) >= max_seeds:
+        if len(text) < 2 or len(seeds) >= 8:
             return
         key = text.lower()
         if key in seen:
@@ -212,31 +202,22 @@ def path_tree_component(
     docs: DataFrame,
     query: str,
     limit: int = PATH_TREE_MAX_RESULTS,
-    id_col: str = "doc_id",
-    path_col: str = "path",
-    text_col: str | None = None,
 ) -> DataFrame:
     """(doc_id, source='path_tree', score, rank): queryPathTree recast
     (search_engine.cpp:5101-5160). For each seed, candidate docs are
-    those whose lowercased path (or text, when ``text_col`` is given —
-    the reference's containsFragment FTS query spans both) contains the
-    seed; a path hit scores ``weight · clamp(0.56 + position·0.18 +
-    coverage·0.26)`` with position = 1 − offset/len(path) and coverage =
-    len(seed)/len(path); a text-only hit scores the 0.48·weight
-    fallback. Best score per doc wins across seeds (byHash dedupe).
-    ≤ max_seeds bounded unions, each a contains-filtered scan."""
+    those whose lowercased path contains the seed; a hit scores
+    ``weight · clamp(0.56 + position·0.18 + coverage·0.26)`` with
+    position = 1 − offset/len(path) and coverage = len(seed)/len(path).
+    Best score per doc wins across seeds (byHash dedupe).
+    ≤ 8 bounded unions, each a contains-filtered scan."""
     seeds = build_path_seeds(query)
     if not seeds:
         raise ValueError("no path seeds derivable from query")
-    lower_path = F.lower(F.col(path_col))
+    lower_path = F.lower(F.col("path"))
     parts = []
     for text, _kind, weight in seeds:
         seed = text.lower()
         pos_in_path = F.instr(lower_path, F.lit(seed))  # 1-based, 0 = miss
-        in_path = pos_in_path > 0
-        cond = in_path
-        if text_col is not None:
-            cond = cond | F.contains(F.lower(F.col(text_col)), F.lit(seed))
         plen = F.length(lower_path)
         position = F.lit(1.0) - (pos_in_path - 1).cast("double") / plen
         coverage = (
@@ -250,10 +231,9 @@ def path_tree_component(
             ),
             F.lit(1.0),
         )
-        score = F.when(in_path, hit_score).otherwise(F.lit(0.48 * weight))
         parts.append(
-            docs.where(cond).select(
-                F.col(id_col).alias("doc_id"), score.alias("seed_score")
+            docs.where(pos_in_path > 0).select(
+                F.col("doc_id"), hit_score.alias("seed_score")
             )
         )
     cands = parts[0]
@@ -275,23 +255,20 @@ def entity_vector_component(
     query_embedding,
     node_embeddings: DataFrame,
     node_docs: DataFrame,
-    limit: int = ENTITY_VECTOR_MAX_RESULTS,
     similarity_threshold: float = 0.0,
-    node_col: str = "node_key",
-    embedding_col: str = "embedding",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, source='entity_vector', score, rank): ANN over entity
     node embeddings (queryEntityVectorsPipeline,
     search_vector_pipeline.cpp:421-487) — cosine(query, node) for every
-    node vector, top-``limit`` nodes above the threshold, mapped to
-    their documents via ``node_docs`` (node_key, doc_id), deduped best
+    node vector, top-``ENTITY_VECTOR_MAX_RESULTS`` nodes above the
+    threshold, mapped to their documents via ``node_docs`` (node_key,
+    doc_id), deduped best
     score per document (dedupeEntityVectorRecords). Cosine is a
     sequential double-accumulation Catalyst fold (same order as DuckDB
     list_sum, so oracles reproduce it bit-for-bit)."""
     q = [float(x) for x in query_embedding]
     qarr = F.array(*[F.lit(x) for x in q])
-    emb = F.transform(F.col(embedding_col), lambda x: x.cast("double"))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     dot = F.aggregate(
         F.zip_with(emb, qarr, lambda a, b: a * b),
         F.lit(0.0),
@@ -301,23 +278,18 @@ def entity_vector_component(
     n2 = float(sum(x * x for x in q)) ** 0.5
     cos = F.when(n1 > 0, dot / (n1 * F.lit(n2))).otherwise(F.lit(0.0))
     scored_nodes = (
-        node_embeddings.select(F.col(node_col).alias("node_key"), cos.alias("cos"))
+        node_embeddings.select(F.col("node_key"), cos.alias("cos"))
         .where(F.col("cos") >= similarity_threshold)
     )
     node_order = [F.col("cos").desc(), F.col("node_key").asc()]
-    top_nodes = scored_nodes.orderBy(*node_order).limit(limit)
+    top_nodes = scored_nodes.orderBy(*node_order).limit(ENTITY_VECTOR_MAX_RESULTS)
     per_doc = (
-        top_nodes.join(
-            node_docs.select(
-                F.col(node_col).alias("node_key"), F.col(doc_col).alias("doc_id")
-            ),
-            "node_key",
-        )
+        top_nodes.join(node_docs.select("node_key", "doc_id"), "node_key")
         .groupBy("doc_id")
         .agg(F.max("cos").alias("score"))
     )
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    pooled = per_doc.orderBy(*order).limit(limit)
+    pooled = per_doc.orderBy(*order).limit(ENTITY_VECTOR_MAX_RESULTS)
     ranked = global_rank(pooled, order, "rk")
     return ranked.select(
         F.col("doc_id").cast("string").alias("doc_id"),

@@ -465,27 +465,13 @@ def validate_compression_header_py(h: dict) -> bool:
     return True
 
 
-def validate_compression_header_col(
-    magic="magic", version="version", algorithm_id="algorithm_id",
-    level="level", uncompressed_size="uncompressed_size",
-    compressed_size="compressed_size",
-):
+def validate_compression_header_col():
     """validate() as one Catalyst predicate over a parsed-header table
     (the shape a 100 TB store audit scans)."""
-    m = F.col(magic) if isinstance(magic, str) else magic
-    v = F.col(version) if isinstance(version, str) else version
-    a = F.col(algorithm_id) if isinstance(algorithm_id, str) else algorithm_id
-    lv = F.col(level) if isinstance(level, str) else level
-    us = (
-        F.col(uncompressed_size)
-        if isinstance(uncompressed_size, str)
-        else uncompressed_size
-    )
-    cs = (
-        F.col(compressed_size)
-        if isinstance(compressed_size, str)
-        else compressed_size
-    )
+    m, v, a, lv, us, cs = (F.col(c) for c in (
+        "magic", "version", "algorithm_id", "level", "uncompressed_size",
+        "compressed_size",
+    ))
     # shiftright = exact integer /2 (the C++ overflow-safe division);
     # floor(cs/2.0) would lose precision past 2^53 on corrupt headers.
     size_ok = (a == 0) | (
@@ -505,13 +491,7 @@ def validate_compression_header_col(
 # ---------------------------------------------------------------------------
 
 
-def compression_health_alerts(
-    stats: DataFrame,
-    algorithm_col: str = "algorithm",
-    ratio_threshold: float = 0.1,
-    error_rate_threshold: float = 0.05,
-    performance_threshold: float = 100.0,
-) -> DataFrame:
+def compression_health_alerts(stats: DataFrame) -> DataFrame:
     """checkAlgorithmHealth (compression_monitor.cpp:101-153) over a
     per-algorithm counter table at once (MonitorConfig defaults
     compression_monitor.h:19-28). Stats formulas from
@@ -520,6 +500,7 @@ def compression_health_alerts(
     time, :70-76); error rate over compress+decompress op counts.
     Emits one alert row per fired gate — the exact three alert types
     with the reference's message strings. Pure Catalyst explode."""
+    ratio_threshold, error_rate_threshold, performance_threshold = 0.1, 0.05, 100.0
     ratio = F.when(
         F.col("bytes_output") > 0,
         F.col("bytes_input").cast("double")
@@ -538,7 +519,7 @@ def compression_health_alerts(
         (F.col("bytes_input").cast("double") / 1024.0 / 1024.0)
         / (F.col("compression_time_ms").cast("double") / 1000.0),
     ).otherwise(F.lit(0.0))
-    algo = F.col(algorithm_col)
+    algo = F.col("algorithm")
     alerts = F.array(
         F.when(
             (ratio > 0) & (ratio < F.lit(ratio_threshold)),
@@ -579,7 +560,7 @@ def compression_health_alerts(
             "_a", F.explode(F.filter(alerts, lambda a: a.isNotNull()))
         )
         .select(
-            algorithm_col,
+            "algorithm",
             F.col("_a.alert_type").alias("alert_type"),
             F.col("_a.message").alias("message"),
             F.col("_a.value").alias("value"),

@@ -306,8 +306,6 @@ _WEAK_SQL = "array(" + ", ".join(f"'{w}'" for w in sorted(WEAK_TOKENS)) + ")"
 def fallback_concepts_df(
     queries: DataFrame,
     max_concepts: int = 8,
-    id_col: str = "query_id",
-    query_col: str = "query",
     idf_df: DataFrame | None = None,
 ) -> DataFrame:
     """Dataflow twin of ``generate_fallback_query_concepts`` — one batch
@@ -334,9 +332,7 @@ def fallback_concepts_df(
     """
     max_phrases = max_concepts
     base = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(query_col).alias("query")
-        )
+        queries.select("query_id", "query")
         .withColumn("origs", F.expr("regexp_extract_all(query, '[A-Za-z0-9]+', 0)"))
         .withColumn("norms", F.expr("transform(origs, x -> lower(x))"))
         .withColumn("n", F.size("origs"))
@@ -560,7 +556,6 @@ def enrich_with_fallback_concepts(
     query: str,
     concepts: list[QueryConcept],
     max_concepts: int,
-    idf_by_token: dict[str, float] | None = None,
 ) -> list[QueryConcept]:
     """concept_resolver.cpp:11-53 — append deduped fallback concepts
     behind the extractor's, keyed on ``normalized_text|type``, up to
@@ -568,9 +563,7 @@ def enrich_with_fallback_concepts(
     merged = list(concepts)
     if max_concepts == 0 or len(merged) >= max_concepts:
         return merged
-    fallback = generate_fallback_query_concepts(
-        query, idf_by_token if idf_by_token else None, max_concepts
-    )
+    fallback = generate_fallback_query_concepts(query, max_concepts=max_concepts)
     if not fallback:
         return merged
     seen = {

@@ -43,7 +43,6 @@ _ENTITY_RE = re.compile(ENTITY_PATTERN)
 
 def extract_query_concepts(
     query: str,
-    min_confidence: float = CONCEPT_MIN_CONFIDENCE,
     max_count: int = CONCEPT_MAX_COUNT,
 ) -> list[str]:
     """Lowercased, deduped concept terms from ONE query string
@@ -58,7 +57,7 @@ def extract_query_concepts(
         if len(text) < 3:
             continue
         conf = min(1.0, 0.5 + 0.25 * len(text.split()))
-        if conf < min_confidence:
+        if conf < CONCEPT_MIN_CONFIDENCE:
             continue
         low = text.lower()
         if low in seen:
@@ -73,7 +72,6 @@ def extract_query_concepts(
 def resolve_query_concepts(
     query: str,
     max_concepts: int = CONCEPT_MAX_COUNT,
-    idf_by_token: dict[str, float] | None = None,
 ) -> list[str]:
     """Extractor concepts enriched with the fallback generator
     (``concept_resolver.cpp:11-53``): the extractor's concepts come
@@ -99,7 +97,7 @@ def resolve_query_concepts(
         )
         for t in extract_query_concepts(query, max_count=max_concepts)
     ]
-    merged = enrich_with_fallback_concepts(query, base, max_concepts, idf_by_token)
+    merged = enrich_with_fallback_concepts(query, base, max_concepts)
     out: list[str] = []
     seen: set[str] = set()
     for c in merged:
@@ -113,30 +111,26 @@ def resolve_query_concepts(
 def apply_concept_boost(
     results: DataFrame,
     concepts: list[str],
-    id_col: str = "doc_id",
     score_col: str = "score",
-    snippet_col: str = "snippet",
     name_col: str | None = None,
-    weight: float = CONCEPT_BOOST_WEIGHT,
-    max_boost: float = CONCEPT_MAX_BOOST,
     max_scan: int = CONCEPT_MAX_SCAN_RESULTS,
 ) -> DataFrame:
     """Boosted (id, score) + re-rank (applyConceptBoost,
     concept_boost.cpp:33-138). The top ``max_scan`` results by incoming
     (score desc, id asc) are scanned: match count = number of distinct
     concept terms contained in the lowercased snippet OR name; desired
-    boost ``weight × count`` is granted top-rank-first until the
-    ``max_boost`` budget runs dry (prefix-sum clamp); scores multiply by
-    ``1 + applied`` and the full set re-sorts. Rows beyond the scan
+    boost ``CONCEPT_BOOST_WEIGHT × count`` is granted top-rank-first until
+    the ``CONCEPT_MAX_BOOST`` budget runs dry (prefix-sum clamp); scores
+    multiply by ``1 + applied`` and the full set re-sorts. Rows beyond the scan
     window pass through unboosted, exactly like the reference."""
     terms = sorted({c.lower() for c in concepts if c})
     if not terms:
         raise ValueError("apply_concept_boost requires concept terms")
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
+    order = [F.col(score_col).desc(), F.col("doc_id").asc()]
     pool = results.orderBy(*order).limit(max_scan)
-    rest = results.join(pool.select(id_col), id_col, "left_anti")
+    rest = results.join(pool.select("doc_id"), "doc_id", "left_anti")
 
-    hay = F.lower(F.col(snippet_col))
+    hay = F.lower(F.col("snippet"))
     if name_col is not None:
         matches = sum(
             (
@@ -148,7 +142,7 @@ def apply_concept_boost(
     else:
         matches = sum(F.contains(hay, F.lit(t)).cast("int") for t in terms)
     ranked = global_rank(pool, order, "rk").withColumn(
-        "desired", F.lit(float(weight)) * matches
+        "desired", F.lit(CONCEPT_BOOST_WEIGHT) * matches
     )
     # prefix sums over the bounded pool: triangular self-join instead of
     # a single-partition window (CLAUDE.md invariant); <= max_scan² pairs
@@ -165,13 +159,13 @@ def apply_concept_boost(
         ranked.join(cum, "rk")
         .withColumn(
             "applied",
-            F.least(F.col("cum"), F.lit(float(max_boost)))
-            - F.least(F.col("cum") - F.col("desired"), F.lit(float(max_boost))),
+            F.least(F.col("cum"), F.lit(CONCEPT_MAX_BOOST))
+            - F.least(F.col("cum") - F.col("desired"), F.lit(CONCEPT_MAX_BOOST)),
         )
         .withColumn(score_col, F.col(score_col) * (1.0 + F.col("applied")))
     )
     out = boosted.select(*[c for c in results.columns]).unionByName(
         rest.select(*[c for c in results.columns])
     )
-    final_order = [F.col(score_col).desc(), F.col(id_col).asc()]
+    final_order = [F.col(score_col).desc(), F.col("doc_id").asc()]
     return global_rank(out, final_order, "rank")

@@ -46,16 +46,14 @@ def symspell_match(
     vocab: DataFrame,
     queries: DataFrame,
     max_distance: int = 1,
-    vocab_term_col: str = "term",
-    query_term_col: str = "query_term",
     freq_col: str | None = "collection_frequency",
 ) -> DataFrame:
     """(query_term, term, distance[, frequency]) for all vocab terms within
     ``max_distance`` edits, ordered by (distance asc, frequency desc, term)
     per symspell_search.cpp:84-94."""
-    v = delete_variants(vocab.select(vocab_term_col), vocab_term_col, max_distance)
+    v = delete_variants(vocab.select("term"), "term", max_distance)
     q = delete_variants(
-        queries.select(F.col(query_term_col).alias("term")), "term", max_distance
+        queries.select(F.col("query_term").alias("term")), "term", max_distance
     ).select(F.col("term").alias("query_term"), "variant")
     cand = q.join(v, "variant").select("query_term", "term").distinct()
     verified = cand.withColumn(
@@ -64,7 +62,7 @@ def symspell_match(
     order = [F.col("distance").asc()]
     if freq_col:
         freq = vocab.select(
-            F.col(vocab_term_col).alias("vterm"), F.col(freq_col).alias("frequency")
+            F.col("term").alias("vterm"), F.col(freq_col).alias("frequency")
         )
         verified = verified.join(freq, verified["term"] == freq["vterm"]).drop("vterm")
         order.append(F.col("frequency").desc())

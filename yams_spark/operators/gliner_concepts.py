@@ -131,11 +131,6 @@ def canonicalize_entity_type_py(raw_type: str) -> str:
 def gliner_query_concepts(
     entities: DataFrame,
     requested_types: list[str] | None = None,
-    query_col: str = "query_id",
-    text_col: str = "entity_text",
-    type_col: str = "entity_type",
-    conf_col: str = "confidence",
-    idx_col: str = "entity_idx",
 ) -> DataFrame:
     """The full post-extraction cascade for every query at once.
 
@@ -153,9 +148,9 @@ def gliner_query_concepts(
     else:
         requested = {canonicalize_entity_type_py(t) for t in requested_types}
 
-    text = trim_collapse_punct(F.coalesce(F.col(text_col), F.lit("")))
+    text = trim_collapse_punct(F.coalesce(F.col("entity_text"), F.lit("")))
     ctype = canonicalize_entity_type(
-        F.coalesce(F.col(type_col), F.lit(""))
+        F.coalesce(F.col("entity_type"), F.lit(""))
     )
     d = entities.withColumn("_text", text).withColumn("_type", ctype)
     norm = _normalize_key(F.col("_text"))
@@ -171,7 +166,7 @@ def gliner_query_concepts(
         | (~has_alpha & (tl <= 2))
     )
     kept = d.where(
-        (F.col(conf_col) >= F.lit(MIN_CONFIDENCE))
+        (F.col("confidence") >= F.lit(MIN_CONFIDENCE))
         & (F.col("_text") != "")
         & ~noise
     )
@@ -180,8 +175,8 @@ def gliner_query_concepts(
     kept = kept.withColumn(
         "_key", F.concat(F.col("_type"), F.lit("|"), norm)
     )
-    w = Window.partitionBy(query_col, "_key").orderBy(
-        F.col(conf_col).desc(), F.col(idx_col).asc()
+    w = Window.partitionBy("query_id", "_key").orderBy(
+        F.col("confidence").desc(), F.col("entity_idx").asc()
     )
     best = (
         kept.withColumn("_dup", F.row_number().over(w))
@@ -191,8 +186,8 @@ def gliner_query_concepts(
     # (conf desc, text asc) is the C++ comparator (:181-187); std::sort
     # leaves equal (conf, text) pairs unordered, so the type column is
     # the deterministic third key here (stated divergence).
-    rank_w = Window.partitionBy(query_col).orderBy(
-        F.col(conf_col).desc(), F.col("_text").asc(), F.col("_type").asc()
+    rank_w = Window.partitionBy("query_id").orderBy(
+        F.col("confidence").desc(), F.col("_text").asc(), F.col("_type").asc()
     )
     return (
         best.withColumn("rank", F.row_number().over(rank_w))

@@ -22,8 +22,6 @@ def bfs_traverse(
     edges: DataFrame,
     seeds: DataFrame,
     max_depth: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
     relation_col: str | None = None,
     relations: list[str] | None = None,
     per_depth_cap: int | None = None,
@@ -35,8 +33,8 @@ def bfs_traverse(
     e = edges
     if relation_col is not None and relations:
         e = e.where(F.col(relation_col).isin(relations))
-    bidir = e.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")).unionAll(
-        e.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
+    bidir = e.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionAll(
+        e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
     ).distinct()
 
     visited = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().withColumn(
@@ -64,15 +62,13 @@ def one_hop_overlap_scores(
     doc_entities: DataFrame,
     query_nodes: list[str],
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Jaccard overlap between each document's entity set and the 1-hop
     neighborhood (incl. seeds) of the query nodes
     (kg_scorer_simple.cpp:132-243). doc_entities: (doc_id, entity)."""
     spark = doc_entities.sparkSession
     seeds = spark.createDataFrame([(n,) for n in query_nodes], ["node"])
-    hood = bfs_traverse(edges, seeds, max_depth=1, src_col=src_col, dst_col=dst_col)
+    hood = bfs_traverse(edges, seeds, max_depth=1)
     hood_set = hood.select(F.col("node").alias("entity")).distinct()
     n_hood = hood_set.count()
     doc_sizes = doc_entities.groupBy("doc_id").agg(

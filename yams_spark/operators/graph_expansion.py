@@ -27,7 +27,7 @@ SymSpell fuzzy resolution with the reference's 0.8 score discount
 miss test is a bounded collect of ≤96 scalars, so when every surface
 hits exactly the fuzzy branch contributes zero extra work or plan nodes.
 
-Scale shape: the query side is one bounded seed list (≤ max_seeds rows
+Scale shape: the query side is one bounded seed list (≤ DEFAULT_MAX_SEEDS rows
 after an orderBy().limit()); every join fans out from it, so the whole
 expansion is broadcast-sized. The only corpus-scale work is the final
 posting-list / embedding scan the components already pay.
@@ -70,11 +70,11 @@ DEFAULT_MAX_SEEDS = 8
 DEFAULT_MAX_NEIGHBORS = 16
 
 
-def kg_query_tokens(query: str, max_aliases: int = 96) -> list[str]:
+def kg_query_tokens(query: str) -> list[str]:
     """Query surfaces for alias resolution (tokenizeKgQuery,
     graph_expansion.cpp:143-241): lowercase alnum tokens >= 2 chars
     (dedup, `-/_` also split), 4..2-gram phrases first, then the single
-    tokens, capped at ``max_aliases``. Driver-side: ONE query string."""
+    tokens, capped at 96. Driver-side: ONE query string."""
     raw: list[str] = []
     current = []
     for ch in query:
@@ -99,11 +99,11 @@ def kg_query_tokens(query: str, max_aliases: int = 96) -> list[str]:
             if "phrase:" + phrase not in seen:
                 seen.add("phrase:" + phrase)
                 out.append(phrase)
-            if len(out) >= max_aliases:
+            if len(out) >= 96:
                 return out
     for tok in filtered:
         out.append(tok)
-        if len(out) >= max_aliases:
+        if len(out) >= 96:
             break
     return out
 
@@ -136,20 +136,18 @@ def graph_expansion_seeds(
     query: str,
     kg_aliases: DataFrame,
     kg_nodes: DataFrame,
-    max_seeds: int = DEFAULT_MAX_SEEDS,
     fuzzy_max_distance: int = FUZZY_MAX_DISTANCE,
-    aliases_per_term: int = max(4, DEFAULT_MAX_TERMS),
 ) -> DataFrame:
     """(node_key, seed_score): the expansion's seed nodes — exact alias
     hits of the query surfaces, scored confidence × node-type weight,
-    top ``max_seeds`` (score desc, node asc). Shared by the term
+    top ``DEFAULT_MAX_SEEDS`` (score desc, node asc). Shared by the term
     expansion (graph_text) and the seed-centroid vector leg
     (graph_vector).
 
     Query surfaces with NO exact alias hit fall back to SymSpell fuzzy
     resolution (graph_expansion.cpp:403-414): candidate aliases within
     ``fuzzy_max_distance`` edits (delete-variant join + Levenshtein
-    verify, operators/fuzzy.py), capped at ``aliases_per_term`` per
+    verify, operators/fuzzy.py), capped at ``max(4, DEFAULT_MAX_TERMS)`` per
     surface ordered (distance asc, confidence desc, node asc) — the
     reference's aliasesPerTerm = max(4, maxTerms) — and scored with the
     0.8 fuzzy discount. The exact/miss split is decided from a bounded
@@ -203,7 +201,7 @@ def graph_expansion_seeds(
                         )
                     ),
                 )
-                .where(F.col("_rk") <= aliases_per_term)
+                .where(F.col("_rk") <= max(4, DEFAULT_MAX_TERMS))
                 .join(ntype, "node_key")
                 .select(
                     "node_key",
@@ -220,7 +218,7 @@ def graph_expansion_seeds(
     seeds = seeds.groupBy("node_key").agg(F.max("seed_score").alias("seed_score"))
     return seeds.orderBy(
         F.col("seed_score").desc(), F.col("node_key").asc()
-    ).limit(max_seeds)
+    ).limit(DEFAULT_MAX_SEEDS)
 
 
 def graph_expansion_terms(
@@ -228,10 +226,6 @@ def graph_expansion_terms(
     kg_aliases: DataFrame,
     kg_nodes: DataFrame,
     kg_edges: DataFrame,
-    max_terms: int = DEFAULT_MAX_TERMS,
-    max_seeds: int = DEFAULT_MAX_SEEDS,
-    max_neighbors: int = DEFAULT_MAX_NEIGHBORS,
-    aliases_per_node: int = 8,
 ) -> DataFrame:
     """(term, score): KG expansion terms for one query
     (generateGraphExpansionTerms, graph_expansion.cpp:324-480).
@@ -240,11 +234,11 @@ def graph_expansion_terms(
     (node_key, label, type, ...); kg_edges: (src, dst, relation, weight)
     over node keys. Seeds = exact alias hits of the query surfaces,
     scored ``alias_confidence × node_type_weight`` (term weight 1.0),
-    top ``max_seeds`` (score desc, node asc). Terms = seed + 1-hop
+    top ``DEFAULT_MAX_SEEDS`` (score desc, node asc). Terms = seed + 1-hop
     neighbor alias surfaces, each ``seed_score × node_weight [×
     relation_weight × clamp(edge_weight, .1, 1)] × clamp(conf, .2, 1) ×
-    source_weight``; >= 3 chars, max per term, top ``max_terms``."""
-    top_seeds = graph_expansion_seeds(query, kg_aliases, kg_nodes, max_seeds)
+    source_weight``; >= 3 chars, max per term, top ``DEFAULT_MAX_TERMS``."""
+    top_seeds = graph_expansion_seeds(query, kg_aliases, kg_nodes)
     ntype = kg_nodes.select(
         "node_key",
         _map_expr(F.col("type"), NODE_TYPE_WEIGHTS, 0.60).alias("node_w"),
@@ -270,7 +264,7 @@ def graph_expansion_terms(
             "src",
         )
         .withColumn("rk", F.row_number().over(nb_w))
-        .where(F.col("rk") <= max_neighbors)
+        .where(F.col("rk") <= DEFAULT_MAX_NEIGHBORS)
         .select("node_key", F.col("seed_score").alias("base"), "factor")
     )
     contrib = self_contrib.unionByName(neighbors).join(ntype, "node_key").where(
@@ -285,7 +279,7 @@ def graph_expansion_terms(
     )
     node_aliases = (
         al.withColumn("ark", F.row_number().over(a_w))
-        .where(F.col("ark") <= aliases_per_node)
+        .where(F.col("ark") <= 8)
         .select(
             "node_key", "alias_norm",
             (
@@ -304,31 +298,29 @@ def graph_expansion_terms(
         .agg(F.max("s").alias("score"))
     )
     order = [F.col("score").desc(), F.col("term").asc()]
-    return terms.orderBy(*order).limit(max_terms)
+    return terms.orderBy(*order).limit(DEFAULT_MAX_TERMS)
 
 
 def graph_text_component(
     postings: DataFrame,
     expansion_terms: list[str],
     limit: int = 300,
-    penalty: float = GRAPH_FTS_PENALTY,
-    min_admission: float = GRAPH_TEXT_MIN_ADMISSION,
 ) -> DataFrame:
     """(doc_id, source='graph_text', score, rank): the expanded-term FTS
     re-query (search_lexical_pipeline.cpp:50-66): disjunctive BM25 over
     the expansion terms, range-normalized like the text component, score
-    × ``penalty`` (0.78, search_engine_config.h:366), rows under the
+    × ``GRAPH_FTS_PENALTY`` (0.78, search_engine_config.h:366), rows under the
     admission floor dropped (:365). ``expansion_terms`` is the bounded
     driver-side term list collected from ``graph_expansion_terms`` — at
-    most max_terms scalars, the same class of bounded collect as corpus
+    most DEFAULT_MAX_TERMS scalars, the same class of bounded collect as corpus
     stats."""
     if not expansion_terms:
         raise ValueError("graph_text_component requires expansion terms")
     lex = bm25_scores(postings, sorted(set(expansion_terms)), match_all=False)
     lex = normalize_bm25(lex.withColumn("bm25", -F.col("bm25")))
     scored = lex.select(
-        "doc_id", (F.col("norm_score") * F.lit(float(penalty))).alias("score")
-    ).where(F.col("score") >= min_admission)
+        "doc_id", (F.col("norm_score") * F.lit(GRAPH_FTS_PENALTY)).alias("score")
+    ).where(F.col("score") >= GRAPH_TEXT_MIN_ADMISSION)
     order = [F.col("score").desc(), F.col("doc_id").asc()]
     pooled = scored.orderBy(*order).limit(limit)
     ranked = global_rank(pooled, order, "rk")
@@ -344,12 +336,9 @@ def graph_vector_component(
     seed_nodes: DataFrame,
     node_embeddings: DataFrame,
     doc_embeddings: DataFrame,
-    limit: int = 150,
-    penalty: float = GRAPH_VECTOR_PENALTY,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(doc_id, source='graph_vector', score, rank): seed-node centroid →
-    cosine over document embeddings × ``penalty`` (0.82,
+    cosine over document embeddings × ``GRAPH_VECTOR_PENALTY`` (0.82,
     search_engine_config.h:367) — the expansion-seeded vector search.
     seed_nodes: (node_key, seed_score); node_embeddings: (node_key,
     embedding). The centroid is a seed-score-weighted mean computed as a
@@ -388,13 +377,13 @@ def graph_vector_component(
     scored = (
         doc_embeddings.crossJoin(F.broadcast(centroid))
         .select(
-            F.col(id_col).alias("doc_id"),
-            (cos * F.lit(float(penalty))).alias("score"),
+            F.col("vec_id").alias("doc_id"),
+            (cos * F.lit(GRAPH_VECTOR_PENALTY)).alias("score"),
         )
         .where(F.col("score") > 0)
     )
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    pooled = scored.orderBy(*order).limit(limit)
+    pooled = scored.orderBy(*order).limit(150)
     ranked = global_rank(pooled, order, "rk")
     return ranked.select(
         F.col("doc_id").cast("string").alias("doc_id"),

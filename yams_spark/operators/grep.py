@@ -201,16 +201,14 @@ def grep_lines_context(
 def snippet_expr(
     tokens_col: Column | str,
     term: str,
-    window: int = 16,
-    open_tag: str = "<b>",
-    close_tag: str = "</b>",
-    ellipsis: str = "...",
 ) -> Column:
     """FTS5-style ``snippet(fts, col, '<b>', '</b>', '...', 16)`` over a
     tokenized column: ``window`` tokens starting at most window/2-1 before
     the first occurrence of ``term``, occurrences wrapped in tags, joined
     by ' ', with the ellipsis affixed on whichever side the window clips
     (exactly the FTS5 contract, search_ops.cpp:191). NULL when absent."""
+    # FTS5 snippet(fts, col, '<b>', '</b>', '...', 16)
+    window, open_tag, close_tag, ellipsis = 16, "<b>", "</b>", "..."
     toks = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
     pos = F.array_position(toks, term)  # 1-based, 0 if absent
     start = F.greatest(pos - (window // 2 - 1), F.lit(1))
@@ -232,10 +230,6 @@ def snippet_expr(
 def snippet_multi_expr(
     tokens_col: Column | str,
     terms: list[str],
-    window: int = 16,
-    open_tag: str = "<b>",
-    close_tag: str = "</b>",
-    ellipsis: str = "...",
 ) -> Column:
     """FTS5's real snippet window selection over ALL query terms
     (search_ops.cpp:191; FTS5 snippet() scores candidate windows and picks
@@ -245,6 +239,8 @@ def snippet_multi_expr(
     occurrence is wrapped; ellipses affixed where the window clips. Pure
     Catalyst array ops — the scorer is an array_max over per-candidate
     structs, reproducible in DuckDB list SQL. NULL when no term occurs."""
+    # FTS5 snippet(fts, col, '<b>', '</b>', '...', 16)
+    window, open_tag, close_tag, ellipsis = 16, "<b>", "</b>", "..."
     toks = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
     terms_arr = F.array(*[F.lit(t) for t in terms])
     n = F.size(toks)
@@ -287,21 +283,15 @@ def snippet_multi_expr(
     return F.when(F.size(hitpos) > 0, F.concat(pre, body, post))
 
 
-def with_snippets_multi(
-    docs: DataFrame,
-    terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 16,
-) -> DataFrame:
+def with_snippets_multi(docs: DataFrame, terms: list[str]) -> DataFrame:
     """(id, snippet) using the multi-term best-coverage window — the
     decoration column for multi-term queries (FTS5 snippet() contract)."""
     toks = F.expr(
-        f"filter(split(lower(regexp_replace({text_col}, '[^0-9a-zA-Z]+', ' ')), ' '), "
+        "filter(split(lower(regexp_replace(text, '[^0-9a-zA-Z]+', ' ')), ' '), "
         "x -> x <> '')"
     )
     out = docs.select(
-        F.col(id_col), snippet_multi_expr(toks, terms, window).alias("snippet")
+        F.col("doc_id"), snippet_multi_expr(toks, terms).alias("snippet")
     )
     return out.where(F.col("snippet").isNotNull())
 
@@ -406,12 +396,6 @@ def with_snippets_phrase(
     docs: DataFrame,
     phrase: list[str],
     terms: list[str] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 16,
-    open_tag: str = "<b>",
-    close_tag: str = "</b>",
-    ellipsis: str = "...",
 ) -> DataFrame:
     """(id, snippet) with phrase-unit highlighting — the decoration column
     for quoted-phrase queries. Same semantics as ``snippet_phrase_expr``
@@ -425,6 +409,8 @@ def with_snippets_phrase(
     CollapseProject from merging the stages back. A scan-level substring
     prefilter (phrase head or any loose term) prunes non-matching docs
     before any tokenization."""
+    # FTS5 snippet(fts, col, '<b>', '</b>', '...', 16)
+    window, open_tag, close_tag, ellipsis = 16, "<b>", "</b>", "..."
     terms = terms or []
     m = len(phrase)
     if m < 1:
@@ -440,15 +426,15 @@ def with_snippets_phrase(
     # loose term as a substring (post-lower) — pushes as a Contains filter
     pre = None
     for needle in [phrase[0]] + terms:
-        c = F.contains(F.lower(F.col(text_col)), F.lit(needle))
+        c = F.contains(F.lower(F.col("text")), F.lit(needle))
         pre = c if pre is None else (pre | c)
     staged = docs.where(pre) if pre is not None else docs
 
     toks = F.expr(
-        f"filter(split(lower(regexp_replace({text_col}, '[^0-9a-zA-Z]+', ' ')), ' '), "
+        "filter(split(lower(regexp_replace(text, '[^0-9a-zA-Z]+', ' ')), ' '), "
         "x -> x <> '')"
     )
-    s0 = staged.select(F.col(id_col), toks.alias("__tk"), F.size(toks).alias("__n"))
+    s0 = staged.select(F.col("doc_id"), toks.alias("__tk"), F.size(toks).alias("__n"))
 
     def is_start(i):
         cond = None
@@ -461,14 +447,14 @@ def with_snippets_phrase(
         F.col("__n") >= m,
         F.filter(F.sequence(F.lit(1), F.col("__n") - m + 1), is_start),
     ).otherwise(F.expr("array()").cast("array<int>"))
-    s1 = s0.select(id_col, "__tk", "__n", starts.alias("__starts"))
+    s1 = s0.select("doc_id", "__tk", "__n", starts.alias("__starts"))
 
     span = F.array_distinct(
         F.flatten(
             F.transform(F.col("__starts"), lambda p: F.sequence(p, p + (m - 1)))
         )
     )
-    s2 = s1.select(id_col, "__tk", "__n", "__starts", span.alias("__span"))
+    s2 = s1.select("doc_id", "__tk", "__n", "__starts", span.alias("__span"))
 
     loose = F.when(
         F.col("__n") > 0,
@@ -479,7 +465,7 @@ def with_snippets_phrase(
         ),
     ).otherwise(F.expr("array()").cast("array<int>"))
     s3 = s2.select(
-        id_col, "__tk", "__n", "__starts", "__span", loose.alias("__loose")
+        "doc_id", "__tk", "__n", "__starts", "__span", loose.alias("__loose")
     ).where((F.size(F.col("__starts")) + F.size(F.col("__loose"))) > 0)
 
     max_start = F.greatest(F.col("__n") - window + 1, F.lit(1))
@@ -490,7 +476,7 @@ def with_snippets_phrase(
         )
     )
     s4 = s3.select(
-        id_col, "__tk", "__n", "__starts", "__span", "__loose",
+        "doc_id", "__tk", "__n", "__starts", "__span", "__loose",
         cands.alias("__cands"),
     )
 
@@ -511,7 +497,7 @@ def with_snippets_phrase(
 
     best_s = -F.array_max(F.transform(F.col("__cands"), score))["negs"]
     s5 = s4.select(
-        id_col, "__tk", "__n", "__starts", "__span", "__loose",
+        "doc_id", "__tk", "__n", "__starts", "__span", "__loose",
         best_s.alias("__s"),
     )
 
@@ -521,11 +507,11 @@ def with_snippets_phrase(
         & (p + (m - 1) <= F.col("__s") + window - 1),
     )
     s6 = s5.select(
-        id_col, "__tk", "__n", "__span", "__s", opens.alias("__opens")
+        "doc_id", "__tk", "__n", "__span", "__s", opens.alias("__opens")
     )
     closes = F.transform(F.col("__opens"), lambda p: p + (m - 1))
     s7 = s6.select(
-        id_col, "__tk", "__n", "__span", "__s", "__opens",
+        "doc_id", "__tk", "__n", "__span", "__s", "__opens",
         closes.alias("__closes"),
     )
 
@@ -551,22 +537,16 @@ def with_snippets_phrase(
     pre_e = F.when(F.col("__s") > 1, F.lit(ellipsis)).otherwise(F.lit(""))
     post_e = F.when(e < F.col("__n"), F.lit(ellipsis)).otherwise(F.lit(""))
     return s7.select(
-        F.col(id_col), F.concat(pre_e, body, post_e).alias("snippet")
+        F.col("doc_id"), F.concat(pre_e, body, post_e).alias("snippet")
     )
 
 
-def with_snippets(
-    docs: DataFrame,
-    term: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 16,
-) -> DataFrame:
+def with_snippets(docs: DataFrame, term: str) -> DataFrame:
     """(id, snippet) for documents containing ``term`` after tokenize-lower
     (the search-result decoration column, search_ops.cpp:191)."""
     toks = F.expr(
-        f"filter(split(lower(regexp_replace({text_col}, '[^0-9a-zA-Z]+', ' ')), ' '), "
+        "filter(split(lower(regexp_replace(text, '[^0-9a-zA-Z]+', ' ')), ' '), "
         "x -> x <> '')"
     )
-    out = docs.select(F.col(id_col), snippet_expr(toks, term, window).alias("snippet"))
+    out = docs.select(F.col("doc_id"), snippet_expr(toks, term).alias("snippet"))
     return out.where(F.col("snippet").isNotNull())

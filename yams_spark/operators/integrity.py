@@ -38,8 +38,6 @@ SCHEDULING_STRATEGIES = ("by_age", "by_size", "by_failures", "by_access", "balan
 def validate_chunks(
     manifests: DataFrame,
     store: DataFrame,
-    hash_col: str = "chunk_hash",
-    data_col: str = "data",
 ) -> DataFrame:
     """manifests (file_hash, chunk_hash, offset, size) × store
     (chunk_hash, data) → per-chunk validation rows
@@ -48,20 +46,20 @@ def validate_chunks(
     'missing' when the store has no row. One left join + a JVM-side
     sha2 — no Python in the loop."""
     st = store.select(
-        F.col(hash_col).alias("_expected"),
-        F.sha2(F.col(data_col).cast("binary"), 256).alias("_actual"),
+        F.col("chunk_hash").alias("_expected"),
+        F.sha2(F.col("data").cast("binary"), 256).alias("_actual"),
     )
     return (
         manifests.join(
-            st, manifests[hash_col] == st["_expected"], "left"
+            st, manifests["chunk_hash"] == st["_expected"], "left"
         )
         .select(
             "file_hash",
-            hash_col,
+            "chunk_hash",
             "offset",
             "size",
             F.when(F.col("_actual").isNull(), F.lit("missing"))
-            .when(F.col("_actual") == F.col(hash_col), F.lit("valid"))
+            .when(F.col("_actual") == F.col("chunk_hash"), F.lit("valid"))
             .otherwise(F.lit("corrupt"))
             .alias("status"),
         )
@@ -101,8 +99,6 @@ def integrity_report(validated: DataFrame) -> DataFrame:
 def repair_chunks(
     validated: DataFrame,
     repair_source: DataFrame,
-    hash_col: str = "chunk_hash",
-    data_col: str = "data",
 ) -> DataFrame:
     """Repair attempt for every failed chunk (repair_manager.cpp:116-170
     ``attemptRepair``: try strategies in order — backup / P2P / parity /
@@ -118,19 +114,19 @@ def repair_chunks(
     join + JVM-side sha2; no per-chunk callbacks."""
     failed = validated.where(F.col("status") != "valid")
     cand = repair_source.select(
-        F.col(hash_col).alias("_rhash"),
-        F.sha2(F.col(data_col).cast("binary"), 256).alias("_ractual"),
+        F.col("chunk_hash").alias("_rhash"),
+        F.sha2(F.col("data").cast("binary"), 256).alias("_ractual"),
         F.col("strategy").alias("_rstrategy"),
         F.col("priority").alias("_rpriority"),
     )
     joined = failed.join(
         cand,
-        (failed[hash_col] == cand["_rhash"])
-        & (cand["_ractual"] == failed[hash_col]),
+        (failed["chunk_hash"] == cand["_rhash"])
+        & (cand["_ractual"] == failed["chunk_hash"]),
         "left",
     )
     best = (
-        joined.groupBy("file_hash", hash_col, "offset", "size", "status")
+        joined.groupBy("file_hash", "chunk_hash", "offset", "size", "status")
         .agg(
             F.min(
                 # unmatched left rows must stay NULL (min skips nulls);
@@ -143,7 +139,7 @@ def repair_chunks(
         )
         .select(
             "file_hash",
-            hash_col,
+            "chunk_hash",
             "offset",
             "size",
             "status",

@@ -82,9 +82,6 @@ def ivf_topk(
     query_vec,
     k: int = 5,
     nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 5,
 ) -> DataFrame:
     """Top-k for one query over the nprobe nearest lists only. Returns
     (vec_id, cosine, rk); the list filter is a plain `isin` on list_id —
@@ -102,18 +99,18 @@ def ivf_topk(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             denom = np.sqrt(np.einsum("ij,ij->i", x, x)) * qn
             denom[denom == 0.0] = np.inf
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
-                    "cosine": round_half_away((x @ q) / denom, round_to),
+                    "vec_id": pdf["vec_id"],
+                    "cosine": round_half_away((x @ q) / denom, 5),
                 }
             )
 
-    scored = cand.mapInPandas(score, schema=f"{id_col} long, cosine double")
-    order = [F.col("cosine").desc(), F.col(id_col).asc()]
+    scored = cand.mapInPandas(score, schema="vec_id long, cosine double")
+    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
     return global_rank(scored.orderBy(*order).limit(k), order, "rk")
 
 

@@ -79,7 +79,6 @@ def extract_doc_entities(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_chars: int = MIN_ENTITY_CHARS,
 ) -> DataFrame:
     """kg_doc_entities (migration.cpp:912-923): one row per mention —
     (document_id, entity_text, node_key, start_offset, end_offset,
@@ -98,7 +97,7 @@ def extract_doc_entities(
                     continue
                 for m in _ENTITY_RE.finditer(text):
                     s = m.group(0)
-                    if len(s) < min_chars:
+                    if len(s) < MIN_ENTITY_CHARS:
                         continue
                     ids.append(doc_id)
                     texts.append(s)
@@ -258,7 +257,7 @@ def build_co_mention_edges(doc_entities: DataFrame) -> DataFrame:
     )
 
 
-def query_entity_nodes(query_text: str, min_chars: int = MIN_ENTITY_CHARS) -> list[str]:
+def query_entity_nodes(query_text: str) -> list[str]:
     """Entity node keys extracted from ONE query string with the same
     capitalized-span heuristic the document side uses (the reference runs
     its concept extractor over the query, kg_scorer_simple.cpp:132-160).
@@ -266,15 +265,13 @@ def query_entity_nodes(query_text: str, min_chars: int = MIN_ENTITY_CHARS) -> li
     return [
         f"nl_entity:{ENTITY_TYPE}:{m.group(0).lower()}"
         for m in _ENTITY_RE.finditer(query_text)
-        if len(m.group(0)) >= min_chars
+        if len(m.group(0)) >= MIN_ENTITY_CHARS
     ]
 
 
 def build_kg_node_embeddings(
     doc_entities: DataFrame,
     doc_embeddings: DataFrame,
-    doc_id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """kg_node_embeddings (migration.cpp:903-910): one vector per entity
     node — the mean embedding of the documents mentioning it (the
@@ -289,7 +286,7 @@ def build_kg_node_embeddings(
         .distinct()
         .join(
             doc_embeddings.select(
-                F.col(doc_id_col).alias("document_id"), F.col(vec_col).alias("emb")
+                F.col("vec_id").alias("document_id"), F.col("embedding").alias("emb")
             ),
             "document_id",
         )
@@ -311,9 +308,7 @@ def build_kg_node_embeddings(
     )
 
 
-def kg_node_stats(
-    edges: DataFrame, pagerank_iters: int = 20, damping: float = 0.85
-) -> DataFrame:
+def kg_node_stats(edges: DataFrame, pagerank_iters: int = 20) -> DataFrame:
     """kg_node_stats (migration.cpp:926-938): degree, neighbor_count and
     pagerank per node over the mentioned_in graph — document nodes are pure
     sinks, so this exercises the dangling-mass redistribution path."""
@@ -331,7 +326,7 @@ def kg_node_stats(
         .groupBy("node")
         .agg(F.countDistinct("peer").alias("neighbor_count"))
     )
-    pr = pagerank(edges, damping=damping, max_iter=pagerank_iters, src_col="src", dst_col="dst")
+    pr = pagerank(edges, max_iter=pagerank_iters, src_col="src", dst_col="dst")
     return (
         deg.join(neigh, "node", "left")
         .join(pr, "node", "left")
@@ -346,21 +341,14 @@ def populate_kg(
     text_col: str = "text",
     pagerank_iters: int = 20,
     doc_embeddings: DataFrame | None = None,
-    persist_mentions: bool = True,
 ) -> dict[str, DataFrame]:
     """The whole PostIngestQueue KG stage in one call: returns
     {kg_doc_entities, kg_nodes, kg_aliases, kg_edges, kg_node_stats}, plus
     kg_node_embeddings when a (vec_id, embedding) table is supplied.
-    The mentions table feeds every downstream table, so it is persisted by
-    default — otherwise the extraction pass re-runs once per output table
-    (``persist_mentions=False`` restores lazy behavior for callers that
-    materialize only one output)."""
-    ents = extract_doc_entities(docs, id_col, text_col)
-    if persist_mentions:
-        ents = ents.persist()
-    edges = build_kg_edges(ents)
-    if persist_mentions:
-        edges = edges.persist()
+    The mentions table feeds every downstream table, so it is persisted —
+    otherwise the extraction pass re-runs once per output table."""
+    ents = extract_doc_entities(docs, id_col, text_col).persist()
+    edges = build_kg_edges(ents).persist()
     out = {
         "kg_doc_entities": ents,
         "kg_nodes": build_kg_nodes(ents),

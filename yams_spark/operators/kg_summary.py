@@ -172,9 +172,6 @@ def file_relation_summaries(
 def analyze_document_topology(
     doc_nodes: DataFrame,
     edges: DataFrame,
-    node_col: str = "node_id",
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """``analyzeDocumentTopology`` (kg_topology_analysis.cpp:64-213):
     one-row KGTopologySummary over the semantic_neighbor graph
@@ -185,9 +182,9 @@ def analyze_document_topology(
     reciprocity and reciprocal communities (size ≥ 2, cpp:183-197).
     Component counts include singleton documents, exactly as the C++
     union-find over all doc indices does."""
-    docs = doc_nodes.select(F.col(node_col).alias("node")).distinct()
+    docs = doc_nodes.select(F.col("node_id").alias("node")).distinct()
     directed = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .join(docs.withColumnRenamed("node", "a"), "a")
         .join(docs.withColumnRenamed("node", "b"), "b")
         .where(F.col("a") != F.col("b"))

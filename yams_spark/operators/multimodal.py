@@ -31,30 +31,27 @@ MEDIA_SCHEMA = (
 FEATURE_DIM = 64
 
 
-def _fake_decode_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
+def _fake_decode_features(payload: bytes) -> np.ndarray:
     """Deterministic stand-in for a real decoder+featurizer: hash-seeded
-    pseudo-features, L2-normalized. Replace with a real codec via
-    ``decode_fn`` when the libraries exist."""
+    pseudo-features, L2-normalized."""
     digest = hashlib.blake2b(payload, digest_size=32).digest()
     seed = int.from_bytes(digest[:8], "little")
     rng = np.random.default_rng(seed)
-    v = rng.standard_normal(dim)
+    v = rng.standard_normal(FEATURE_DIM)
     n = np.linalg.norm(v)
     return (v / n if n else v).astype(np.float32)
 
 
 def extract_media_features(
     media: DataFrame,
-    decode_fn=None,
     strict: bool = False,
-    dim: int = FEATURE_DIM,
 ) -> DataFrame:
     """(media_id, kind, mime, decoded boolean, feature array<float>,
     payload_sha256, n_bytes) via one Arrow-batched mapInPandas pass.
 
     Per row: a REAL decoder is used when one exists for the mime
     (PPM/PGM, PCM16 WAV — media_codecs.decode_features), else
-    ``decode_fn`` if given, else strict-raise / deterministic fake.
+    strict-raise / deterministic fake.
     ``decoded`` records which path ran."""
 
     def compute(iterator):
@@ -78,17 +75,14 @@ def extract_media_features(
                     real = decode_features(data, mime or "")
                     if real is not None:
                         feat, decoded = real.tolist(), True
-                    elif decode_fn is not None:
-                        feat, decoded = decode_fn(data).tolist(), True
                     elif strict:
                         raise NotImplementedError(
-                            f"no decoder for mime {mime!r} in this environment; "
-                            "pass decode_fn"
+                            f"no decoder for mime {mime!r} in this environment"
                         )
                     else:
-                        feat = _fake_decode_features(data, dim).tolist()
+                        feat = _fake_decode_features(data).tolist()
                 else:
-                    feat = [0.0] * dim
+                    feat = [0.0] * FEATURE_DIM
                 rows.append(
                     (
                         mid, kind, mime, decoded, feat,

@@ -32,16 +32,15 @@ def semantic_neighbor_edges(
     scored_pairs: DataFrame,
     top_k: int = 8,
     threshold: float = 0.0,
-    sim_col: str = "cosine",
 ) -> DataFrame:
     """(src, dst, weight) symmetric edge set: per source keep the top-K
     strongest neighbors (cosine desc, dst asc tie-break), weight clamped to
     [threshold, 1.0] (EmbeddingService.cpp:740-812)."""
     directed = scored_pairs.select(
-        F.col("url_a").alias("src"), F.col("url_b").alias("dst"), F.col(sim_col).alias("sim")
+        F.col("url_a").alias("src"), F.col("url_b").alias("dst"), F.col("cosine").alias("sim")
     ).unionByName(
         scored_pairs.select(
-            F.col("url_b").alias("src"), F.col("url_a").alias("dst"), F.col(sim_col).alias("sim")
+            F.col("url_b").alias("src"), F.col("url_a").alias("dst"), F.col("cosine").alias("sim")
         )
     )
     # dedupe best-score per (src, dst) — multiple blocking families may
@@ -97,10 +96,7 @@ def hybrid_search(
     text_col: str = "text",
     embedding_df: DataFrame | None = None,
     limit: int = 10,
-    weights: dict[str, float] | None = None,
     enable_lexical_expansion: bool = True,
-    expansion_min_hits: int = LEXICAL_EXPANSION_MIN_HITS,
-    expansion_penalty: float = LEXICAL_EXPANSION_PENALTY,
     doc_tags: DataFrame | None = None,
     query_tags: list[str] | None = None,
     tags_match_all: bool = True,
@@ -108,12 +104,10 @@ def hybrid_search(
     metadata_filters: dict[str, str] | None = None,
     enable_cross_rerank: bool = False,
     rerank_top_n: int = 5,
-    rerank_alpha: float = 0.30,
     auto_phrase: bool = False,
     hotzone_df: DataFrame | None = None,
     hotzone_weight: float = 0.0,
     include_snippets: bool = False,
-    snippet_window: int = 16,
     kg_doc_entities: DataFrame | None = None,
     kg_edges: DataFrame | None = None,
     doc_paths: DataFrame | None = None,
@@ -129,10 +123,11 @@ def hybrid_search(
     (SearchEngine fanout → EvidenceSearchPipeline, SURVEY §3.2).
 
     The lexical base query is implicit-AND (FTS5 MATCH semantics). When it
-    returns fewer than ``expansion_min_hits`` documents, the OR-retry fires
-    (search_lexical_pipeline.cpp:246-290): up to 6 unique >=3-char tokens
-    are re-queried disjunctively, the expanded-only hits join the candidate
-    pool with their normalized scores multiplied by the 0.65 penalty.
+    returns fewer than ``LEXICAL_EXPANSION_MIN_HITS`` documents, the
+    OR-retry fires (search_lexical_pipeline.cpp:246-290): up to 6 unique
+    >=3-char tokens are re-queried disjunctively, the expanded-only hits
+    join the candidate pool with their normalized scores multiplied by the
+    0.65 penalty.
 
     Double-quoted spans in ``query_text`` are FTS5 phrases: candidates must
     contain the tokens adjacently in order, checked against the positional
@@ -165,13 +160,12 @@ def hybrid_search(
     if enable_lexical_expansion:
         base_hits = lex.count()  # scalar — the reference counts the batch too
         exp_terms = expansion_terms(all_tokens)
-        if base_hits < expansion_min_hits and exp_terms:
-            penalty = min(max(expansion_penalty, 0.1), 1.0)
+        if base_hits < LEXICAL_EXPANSION_MIN_HITS and exp_terms:
             expanded = bm25_scores(postings, exp_terms, match_all=False)
             expanded = normalize_bm25(expanded.withColumn("bm25", -F.col("bm25")))
             expanded = (
                 expanded.join(lex.select("doc_id"), "doc_id", "left_anti")
-                .withColumn("norm_score", F.col("norm_score") * F.lit(penalty))
+                .withColumn("norm_score", F.col("norm_score") * F.lit(LEXICAL_EXPANSION_PENALTY))
             )
             lex = lex.unionByName(expanded)
     # rank only a bounded candidate pool (the reference pools max(8, 4·topK)
@@ -309,7 +303,7 @@ def hybrid_search(
             "left_semi",
         )
 
-    fused = fuse_evidence(components, weights=weights)
+    fused = fuse_evidence(components)
     if hotzone_df is not None and hotzone_weight > 0.0:
         from yams_spark.operators.search import apply_hotzone_boost
 
@@ -357,7 +351,7 @@ def hybrid_search(
         )
         snips = hit_docs.select(
             "doc_id",
-            snippet_multi_expr(toks, all_tokens, snippet_window).alias("snippet"),
+            snippet_multi_expr(toks, all_tokens).alias("snippet"),
         )
         return result.join(snips, "doc_id", "left")
 
@@ -375,7 +369,7 @@ def hybrid_search(
     scored = rerank_scores_overlap(top_n, docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ), query_text, id_col="doc_id", text_col="text")
-    blended = cross_rerank_blend(scored, alpha=rerank_alpha)
+    blended = cross_rerank_blend(scored)
     # the blend reorders only the head; tail keeps its fused order after it
     b_ranked = global_rank(
         blended.select("doc_id", "fused_score", "blended_score"),

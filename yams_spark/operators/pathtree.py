@@ -25,12 +25,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def path_prefixes(path_col: str | Column, max_depth: int = 8) -> Column:
-    """'/a/b/c' -> ['/a', '/a/b', '/a/b/c'] (up to max_depth segments):
+def path_prefixes(path_col: str | Column) -> Column:
+    """'/a/b/c' -> ['/a', '/a/b', '/a/b/c'] (up to 8 segments):
     the ancestor set a document contributes to (path_tree_nodes rows)."""
     col = F.col(path_col) if isinstance(path_col, str) else path_col
     segs = F.filter(F.split(col, "/"), lambda s: s != "")
-    idx = F.sequence(F.lit(1), F.least(F.size(segs), F.lit(max_depth)))
+    idx = F.sequence(F.lit(1), F.least(F.size(segs), F.lit(8)))
     return F.transform(
         idx, lambda i: F.concat(F.lit("/"), F.array_join(F.slice(segs, 1, i), "/"))
     )
@@ -41,7 +41,6 @@ def path_tree_rollup(
     path_col: str = "path",
     embedding_col: str = "embedding",
     size_col: str | None = None,
-    max_depth: int = 8,
 ) -> DataFrame:
     """(prefix, doc_count, centroid_weight, centroid[, total_size]) per
     path prefix — the path_tree_nodes table as one DataFrame pipeline.
@@ -50,7 +49,7 @@ def path_tree_rollup(
     excluded from the centroid but still counted in doc_count, matching
     the reference's early-return on empty embeddings)."""
     pref = docs.select(
-        F.explode(path_prefixes(path_col, max_depth)).alias("prefix"),
+        F.explode(path_prefixes(path_col)).alias("prefix"),
         F.col(embedding_col).alias("emb"),
         *( [F.col(size_col).alias("sz")] if size_col else [] ),
     )

@@ -127,8 +127,6 @@ def pq_adc_topk(
     query_vec,
     k: int = 5,
     rerank_factor: int = PQ_RERANK_FACTOR,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance top-k for one query: LUT scan over the codes
     table, global top-(rerank_factor·k) by approximate L2, exact cosine
@@ -155,38 +153,38 @@ def pq_adc_topk(
             dist = np.zeros(len(c), dtype=np.float64)
             for j in range(len(tables)):
                 dist += tables[j][c[:, j]]
-            out = pd.DataFrame({id_col: pdf[id_col], "adc_l2": dist})
+            out = pd.DataFrame({"vec_id": pdf["vec_id"], "adc_l2": dist})
             yield out.nsmallest(pool, "adc_l2")
 
     approx = (
-        codes.mapInPandas(scan, schema=f"{id_col} long, adc_l2 double")
-        .orderBy(F.col("adc_l2").asc(), F.col(id_col).asc())
+        codes.mapInPandas(scan, schema="vec_id long, adc_l2 double")
+        .orderBy(F.col("adc_l2").asc(), F.col("vec_id").asc())
         .limit(pool)
     )
     # exact rerank: equi-join the candidate ids back to the vectors
-    cand = approx.join(corpus.select(id_col, vec_col), id_col)
+    cand = approx.join(corpus.select("vec_id", "embedding"), "vec_id")
 
     def exact(iterator):
         qn = np.sqrt(q @ q)
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             denom = np.sqrt(np.einsum("ij,ij->i", x, x)) * qn
             denom[denom == 0.0] = np.inf
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "adc_l2": pdf["adc_l2"],
                     "cosine": (x @ q) / denom,
                 }
             )
 
     reranked = cand.mapInPandas(
-        exact, schema=f"{id_col} long, adc_l2 double, cosine double"
+        exact, schema="vec_id long, adc_l2 double, cosine double"
     )
     from yams_spark.operators.search import global_rank
 
-    order = [F.col("cosine").desc(), F.col(id_col).asc()]
+    order = [F.col("cosine").desc(), F.col("vec_id").asc()]
     topk = reranked.orderBy(*order).limit(k)
     return global_rank(topk, order, "rk")

@@ -170,12 +170,12 @@ def _route_columns(q):
     }
 
 
-def route_queries(queries: DataFrame, query_col: str = "query") -> DataFrame:
+def route_queries(queries: DataFrame) -> DataFrame:
     """Append the 9 routing columns (intent / mode / community, each with
     confidence + reason; community null when no family claims the query
     — the reference's nullopt) to a DataFrame of query strings. Narrow
     projection: the plan is the input scan plus one Project."""
-    cols = _route_columns(F.col(query_col))
+    cols = _route_columns(F.col("query"))
     return queries.select(
         "*", *[expr.alias(name) for name, expr in cols.items()]
     )

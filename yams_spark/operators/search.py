@@ -236,8 +236,6 @@ def parse_match_query(
 def bm25_scores(
     postings: DataFrame,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     match_all: bool = False,
     prefix_terms: list[str] | None = None,
     phrases: list[list[str]] | None = None,
@@ -259,6 +257,7 @@ def bm25_scores(
     positional index (FTS5 MATCH '"a b"' indexes the phrase itself, the
     member tokens do not contribute separately); requires
     ``positional_postings`` for the position-list intersection."""
+    k1, b = 1.2, 0.75  # Robertson's BM25 defaults, as FTS5's bm25()
     prefix_terms = list(dict.fromkeys(prefix_terms or []))
     phrases = [p for p in (phrases or []) if p]
     if phrases and positional_postings is None:
@@ -313,22 +312,20 @@ def bm25_scores(
     )
 
 
-def normalize_bm25(
-    scored: DataFrame, score_col: str = "bm25", divisor: float = BM25_NORM_DIVISOR
-) -> DataFrame:
+def normalize_bm25(scored: DataFrame) -> DataFrame:
     """lexical_scoring.cpp:18-43: min-max over the batch, 1-norm (raw scores
     are negative-better à la FTS5); degenerate range falls back to
-    clamp(-raw/divisor)."""
+    clamp(-raw/BM25_NORM_DIVISOR)."""
     rng = scored.agg(
-        F.min(score_col).alias("mn"), F.max(score_col).alias("mx")
+        F.min("bm25").alias("mn"), F.max("bm25").alias("mx")
     ).collect()[0]
     if rng["mn"] is None:  # zero-hit batch: empty in, empty out, no crash
         return scored.withColumn("norm_score", F.lit(0.0))
     mn, mx = float(rng["mn"]), float(rng["mx"])
     if mx > mn:
-        expr = F.lit(1.0) - (F.col(score_col) - F.lit(mn)) / F.lit(mx - mn)
+        expr = F.lit(1.0) - (F.col("bm25") - F.lit(mn)) / F.lit(mx - mn)
     else:
-        expr = -F.col(score_col) / F.lit(divisor)
+        expr = -F.col("bm25") / F.lit(BM25_NORM_DIVISOR)
     return scored.withColumn(
         "norm_score", F.least(F.greatest(expr, F.lit(0.0)), F.lit(1.0))
     )
@@ -339,8 +336,6 @@ def aggregate_chunk_scores(
     doc_col: str = "doc_hash",
     score_col: str = "score",
     mode: str = "WEIGHTED_TOP_K_AVG",
-    top_k: int = CHUNK_AGG_TOP_K,
-    decay: float = CHUNK_AGG_DECAY,
 ) -> DataFrame:
     """Chunk→doc aggregation (search_vector_pipeline.cpp:100-155). Returns
     (doc, agg_score) with the reference's deterministic ordering applied by
@@ -353,12 +348,12 @@ def aggregate_chunk_scores(
         )
     w = Window.partitionBy(doc_col).orderBy(F.col(score_col).desc())
     ranked = chunk_scores.withColumn("rk", F.row_number().over(w)).where(
-        F.col("rk") <= max(1, top_k)
+        F.col("rk") <= CHUNK_AGG_TOP_K
     )
     if mode == "TOP_K_AVG":
         return ranked.groupBy(doc_col).agg(F.avg(score_col).alias("agg_score"))
     if mode == "WEIGHTED_TOP_K_AVG":
-        weight = F.pow(F.lit(decay), F.col("rk") - 1)
+        weight = F.pow(F.lit(CHUNK_AGG_DECAY), F.col("rk") - 1)
         return (
             ranked.withColumn("wt", weight)
             .groupBy(doc_col)
@@ -371,17 +366,13 @@ def aggregate_chunk_scores(
 
 def fuse_evidence(
     components: DataFrame,
-    weights: dict[str, float] | None = None,
-    rrf_k: float = RRF_K,
     lexical_floor_boost: float = 0.0,
-    lexical_sources: tuple[str, ...] = ("text", "simeon_text", "graph_text"),
 ) -> DataFrame:
     """components (doc_id, source, score, rank) -> fused (doc_id, fused_score).
 
     evidence_search_pipeline.cpp:184-229: per-(doc,source) aggregate then
     weighted-RRF sum; optional lexical rank floor boost/(1+rank).
     """
-    weights = weights or DEFAULT_SOURCE_WEIGHTS
     per_source = components.groupBy("doc_id", "source").agg(
         F.max("score").alias("best_raw"),
         F.min("rank").alias("best_rank"),
@@ -390,21 +381,21 @@ def fuse_evidence(
     weight_expr = F.coalesce(
         *[
             F.when(F.col("source") == s, F.lit(float(w)))
-            for s, w in weights.items()
+            for s, w in DEFAULT_SOURCE_WEIGHTS.items()
         ],
         F.lit(0.0),
     )
     clamped = F.least(F.greatest(F.col("best_raw"), F.lit(0.0)), F.lit(1.0))
     contribution = (
         weight_expr
-        * (F.lit(1.0) / (F.lit(rrf_k) + F.col("best_rank") + 1.0))
+        * (F.lit(1.0) / (F.lit(RRF_K) + F.col("best_rank") + 1.0))
         * (F.lit(1.0) + 0.5 * clamped)
     )
     scored = per_source.withColumn("contribution", contribution)
     fused = scored.groupBy("doc_id").agg(F.sum("contribution").alias("fused_score"))
     if lexical_floor_boost > 0.0:
         lex = (
-            scored.where(F.col("source").isin(list(lexical_sources)))
+            scored.where(F.col("source").isin(["text", "simeon_text", "graph_text"]))
             .groupBy("doc_id")
             .agg(F.min("best_rank").alias("lex_rank"))
             .withColumn(
@@ -427,10 +418,6 @@ def apply_hotzone_boost(
     fused: DataFrame,
     hotzone_df: DataFrame,
     weight: float,
-    id_col: str = "doc_id",
-    score_col: str = "fused_score",
-    key_col: str = "key",
-    boost_col: str = "boost",
 ) -> DataFrame:
     """Recency boost blend (enhanced_search_executor.cpp:101-110):
     score' = score · (1 + weight · (boost − 1)); boost already saturates
@@ -438,13 +425,13 @@ def apply_hotzone_boost(
     One left equi-join on the doc key — the hotzone table is per-document
     state, so this is an ordinary keyed join at any scale."""
     hz = hotzone_df.select(
-        F.col(key_col).cast("string").alias(id_col), F.col(boost_col).alias("__boost")
+        F.col("key").cast("string").alias("doc_id"), F.col("boost").alias("__boost")
     )
     return (
-        fused.join(hz, id_col, "left")
+        fused.join(hz, "doc_id", "left")
         .withColumn(
-            score_col,
-            F.col(score_col)
+            "fused_score",
+            F.col("fused_score")
             * (
                 F.lit(1.0)
                 + F.lit(float(weight))
@@ -459,8 +446,6 @@ def chunk_coverage_stats(
     chunk_results: DataFrame,
     pooling: str = "AVG",
     total_chunks: DataFrame | None = None,
-    chunk_col: str = "chunk_id",
-    score_col: str = "similarity",
 ) -> DataFrame:
     """(base_id, pooled_score, contributing_chunks[, total_chunks,
     coverage]): group chunk-level vector hits by base document id — the
@@ -476,9 +461,7 @@ def chunk_coverage_stats(
     if pooling not in ("AVG", "MAX"):
         raise ValueError(f"unknown pooling {pooling!r}")
     uniq = (
-        chunk_results.select(
-            F.col(chunk_col).alias("chunk_id"), F.col(score_col).alias("s")
-        )
+        chunk_results.select("chunk_id", F.col("similarity").alias("s"))
         .groupBy("chunk_id")
         .agg(F.max("s").alias("s"))
     )
@@ -514,7 +497,6 @@ def global_rank(
     df: DataFrame,
     order_cols: list,
     rank_col: str = "rank",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic global row_number over ``order_cols`` (must be a total
     order — include a unique tie-break) WITHOUT a single-partition window.
@@ -528,9 +510,8 @@ def global_rank(
     single-partition stage.
     """
     cols = [c if not isinstance(c, str) else F.col(c) for c in order_cols]
-    n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parted = (
-        df.repartitionByRange(n_part, *cols)
+        df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
@@ -560,8 +541,6 @@ def topk_with_rescue(
     limit: int,
     rescue_slots: int = 0,
     eligible_col: str | None = None,
-    score_col: str = "fused_score",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Truncate to ``limit`` by (score desc, id asc); then additively append
     up to ``rescue_slots`` eligible tail candidates — rescue never displaces
@@ -571,11 +550,11 @@ def topk_with_rescue(
     a per-partition top-k then a k-row merge), never a global rank window:
     no single-partition sort at any scale.
     """
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
+    order = [F.col("fused_score").desc(), F.col("doc_id").asc()]
     head = results.orderBy(*order).limit(limit)
     if rescue_slots > 0 and eligible_col is not None:
         tail = (
-            results.join(head.select(id_col), id_col, "left_anti")
+            results.join(head.select("doc_id"), "doc_id", "left_anti")
             .where(F.col(eligible_col))
             .orderBy(*order)
             .limit(rescue_slots)
@@ -590,7 +569,6 @@ def rerank_scores_overlap(
     query_text: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    out_col: str = "rerank_score",
 ) -> DataFrame:
     """Deterministic cross-encoder stand-in feeding ``cross_rerank_blend``
     (the reference reranks its top-5 with an ONNX cross-encoder,
@@ -614,28 +592,24 @@ def rerank_scores_overlap(
     inter = F.size(F.array_intersect(F.col("__t"), q_arr))
     union = F.size(F.array_union(F.col("__t"), q_arr))
     return scored.withColumn(
-        out_col,
+        "rerank_score",
         F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
             F.lit(0.0)
         ),
     ).drop("__t")
 
 
-def cross_rerank_blend(
-    head: DataFrame,
-    rerank_col: str = "rerank_score",
-    score_col: str = "fused_score",
-    alpha: float = 0.30,
-) -> DataFrame:
+def cross_rerank_blend(head: DataFrame) -> DataFrame:
     """cross_rerank.cpp:60-160: min-max normalize both score sets over the
     head and blend final = alpha·rerankNorm + (1-alpha)·origNorm; if either
     set has no variance the original ordering is kept."""
+    alpha = 0.30
     rng = head.agg(
-        F.min(score_col).alias("omn"), F.max(score_col).alias("omx"),
-        F.min(rerank_col).alias("rmn"), F.max(rerank_col).alias("rmx"),
+        F.min("fused_score").alias("omn"), F.max("fused_score").alias("omx"),
+        F.min("rerank_score").alias("rmn"), F.max("rerank_score").alias("rmx"),
     ).collect()[0]
     if rng["omx"] == rng["omn"] or rng["rmx"] == rng["rmn"]:
-        return head.withColumn("blended_score", F.col(score_col))
-    onorm = (F.col(score_col) - rng["omn"]) / (rng["omx"] - rng["omn"])
-    rnorm = (F.col(rerank_col) - rng["rmn"]) / (rng["rmx"] - rng["rmn"])
+        return head.withColumn("blended_score", F.col("fused_score"))
+    onorm = (F.col("fused_score") - rng["omn"]) / (rng["omx"] - rng["omn"])
+    rnorm = (F.col("rerank_score") - rng["rmn"]) / (rng["rmx"] - rng["rmn"])
     return head.withColumn("blended_score", F.lit(alpha) * rnorm + F.lit(1 - alpha) * onorm)

@@ -29,12 +29,6 @@ def sgc_smooth(
     features: DataFrame,
     edges: DataFrame,
     hops: int = 2,
-    min_edge_score: float = 0.0,
-    id_col: str = "node",
-    vec_col: str = "embedding",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "weight",
     cast_float32: bool = True,
 ) -> DataFrame:
     """(node, embedding) -> (node, embedding) smoothed; float32 output like
@@ -48,10 +42,10 @@ def sgc_smooth(
         return features
     e = (
         edges.select(
-            F.col(src_col).alias("s"), F.col(dst_col).alias("d"),
-            F.greatest(F.col(weight_col), F.lit(0.0)).alias("w"),
+            F.col("src").alias("s"), F.col("dst").alias("d"),
+            F.greatest(F.col("weight"), F.lit(0.0)).alias("w"),
         )
-        .where((F.col("s") != F.col("d")) & (F.col(weight_col) >= min_edge_score))
+        .where((F.col("s") != F.col("d")) & (F.col("weight") >= 0.0))
     )
     # undirected max-weight dedupe (topology_sgc.cpp:87-112)
     und = (
@@ -65,7 +59,7 @@ def sgc_smooth(
         F.col("a").alias("src"), F.col("b").alias("dst"), "w"
     ).unionAll(und.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
 
-    nodes = features.select(F.col(id_col).alias("node"))
+    nodes = features.select("node")
     deg = (
         nodes.join(
             sym.groupBy(F.col("src").alias("node")).agg(F.sum("w").alias("sw")),
@@ -92,8 +86,8 @@ def sgc_smooth(
     adj = scaled.unionAll(self_loops).localCheckpoint(eager=False)
 
     dims = features.select(
-        F.col(id_col).alias("node"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "val"),
+        F.col("node"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
     )
     for _ in range(hops):
         dims = (
@@ -103,10 +97,9 @@ def sgc_smooth(
             .localCheckpoint(eager=False)
         )
     out_t = "float" if cast_float32 else "double"
-    out = dims.groupBy("node").agg(
+    return dims.groupBy("node").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "val"))),
             lambda s: s["val"].cast(out_t),
-        ).alias(vec_col)
+        ).alias("embedding")
     )
-    return out.withColumnRenamed("node", id_col)

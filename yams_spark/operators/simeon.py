@@ -49,11 +49,9 @@ SIMEON_MAX_RESULTS = 300
 def pmi_concepts(
     postings: DataFrame,
     query_terms: list[str],
-    top_n: int = PMI_TOP_CONCEPTS,
-    min_co_docs: int = PMI_MIN_CO_DOCS,
 ) -> DataFrame:
     """(concept, pmi): positive-PMI expansion concepts for the query —
-    for each query term, the ``top_n`` terms by document-level PMI
+    for each query term, the ``PMI_TOP_CONCEPTS`` terms by document-level PMI
     (ties term-asc), deduped across query terms keeping the max PMI.
 
     One join fanning out from the query terms' posting lists (bounded by
@@ -76,7 +74,7 @@ def pmi_concepts(
         .where(~F.col("term").isin(terms))
         .groupBy("qterm", "term")
         .agg(F.count("*").alias("df12"))
-        .where(F.col("df12") >= min_co_docs)
+        .where(F.col("df12") >= PMI_MIN_CO_DOCS)
     )
     scored = (
         co.join(n_df.select(F.col("term").alias("qterm"), F.col("df").alias("df1")), "qterm")
@@ -92,7 +90,7 @@ def pmi_concepts(
         .where(F.col("pmi") > 0)
     )
     w = Window.partitionBy("qterm").orderBy(F.col("pmi").desc(), F.col("term").asc())
-    top = scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= top_n)
+    top = scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= PMI_TOP_CONCEPTS)
     return top.groupBy("term").agg(F.max("pmi").alias("pmi")).select(
         F.col("term").alias("concept"), "pmi"
     )
@@ -102,14 +100,11 @@ def simeon_text_component(
     postings: DataFrame,
     query_terms: list[str],
     limit: int = SIMEON_MAX_RESULTS,
-    alpha: float = BLEND_ALPHA,
-    top_concepts: int = PMI_TOP_CONCEPTS,
-    min_co_docs: int = PMI_MIN_CO_DOCS,
 ) -> DataFrame:
     """(doc_id, source='simeon_text', score, rank): the PMI lexical
     component. Pool = docs holding EVERY query term (the candidate set
-    the backend reranks); each pool doc scores ``alpha·z(bm25) +
-    (1-alpha)·z(concept)`` with z over the pool; every other doc touched
+    the backend reranks); each pool doc scores ``BLEND_ALPHA·z(bm25) +
+    (1-BLEND_ALPHA)·z(concept)`` with z over the pool; every other doc touched
     by a query term or concept lands strictly below the pool floor at
     ``floor - 1 + bm25/(bm25+1)`` (reconcileGeomWithBm25). The emitted
     ``score`` is the min-max normalization of that vector over the
@@ -129,7 +124,7 @@ def simeon_text_component(
         .where(F.col("nt") == len(terms))
         .select("doc_id")
     )
-    concepts = pmi_concepts(postings, terms, top_n=top_concepts, min_co_docs=min_co_docs)
+    concepts = pmi_concepts(postings, terms)
     # concept evidence: tf-damped PMI mass per doc
     cscore = (
         postings.join(
@@ -150,7 +145,7 @@ def simeon_text_component(
     zb = F.when(F.col("sb") > 0, (F.col("bm25") - F.col("mb")) / F.col("sb")).otherwise(F.lit(0.0))
     zc = F.when(F.col("sc") > 0, (F.col("cscore") - F.col("mc")) / F.col("sc")).otherwise(F.lit(0.0))
     blended = pool.crossJoin(F.broadcast(stats)).select(
-        "doc_id", (F.lit(alpha) * zb + F.lit(1.0 - alpha) * zc).alias("blend")
+        "doc_id", (F.lit(BLEND_ALPHA) * zb + F.lit(1.0 - BLEND_ALPHA) * zc).alias("blend")
     )
     floor = blended.agg(F.min("blend").alias("pool_floor"))
     # out-of-pool: any doc with a term or concept hit, below the floor,

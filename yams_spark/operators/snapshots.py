@@ -36,8 +36,6 @@ def _depth_expr(col):
 
 def merkle_tree(
     files: DataFrame,
-    path_col: str = "path",
-    hash_col: str = "file_hash",
 ) -> DataFrame:
     """(path, node_hash, n_entries) for every directory node, bottom-up.
 
@@ -48,9 +46,9 @@ def merkle_tree(
     The root directory has path ``""``.
     """
     entries = files.select(
-        _parent_expr(F.col(path_col)).alias("parent"),
-        F.substring_index(F.col(path_col), "/", -1).alias("name"),
-        F.col(hash_col).alias("h"),
+        _parent_expr(F.col("path")).alias("parent"),
+        F.substring_index(F.col("path"), "/", -1).alias("name"),
+        F.col("file_hash").alias("h"),
         F.lit(FILE_MODE).alias("mode"),
     ).withColumn("__pd", _depth_expr(F.col("parent")))
 
@@ -107,13 +105,11 @@ def tree_snapshot(
     snapshot_id: str,
     directory_path: str = "/",
     snapshot_label: str | None = None,
-    path_col: str = "path",
-    hash_col: str = "file_hash",
 ) -> DataFrame:
     """One tree_snapshots row (migration.cpp:1201-1213): snapshot_id,
     directory_path, tree_root_hash (the Merkle root — the path='' node),
     snapshot_label, files_count."""
-    tree = merkle_tree(files, path_col, hash_col)
+    tree = merkle_tree(files)
     root = tree.where(F.col("path") == "").select(
         F.lit(snapshot_id).alias("snapshot_id"),
         F.lit(directory_path).alias("directory_path"),

@@ -52,7 +52,6 @@ __all__ = [
 def build_block_references(
     store: DataFrame,
     manifests: DataFrame,
-    hash_col: str = "block_hash",
 ) -> DataFrame:
     """Derive the ``block_references`` table
     (reference_counter.cpp:251-262) from a store inventory and the
@@ -66,13 +65,13 @@ def build_block_references(
     reference DB (garbage_collector.cpp:274-321). Blocks present in the
     store but referenced by no manifest row get ``ref_count = 0`` — the
     GC candidate population."""
-    counts = manifests.groupBy(F.col(hash_col).alias("_h")).agg(
+    counts = manifests.groupBy(F.col("block_hash").alias("_h")).agg(
         F.count(F.lit(1)).alias("_n")
     )
     return (
-        store.join(counts, store[hash_col] == counts["_h"], "left")
+        store.join(counts, store["block_hash"] == counts["_h"], "left")
         .select(
-            hash_col,
+            "block_hash",
             F.coalesce(F.col("_n"), F.lit(0)).cast("long").alias("ref_count"),
             F.col("block_size").cast("long").alias("block_size"),
             F.coalesce(F.col("uncompressed_size"), F.col("block_size"))

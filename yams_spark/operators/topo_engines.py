@@ -68,7 +68,6 @@ def build_pair_weights(
     documents: DataFrame,
     reciprocal_only: bool = True,
     min_edge_score: float = 0.0,
-    hash_col: str = "doc_hash",
 ) -> DataFrame:
     """(lo_hash, hi_hash, weight): undirected max-weight pairs from the
     directed neighbor lists (buildPairWeights, :49-82). ``neighbors``:
@@ -76,11 +75,11 @@ def build_pair_weights(
     ``documents`` supplies the existence filter (:58-61). The reference
     compares ``score < float(minEdgeScore)`` in float32 (:69), hence the
     float32 cast on the threshold."""
-    known = documents.select(F.col(hash_col).alias("_known")).where(
+    known = documents.select(F.col("doc_hash").alias("_known")).where(
         F.col("_known") != ""
     ).distinct()
     e = neighbors.select(
-        F.col(hash_col).alias("src"),
+        F.col("doc_hash").alias("src"),
         F.col("neighbor_hash").alias("dst"),
         F.col("score").cast("float").alias("weight"),
         F.col("reciprocal").alias("reciprocal"),
@@ -126,10 +125,6 @@ def _dist_matrix(batch: np.ndarray, cents: np.ndarray) -> np.ndarray:
 def kmeans_assign(
     documents: DataFrame,
     k: int = 0,
-    max_iterations: int = 10,
-    hash_col: str = "doc_hash",
-    idx_col: str = "idx",
-    embedding_col: str = "embedding",
 ) -> DataFrame:
     """(doc_hash, idx, label): deterministic spherical k-means assignment
     (runKMeans, :341-478). ``idx`` is the reference's document span
@@ -142,9 +137,9 @@ def kmeans_assign(
     (:96-99)."""
     spark = documents.sparkSession
     docs = documents.select(
-        F.col(hash_col).alias("doc_hash"),
-        F.col(idx_col).cast("long").alias("idx"),
-        F.col(embedding_col).alias("embedding"),
+        F.col("doc_hash"),
+        F.col("idx").cast("long").alias("idx"),
+        F.col("embedding"),
     ).persist()
     n = docs.count()
     if n == 0:
@@ -198,8 +193,7 @@ def kmeans_assign(
 
     # --- Lloyd iterations with float32 centroid arithmetic (:412-466) ---
     labels = usable.select("doc_hash", "idx").withColumn("label", F.lit(0))
-    iterations = max_iterations if max_iterations > 0 else 10
-    for _it in range(iterations):
+    for _it in range(10):
         cmat = np.stack([c.astype(np.float64) for c in cents])
 
         def assign(batches, cmat=cmat):
@@ -333,7 +327,6 @@ def kmeans_assign(
 def _exact_louvain(
     n: int,
     adjacency: list[list[tuple[int, float]]],
-    max_iterations: int = 10,
 ) -> list[int]:
     """Literal runLouvain (:491-593): greedy node-moves in index order
     with mutable community degrees; compacted community ids. Candidate
@@ -361,7 +354,7 @@ def _exact_louvain(
 
     improved = True
     it = 0
-    while improved and it < max_iterations:
+    while improved and it < 10:
         improved = False
         it += 1
         for i in range(n):
@@ -398,10 +391,7 @@ def _exact_louvain(
 def louvain_assign(
     documents: DataFrame,
     pair_weights: DataFrame,
-    max_iterations: int = 10,
     max_driver_edges: int = LOUVAIN_MAX_DRIVER_EDGES,
-    hash_col: str = "doc_hash",
-    idx_col: str = "idx",
 ) -> DataFrame:
     """(doc_hash, idx, label): single-pass Louvain communities
     (runLouvain, :491-593). The greedy move sequence is order-dependent
@@ -420,7 +410,7 @@ def louvain_assign(
             "order cannot be parallelised without changing results)"
         )
     id_rows = documents.select(
-        F.col(hash_col).alias("doc_hash"), F.col(idx_col).cast("long").alias("idx")
+        F.col("doc_hash"), F.col("idx").cast("long").alias("idx")
     ).collect()
     idx_by_hash = {r["doc_hash"]: int(r["idx"]) for r in id_rows}
     ordered = sorted(idx_by_hash.items(), key=lambda t: t[1])
@@ -435,7 +425,7 @@ def louvain_assign(
         w = float(r["weight"])
         adjacency[i].append((j, w))
         adjacency[j].append((i, w))
-    assignment = _exact_louvain(n, adjacency, max_iterations)
+    assignment = _exact_louvain(n, adjacency)
     spark = documents.sparkSession
     rows = [
         (h, idx_by_hash[h], int(assignment[dense[h]]))
@@ -453,8 +443,6 @@ def build_batch_from_assignment(
     overlap_limit: int = 1,
     overlap_boundary_distance_ratio: float = 1.05,
     overlap_residual_penalty: float = 1.0,
-    hash_col: str = "doc_hash",
-    embedding_col: str = "embedding",
 ) -> dict[str, DataFrame]:
     """{'clusters', 'memberships', 'routing_reps', 'spills'}: the shared
     assignment→artifact builder (buildBatchFromAssignment, :100-266).
@@ -466,8 +454,8 @@ def build_batch_from_assignment(
     the representative and spill post-passes compose from
     ``operators/topo_reps`` (:219, :263)."""
     docs = documents.select(
-        F.col(hash_col).alias("doc_hash"),
-        F.col(embedding_col).alias("embedding"),
+        F.col("doc_hash"),
+        F.col("embedding"),
     )
     mem = labels.select("doc_hash", "label").join(docs, "doc_hash", "left")
     cluster_ids = mem.groupBy("label").agg(

@@ -17,7 +17,7 @@ Reference:
     destination exists, score-desc / hash-asc order, capped at
     ``maxNeighborsPerDocument``. (The reference additionally bounds the
     edge FETCH at ``max(4*maxN, maxN)`` rows in store order —
-    ``scan_cap``/``scan_order_col`` reproduce that bound when wanted.)
+    ``scan_cap`` reproduces that bound (over ``edge_id``) when wanted.)
   - ``computeVarianceWeights`` (:114-165): per-dimension population
     variance over the first ≤4096 sample embeddings, top-``targetDim``
     dims by variance, weight = sqrt(var) in a dense full-dim vector
@@ -117,16 +117,10 @@ def l2_normalize_col(v: Column) -> Column:
     )
 
 
-def aggregate_doc_embeddings(
-    vectors: DataFrame,
-    doc_col: str = "doc_hash",
-    level_col: str = "level",
-    emb_col: str = "embedding",
-    seq_col: str = "seq",
-) -> DataFrame:
+def aggregate_doc_embeddings(vectors: DataFrame) -> DataFrame:
     """aggregateEmbedding (:397-430) over a vector-record table.
 
-    Record order is ``seq_col`` (the store's retrieval order). The first
+    Record order is ``seq`` (the store's retrieval order). The first
     non-empty DOCUMENT-level record wins; otherwise chunk records are
     averaged, where the first non-empty record fixes the dimension and
     mismatched records are skipped. Mean = sum/contributing — computed
@@ -134,40 +128,40 @@ def aggregate_doc_embeddings(
     by (doc, pos); map-side combined), cast to float at the division
     point like the C++.
     """
-    nonempty = vectors.where(F.size(emb_col) > 0)
+    nonempty = vectors.where(F.size("embedding") > 0)
     doclvl = (
-        nonempty.where(F.col(level_col) == "document")
+        nonempty.where(F.col("level") == "document")
         .withColumn(
             "_rk",
             F.row_number().over(
-                Window.partitionBy(doc_col).orderBy(F.col(seq_col).asc())
+                Window.partitionBy("doc_hash").orderBy(F.col("seq").asc())
             ),
         )
         .where(F.col("_rk") == 1)
-        .select(doc_col, F.col(emb_col).alias("embedding"))
+        .select("doc_hash", "embedding")
     )
     # Chunk aggregate for docs with no document-level record.
-    rest = nonempty.join(doclvl.select(doc_col), on=doc_col, how="left_anti")
-    ref_dim = rest.groupBy(doc_col).agg(
-        F.min_by(F.size(emb_col), F.col(seq_col)).alias("_dim")
+    rest = nonempty.join(doclvl.select("doc_hash"), on="doc_hash", how="left_anti")
+    ref_dim = rest.groupBy("doc_hash").agg(
+        F.min_by(F.size("embedding"), F.col("seq")).alias("_dim")
     )
-    contrib = rest.join(ref_dim, on=doc_col).where(
-        F.size(emb_col) == F.col("_dim")
+    contrib = rest.join(ref_dim, on="doc_hash").where(
+        F.size("embedding") == F.col("_dim")
     )
     pos = contrib.select(
-        doc_col, F.posexplode(emb_col).alias("_pos", "_val")
+        "doc_hash", F.posexplode("embedding").alias("_pos", "_val")
     )
     means = (
-        pos.groupBy(doc_col, "_pos")
+        pos.groupBy("doc_hash", "_pos")
         .agg(_f32(F.avg(F.col("_val").cast("double"))).alias("_mean"))
-        .groupBy(doc_col)
+        .groupBy("doc_hash")
         .agg(
             F.array_sort(
                 F.collect_list(F.struct("_pos", "_mean"))
             ).alias("_pm")
         )
         .select(
-            doc_col,
+            "doc_hash",
             F.transform(F.col("_pm"), lambda s: s["_mean"]).alias(
                 "embedding"
             ),
@@ -181,7 +175,6 @@ def collect_topology_neighbors(
     nodes: DataFrame,
     max_neighbors: int = 32,
     scan_cap: int | None = None,
-    scan_order_col: str = "edge_id",
 ) -> DataFrame:
     """collectNeighborsForDocument (:432-506) for every document at once.
 
@@ -190,7 +183,7 @@ def collect_topology_neighbors(
     ``doc:``-prefixed destinations survive (:479-481). When ``scan_cap``
     is given, the per-node bidirectional fetch bound
     ``max(4*maxN, maxN)`` (:436-438) is reproduced by ranking touched
-    edges per anchor node on ``scan_order_col`` (the store's scan order)
+    edges per anchor node on ``edge_id`` (the store's scan order)
     before the dedup — omitted by default, where the whole edge set is
     the scan.
     """
@@ -198,7 +191,7 @@ def collect_topology_neighbors(
         F.col("src_node_id"),
         F.col("dst_node_id"),
         F.col("weight"),
-        *([F.col(scan_order_col)] if scan_cap is not None else []),
+        *([F.col("edge_id")] if scan_cap is not None else []),
         F.explode(
             F.array_distinct(
                 F.array(F.col("src_node_id"), F.col("dst_node_id"))
@@ -206,11 +199,11 @@ def collect_topology_neighbors(
         ).alias("anchor"),
     )
     if scan_cap is not None:
-        w = Window.partitionBy("anchor").orderBy(F.col(scan_order_col).asc())
+        w = Window.partitionBy("anchor").orderBy(F.col("edge_id").asc())
         touched = (
             touched.withColumn("_srk", F.row_number().over(w))
             .where(F.col("_srk") <= scan_cap)
-            .drop("_srk", scan_order_col)
+            .drop("_srk", "edge_id")
         )
     outgoing = (
         touched.where(F.col("anchor") == F.col("src_node_id"))
@@ -255,7 +248,6 @@ def collect_topology_neighbors(
 
 def variance_weights(
     embeddings: DataFrame,
-    emb_col: str = "embedding",
     target_dim: int = 0,
     sample_cap: int = 4096,
     order_col: str = "doc_hash",
@@ -274,19 +266,19 @@ def variance_weights(
     if target_dim <= 0:
         return []
     sample = (
-        embeddings.where(F.size(emb_col) > 0)
+        embeddings.where(F.size("embedding") > 0)
         .orderBy(F.col(order_col).asc())
         .limit(sample_cap)
     )
-    first = sample.select(F.size(emb_col).alias("d")).head(1)
+    first = sample.select(F.size("embedding").alias("d")).head(1)
     if not first:
         return []
     full_dim = first[0]["d"]
     if target_dim >= full_dim:
         return []
     stats = (
-        sample.where(F.size(emb_col) == full_dim)
-        .select(F.posexplode(emb_col).alias("pos", "val"))
+        sample.where(F.size("embedding") == full_dim)
+        .select(F.posexplode("embedding").alias("pos", "val"))
         .groupBy("pos")
         .agg(
             F.avg(F.col("val").cast("double")).alias("mean"),
@@ -458,18 +450,14 @@ def entity_type_signatures(
 def compose_features(
     df: DataFrame,
     cfg: FeatureComposition,
-    emb_col: str = "embedding",
-    entity_col: str | None = "entity_sig",
-    sketch_col: str | None = "minhash_sketch",
     weights: list[float] | None = None,
-    out_col: str = "composed",
 ) -> DataFrame:
     """composeFeatureVector (:344-388): the weighted concat. NULL/empty
     branch columns are no-ops, exactly like the C++ empty vectors; an
     empty dense embedding short-circuits (:349-351)."""
     import numpy as np
 
-    dense: Column = F.col(emb_col)
+    dense: Column = F.col("embedding")
     if (
         cfg.enable_matryoshka
         and weights
@@ -486,13 +474,13 @@ def compose_features(
         dense = l2_normalize_col(dense)
 
     ent = (
-        F.coalesce(F.col(entity_col), F.array().cast("array<float>"))
-        if entity_col is not None and cfg.enable_entity_fusion
+        F.coalesce(F.col("entity_sig"), F.array().cast("array<float>"))
+        if cfg.enable_entity_fusion
         else F.array().cast("array<float>")
     )
     mh = (
-        F.coalesce(F.col(sketch_col), F.array().cast("array<float>"))
-        if sketch_col is not None and cfg.enable_minhash_sketch
+        F.coalesce(F.col("minhash_sketch"), F.array().cast("array<float>"))
+        if cfg.enable_minhash_sketch
         else F.array().cast("array<float>")
     )
     entity_on = F.size(ent) > 0
@@ -511,11 +499,11 @@ def compose_features(
         F.transform(mh, lambda x: _f32(x.cast("double") * alpha_m)),
     )
     out = (
-        F.when(F.size(F.col(emb_col)) == 0, F.col(emb_col).cast("array<float>"))
+        F.when(F.size(F.col("embedding")) == 0, F.col("embedding").cast("array<float>"))
         .when(~entity_on & ~minhash_on, dense)
         .otherwise(composed)
     )
-    return df.withColumn(out_col, out)
+    return df.withColumn("composed", out)
 
 
 # ---------------------------------------------------------------------------
@@ -525,10 +513,6 @@ def compose_features(
 
 def protected_relation_observations(
     neighbors: DataFrame,
-    doc_col: str = "doc_hash",
-    neighbor_col: str = "neighbor_doc_hash",
-    score_col: str = "score",
-    reciprocal_col: str = "reciprocal",
     reciprocal_only: bool = True,
     min_edge_score: float = 0.0,
 ) -> DataFrame:
@@ -539,26 +523,26 @@ def protected_relation_observations(
     (lhs < rhs). One semi-join + one keyed max — fully distributed."""
     import numpy as np
 
-    corpus = neighbors.select(F.col(doc_col).alias("_h")).distinct()
+    corpus = neighbors.select(F.col("doc_hash").alias("_h")).distinct()
     gated = neighbors.where(
-        (F.col(doc_col) != "")
-        & (F.col(neighbor_col) != "")
-        & (F.col(doc_col) != F.col(neighbor_col))
+        (F.col("doc_hash") != "")
+        & (F.col("neighbor_doc_hash") != "")
+        & (F.col("doc_hash") != F.col("neighbor_doc_hash"))
         & (
-            F.col(score_col)
+            F.col("score")
             >= F.lit(float(np.float32(min_edge_score))).cast("float")
         )
     )
     if reciprocal_only:
-        gated = gated.where(F.col(reciprocal_col))
+        gated = gated.where(F.col("reciprocal"))
     gated = gated.join(
-        corpus, gated[neighbor_col] == corpus["_h"], "left_semi"
+        corpus, gated["neighbor_doc_hash"] == corpus["_h"], "left_semi"
     )
     return (
         gated.select(
-            F.least(F.col(doc_col), F.col(neighbor_col)).alias("lhs"),
-            F.greatest(F.col(doc_col), F.col(neighbor_col)).alias("rhs"),
-            F.col(score_col).alias("score"),
+            F.least(F.col("doc_hash"), F.col("neighbor_doc_hash")).alias("lhs"),
+            F.greatest(F.col("doc_hash"), F.col("neighbor_doc_hash")).alias("rhs"),
+            F.col("score"),
         )
         .groupBy("lhs", "rhs")
         .agg(F.max("score").alias("score"))

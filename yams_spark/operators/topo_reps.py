@@ -110,9 +110,6 @@ def select_routing_representatives(
     clusters: DataFrame,
     count: int,
     cluster_col: str = "cluster_id",
-    hash_col: str = "doc_hash",
-    embedding_col: str = "embedding",
-    centroid_col: str = "centroid",
 ) -> DataFrame:
     """(cluster_id, sel_order, doc_hash, sel_distance): up to ``count-1``
     extra routing representatives per cluster. ``clusters`` (id,
@@ -120,13 +117,13 @@ def select_routing_representatives(
     ``applyInPandas`` shuffles members once on the cluster key."""
     joined = members.select(
         F.col(cluster_col).alias("cluster_id"),
-        F.col(hash_col).alias("doc_hash"),
-        F.col(embedding_col).alias("embedding"),
+        F.col("doc_hash"),
+        F.col("embedding"),
     ).join(
         F.broadcast(
             clusters.select(
                 F.col(cluster_col).alias("cluster_id"),
-                F.col(centroid_col).alias("centroid"),
+                F.col("centroid"),
             )
         ),
         "cluster_id",

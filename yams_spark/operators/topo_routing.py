@@ -36,7 +36,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ROUTE_SCORING_MODES = ("current", "size_weighted", "seed_coverage")
@@ -66,8 +66,6 @@ def route_clusters(
     alpha: float = 0.5,
     scoring_mode: str = "current",
     limit: int = 0,
-    representatives: DataFrame | None = None,
-    representative_limit: int = 1,
     hotzone: DataFrame | None = None,
     hotzone_weight: float = 0.0,
 ) -> DataFrame:
@@ -79,12 +77,9 @@ def route_clusters(
     rk) ordered by route_score desc / cluster_id asc
     (topology_baseline.cpp:966-971), optionally truncated to ``limit``.
 
-    ``representatives`` (cluster_id, embedding) are extra routing
-    representatives; dense is the max over centroid + up to
-    ``representative_limit - 1`` representatives per cluster
-    (topology_baseline.cpp:893-921). ``alpha`` blends sparse seed mass
-    with the dense signal; ``alpha >= 1`` skips the dense computation
-    entirely, exactly like the reference (:871, :889).
+    ``alpha`` blends sparse seed mass with the dense centroid signal;
+    ``alpha >= 1`` skips the dense computation entirely, exactly like the
+    reference (:871, :889).
 
     ``hotzone`` (cluster_id, boost in [1, 2]) composes the repo's
     recency-boost surface (streaming/hotzone.py, hotzone_manager.h:15-59)
@@ -126,7 +121,7 @@ def route_clusters(
             "sparse_norm", F.lit(0.0)
         )
 
-    # --- dense signal: centroid (+ representatives) cosine, JVM fold ---
+    # --- dense signal: centroid cosine, JVM fold ---
     has_query = (
         query_embedding is not None
         and len(query_embedding) > 0
@@ -136,33 +131,6 @@ def route_clusters(
     if has_query:
         q = [float(x) for x in query_embedding]
         out = out.withColumn("dense", _dense_signal(F.col("centroid"), q))
-        n_extra = (
-            None if representative_limit == 0 else max(representative_limit - 1, 0)
-        )
-        if representatives is not None and (n_extra is None or n_extra > 0):
-            reps = representatives
-            if n_extra is not None:
-                reps = (
-                    reps.withColumn(
-                        "_ri",
-                        F.row_number().over(
-                            Window.partitionBy("cluster_id").orderBy(
-                                F.monotonically_increasing_id()
-                            )
-                        ),
-                    )
-                    .where(F.col("_ri") <= n_extra)
-                    .drop("_ri")
-                )
-            rep_dense = (
-                reps.withColumn("rep_dense", _dense_signal(F.col("embedding"), q))
-                .groupBy("cluster_id")
-                .agg(F.max("rep_dense").alias("rep_dense"))
-            )
-            out = out.join(rep_dense, "cluster_id", "left").withColumn(
-                "dense",
-                F.greatest(F.col("dense"), F.coalesce(F.col("rep_dense"), F.lit(0.0))),
-            )
         out = out.withColumn("dense_observed", F.lit(True))
     else:
         out = out.withColumn("dense", F.lit(0.0)).withColumn(
@@ -346,9 +314,6 @@ def rank_seed_evidence(
     components: DataFrame,
     sources: tuple[str, ...] = LEXICAL_SEED_SOURCES,
     max_seeds: int = 32,
-    id_col: str = "doc_hash",
-    score_col: str = "score",
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Weighted topology seeds from component evidence
     (``rankSeedEvidence``, search_topology_stage.cpp:26-65): per doc the
@@ -361,23 +326,23 @@ def rank_seed_evidence(
     if max_seeds <= 0:
         return (
             components.select(
-                F.col(id_col).alias("doc_hash"), F.lit(0.0).alias("weight")
+                F.col("doc_hash"), F.lit(0.0).alias("weight")
             ).limit(0)
         )
-    w = F.col(score_col) / (
-        F.lit(1.0) + F.log1p(F.col(rank_col).cast("double") + F.lit(1.0))
+    w = F.col("score") / (
+        F.lit(1.0) + F.log1p(F.col("rank").cast("double") + F.lit(1.0))
     )
     cand = (
         components.filter(
-            F.col(id_col).isNotNull()
-            & (F.col(id_col) != "")
-            & F.col(score_col).isNotNull()
-            & ~F.isnan(F.col(score_col))
-            & (F.abs(F.col(score_col)) != F.lit(float("inf")))
-            & (F.col(score_col) > 0.0)
+            F.col("doc_hash").isNotNull()
+            & (F.col("doc_hash") != "")
+            & F.col("score").isNotNull()
+            & ~F.isnan(F.col("score"))
+            & (F.abs(F.col("score")) != F.lit(float("inf")))
+            & (F.col("score") > 0.0)
             & F.col("source").isin(list(sources))
         )
-        .select(F.col(id_col).alias("doc_hash"), w.alias("w"))
+        .select(F.col("doc_hash"), w.alias("w"))
     )
     return (
         cand.groupBy("doc_hash")

@@ -82,8 +82,6 @@ def persistence_h0(vectors) -> float:
 
 def cluster_centroids_f32(
     members: DataFrame,
-    cluster_col: str = "cluster_id",
-    embedding_col: str = "embedding",
 ) -> DataFrame:
     """(cluster, n_members, centroid): float32-accumulated member-mean
     embeddings per cluster, clusters with < 2 members dropped
@@ -92,7 +90,7 @@ def cluster_centroids_f32(
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
         vecs = [
             np.asarray(v, dtype=np.float32)
-            for v in pdf[embedding_col]
+            for v in pdf["embedding"]
             if v is not None and len(v) > 0
         ]
         if len(vecs) < 2:
@@ -111,22 +109,20 @@ def cluster_centroids_f32(
             count += 1
         centroid = (acc / np.float32(count)).astype(np.float32)
         return pd.DataFrame(
-            {"cluster": [str(pdf[cluster_col].iloc[0])],
+            {"cluster": [str(pdf["cluster_id"].iloc[0])],
              "n_members": [count],
              "centroid": [[float(x) for x in centroid]]}
         )
 
     return (
-        members.select(F.col(cluster_col), F.col(embedding_col))
-        .groupBy(cluster_col)
+        members.select(F.col("cluster_id"), F.col("embedding"))
+        .groupBy("cluster_id")
         .applyInPandas(agg, schema="cluster string, n_members long, centroid array<float>")
     )
 
 
 def topology_quality_stats(
     members: DataFrame,
-    cluster_col: str = "cluster_id",
-    embedding_col: str = "embedding",
     max_centroids: int = 4096,
 ) -> dict:
     """{'centroid_count': int, 'persistence': float}: the reference's
@@ -134,7 +130,7 @@ def topology_quality_stats(
     persistence 0.0 when fewer than 2 centroids survive. The centroid
     gather is gated at ``max_centroids`` (hash-ordered deterministic
     subsample above it)."""
-    cents = cluster_centroids_f32(members, cluster_col, embedding_col)
+    cents = cluster_centroids_f32(members)
     capped = (
         cents.orderBy(F.sha2(F.col("cluster"), 256).asc(), F.col("cluster").asc())
         .limit(max_centroids)

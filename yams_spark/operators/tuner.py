@@ -139,9 +139,6 @@ class TunerMAB:
 
 def mab_stats(
     rewards: DataFrame,
-    arm_col: str = "arm_id",
-    reward_col: str = "reward",
-    exploration_c: float = SQRT2,
 ) -> DataFrame:
     """(arm_id, pulls, reward_sum, mean_reward, ucb_score, is_best): the
     bandit's final state from a reward log — per-event clamp to [0,1]
@@ -149,9 +146,9 @@ def mab_stats(
     with id-asc tie-break (:73-94). One keyed aggregation + a 1-row
     total broadcast; equals the sequential fold exactly because sums
     commute."""
-    clamped = F.least(F.greatest(F.col(reward_col).cast("double"), F.lit(0.0)), F.lit(1.0))
+    clamped = F.least(F.greatest(F.col("reward").cast("double"), F.lit(0.0)), F.lit(1.0))
     per_arm = (
-        rewards.select(F.col(arm_col).alias("arm_id"), clamped.alias("r"))
+        rewards.select(F.col("arm_id"), clamped.alias("r"))
         .groupBy("arm_id")
         .agg(F.count("*").alias("pulls"), F.sum("r").alias("reward_sum"))
     )
@@ -162,7 +159,7 @@ def mab_stats(
         .withColumn(
             "ucb_score",
             F.col("mean_reward")
-            + F.lit(float(exploration_c))
+            + F.lit(SQRT2)
             * F.sqrt(
                 F.log(F.greatest(F.lit(1.0), F.col("total_pulls").cast("double")))
                 / F.col("pulls")

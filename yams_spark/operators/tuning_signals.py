@@ -28,24 +28,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: TuningContext columns (search_tuner.h:739-760); any missing column is
-#: treated as the struct's zero default by the entry points below.
-CONTEXT_FIELDS = (
-    "doc_count_log10",
-    "code_ratio",
-    "prose_ratio",
-    "embedding_coverage",
-    "native_symbol_density",
-    "path_relative_depth_avg",
-    "binary_ratio",
-    "kg_edge_density",
-    "query_token_count_log2",
-    "query_has_vector_path",
-    "query_has_kg_anchors",
-    "corpus_epoch",
-    "topology_epoch",
-)
-
 _INF = float("inf")
 
 
@@ -138,10 +120,10 @@ def _doc_decade(c: Column) -> Column:
     )
 
 
-def bucketize(ctx: DataFrame, out_col: str = "bucket") -> DataFrame:
+def bucketize(ctx: DataFrame) -> DataFrame:
     """Append the stable bucket key (tuning_features.cpp:100-110)."""
     return ctx.withColumn(
-        out_col,
+        "bucket",
         F.concat(
             F.lit("c"),
             _quartile(_ctx(ctx, "code_ratio")).cast("string"),
@@ -163,14 +145,9 @@ def bucketize(ctx: DataFrame, out_col: str = "bucket") -> DataFrame:
 
 def combine_reward(
     observations: DataFrame,
-    label_col: str = "label_reward",
-    kg_col: str = "kg_utility",
-    freshness_col: str = "freshness_boost",
-    agreement_col: str = "agreement_boost",
-    over_budget_col: str = "latency_over_budget",
 ) -> DataFrame:
     """Append ``reward_value`` / ``reward_source``
-    (tuning_reward.cpp:26-49). ``label_col`` is the optional: NULL or
+    (tuning_reward.cpp:26-49). ``label_reward`` is the optional: NULL or
     non-finite label routes to the proxy branch; a finite label is
     penalized by the over-budget amount and attributed Labels, or Mixed
     when the proxy blend is non-trivial (> 1e-6)."""
@@ -184,13 +161,13 @@ def combine_reward(
             F.least(c, F.lit(1.0))
         )
 
-    over = F.greatest(F.lit(0.0), clean(over_budget_col))
+    over = F.greatest(F.lit(0.0), clean("latency_over_budget"))
     proxy = (
-        clean(kg_col) * 0.6
-        + clean(freshness_col) * 0.2
-        + clean(agreement_col) * 0.2
+        clean("kg_utility") * 0.6
+        + clean("freshness_boost") * 0.2
+        + clean("agreement_boost") * 0.2
     )
-    label = F.col(label_col)
+    label = F.col("label_reward")
     has_label = _finite(label)
     return (
         observations.withColumn("_proxy_blended", proxy)

@@ -38,8 +38,8 @@ _STYLE_CHURN = [
 _NAV_WORDS = ["home", "about", "products", "blog", "contact", "careers", "press"]
 
 
-def _sentences(words: list[str], per: int = 8) -> list[str]:
-    return [" ".join(words[i : i + per]) for i in range(0, len(words), per)]
+def _sentences(words: list[str]) -> list[str]:
+    return [" ".join(words[i : i + 8]) for i in range(0, len(words), 8)]
 
 
 def _encode_amp(rng: np.random.Generator, s: str) -> str:

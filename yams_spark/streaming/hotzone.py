@@ -43,7 +43,6 @@ def fold_events(
     events: list[tuple[datetime, float]],
     initial_score: float = 0.0,
     initial_ts: datetime | None = None,
-    half_life_hours: float = DEFAULT_HALF_LIFE_HOURS,
 ) -> tuple[float, datetime | None]:
     """record() semantics (hotzone_manager.cpp:25-41) folded over a sorted
     event list: score = score·decay(elapsed) + weight. Elapsed is truncated
@@ -61,7 +60,7 @@ def fold_events(
             continue
         minutes = max(0, int((ts - last).total_seconds() // 60))
         hours = minutes / 60.0
-        score = score * decay_factor(hours, half_life_hours) + weight
+        score = score * decay_factor(hours) + weight
         if ts > last:
             last = ts
     return score, last
@@ -75,8 +74,6 @@ def hotzone_batch(
     key_col: str = "key",
     ts_col: str = "ts",
     weight_col: str = "weight",
-    half_life_hours: float = DEFAULT_HALF_LIFE_HOURS,
-    max_boost: float = DEFAULT_MAX_BOOST,
 ):
     """Batch twin: same math over a static DataFrame (one Arrow pass per
     key group via applyInPandas)."""
@@ -89,12 +86,12 @@ def hotzone_batch(
             if t.tzinfo is None:
                 t = t.replace(tzinfo=timezone.utc)
             events_l.append((t, float(w)))
-        score, last = fold_events(events_l, half_life_hours=half_life_hours)
+        score, last = fold_events(events_l)
         return pd.DataFrame(
             {
                 "key": [pdf[key_col].iloc[0]],
                 "score": [score],
-                "boost": [boost_from_score(score, max_boost)],
+                "boost": [boost_from_score(score)],
                 "last_ts": [last.replace(tzinfo=None) if last else None],
             }
         )

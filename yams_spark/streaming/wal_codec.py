@@ -68,13 +68,12 @@ def encode_wal_entry(
     payload: bytes = b"",
     timestamp: int = 0,
     version: int = 1,
-    flags: int = 0,
 ) -> bytes:
     """WALEntry::serialize (:92-110): zero-checksum bytes, CRC, patch."""
     op_id = _OP_IDS[op] if isinstance(op, str) else int(op)
     raw = bytearray(
         _header_bytes(version, sequence_num, timestamp, transaction_id,
-                      op_id, flags, len(payload), 0)
+                      op_id, 0, len(payload), 0)
     )
     raw += payload
     checksum = zlib.crc32(bytes(raw)) & 0xFFFFFFFF
