@@ -11,7 +11,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from yams_spark.operators.compression import (
-    CompressionRules,
     compression_decisions,
     crc32_col,
     estimate_compression_ratio_col,
@@ -25,13 +24,13 @@ _NOW = 1_700_000_000
 _MB = 1024 * 1024
 
 
-def _decide(spark, rows, **kw):
+def _decide(spark, rows):
     df = spark.createDataFrame(
         rows,
         "name string, mime_type string, size long, created_ts long, "
         "last_accessed_ts long, access_count long",
     )
-    out = compression_decisions(df, now_ts=_NOW, **kw)
+    out = compression_decisions(df, now_ts=_NOW)
     return {
         r["name"]: (
             r["should_compress"], r["algorithm"], r["level"], r["reason"]
@@ -108,12 +107,7 @@ def test_algorithm_level_and_reasons(spark):
     assert got["stale.txt"] == (True, "LZMA", 5, "Old file (31 days)")
 
 
-def test_resource_gate_and_zero_age(spark):
-    rows = [("r.txt", "text/plain", 5 * _MB, _ts(100), _ts(50), 5)]
-    got = _decide(spark, rows, has_system_resources=False)
-    assert got["r.txt"] == (
-        False, "None", 0, "Insufficient system resources"
-    )
+def test_zero_age_frequency(spark):
     # total age 0 -> frequency = raw access count (hot)
     rows = [("z.txt", "text/plain", 5 * _MB, _ts(0), _ts(2), 42)]
     got = _decide(spark, rows)

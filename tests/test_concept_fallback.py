@@ -1,6 +1,5 @@
 """Fallback query concepts (operators/concept_fallback.py) vs
-hand-derived expectations from query_expansion.cpp:32-297 and
-concept_resolver.cpp:11-53."""
+hand-derived expectations from query_expansion.cpp:32-297."""
 
 from __future__ import annotations
 
@@ -9,13 +8,10 @@ from collections import defaultdict
 import pytest
 
 from yams_spark.operators.concept_fallback import (
-    QueryConcept,
-    enrich_with_fallback_concepts,
     fallback_concepts_df,
     generate_anchored_sub_phrases,
     generate_fallback_query_concepts,
     infer_fallback_concept_type,
-    normalize_entity_text_for_key,
     normalize_graph_surface,
     token_fallback_salience,
     tokenize_query_tokens,
@@ -28,7 +24,6 @@ def test_tokenize_and_surfaces():
         ("Hello", "hello", 0), ("World", "world", 1), ("42", "42", 2),
     ]
     assert normalize_graph_surface("  CD4+ T-Cell  ") == "cd4 t cell"
-    assert normalize_entity_text_for_key("  CD4   T Cell ") == "cd4 t cell"
     assert tokenize_query_tokens("...") == []
 
 
@@ -56,11 +51,6 @@ def test_anchored_phrases_order_and_windows():
         "kinase activation",
         "activation pathway",
     ]
-    # idf boost moves the kinase anchor in front of activation
-    boosted = generate_anchored_sub_phrases(
-        "protein kinase activation pathway", 2, {"kinase": 2.0}
-    )
-    assert boosted == ["protein kinase activation", "kinase activation pathway"]
     assert generate_anchored_sub_phrases("too short", 4) == []
     assert generate_anchored_sub_phrases("a b c d", 0) == []
 
@@ -109,78 +99,6 @@ def test_generate_concepts_confidences_and_cap():
     )
 
 
-def test_enrich_merge_dedup_and_cap():
-    existing = [QueryConcept("Kinase  Activation", "protein", 0.9)]
-    merged = enrich_with_fallback_concepts(
-        "protein kinase activation pathway", existing, max_concepts=4
-    )
-    assert merged[0] is existing[0]
-    assert len(merged) == 4
-    # the fallback phrase whose key collides with the extractor concept
-    # ('kinase activation' | protein, whitespace-collapsed) is skipped
-    assert "kinase activation" not in [c.text for c in merged[1:]]
-    keys = [
-        normalize_entity_text_for_key(c.text) + "|" + c.type for c in merged
-    ]
-    assert len(set(keys)) == 4
-    # already-full list untouched
-    full = [QueryConcept(f"c{i}", "concept", 0.5) for i in range(3)]
-    assert enrich_with_fallback_concepts("protein kinase one", full, 3) == full
-    assert enrich_with_fallback_concepts("protein kinase one", [], 0) == []
-
-
-def test_resolve_query_concepts_extractor_first():
-    """concepts.resolve_query_concepts: extractor spans lead, fallback
-    merges behind on the normalized_text|type key, everything lowercased
-    and deduped."""
-    from yams_spark.operators.concepts import resolve_query_concepts
-
-    terms = resolve_query_concepts("Protein Kinase activation pathway")
-    # extractor span ("Protein Kinase" -> protein) leads; the fallback
-    # phrase with the same key would collide only on identical surface
-    assert terms[0] == "protein kinase"
-    assert len(terms) == len(set(terms))
-    assert "kinase activation pathway" in terms
-    # no extractor spans -> pure fallback ordering (phrases first)
-    fb = resolve_query_concepts("protein kinase activation pathway")
-    assert fb[0] == "kinase activation pathway"
-    assert resolve_query_concepts("", max_concepts=4) == []
-    assert resolve_query_concepts("Protein Kinase", max_concepts=0) == []
-
-
-def test_hybrid_concept_boost_wiring(spark):
-    """enable_concept_boost: fallback-derived phrase concepts break a
-    lexical tie in favor of the doc whose text contains them
-    (concept_resolver.cpp merge -> concept_boost.cpp budget spend)."""
-    from yams_spark.operators.neighbors import hybrid_search
-
-    docs = spark.createDataFrame(
-        [
-            (1, "protein kinase activation pathway demo"),
-            (2, "pathway activation kinase protein demo"),
-        ],
-        "doc_id long, text string",
-    )
-    base = hybrid_search(
-        spark, docs, query_text="protein kinase activation pathway",
-        query_embedding=None, embedding_df=None, limit=2,
-    ).collect()
-    by_id = {r["doc_id"]: r["fused_score"] for r in base}
-    assert by_id["1"] > by_id["2"]  # doc-id tie-break at equal BM25 → rank 0
-    boosted = hybrid_search(
-        spark, docs, query_text="protein kinase activation pathway",
-        query_embedding=None, embedding_df=None, limit=2,
-        enable_concept_boost=True,
-    ).collect()
-    bby = {r["doc_id"]: r["fused_score"] for r in boosted}
-    # doc 1 contains every resolved concept as a substring: desired
-    # 0.10 × 6 caps at the 0.25 global budget (×1.25); rank-0 spend
-    # leaves nothing for doc 2, whose only match is 'activation'
-    assert bby["1"] == pytest.approx(by_id["1"] * 1.25, rel=1e-9)
-    assert bby["2"] == pytest.approx(by_id["2"], rel=1e-9)
-    assert boosted[0]["doc_id"] == "1"
-
-
 #: battery for the dataflow-twin equivalence: weak tokens, numerics,
 #: repeats, casing, punctuation/unicode separators, short/degenerate
 #: queries, >max_concepts anchors
@@ -221,46 +139,12 @@ def test_dataflow_twin_matches_scalar(spark):
     for r in rows:
         by_q[r.query_id].append(r)
     for i, q in enumerate(_TWIN_QUERIES):
-        exp = generate_fallback_query_concepts(q, None, 8)
+        exp = generate_fallback_query_concepts(q, 8)
         got = by_q.get(i, [])
         assert [(r.text, r.type) for r in got] == [
             (c.text, c.type) for c in exp
         ], f"query {i}: {q!r}"
         assert [r.rank for r in got] == list(range(1, len(exp) + 1))
-        for r, c in zip(got, exp):
-            assert r.confidence == pytest.approx(c.confidence, abs=2e-6)
-
-
-def test_dataflow_twin_idf_boost(spark):
-    """idf_df reorders anchors (positive-only branch) and the token tier
-    (always-add branch) identically to the scalar's idf_by_token —
-    including a negative idf that must affect tokens but not anchors."""
-    from yams_spark.operators.concept_fallback import fallback_concepts_df
-
-    idf = {"kinase": 2.0, "protein": -0.5, "treatment": 1.5}
-    qs = [
-        "protein kinase activation pathway",
-        "results show 2024 cancer treatment",
-        "CD4 T cell receptor signaling in monocyte differentiation",
-    ]
-    df = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(qs)], "query_id long, query string"
-    )
-    idf_df = spark.createDataFrame(
-        list(idf.items()), "token string, idf double"
-    )
-    rows = fallback_concepts_df(df, max_concepts=8, idf_df=idf_df).orderBy(
-        "query_id", "rank"
-    ).collect()
-    by_q: dict[int, list] = defaultdict(list)
-    for r in rows:
-        by_q[r.query_id].append(r)
-    for i, q in enumerate(qs):
-        exp = generate_fallback_query_concepts(q, idf, 8)
-        got = by_q.get(i, [])
-        assert [(r.text, r.type) for r in got] == [
-            (c.text, c.type) for c in exp
-        ], f"query {i}: {q!r}"
         for r, c in zip(got, exp):
             assert r.confidence == pytest.approx(c.confidence, abs=2e-6)
 
@@ -283,5 +167,5 @@ def test_dataflow_twin_cap_variants(spark):
         for r in rows:
             by_q[r.query_id].append(r)
         for i, q in enumerate(qs):
-            exp = generate_fallback_query_concepts(q, None, cap)
+            exp = generate_fallback_query_concepts(q, cap)
             assert [r.text for r in by_q.get(i, [])] == [c.text for c in exp]

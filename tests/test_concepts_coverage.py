@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from yams_spark.operators.concepts import (
+    CONCEPT_MAX_SCAN_RESULTS,
     apply_concept_boost,
     extract_query_concepts,
 )
@@ -74,17 +75,19 @@ def test_concept_boost_budget_hand_computed(spark) -> None:
 
 
 def test_concept_boost_scan_window_and_resort(spark) -> None:
-    """Rows beyond max_scan pass through unboosted; a boosted low row
-    overtakes an unboosted higher one in the final re-sort."""
+    """Rows beyond the CONCEPT_MAX_SCAN_RESULTS window pass through
+    unboosted; a boosted low row overtakes an unboosted higher one in the
+    final re-sort."""
+    window = CONCEPT_MAX_SCAN_RESULTS
+    rows = [(1, 1.0, "x", "n"), (2, 0.95, "concept", "n")]
+    rows += [(i, 0.9 - i * 1e-4, "x", "n") for i in range(3, window + 1)]
+    rows.append((window + 1, 0.5, "concept", "n"))  # just outside the window
     results = spark.createDataFrame(
-        [(1, 1.0, "x", "n"), (2, 0.95, "concept", "n"),
-         (3, 0.9, "concept", "n")],
-        "doc_id long, score double, snippet string, name string",
+        rows, "doc_id long, score double, snippet string, name string"
     )
     out = {r["doc_id"]: r for r in apply_concept_boost(
-        results, ["concept"], max_scan=2).collect()}
-    # doc3 is outside the 2-row scan window: untouched
-    assert out[3]["score"] == pytest.approx(0.9)
+        results, ["concept"]).collect()}
+    assert out[window + 1]["score"] == pytest.approx(0.5)  # untouched
     # doc2 boosted .95*1.1 = 1.045 > doc1's 1.0 -> re-sort flips them
     assert out[2]["score"] == pytest.approx(0.95 * 1.1)
     assert out[2]["rank"] == 1 and out[1]["rank"] == 2

@@ -29,9 +29,9 @@ def _skewed(spark, n=20000):
 def test_choose_sample_digits() -> None:
     assert choose_sample_digits(None) == 0
     assert choose_sample_digits(1000) == 0  # under target -> exact
-    assert choose_sample_digits(65536, target=65536) == 0
-    assert choose_sample_digits(16 * 65536, target=65536) == 1
-    assert choose_sample_digits(16**2 * 65536, target=65536) == 2
+    assert choose_sample_digits(65536) == 0  # FACET_SAMPLE_TARGET
+    assert choose_sample_digits(16 * 65536) == 1
+    assert choose_sample_digits(16**2 * 65536) == 2
 
 
 def test_exact_facets(spark) -> None:

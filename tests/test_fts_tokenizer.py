@@ -153,12 +153,8 @@ def test_unicode61_spark_and_duckdb_match_python(spark) -> None:
 
 
 def test_stemmed_posting_lists(spark) -> None:
-    """tokenizer='porter': postings re-keyed by stem, tf summed, dl kept;
-    positional variant merges position lists of same-stem terms."""
-    from yams_spark.operators.search import (
-        build_positional_postings,
-        build_posting_lists,
-    )
+    """tokenizer='porter': postings re-keyed by stem, tf summed, dl kept."""
+    from yams_spark.operators.search import build_posting_lists
 
     docs = spark.createDataFrame(
         [(1, "running runs run fast"), (2, "the merge merged tables")],
@@ -171,14 +167,6 @@ def test_stemmed_posting_lists(spark) -> None:
     assert rows[(2, "merg")] == (2, 4)
     assert rows[(2, "tabl")] == (1, 4)
     assert rows[(2, "the")] == (1, 4)
-
-    pp = build_positional_postings(docs, "doc_id", "text", tokenizer="porter")
-    prow = {
-        (r["doc_id"], r["term"]): (list(r["positions"]), r["tf"])
-        for r in pp.collect()
-    }
-    assert prow[(1, "run")] == ([1, 2, 3], 3)
-    assert prow[(2, "merg")] == ([2, 3], 2)
 
 
 def test_stemmed_search_matches_inflections(spark) -> None:

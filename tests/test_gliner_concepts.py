@@ -84,12 +84,6 @@ def test_gliner_cascade(spark):
     assert len(q2) == 1 and q2[0]["concept_text"] == "BERT"
 
 
-def test_requested_type_gate_off(spark):
-    out = gliner_query_concepts(_entities(spark), requested_types=[])
-    q1 = {r["concept_text"] for r in out.collect() if r["query_id"] == 1}
-    assert "mystery" in q1  # empty request set disables the gate
-
-
 def test_surface_variants():
     from yams_spark.operators.gliner_concepts import (
         generate_surface_variants,

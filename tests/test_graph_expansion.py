@@ -134,7 +134,7 @@ def test_hybrid_search_graph_sources(spark) -> None:
     )
     out = hybrid_search(
         spark, docs, query_text="alpha", query_embedding=None,
-        embedding_df=emb, limit=10, enable_lexical_expansion=False,
+        embedding_df=emb, limit=10,
         kg_tables={
             "kg_nodes": nodes, "kg_aliases": aliases, "kg_rel_edges": edges,
             "kg_node_embeddings": node_emb,
@@ -167,7 +167,3 @@ def test_fuzzy_alias_fallback(spark) -> None:
            graph_expansion_terms("alpah", aliases, nodes, edges).collect()}
     assert got["alpha"] == pytest.approx(0.36 * 0.8)
     assert got["beta"] == pytest.approx(0.09 * 0.8)
-    # fuzzy_max_distance=0 restores exact-only behavior (no seeds)
-    assert graph_expansion_seeds(
-        "alpah", aliases, nodes, fuzzy_max_distance=0
-    ).count() == 0

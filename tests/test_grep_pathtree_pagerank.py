@@ -7,7 +7,6 @@ import re
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from yams_spark.operators.grep import (
     extract_literal,
@@ -91,20 +90,19 @@ def test_path_tree_rollup_centroid(spark) -> None:
     from yams_spark.operators.pathtree import path_tree_rollup
 
     rows = [
-        ("/a/x/f1", [1.0, 3.0], 10),
-        ("/a/x/f2", [3.0, 5.0], 20),
-        ("/a/y/f3", [5.0, 7.0], 30),
-        ("/b/z/f4", None, 40),  # null embedding: counted, not averaged
+        ("/a/x/f1", [1.0, 3.0]),
+        ("/a/x/f2", [3.0, 5.0]),
+        ("/a/y/f3", [5.0, 7.0]),
+        ("/b/z/f4", None),  # null embedding: counted, not averaged
     ]
-    docs = spark.createDataFrame(rows, "path string, embedding array<double>, sz long")
+    docs = spark.createDataFrame(rows, "path string, embedding array<double>")
     out = {
         r["prefix"]: r
-        for r in path_tree_rollup(docs, "path", "embedding", size_col="sz").collect()
+        for r in path_tree_rollup(docs, "path", "embedding").collect()
     }
     assert out["/a"]["doc_count"] == 3 and out["/a"]["centroid_weight"] == 3
     assert out["/a"]["centroid"] == [3.0, 5.0]
     assert out["/a/x"]["centroid"] == [2.0, 4.0]
-    assert out["/a/x"]["total_size"] == 30
     assert out["/b"]["doc_count"] == 1 and out["/b"]["centroid_weight"] == 0
     assert out["/b"]["centroid"] is None
     assert out["/a/x/f1"]["doc_count"] == 1  # leaf node itself
@@ -183,42 +181,6 @@ def test_sgc_smoothing_matches_numpy(spark) -> None:
         assert got[i] == pytest.approx(list(want[i]), rel=1e-6)
     # isolated node: degree 1, self-scale 1 -> embedding unchanged
     assert got[3] == pytest.approx([2.0, 0.0])
-
-
-def test_cluster_metrics_sgc_prepass(spark) -> None:
-    """cluster_metrics(sgc_hops=1): centroids computed in the smoothed
-    space equal mean(sgc_smooth(embeddings)) per component; hops=0 is
-    bit-identical to the raw path."""
-    from yams_spark.operators.clustering import cluster_metrics
-    from yams_spark.operators.sgc import sgc_smooth
-
-    sigs = spark.createDataFrame(
-        [("a", "h1", [1.0, 0.0]), ("b", "h2", [0.0, 1.0]), ("c", "h3", [1.0, 1.0])],
-        "url string, doc_hash string, embedding array<float>",
-    )
-    pairs = spark.createDataFrame(
-        [("a", "b", 0.0, 0.0, 0.0, 0.9), ("b", "c", 0.0, 0.0, 0.0, 0.5)],
-        "url_a string, url_b string, cosine double, title_overlap double, "
-        "path_overlap double, pair_score double",
-    )
-    raw = cluster_metrics(sigs, pairs).collect()[0]
-    assert raw["centroid"] == pytest.approx([2 / 3, 2 / 3], abs=1e-6)
-
-    sm = cluster_metrics(sigs, pairs, sgc_hops=1).collect()[0]
-    want = {
-        r["node"]: list(r["embedding"])
-        for r in sgc_smooth(
-            sigs.select(F.col("url").alias("node"), "embedding"),
-            pairs.select(
-                F.col("url_a").alias("src"), F.col("url_b").alias("dst"),
-                F.col("pair_score").alias("weight"),
-            ),
-            hops=1,
-        ).collect()
-    }
-    exp_centroid = np.mean([want["a"], want["b"], want["c"]], axis=0)
-    assert sm["centroid"] == pytest.approx(list(exp_centroid), abs=1e-6)
-    assert sm["centroid"] != pytest.approx(raw["centroid"], abs=1e-6)
 
 
 def test_resolve_documents_cascade(spark) -> None:

@@ -198,8 +198,3 @@ def test_kg_node_embeddings_centroid(spark) -> None:
     # single-doc entity gets its doc's embedding verbatim
     solo = out["nl_entity:span:solo entity"]
     assert solo["n_docs"] == 1 and solo["embedding"] == [9.0, 11.0]
-    # populate_kg exposes the table when embeddings are supplied
-    from yams_spark.operators.kg import populate_kg
-
-    full = populate_kg(docs, pagerank_iters=2, doc_embeddings=embs)
-    assert "kg_node_embeddings" in full and full["kg_node_embeddings"].count() > 0

@@ -105,7 +105,6 @@ def test_lexical_or_retry_expansion(spark) -> None:
     out2 = hybrid_search(
         spark, docs, query_text="document without",
         query_embedding=None, embedding_df=None, limit=10,
-        enable_lexical_expansion=True,
     ).collect()
     ids2 = {r["doc_id"] for r in out2}
     assert ids2 == {"3", "4", "5"}  # the 3 AND hits, nothing expanded
@@ -117,15 +116,11 @@ def test_lexical_or_retry_expansion(spark) -> None:
     assert len(expansion_terms([f"term{i}" for i in range(10)])) == 6
 
 
-def test_tag_metadata_components_in_hybrid(spark) -> None:
+def test_tag_metadata_components(spark) -> None:
     """Tag matchAll intersects (score 1.0); metadata filters are
-    conjunctive; both feed fuse_evidence through hybrid_search."""
+    conjunctive."""
     from yams_spark.operators.components import metadata_component, tag_component
 
-    docs = spark.createDataFrame(
-        [(1, "alpha text"), (2, "alpha text"), (3, "alpha text")],
-        "doc_id long, text string",
-    )
     doc_tags = spark.createDataFrame(
         [(1, "red"), (1, "blue"), (2, "red"), (3, "blue")],
         "doc_id long, tag string",
@@ -142,52 +137,3 @@ def test_tag_metadata_components_in_hybrid(spark) -> None:
     )
     m = metadata_component(doc_meta, {"lang": "en", "src": "a"}).collect()
     assert [(r["doc_id"], r["score"]) for r in m] == [("1", 1.0)]
-
-    out = hybrid_search(
-        spark, docs, query_text="alpha", query_embedding=None,
-        embedding_df=None, limit=3,
-        doc_tags=doc_tags, query_tags=["red", "blue"], tags_match_all=True,
-        doc_metadata=doc_meta, metadata_filters={"lang": "en", "src": "a"},
-    ).collect()
-    # doc 1 carries tag + metadata evidence on top of lexical -> ranked first
-    assert out[0]["doc_id"] == "1"
-
-
-def test_cross_rerank_wiring(spark) -> None:
-    """rerank_scores_overlap = query<->doc token-set Jaccard; hybrid with
-    enable_cross_rerank returns the same doc set, head reordered by the
-    blend (never displaced), tail order preserved."""
-    from yams_spark.operators.search import rerank_scores_overlap
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta filler{i} " + "pad " * i) for i in range(1, 9)],
-        "doc_id long, text string",
-    )
-    head = spark.createDataFrame(
-        [("1", 0.9), ("2", 0.8)], "doc_id string, fused_score double"
-    )
-    scored = {
-        r["doc_id"]: r["rerank_score"]
-        for r in rerank_scores_overlap(
-            head,
-            docs.select(F.col("doc_id"), F.col("text")),
-            "alpha beta",
-        ).collect()
-    }
-    # doc 1 tokens: {alpha, beta, filler1, pad}; query {alpha, beta} -> 2/4
-    assert scored["1"] == pytest.approx(0.5)
-    assert scored["2"] == pytest.approx(0.5)  # {alpha,beta,filler2,pad}
-
-    base = hybrid_search(spark, docs, "alpha beta", None, limit=6).collect()
-    rer = hybrid_search(
-        spark, docs, "alpha beta", None, limit=6, enable_cross_rerank=True,
-        rerank_top_n=3,
-    ).collect()
-    assert {r["doc_id"] for r in base} == {r["doc_id"] for r in rer}
-    assert [r["final_rank"] for r in rer] == [1, 2, 3, 4, 5, 6]
-    # head set preserved (reordering allowed), tail order identical
-    assert {r["doc_id"] for r in rer[:3]} == {r["doc_id"] for r in base[:3]}
-    assert [r["doc_id"] for r in rer[3:]] == [r["doc_id"] for r in base[3:]]
-    # blended head rows carry a blended_score; tail rows don't
-    assert all(r["blended_score"] is not None for r in rer[:3])
-    assert all(r["blended_score"] is None for r in rer[3:])

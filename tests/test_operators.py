@@ -33,15 +33,6 @@ def test_fuse_evidence_reference_formula(spark) -> None:
     assert got["d2"] == pytest.approx(d2, abs=1e-12)
 
 
-def test_fuse_evidence_lexical_floor(spark) -> None:
-    comp = spark.createDataFrame(
-        [("d1", "text", 0.5, 3)], "doc_id string, source string, score double, rank int"
-    )
-    base = search.fuse_evidence(comp).collect()[0]["fused_score"]
-    boosted = search.fuse_evidence(comp, lexical_floor_boost=0.2).collect()[0]["fused_score"]
-    assert boosted == pytest.approx(base + 0.2 / 4.0, abs=1e-12)
-
-
 def test_chunk_aggregation_modes(spark) -> None:
     scores = spark.createDataFrame(
         [("d", s) for s in [0.9, 0.8, 0.5, 0.1]], "doc_hash string, score double"
@@ -68,25 +59,6 @@ def test_normalize_bm25(spark) -> None:
     # degenerate range -> -raw/25 clamped
     one = spark.createDataFrame([("a", -10.0)], "doc_id string, bm25 double")
     assert search.normalize_bm25(one).collect()[0]["norm_score"] == pytest.approx(0.4)
-
-
-def test_topk_with_rescue_additive(spark) -> None:
-    rows = [(f"d{i}", 1.0 - i * 0.1, i % 2 == 0) for i in range(8)]
-    df = spark.createDataFrame(rows, "doc_id string, fused_score double, eligible boolean")
-    out = search.topk_with_rescue(df, limit=3, rescue_slots=2, eligible_col="eligible")
-    ids = sorted(r["doc_id"] for r in out.collect())
-    # head d0,d1,d2 kept; rescue picks first eligible tail (d4, d6) — additive
-    assert ids == ["d0", "d1", "d2", "d4", "d6"]
-
-
-def test_cross_rerank_blend(spark) -> None:
-    df = spark.createDataFrame(
-        [("a", 1.0, 0.0), ("b", 0.5, 1.0), ("c", 0.0, 0.5)],
-        "doc_id string, fused_score double, rerank_score double",
-    )
-    got = {r["doc_id"]: r["blended_score"] for r in search.cross_rerank_blend(df).collect()}
-    assert got["a"] == pytest.approx(0.3 * 0.0 + 0.7 * 1.0)
-    assert got["b"] == pytest.approx(0.3 * 1.0 + 0.7 * 0.5)
 
 
 def test_bm25_pipeline(spark, sf_dir) -> None:
@@ -236,18 +208,6 @@ def test_multimodal_features(spark) -> None:
     assert r0["payload_sha256"] == hashlib.sha256(
         bytes(media.where(F.col("media_id") == r0["media_id"]).collect()[0]["payload"])
     ).hexdigest()
-
-
-def test_multimodal_strict_raises_for_undecodable_only(spark) -> None:
-    media = multimodal.synth_media_table(spark, n=6)
-    # image + audio rows decode for real even in strict mode
-    ok = multimodal.extract_media_features(
-        media.where("kind <> 'video'"), strict=True
-    )
-    assert ok.where("NOT decoded").count() == 0
-    # a video row has no codec here: strict raises inside the UDF
-    with pytest.raises(Exception, match="no decoder for mime"):
-        multimodal.extract_media_features(media, strict=True).collect()
 
 
 def test_blocking_contract_shared_between_pipeline_and_oracle(spark) -> None:

@@ -390,11 +390,9 @@ def test_pipeline_edge_inputs(spark) -> None:
     assert len(sigs) == 3 and all(s["doc_hash"] for s in sigs.values())
 
 
-def test_embed_fn_seam(spark) -> None:
-    """signatures_stage(embed_fn=...): a batched mock model replaces the
-    feature-hash embedding (the embedding_generator.cpp:386-407 batching
-    contract); the default path stays byte-identical to the shared
-    oracle embedding."""
+def test_signature_embedding_matches_oracle_row(spark) -> None:
+    """signatures_stage's embedding is byte-identical to the shared
+    oracle row's feature-hash embedding."""
     import numpy as np
     import pandas as pd
 
@@ -408,19 +406,7 @@ def test_embed_fn_seam(spark) -> None:
     pages = spark.createDataFrame(
         pdf, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
-
-    def mock_embed(texts):
-        return [[float(len(t) % 7)] * 8 for t in texts]
-
-    got = {r["url"]: r for r in signatures_stage(pages, embed_fn=mock_embed).collect()}
-    for url, _, html, _, _ in rows:
-        text = got[url]["extracted_text"]
-        assert got[url]["embedding"] == [float(len(text) % 7)] * 8
-        # non-embedding columns unaffected by the seam
-        assert got[url]["doc_hash"] == compute_signature_row(url, html)["doc_hash"]
-
-    # default path: byte-identical to the shared oracle embedding
-    default = {r["url"]: r["embedding"] for r in signatures_stage(pages).collect()}
+    got = {r["url"]: r["embedding"] for r in signatures_stage(pages).collect()}
     for url, _, html, _, _ in rows:
         want = np.asarray(compute_signature_row(url, html)["embedding"], dtype=np.float32)
-        assert np.array_equal(np.asarray(default[url], dtype=np.float32), want)
+        assert np.array_equal(np.asarray(got[url], dtype=np.float32), want)

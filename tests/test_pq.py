@@ -95,8 +95,8 @@ def test_ivf_probe_recall_and_exact_degenerate(spark, clustered_corpus) -> None:
 
 
 def test_ivf_pq_full_probe_equals_exact(spark) -> None:
-    """IVFADC with nprobe=n_lists and a rerank pool covering the corpus
-    must EQUAL exact search — the final rerank is exact cosine."""
+    """IVFADC with nprobe=n_lists and a 4·k rerank pool covering the
+    corpus must EQUAL exact search — the final rerank is exact cosine."""
     import numpy as np
 
     from yams_spark.operators.ann import cosine_topk
@@ -104,6 +104,7 @@ def test_ivf_pq_full_probe_equals_exact(spark) -> None:
 
     rng = np.random.default_rng(13)
     n, dim = 60, 16
+    k = n // 4  # the 4·k rerank pool covers the corpus
     rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(n)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     queries = corpus.where(F.col("vec_id") < 4).select(
@@ -111,14 +112,13 @@ def test_ivf_pq_full_probe_equals_exact(spark) -> None:
     )
     exact = {
         (r["query_id"], r["rk"]): r["vec_id"]
-        for r in cosine_topk(spark, corpus, queries, k=5).collect()
+        for r in cosine_topk(spark, corpus, queries, k=k).collect()
     }
     idx = ivf_pq_index(corpus, n_lists=8, m=4)
     got = {
         (r["query_id"], r["rk"]): r["vec_id"]
         for r in ivf_pq_topk_multi(
-            *([idx[2], idx[0], idx[1]]), queries, k=5, nprobe=8,
-            rerank_factor=n,
+            idx[2], idx[0], idx[1], queries, k=k, nprobe=8,
         ).collect()
     }
     assert got == exact
@@ -158,28 +158,3 @@ def test_ivf_pq_recall_and_determinism(spark) -> None:
     }
     overlap = len(set(got.values()) & set(exact.values()))
     assert overlap / len(exact) >= 0.8  # high recall on clustered data
-
-
-def test_cosine_topk_third_tier_route(spark) -> None:
-    """lsh_max_rows gate: exceeded -> the IVFADC path runs (results match
-    full-probe exact); unset -> behavior identical to before."""
-    import numpy as np
-
-    from yams_spark.operators.ann import cosine_topk
-    from yams_spark.operators.ivf import ivf_pq_index
-
-    rng = np.random.default_rng(3)
-    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = corpus.where(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    base = sorted(map(tuple, cosine_topk(spark, corpus, queries, k=3).collect()))
-    idx = ivf_pq_index(corpus, n_lists=4, m=4)
-    routed = sorted(map(tuple, cosine_topk(
-        spark, corpus, queries, k=3, corpus_rows=40,
-        lsh_max_rows=10, ivf_pq_index=idx, nprobe=4,
-    ).collect()))
-    # full probe (nprobe = n_lists) + default rerank pool on a tiny
-    # corpus: shortlist covers the true top-3, so results match exact
-    assert routed == base

@@ -17,15 +17,16 @@ and count for nothing. The defs no entry point reaches must be exactly
 ``DEF_ALLOWLIST``.
 
 Inside the reached library functions the walk goes down to parameters. A
-defaulted parameter is set where some call in the program (the roots, the
-library and the tests) passes it by keyword or position; a ``*``/``**``
-splat, or naming the function anywhere but as the callee (a Spark UDF, a
-``functools.partial``, a decorator), sets all of them. Calls match by bare
-name, so a collision counts as a set. A parameter no call sets is a
-constant with extra steps; the unset ones must be exactly
-``PARAM_ALLOWLIST``. Last, every module-level ``NAME = ...`` constant of a
-reached library module must be named by code or a test somewhere other
-than its own assignment. The oracles and the frozen extractor file are
+defaulted parameter is set where some *program* call (in the roots or the
+library; calls from the tests do not count) passes it by keyword or
+position; a ``*``/``**`` splat, or naming the function anywhere but as the
+callee (a Spark UDF, a ``functools.partial``, a decorator), sets all of
+them. Calls match by bare name, so a collision counts as a set. A
+parameter no program call sets is a constant with extra steps, or a switch
+only tests turn; the unset ones must be exactly ``PARAM_ALLOWLIST``, and a
+test must set each of those. Last, every module-level ``NAME = ...``
+constant of a reached library module must be named by code or a test
+somewhere other than its own assignment. The oracles and the frozen extractor file are
 reference code and exempt from both walks.
 """
 
@@ -60,6 +61,8 @@ TEST_ONLY_ALLOWLIST = {
 DEF_ALLOWLIST = {
     "yams_spark.functions.chunker.chunk_boundaries_sequential":
         "byte-at-a-time reference chunk_boundaries is compared against",
+    "yams_spark.operators.concept_fallback.generate_fallback_query_concepts":
+        "scalar twin fallback_concepts_df is compared against",
     "yams_spark.operators.tuner.TunerMAB":
         "sequential UCB1 tuner mab_stats is compared against",
     "yams_spark.operators.grep.snippet_phrase_expr":
@@ -92,9 +95,29 @@ DEF_ALLOWLIST = {
         "part of the frozen, byte-identical extractor file",
 }
 
-#: defaulted parameters of reached library functions that no call sets,
-#: each with the reason it stays
-PARAM_ALLOWLIST: dict[str, str] = {}
+_GATE = "threshold of a size gate; a test lowers it to reach the gate at test scale"
+_ENCODER = "test encoder for a reached decoder; tests vary it to build decoder inputs"
+
+#: defaulted parameters of reached library functions that no program call
+#: sets, each with the reason it stays. Only the threshold of a loud guard
+#: or size-gated fallback, and the knobs of a test encoder, belong here.
+PARAM_ALLOWLIST = {
+    "yams_spark.operators.ann.cosine_topk(max_exact_rows)": _GATE,
+    "yams_spark.operators.ann.near_dup_pairs_topn(max_exact_rows)": _GATE,
+    "yams_spark.operators.clustering.split_oversized_components(max_packed_edges)":
+        _GATE,
+    "yams_spark.operators.topo_engines.louvain_assign(max_driver_edges)": _GATE,
+    "yams_spark.operators.topo_inputs.variance_weights(sample_cap)": _GATE,
+    "yams_spark.operators.topology.topology_quality_stats(max_centroids)": _GATE,
+    "yams_spark.functions.flac_codec.encode_flac(blocksize)": _ENCODER,
+    "yams_spark.functions.flac_codec.encode_flac(bps)": _ENCODER,
+    "yams_spark.functions.flac_codec.encode_flac(fixed_order)": _ENCODER,
+    "yams_spark.functions.archive_codecs.build_zip(comment)": _ENCODER,
+    "yams_spark.functions.archive_codecs.build_gzip(mtime)": _ENCODER,
+    "yams_spark.functions.jpeg_codec.encode_jpeg(subsample)": _ENCODER,
+    "yams_spark.functions.mp4_meta.build_mp4(timescale)": _ENCODER,
+    "yams_spark.streaming.wal_codec.encode_wal_entry(version)": _ENCODER,
+}
 
 #: reference code the parameter and constant walks leave alone
 _EXEMPT = ("yams_spark.oracle.", "yams_spark.functions.html_extract.")
@@ -198,11 +221,8 @@ def _test_names() -> set[str]:
     return names
 
 
-def _program_trees(known: dict[str, Path]) -> dict[str, ast.Module]:
-    """Every file whose calls count: roots, library modules and tests."""
-    tests = [*(REPO / "tests").glob("*.py"), *(REPO / "perfbench" / "tests").glob("*.py")]
-    paths = {str(p): p for p in [*known.values(), *tests]}
-    return {k: ast.parse(p.read_text(), k) for k, p in paths.items()}
+def _parse(paths) -> dict[str, ast.Module]:
+    return {str(p): ast.parse(p.read_text(), str(p)) for p in set(paths)}
 
 
 def _reached_defs(known: dict[str, Path]) -> tuple[_Defs, set[str], set[str]]:
@@ -321,20 +341,31 @@ def test_every_default_parameter_is_set() -> None:
            if k.startswith("yams_spark.") and not k.startswith(_EXEMPT)
            and k.rpartition(".")[0] in library_modules and k not in DEF_ALLOWLIST
            and isinstance(defs.nodes[k], (ast.FunctionDef, ast.AsyncFunctionDef))}
-    set_by_calls = _set_params(_program_trees(known), fns)
+    set_by_program = _set_params(_parse(known.values()), fns)
     unset = set()
     for k, fn in fns.items():
-        passed = set_by_calls[k.rpartition(".")[2]]
+        passed = set_by_program[k.rpartition(".")[2]]
         if "*" not in passed:
             unset.update(f"{k}({p})" for p in _defaulted(fn)[1] if p not in passed)
     assert sorted(unset - set(PARAM_ALLOWLIST)) == []
     assert sorted(set(PARAM_ALLOWLIST) - unset) == []
 
+    # like the def allowlist: a test sets each allowlisted parameter, so
+    # the allowlist cannot hide a parameter nothing sets at all
+    set_by_tests = _set_params(_parse((REPO / "tests").glob("*.py")), fns)
+    not_set = []
+    for entry in PARAM_ALLOWLIST:
+        fn, _, param = entry[:-1].partition("(")
+        if not {param, "*"} & set_by_tests[fn.rpartition(".")[2]]:
+            not_set.append(entry)
+    assert not_set == []
+
 
 def test_every_module_constant_is_read() -> None:
     known = _modules()
     _, _, library_modules = _reached_defs(known)
-    trees = _program_trees(known)
+    tests = [*(REPO / "tests").glob("*.py"), *(REPO / "perfbench" / "tests").glob("*.py")]
+    trees = _parse([*known.values(), *tests])
     # a Load of the name in its own module, or an attribute or import of
     # it anywhere; the bare name elsewhere is a different binding
     named_anywhere = set()

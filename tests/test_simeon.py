@@ -61,11 +61,17 @@ def test_hybrid_search_simeon_source(spark) -> None:
     from yams_spark.operators.neighbors import hybrid_search
 
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    out = hybrid_search(
-        spark, docs, query_text="spark table", query_embedding=None,
-        embedding_df=None, limit=10, enable_lexical_expansion=False,
-        enable_simeon=True,
-    )
-    # docs 1 and 2 hold both terms; simeon adds doc3 (concept/bm25 hit)
-    got = {int(r["doc_id"]) for r in out.collect()}
-    assert got == {1, 2, 3}
+
+    def run(**kw):
+        out = hybrid_search(
+            spark, docs, query_text="spark table", query_embedding=None,
+            embedding_df=None, limit=10, **kw,
+        )
+        return {int(r["doc_id"]): r["fused_score"] for r in out.collect()}
+
+    # docs 1 and 2 hold both terms; with 2 AND hits the OR retry adds
+    # doc3 ('spark'); the simeon source adds evidence on top of the text
+    base, got = run(), run(enable_simeon=True)
+    assert set(base) == set(got) == {1, 2, 3}
+    assert all(got[d] >= base[d] for d in got)
+    assert any(got[d] > base[d] for d in got)

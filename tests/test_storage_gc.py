@@ -76,21 +76,13 @@ def test_unreferenced_view_and_candidates(spark):
     assert gc_candidates(refs, 10000, min_age_seconds=7001).count() == 0
 
 
-def test_gc_collect_and_dry_run(spark):
+def test_gc_collect(spark):
     refs = build_block_references(_store(spark), _manifests(spark))
     stats, surv = gc_collect(refs, 10000, min_age_seconds=0, max_blocks=10)
     s = stats.collect()[0]
     assert (s.blocks_scanned, s.blocks_deleted, s.bytes_reclaimed) == (2, 2, 100)
     assert (s.gc_runs, s.gc_blocks_collected, s.gc_bytes_reclaimed) == (1, 2, 100)
     assert {r.block_hash for r in surv.collect()} == {"b1", "b2"}
-    # dry run: scan only, nothing deleted, counters untouched (gc.cpp:34)
-    dstats, dsurv = gc_collect(
-        refs, 10000, min_age_seconds=0, max_blocks=10, dry_run=True
-    )
-    d = dstats.collect()[0]
-    assert (d.blocks_scanned, d.blocks_deleted, d.bytes_reclaimed) == (2, 0, 0)
-    assert (d.gc_runs, d.gc_blocks_collected, d.gc_bytes_reclaimed) == (0, 0, 0)
-    assert dsurv.count() == 4
     # empty candidate set -> zero row, no gc_runs tick
     estats, _ = gc_collect(refs, 10000, min_age_seconds=99999, max_blocks=10)
     e = estats.collect()[0]

@@ -276,28 +276,21 @@ def test_build_pair_weights_filters(spark):
             ("a", "a", 0.9, True),   # self-loop dropped
             ("a", "zz", 0.9, True),  # unknown endpoint dropped
             ("a", "c", 0.9, False),  # non-reciprocal dropped
-            ("b", "c", 0.1, True),   # below min score dropped
+            ("b", "c", 0.1, True),   # kept: reciprocal, score >= 0
+            ("c", "a", -0.2, True),  # negative score dropped
         ],
         "doc_hash string, neighbor_hash string, score float, reciprocal boolean",
     )
     got = {
         (r["lo_hash"], r["hi_hash"]): round(r["weight"], 6)
-        for r in build_pair_weights(
-            neighbors, docs, reciprocal_only=True, min_edge_score=0.5
-        ).collect()
+        for r in build_pair_weights(neighbors, docs).collect()
     }
-    assert got == {("a", "b"): 0.9}
-    # reciprocal_only=False admits the a→c edge
-    got2 = build_pair_weights(
-        neighbors, docs, reciprocal_only=False, min_edge_score=0.5
-    ).count()
-    assert got2 == 2
+    assert got == {("a", "b"): 0.9, ("b", "c"): 0.1}
 
 
-def test_batch_composes_reps_and_spill(spark):
-    """build_batch_from_assignment with embeddings + allow_overlap wires
-    the topo_reps post-passes (:219, :263): routing representatives per
-    cluster and SOAR spills appear alongside the stats."""
+def test_batch_from_assignment_stats_and_roles(spark):
+    """build_batch_from_assignment with embeddings: min-hash cluster ids,
+    float32 member-mean centroids and weighted-degree medoid roles."""
     from yams_spark.operators.topo_engines import (
         build_batch_from_assignment,
         build_pair_weights,
@@ -329,23 +322,13 @@ def test_batch_composes_reps_and_spill(spark):
         rows, "doc_hash string, neighbor_hash string, score float, reciprocal boolean"
     )
     pw = build_pair_weights(neighbors, docs)
-    batch = build_batch_from_assignment(
-        docs, labels, pw, routing_representative_count=2,
-        allow_overlap=True, overlap_limit=1,
-        overlap_boundary_distance_ratio=3.0, overlap_residual_penalty=0.0,
-    )
+    batch = build_batch_from_assignment(docs, labels, pw)
+    assert set(batch) == {"clusters", "memberships"}
     clusters = {r["cluster_id"]: r for r in batch["clusters"].collect()}
     assert set(clusters) == {"topology.cluster.a0", "topology.cluster.b0"}
     assert clusters["topology.cluster.a0"]["member_count"] == 3
     # centroid is the float32 member mean (8-dim here)
     assert len(clusters["topology.cluster.a0"]["centroid"]) == 8
-    reps = batch["routing_reps"].collect()
-    assert {r["cluster_id"] for r in reps} == {
-        "topology.cluster.a0", "topology.cluster.b0",
-    }
-    assert all(r["sel_order"] == 1 for r in reps)  # count=2 → 1 extra
-    spills = batch["spills"].collect()
-    assert len(spills) > 0  # loose ratio admits cross-cluster spills
     roles = {r["doc_hash"]: r["role"] for r in batch["memberships"].collect()}
     # medoids = max weighted degree: a0 (0.75+0.5), b0 (0.625+0.8125)
     assert roles["a0"] == "medoid" and roles["b0"] == "medoid"

@@ -163,18 +163,6 @@ def test_collect_topology_neighbors(spark):
     ]
 
 
-def test_collect_topology_neighbors_scan_cap(spark):
-    nodes, edges = _mk_graph(spark)
-    # Cap the per-anchor scan at the first 3 edges in store order: node 1
-    # then only sees edges 1,2,3 -> neighbor set {h2}.
-    out = collect_topology_neighbors(edges, nodes, max_neighbors=8, scan_cap=3)
-    n1 = [
-        r["neighbor_doc_hash"]
-        for r in out.where(F.col("src_node_id") == 1).collect()
-    ]
-    assert n1 == ["h2"]
-
-
 def test_variance_weights_matches_two_pass_numpy(spark):
     rng = np.random.RandomState(7)
     data = (rng.randint(-16, 17, size=(40, 6)) / 16.0) * (

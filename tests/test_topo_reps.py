@@ -198,31 +198,11 @@ def test_spill_matches_replica(spark, frames):
     assert {g[2] for g in got if g[0] == "sa2"} == {"tc_c", "tc_e"}
 
 
-def test_spill_candidates_shortlist_equivalent(spark, frames):
-    """Passing an exhaustive shortlist (the ANN seam) reproduces the
-    broadcast-fanout result exactly."""
-    from yams_spark.operators.topo_reps import orthogonal_boundary_spill
-
-    memberships, clusters, documents = frames
-    all_pairs = memberships.select("doc_hash").distinct().crossJoin(
-        clusters.select("cluster_id")
-    )
-    kw = dict(overlap_limit=SPILL_LIMIT, boundary_ratio=SPILL_RATIO,
-              residual_penalty=SPILL_PENALTY)
-    base = sorted(map(tuple, orthogonal_boundary_spill(
-        memberships, clusters, documents, **kw).collect()))
-    short = sorted(map(tuple, orthogonal_boundary_spill(
-        memberships, clusters, documents, candidates=all_pairs, **kw
-    ).collect()))
-    assert base == short
-
-
 def test_spill_config_guards(spark, frames):
     from yams_spark.operators.topo_reps import orthogonal_boundary_spill
 
     memberships, clusters, documents = frames
     for kw in (
-        dict(allow_overlap=False),
         dict(overlap_limit=0),
         dict(boundary_ratio=0.9),
         dict(boundary_ratio=float("nan")),

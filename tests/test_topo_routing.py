@@ -93,7 +93,7 @@ def test_route_alpha_one_skips_dense(spark):
     assert by["c1"]["route_score"] == pytest.approx(0.0 + 0.2 * 0.05)
 
 
-def test_narrowing_adaptive_gap_and_abstention():
+def test_narrowing_adaptive_gap():
     routes = [
         {"cluster_id": "a", "route_score": 0.9},
         {"cluster_id": "b", "route_score": 0.88},
@@ -104,14 +104,10 @@ def test_narrowing_adaptive_gap_and_abstention():
     sel = select_routes_for_narrowing(routes, 1, 4, adaptive_score_gap=0.05)
     assert [r["cluster_id"] for r in sel["routes"]] == ["a", "b"]
     assert sel["boundary_score_margin"] == pytest.approx(0.38)
-    assert not sel["abstained"]
-    # boundary margin demanded higher than actual -> abstain
-    sel = select_routes_for_narrowing(
-        routes, 1, 3, adaptive_score_gap=0.0, min_boundary_margin=0.05
-    )
+    # no gap: the first max_clusters routes, margin to the next one
+    sel = select_routes_for_narrowing(routes, 1, 3)
     assert len(sel["routes"]) == 3
     assert sel["boundary_score_margin"] == pytest.approx(0.01)
-    assert sel["abstained"]
     # maxClusters=0 -> all routes, no margin (nothing beyond selection)
     sel = select_routes_for_narrowing(routes, 2, 0)
     assert len(sel["routes"]) == 4 and sel["boundary_score_margin"] == 0.0
@@ -151,23 +147,6 @@ def test_hybrid_search_route_gate(spark):
     ).collect()
     assert {r["doc_id"] for r in gated} <= {"1", "3"}
     assert len(gated) == 2
-
-
-def test_route_hotzone_boost(spark):
-    """route_score' = score * (1 + w*(boost-1)) for hot clusters; missing
-    clusters default to boost 1 (no change)."""
-    clusters, mem = _mk_clusters(spark)
-    hz = spark.createDataFrame([("c1", 1.8)], "cluster_id string, boost double")
-    base = {r["cluster_id"]: r["route_score"] for r in route_clusters(
-        spark, clusters, mem, query_embedding=[1.0, 0.0, 0.0],
-        weighted_seeds={"d0": 1.0}, alpha=0.5).collect()}
-    boosted = {r["cluster_id"]: r["route_score"] for r in route_clusters(
-        spark, clusters, mem, query_embedding=[1.0, 0.0, 0.0],
-        weighted_seeds={"d0": 1.0}, alpha=0.5,
-        hotzone=hz, hotzone_weight=0.5).collect()}
-    assert boosted["c1"] == pytest.approx(base["c1"] * (1 + 0.5 * 0.8))
-    assert boosted["c0"] == pytest.approx(base["c0"])
-    assert boosted["c2"] == pytest.approx(base["c2"])
 
 
 def test_rank_seed_evidence_and_merge(spark):

@@ -6,6 +6,8 @@ entries.
 
 Usage: python tools/capture_pipeline_plans.py <suffix> [sf_dir] [--queries q1,q2,...]
 Runs at local[<cores>] with 2 x cores shuffle partitions, like perfbench.
+The pages are materialized under
+/tmp/yams_plans_pages_<sf>_<session.package_fingerprint()>.
 Writes plans/r06/er_pipeline_<stage>_<suffix>.txt, plus
 plans/r06/<query>_<suffix>.txt for each query named by --queries.
 Timings come from perfbench (``perfbench/run.py --trace 1``), not from here.
@@ -43,14 +45,17 @@ def main() -> None:
         del sys.argv[i:i + 2]
     suffix = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
-    from yams_spark.session import get_spark
+    from yams_spark.session import get_spark, package_fingerprint
     from yams_spark.sources.pages import materialize_pages
     from yams_spark.plans.er_pipeline import PipelineConfig, run_pipeline
 
     cores = len(os.sched_getaffinity(0))  # the host's cores, as perfbench
     spark = get_spark(app_name="plan_capture", master=f"local[{cores}]",
                       shuffle_partitions=2 * cores)
-    pages, _ = materialize_pages(spark, sf_dir, f"/tmp/yams_plans_pages_{os.path.basename(sf_dir)}")
+    # keyed by the package sources too: pages written by other code (say,
+    # a checkout before a sources/pages.py edit) are never reused
+    pages_dir = f"/tmp/yams_plans_pages_{os.path.basename(sf_dir)}_{package_fingerprint()}"
+    pages, _ = materialize_pages(spark, sf_dir, pages_dir)
 
     out_dir = os.path.join(_REPO, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)

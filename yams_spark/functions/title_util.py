@@ -18,7 +18,7 @@ Reference: ``src/extraction/title_util.cpp`` and the ingest cascade in
 
 Every candidate passes ``normalizeTitleCandidate`` (:70-80): trim,
 collapse whitespace, 120-byte cap. The GLiNER ML title path is the
-async model boundary (same stance as the ``embed_fn`` seam).
+async model boundary and is not reproduced.
 
 ``detect_document_sections`` (:180-355) is the language-agnostic
 structural splitter: a 200-line/16384-byte scan window, section

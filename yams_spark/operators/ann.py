@@ -73,7 +73,6 @@ def sign_lsh_bands(df: DataFrame) -> DataFrame:
 def _pair_cosine(
     pairs_with_vecs: DataFrame,
     out_cols: tuple[str, str],
-    round_to: int = 5,
 ) -> DataFrame:
     """(id_a, vec_a, id_b, vec_b) -> (id_a, id_b, cosine): Arrow-batched
     float64 einsum, half-away rounding — same math as the broadcast path."""
@@ -94,7 +93,7 @@ def _pair_cosine(
                 {
                     a_col: pdf[a_col],
                     b_col: pdf[b_col],
-                    "cosine": round_half_away(dots / denom, round_to),
+                    "cosine": round_half_away(dots / denom, 5),
                 }
             )
 
@@ -182,24 +181,12 @@ def cosine_topk(
     id_col: str = "vec_id",
     max_exact_rows: int = EXACT_MAX_CORPUS_ROWS,
     corpus_rows: int | None = None,
-    lsh_max_rows: int | None = None,
-    ivf_pq_index=None,
-    nprobe: int | None = None,
 ) -> DataFrame:
     """Top-k neighbors per query (excluding self id), scale-gated.
 
-    Three tiers: exact broadcast matmul while the corpus fits the
+    Two tiers: exact broadcast matmul while the corpus fits the
     reference's 250k exact-path budget; LSH-bucketed approximate search
-    above it (the corpus never leaves the executors); and — when
-    ``lsh_max_rows`` is set and exceeded — the IVFADC route
-    (``ivf.ivf_pq_topk_multi``: probe-pruned candidate join, PQ
-    asymmetric-distance shortlist, exact rerank), the shape that holds
-    at 10^9+ vectors where even band-bucketed exact cosine pays too much.
-    ``ivf_pq_index`` is an optional prebuilt ``ivf.ivf_pq_index`` triple
-    (centroids, codebooks, indexed) — at deployment the index is built
-    once and persisted partitioned by list_id; absent, it is built on
-    the fly. Defaults keep the 2-tier behavior, so every existing oracle
-    is unchanged.
+    above it (the corpus never leaves the executors).
 
     Returns (query_id, vec_id, cosine, rk); cosine rounded for stable
     cross-engine comparison; ties broken by vec_id asc. ``corpus_rows``
@@ -210,20 +197,6 @@ def cosine_topk(
     n_rows = corpus_rows if corpus_rows is not None else (
         corpus.count() if max_exact_rows is not None else 0
     )
-    if lsh_max_rows is not None and n_rows > lsh_max_rows:
-        from yams_spark.operators.ivf import (
-            IVF_NPROBE,
-            ivf_pq_index as build_index,
-            ivf_pq_topk_multi,
-        )
-
-        if ivf_pq_index is None:
-            ivf_pq_index = build_index(corpus, id_col)
-        centroids, codebooks, indexed = ivf_pq_index
-        return ivf_pq_topk_multi(
-            indexed, centroids, codebooks, queries, k,
-            nprobe=nprobe or IVF_NPROBE, id_col=id_col,
-        )
     if max_exact_rows is not None and n_rows > max_exact_rows:
         return cosine_topk_bucketed(corpus, queries, k, id_col)
     ids, mat = _collect_matrix(corpus, id_col, "embedding")

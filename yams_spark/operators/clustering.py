@@ -329,7 +329,6 @@ def clusters_stage(
 def cluster_metrics(
     signatures: DataFrame,
     accepted_pairs: DataFrame,
-    sgc_hops: int = 0,
 ) -> DataFrame:
     """Per-cluster topology metrics (topology_baseline.cpp:122-208):
 
@@ -344,13 +343,6 @@ def cluster_metrics(
 
     Packed per component by ``_pack_components``; the per-component
     numeric kernel runs in one Arrow pass.
-
-    ``sgc_hops > 0`` runs the reference's SGC smoothing pre-pass over the
-    accepted-pair graph before the topology build (topology_sgc.cpp is
-    applied to TopologyDocumentInput embeddings before
-    topology_baseline.cpp consumes them) — member embeddings are replaced
-    by their graph-convolved versions, so centroids and any downstream
-    medoid similarity reflect the smoothed space. Default off.
     """
     import numpy as np
     import pandas as pd
@@ -358,29 +350,9 @@ def cluster_metrics(
     labels = connected_components(accepted_pairs)
     labels = labels.localCheckpoint(eager=True)  # both sides of the pack
 
-    sig_emb = signatures.select("url", "doc_hash", "embedding")
-    if sgc_hops > 0:
-        from yams_spark.operators.sgc import sgc_smooth
-
-        smoothed = sgc_smooth(
-            signatures.select(F.col("url").alias("node"), "embedding"),
-            accepted_pairs.select(
-                F.col("url_a").alias("src"), F.col("url_b").alias("dst"),
-                F.col("pair_score").alias("weight"),
-            ),
-            hops=sgc_hops,
-        ).select(F.col("node").alias("url"), F.col("embedding").alias("__sm"))
-        sig_emb = (
-            sig_emb.join(smoothed, "url", "left")
-            .select(
-                "url", "doc_hash",
-                F.coalesce("__sm", "embedding").alias("embedding"),
-            )
-        )
-
     packed = _pack_components(
         labels,
-        sig_emb.select("url", "doc_hash", "embedding"),
+        signatures.select("url", "doc_hash", "embedding"),
         accepted_pairs.select("url_a", "url_b", F.col("pair_score").alias("w")),
     ).where(F.size("mems") > 0)  # pair urls with no signature row have no members
 

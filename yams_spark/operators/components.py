@@ -201,7 +201,6 @@ def build_path_seeds(query: str) -> list[tuple[str, str, float]]:
 def path_tree_component(
     docs: DataFrame,
     query: str,
-    limit: int = PATH_TREE_MAX_RESULTS,
 ) -> DataFrame:
     """(doc_id, source='path_tree', score, rank): queryPathTree recast
     (search_engine.cpp:5101-5160). For each seed, candidate docs are
@@ -241,7 +240,7 @@ def path_tree_component(
         cands = cands.unionByName(p)
     best = cands.groupBy("doc_id").agg(F.max("seed_score").alias("score"))
     order = [F.col("score").desc(), F.col("doc_id").asc()]
-    pooled = best.orderBy(*order).limit(limit)
+    pooled = best.orderBy(*order).limit(PATH_TREE_MAX_RESULTS)
     ranked = global_rank(pooled, order, "rk")
     return ranked.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -255,13 +254,12 @@ def entity_vector_component(
     query_embedding,
     node_embeddings: DataFrame,
     node_docs: DataFrame,
-    similarity_threshold: float = 0.0,
 ) -> DataFrame:
     """(doc_id, source='entity_vector', score, rank): ANN over entity
     node embeddings (queryEntityVectorsPipeline,
     search_vector_pipeline.cpp:421-487) — cosine(query, node) for every
-    node vector, top-``ENTITY_VECTOR_MAX_RESULTS`` nodes above the
-    threshold, mapped to their documents via ``node_docs`` (node_key,
+    node vector, top-``ENTITY_VECTOR_MAX_RESULTS`` nodes of cosine >= 0,
+    mapped to their documents via ``node_docs`` (node_key,
     doc_id), deduped best
     score per document (dedupeEntityVectorRecords). Cosine is a
     sequential double-accumulation Catalyst fold (same order as DuckDB
@@ -279,7 +277,7 @@ def entity_vector_component(
     cos = F.when(n1 > 0, dot / (n1 * F.lit(n2))).otherwise(F.lit(0.0))
     scored_nodes = (
         node_embeddings.select(F.col("node_key"), cos.alias("cos"))
-        .where(F.col("cos") >= similarity_threshold)
+        .where(F.col("cos") >= 0.0)
     )
     node_order = [F.col("cos").desc(), F.col("node_key").asc()]
     top_nodes = scored_nodes.orderBy(*node_order).limit(ENTITY_VECTOR_MAX_RESULTS)

@@ -114,33 +114,26 @@ def extension_col(name: Column | str) -> Column:
     return F.lower(F.regexp_extract(c, r".+(\.[^.]+)$", 1))
 
 
-def compression_decisions(
-    df: DataFrame,
-    rules: CompressionRules = CompressionRules(),
-    now_ts: int | None = None,
-    has_system_resources: bool = True,
-    name_col: str = "name",
-    mime_col: str = "mime_type",
-    size_col: str = "size",
-    created_col: str = "created_ts",
-    last_accessed_col: str = "last_accessed_ts",
-    access_count_col: str = "access_count",
-) -> DataFrame:
-    """shouldCompress (compression_policy.cpp:106-159) over every stored
-    object at once: adds should_compress / algorithm / level / reason.
-    Timestamps are epoch seconds; ``now_ts`` pins the evaluation instant
-    (the C++ reads the wall clock per call)."""
+def compression_decisions(df: DataFrame, now_ts: int | None = None) -> DataFrame:
+    """shouldCompress (compression_policy.cpp:106-159) under the default
+    ``CompressionRules`` over every stored object at once: reads name /
+    mime_type / size / created_ts / last_accessed_ts / access_count and
+    adds should_compress / algorithm / level / reason. Timestamps are
+    epoch seconds; ``now_ts`` pins the evaluation instant (the C++ reads
+    the wall clock per call). The reference's system-resource gate is
+    taken as always satisfied."""
+    rules = CompressionRules()
     now = F.lit(now_ts).cast("long") if now_ts is not None else (
         F.unix_timestamp()
     )
-    mime_l = F.lower(F.col(mime_col))
-    ext = extension_col(name_col)
-    age_h = F.floor((now - F.col(last_accessed_col)) / 3600).cast("long")
-    total_h = F.floor((now - F.col(created_col)) / 3600).cast("long")
+    mime_l = F.lower(F.col("mime_type"))
+    ext = extension_col("name")
+    age_h = F.floor((now - F.col("last_accessed_ts")) / 3600).cast("long")
+    total_h = F.floor((now - F.col("created_ts")) / 3600).cast("long")
     freq = F.when(
-        total_h == 0, F.col(access_count_col).cast("double")
+        total_h == 0, F.col("access_count").cast("double")
     ).otherwise(
-        F.col(access_count_col).cast("double")
+        F.col("access_count").cast("double")
         / (total_h.cast("double") / 24.0)
     )
 
@@ -166,7 +159,7 @@ def compression_decisions(
     archive_total = total_h >= F.lit(rules.archive_after_age_hours)
     # selectAlgorithm (:161-184) — rule order preserved.
     algo = F.when(archive_total | is_cold, F.lit("LZMA")).when(
-        (F.col(size_col) >= F.lit(rules.prefer_zstd_below))
+        (F.col("size") >= F.lit(rules.prefer_zstd_below))
         & (freq < F.lit(rules.cold_accesses_per_day)),
         F.lit("LZMA"),
     ).otherwise(F.lit("Zstandard"))
@@ -174,7 +167,7 @@ def compression_decisions(
     level = F.when(
         algo == "LZMA",
         F.when(
-            F.col(size_col) < F.lit(10 * _MB),
+            F.col("size") < F.lit(10 * _MB),
             F.lit(min(rules.default_lzma_level, 5)),
         ).otherwise(F.lit(rules.default_lzma_level)),
     ).otherwise(
@@ -187,9 +180,9 @@ def compression_decisions(
     ).otherwise(F.lit("Warm"))
     # shouldCompress reason (:143-156): reuses the *since-access* age.
     compress_reason = F.when(
-        F.col(size_col) >= F.lit(rules.always_compress_above),
+        F.col("size") >= F.lit(rules.always_compress_above),
         F.format_string(
-            "Large file (%.1f MB)", F.col(size_col).cast("double") / _MB
+            "Large file (%.1f MB)", F.col("size").cast("double") / _MB
         ),
     ).when(
         age_h >= F.lit(rules.archive_after_age_hours),
@@ -221,12 +214,12 @@ def compression_decisions(
             ),
         )
         .when(
-            F.col(size_col) < F.lit(rules.never_compress_below),
+            F.col("size") < F.lit(rules.never_compress_below),
             F.struct(
                 dont.alias("sc"), F.lit("None").alias("algo"),
                 F.lit(0).alias("lvl"),
                 F.format_string(
-                    "File too small (%d bytes)", F.col(size_col)
+                    "File too small (%d bytes)", F.col("size")
                 ).alias("why"),
             ),
         )
@@ -236,14 +229,6 @@ def compression_decisions(
                 dont.alias("sc"), F.lit("None").alias("algo"),
                 F.lit(0).alias("lvl"),
                 F.lit("File type is not compressible").alias("why"),
-            ),
-        )
-        .when(
-            F.lit(not has_system_resources),
-            F.struct(
-                dont.alias("sc"), F.lit("None").alias("algo"),
-                F.lit(0).alias("lvl"),
-                F.lit("Insufficient system resources").alias("why"),
             ),
         )
         .otherwise(

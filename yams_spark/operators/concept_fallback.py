@@ -1,12 +1,10 @@
 """Fallback query concepts: anchored sub-phrases + salience-ranked
-tokens, typed by the biomedical vocabulary cascade, merged behind the
-plugin extractor.
+tokens, typed by the biomedical vocabulary cascade.
 
 Re-expresses the reference's no-backend concept path:
 
-* ``tokenize_query_tokens`` / ``normalize_graph_surface`` /
-  ``normalize_entity_text_for_key``
-  (``/root/reference/src/search/query_text_utils.cpp:148-169,364-395``):
+* ``tokenize_query_tokens`` / ``normalize_graph_surface``
+  (``/root/reference/src/search/query_text_utils.cpp:152-169,364-395``):
   ASCII-alnum run tokenization keeping (original, normalized, index).
 * ``token_fallback_salience``
   (``query_expansion.cpp:32-49``): digit bonus 1.25, length tiers
@@ -23,14 +21,12 @@ Re-expresses the reference's no-backend concept path:
   phrases at confidence 0.62 then ranked tokens at
   ``0.45 + min(0.25, score·0.02)``, clamped to [0.2, 0.8], capped and
   deduped on the graph surface (min length 3).
-* ``enrich_with_fallback_concepts``
-  (``concept_resolver.cpp:11-53``): merge behind extractor concepts on
-  the ``normalized_text|type`` key up to ``max_concepts``.
+* ``fallback_concepts_df``: the same generator as one Catalyst plan over
+  a batch of queries.
 
-Everything here is per-query scalar state (≤ max_concepts items) — the
-same driver-side shape as ``operators/router.py``; the corpus-side
-consumers (concept boost, Simeon PMI) are already dataflow operators.
-Score arithmetic runs in float32 to match the C++ accumulators.
+The scalar functions are per-query state (≤ max_concepts items), kept as
+the reference the dataflow twin is tested against; their score
+arithmetic runs in float32 to match the C++ accumulators.
 """
 
 from __future__ import annotations
@@ -101,11 +97,6 @@ def normalize_graph_surface(s: str) -> str:
     return "".join(out).rstrip(" ")
 
 
-def normalize_entity_text_for_key(s: str) -> str:
-    """query_text_utils.cpp:148-150 — trim + collapse whitespace, lower."""
-    return " ".join(s.split()).lower()
-
-
 def _is_numeric_only(tok: str) -> bool:
     return bool(tok) and all(c.isascii() and c.isdigit() for c in tok)
 
@@ -125,11 +116,7 @@ def token_fallback_salience(token: QueryToken) -> float:
     return float(score)
 
 
-def generate_anchored_sub_phrases(
-    query: str,
-    max_phrases: int,
-    idf_by_token: dict[str, float] | None = None,
-) -> list[str]:
+def generate_anchored_sub_phrases(query: str, max_phrases: int) -> list[str]:
     """query_expansion.cpp:64-206."""
     if max_phrases == 0:
         return []
@@ -143,12 +130,7 @@ def generate_anchored_sub_phrases(
             continue
         if _is_numeric_only(tok.normalized) or tok.normalized in WEAK_TOKENS:
             continue
-        score = np.float32(token_fallback_salience(tok))
-        if idf_by_token is not None:
-            idf = idf_by_token.get(tok.normalized)
-            if idf is not None and idf > 0.0:
-                score += np.float32(idf)
-        anchors.append((i, float(score)))
+        anchors.append((i, token_fallback_salience(tok)))
     anchors.sort(key=lambda t: -t[1])  # python sort is stable (:102-103)
 
     full_normalized = " ".join(t.normalized for t in tokens)
@@ -248,13 +230,11 @@ def infer_fallback_concept_type(text: str) -> str:
 
 def generate_fallback_query_concepts(
     query: str,
-    idf_by_token: dict[str, float] | None = None,
     max_concepts: int = 8,
 ) -> list[QueryConcept]:
-    """query_expansion.cpp:245-297."""
+    """query_expansion.cpp:245-297, without the corpus idf boost."""
     if max_concepts == 0:
         return []
-    idf = idf_by_token or {}
     out: list[QueryConcept] = []
     seen: set[str] = set()
 
@@ -274,17 +254,14 @@ def generate_fallback_query_concepts(
             )
         )
 
-    for phrase in generate_anchored_sub_phrases(query, max_concepts, idf):
+    for phrase in generate_anchored_sub_phrases(query, max_concepts):
         add(phrase, 0.62)
 
     ranked: list[tuple[str, float]] = []
     for tok in tokenize_query_tokens(query):
         if len(tok.normalized) < 2:
             continue
-        score = np.float32(token_fallback_salience(tok))
-        if tok.normalized in idf:
-            score += np.float32(idf[tok.normalized])
-        ranked.append((tok.original, float(score)))
+        ranked.append((tok.original, token_fallback_salience(tok)))
     ranked.sort(key=lambda t: -t[1])  # stable
     for text, score in ranked:
         add(
@@ -306,7 +283,6 @@ _WEAK_SQL = "array(" + ", ".join(f"'{w}'" for w in sorted(WEAK_TOKENS)) + ")"
 def fallback_concepts_df(
     queries: DataFrame,
     max_concepts: int = 8,
-    idf_df: DataFrame | None = None,
 ) -> DataFrame:
     """Dataflow twin of ``generate_fallback_query_concepts`` — one batch
     of queries in, the ordered fallback concepts out as
@@ -322,13 +298,9 @@ def fallback_concepts_df(
     window partitions by query id — no global sorts. Score arithmetic is
     double here (the scalar twin keeps the reference's float32); outputs
     are rounded to 6 decimals where the two agree bit-for-bit, and the
-    equivalence is pinned by tests/test_concept_fallback.py.
-
-    ``idf_df`` (``token``, ``idf``) is the corpus-stats boost the
-    reference threads through (query_expansion.cpp:96-100,258-262):
-    broadcast-joined on the normalized token; anchors add it only when
-    positive, the token tier adds it whenever present — exactly the two
-    reference branches.
+    equivalence is pinned by tests/test_concept_fallback.py. The
+    reference's optional corpus idf boost (query_expansion.cpp:96-100,
+    258-262) is not applied: token salience alone ranks.
     """
     max_phrases = max_concepts
     base = (
@@ -356,38 +328,17 @@ def fallback_concepts_df(
             .otherwise(F.lit(0.0)),
         )
     )
-    if idf_df is not None:
-        tok = tok.join(
-            F.broadcast(
-                idf_df.select(
-                    F.col("token").alias("norm"), F.col("idf").alias("_idf")
-                )
-            ),
-            "norm",
-            "left",
-        )
-    else:
-        tok = tok.withColumn("_idf", F.lit(None).cast("double"))
-    tok = tok.withColumn(
-        # anchors add the idf boost only when positive (cpp :96-100);
-        # the token tier adds it whenever the token is known (:258-262)
-        "anchor_sal",
-        F.col("sal")
-        + F.when(F.col("_idf") > 0, F.col("_idf")).otherwise(F.lit(0.0)),
-    ).withColumn("tok_sal", F.col("sal") + F.coalesce("_idf", F.lit(0.0)))
-    # anchors: salience-ranked, stable on token index (cpp :102-103)
-    w_anchor = Window.partitionBy("query_id").orderBy(
-        F.col("anchor_sal").desc(), F.col("idx").asc()
-    )
-    w_tokrank = Window.partitionBy("query_id").orderBy(
-        F.col("tok_sal").desc(), F.col("idx").asc()
+    # anchors and tokens: salience-ranked, stable on token index
+    # (cpp :102-103)
+    w_sal = Window.partitionBy("query_id").orderBy(
+        F.col("sal").desc(), F.col("idx").asc()
     )
     anchors = tok.filter(
         (F.col("n") >= 3)
         & (F.length("norm") >= 2)
         & ~F.col("is_num")
         & ~F.col("is_weak")
-    ).withColumn("anchor_rank", F.row_number().over(w_anchor))
+    ).withColumn("anchor_rank", F.row_number().over(w_sal))
     # candidate windows: 3- then 2-token, starts ordered by center distance
     cand = (
         anchors.select(
@@ -479,7 +430,7 @@ def fallback_concepts_df(
     )
     t_stream = (
         tok.filter(F.length("norm") >= 2)
-        .withColumn("ord", F.row_number().over(w_tokrank))
+        .withColumn("ord", F.row_number().over(w_sal))
         .select(
             "query_id", F.lit(1).alias("src"), "ord",
             F.col("orig").alias("text"), F.col("norm").alias("cnorm"),
@@ -488,7 +439,7 @@ def fallback_concepts_df(
                 F.least(
                     F.lit(0.8),
                     F.lit(0.45)
-                    + F.least(F.lit(0.25), F.col("tok_sal") * F.lit(0.02)),
+                    + F.least(F.lit(0.25), F.col("sal") * F.lit(0.02)),
                 ),
             ).alias("confidence"),
         )
@@ -550,31 +501,3 @@ def fallback_concepts_df(
         )
     )
     return out
-
-
-def enrich_with_fallback_concepts(
-    query: str,
-    concepts: list[QueryConcept],
-    max_concepts: int,
-) -> list[QueryConcept]:
-    """concept_resolver.cpp:11-53 — append deduped fallback concepts
-    behind the extractor's, keyed on ``normalized_text|type``, up to
-    ``max_concepts``. Returns a new list; the input is not mutated."""
-    merged = list(concepts)
-    if max_concepts == 0 or len(merged) >= max_concepts:
-        return merged
-    fallback = generate_fallback_query_concepts(query, max_concepts=max_concepts)
-    if not fallback:
-        return merged
-    seen = {
-        normalize_entity_text_for_key(c.text) + "|" + c.type for c in merged
-    }
-    for fc in fallback:
-        if len(merged) >= max_concepts:
-            break
-        key = normalize_entity_text_for_key(fc.text) + "|" + fc.type
-        if key in seen:
-            continue
-        seen.add(key)
-        merged.append(fc)
-    return merged

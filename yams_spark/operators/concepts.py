@@ -41,14 +41,11 @@ CONCEPT_MAX_SCAN_RESULTS = 200
 _ENTITY_RE = re.compile(ENTITY_PATTERN)
 
 
-def extract_query_concepts(
-    query: str,
-    max_count: int = CONCEPT_MAX_COUNT,
-) -> list[str]:
+def extract_query_concepts(query: str) -> list[str]:
     """Lowercased, deduped concept terms from ONE query string
     (extractConcepts; GLiNER stand-in = the KG span heuristic with its
     length-based confidence 0.5 + 0.25·words): spans under the
-    confidence floor drop, first ``max_count`` in offset order win.
+    confidence floor drop, first ``CONCEPT_MAX_COUNT`` in offset order win.
     Driver-side string work."""
     out: list[str] = []
     seen: set[str] = set()
@@ -64,70 +61,30 @@ def extract_query_concepts(
             continue
         seen.add(low)
         out.append(low)
-        if len(out) >= max_count:
+        if len(out) >= CONCEPT_MAX_COUNT:
             break
-    return out
-
-
-def resolve_query_concepts(
-    query: str,
-    max_concepts: int = CONCEPT_MAX_COUNT,
-) -> list[str]:
-    """Extractor concepts enriched with the fallback generator
-    (``concept_resolver.cpp:11-53``): the extractor's concepts come
-    first, fallback phrases/tokens merge behind them on the
-    ``normalized_text|type`` key until ``max_concepts``. Returns the
-    lowercased deduped term list ``apply_concept_boost`` consumes.
-    Extractor spans are typed by the same vocabulary cascade the
-    fallback path uses (query_expansion.cpp:211-242) — the GLiNER label
-    set is plugin territory, per the SURVEY §7 stand-in stance."""
-    from yams_spark.operators.concept_fallback import (
-        QueryConcept,
-        enrich_with_fallback_concepts,
-        infer_fallback_concept_type,
-    )
-
-    if max_concepts <= 0:
-        return []
-    base = [
-        QueryConcept(
-            t,
-            infer_fallback_concept_type(t),
-            min(1.0, 0.5 + 0.25 * len(t.split())),
-        )
-        for t in extract_query_concepts(query, max_count=max_concepts)
-    ]
-    merged = enrich_with_fallback_concepts(query, base, max_concepts)
-    out: list[str] = []
-    seen: set[str] = set()
-    for c in merged:
-        low = c.text.lower()
-        if low and low not in seen:
-            seen.add(low)
-            out.append(low)
     return out
 
 
 def apply_concept_boost(
     results: DataFrame,
     concepts: list[str],
-    score_col: str = "score",
     name_col: str | None = None,
-    max_scan: int = CONCEPT_MAX_SCAN_RESULTS,
 ) -> DataFrame:
     """Boosted (id, score) + re-rank (applyConceptBoost,
-    concept_boost.cpp:33-138). The top ``max_scan`` results by incoming
-    (score desc, id asc) are scanned: match count = number of distinct
-    concept terms contained in the lowercased snippet OR name; desired
-    boost ``CONCEPT_BOOST_WEIGHT × count`` is granted top-rank-first until
-    the ``CONCEPT_MAX_BOOST`` budget runs dry (prefix-sum clamp); scores
-    multiply by ``1 + applied`` and the full set re-sorts. Rows beyond the scan
-    window pass through unboosted, exactly like the reference."""
+    concept_boost.cpp:33-138). The top ``CONCEPT_MAX_SCAN_RESULTS``
+    results by incoming (score desc, id asc) are scanned: match count =
+    number of distinct concept terms contained in the lowercased snippet
+    OR name; desired boost ``CONCEPT_BOOST_WEIGHT × count`` is granted
+    top-rank-first until the ``CONCEPT_MAX_BOOST`` budget runs dry
+    (prefix-sum clamp); scores multiply by ``1 + applied`` and the full
+    set re-sorts. Rows beyond the scan window pass through unboosted,
+    exactly like the reference."""
     terms = sorted({c.lower() for c in concepts if c})
     if not terms:
         raise ValueError("apply_concept_boost requires concept terms")
-    order = [F.col(score_col).desc(), F.col("doc_id").asc()]
-    pool = results.orderBy(*order).limit(max_scan)
+    order = [F.col("score").desc(), F.col("doc_id").asc()]
+    pool = results.orderBy(*order).limit(CONCEPT_MAX_SCAN_RESULTS)
     rest = results.join(pool.select("doc_id"), "doc_id", "left_anti")
 
     hay = F.lower(F.col("snippet"))
@@ -145,7 +102,7 @@ def apply_concept_boost(
         "desired", F.lit(CONCEPT_BOOST_WEIGHT) * matches
     )
     # prefix sums over the bounded pool: triangular self-join instead of
-    # a single-partition window (CLAUDE.md invariant); <= max_scan² pairs
+    # a single-partition window (CLAUDE.md invariant); <= CONCEPT_MAX_SCAN_RESULTS² pairs
     cum = (
         ranked.alias("a")
         .join(
@@ -162,10 +119,10 @@ def apply_concept_boost(
             F.least(F.col("cum"), F.lit(CONCEPT_MAX_BOOST))
             - F.least(F.col("cum") - F.col("desired"), F.lit(CONCEPT_MAX_BOOST)),
         )
-        .withColumn(score_col, F.col(score_col) * (1.0 + F.col("applied")))
+        .withColumn("score", F.col("score") * (1.0 + F.col("applied")))
     )
     out = boosted.select(*[c for c in results.columns]).unionByName(
         rest.select(*[c for c in results.columns])
     )
-    final_order = [F.col(score_col).desc(), F.col("doc_id").asc()]
+    final_order = [F.col("score").desc(), F.col("doc_id").asc()]
     return global_rank(out, final_order, "rank")

@@ -30,14 +30,14 @@ from pyspark.sql import functions as F
 FACET_SAMPLE_TARGET = 65536
 
 
-def choose_sample_digits(input_rows: int | None, target: int = FACET_SAMPLE_TARGET) -> int:
-    """Zero-hex-digit count for ~``target`` sampled rows: the largest k
-    with rows/16^k >= target (0 = exact). Pass the caller's row-count
-    hint — like the ANN ``corpus_rows`` hint, this avoids paying a
-    count() job per facet call."""
-    if not input_rows or input_rows <= target:
+def choose_sample_digits(input_rows: int | None) -> int:
+    """Zero-hex-digit count for ~``FACET_SAMPLE_TARGET`` sampled rows: the
+    largest k with rows/16^k >= target (0 = exact). Pass the caller's
+    row-count hint — like the ANN ``corpus_rows`` hint, this avoids
+    paying a count() job per facet call."""
+    if not input_rows or input_rows <= FACET_SAMPLE_TARGET:
         return 0
-    return int(math.floor(math.log(input_rows / target, 16)))
+    return int(math.floor(math.log(input_rows / FACET_SAMPLE_TARGET, 16)))
 
 
 def facet_counts(

@@ -128,25 +128,16 @@ def canonicalize_entity_type_py(raw_type: str) -> str:
     return t or "concept"
 
 
-def gliner_query_concepts(
-    entities: DataFrame,
-    requested_types: list[str] | None = None,
-) -> DataFrame:
+def gliner_query_concepts(entities: DataFrame) -> DataFrame:
     """The full post-extraction cascade for every query at once.
 
     ``entities``: raw model output rows (query, idx-in-result, text,
     type, confidence[, start/end offsets — passed through when
-    present]). ``requested_types=None`` uses the default query entity
-    type list; ``[]`` disables the type gate (the C++ gate only fires
-    for a non-empty canonicalized request set).
+    present]). The type gate keeps the default query entity type list.
     """
-    if requested_types is None:
-        requested = {
-            canonicalize_entity_type_py(t)
-            for t in DEFAULT_QUERY_ENTITY_TYPES
-        }
-    else:
-        requested = {canonicalize_entity_type_py(t) for t in requested_types}
+    requested = {
+        canonicalize_entity_type_py(t) for t in DEFAULT_QUERY_ENTITY_TYPES
+    }
 
     text = trim_collapse_punct(F.coalesce(F.col("entity_text"), F.lit("")))
     ctype = canonicalize_entity_type(
@@ -170,9 +161,7 @@ def gliner_query_concepts(
         & (F.col("_text") != "")
         & ~noise
     )
-    if requested:
-        kept = kept.where(F.col("_type").isin(*sorted(requested)))
-    kept = kept.withColumn(
+    kept = kept.where(F.col("_type").isin(*sorted(requested))).withColumn(
         "_key", F.concat(F.col("_type"), F.lit("|"), norm)
     )
     w = Window.partitionBy("query_id", "_key").orderBy(

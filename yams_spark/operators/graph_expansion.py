@@ -136,7 +136,6 @@ def graph_expansion_seeds(
     query: str,
     kg_aliases: DataFrame,
     kg_nodes: DataFrame,
-    fuzzy_max_distance: int = FUZZY_MAX_DISTANCE,
 ) -> DataFrame:
     """(node_key, seed_score): the expansion's seed nodes — exact alias
     hits of the query surfaces, scored confidence × node-type weight,
@@ -146,7 +145,7 @@ def graph_expansion_seeds(
 
     Query surfaces with NO exact alias hit fall back to SymSpell fuzzy
     resolution (graph_expansion.cpp:403-414): candidate aliases within
-    ``fuzzy_max_distance`` edits (delete-variant join + Levenshtein
+    ``FUZZY_MAX_DISTANCE`` edits (delete-variant join + Levenshtein
     verify, operators/fuzzy.py), capped at ``max(4, DEFAULT_MAX_TERMS)`` per
     surface ordered (distance asc, confidence desc, node asc) — the
     reference's aliasesPerTerm = max(4, maxTerms) — and scored with the
@@ -174,46 +173,45 @@ def graph_expansion_seeds(
         .where(F.col("seed_score") > 0)
     )
 
-    if fuzzy_max_distance > 0:
-        hit = {r["alias_norm"] for r in
-               exact.select("alias_norm").distinct().collect()}
-        missed = [t for t in tokens if t not in hit]
-        if missed:
-            from yams_spark.operators.fuzzy import symspell_match
+    hit = {r["alias_norm"] for r in
+           exact.select("alias_norm").distinct().collect()}
+    missed = [t for t in tokens if t not in hit]
+    if missed:
+        from yams_spark.operators.fuzzy import symspell_match
 
-            spark = kg_aliases.sparkSession
-            queries = spark.createDataFrame(
-                [(t,) for t in missed], "query_term string"
+        spark = kg_aliases.sparkSession
+        queries = spark.createDataFrame(
+            [(t,) for t in missed], "query_term string"
+        )
+        vocab = al.select(F.col("alias_norm").alias("term")).distinct()
+        matches = symspell_match(
+            vocab, queries, max_distance=FUZZY_MAX_DISTANCE, freq_col=None
+        )
+        fuzzy = (
+            matches.join(al, al["alias_norm"] == matches["term"])
+            .withColumn(
+                "_rk",
+                F.row_number().over(
+                    Window.partitionBy("query_term").orderBy(
+                        F.col("distance").asc(),
+                        F.col("confidence").desc(),
+                        F.col("node_key").asc(),
+                    )
+                ),
             )
-            vocab = al.select(F.col("alias_norm").alias("term")).distinct()
-            matches = symspell_match(
-                vocab, queries, max_distance=fuzzy_max_distance, freq_col=None
+            .where(F.col("_rk") <= max(4, DEFAULT_MAX_TERMS))
+            .join(ntype, "node_key")
+            .select(
+                "node_key",
+                (
+                    F.col("confidence")
+                    * F.lit(FUZZY_ALIAS_DISCOUNT)
+                    * F.col("node_w")
+                ).alias("seed_score"),
             )
-            fuzzy = (
-                matches.join(al, al["alias_norm"] == matches["term"])
-                .withColumn(
-                    "_rk",
-                    F.row_number().over(
-                        Window.partitionBy("query_term").orderBy(
-                            F.col("distance").asc(),
-                            F.col("confidence").desc(),
-                            F.col("node_key").asc(),
-                        )
-                    ),
-                )
-                .where(F.col("_rk") <= max(4, DEFAULT_MAX_TERMS))
-                .join(ntype, "node_key")
-                .select(
-                    "node_key",
-                    (
-                        F.col("confidence")
-                        * F.lit(FUZZY_ALIAS_DISCOUNT)
-                        * F.col("node_w")
-                    ).alias("seed_score"),
-                )
-                .where(F.col("seed_score") > 0)
-            )
-            seeds = seeds.unionByName(fuzzy)
+            .where(F.col("seed_score") > 0)
+        )
+        seeds = seeds.unionByName(fuzzy)
 
     seeds = seeds.groupBy("node_key").agg(F.max("seed_score").alias("seed_score"))
     return seeds.orderBy(

@@ -30,25 +30,21 @@ IVF_TRAIN_LIMIT = 4096
 
 def train_ivf(
     corpus: DataFrame,
-    vec_col: str = "embedding",
     n_lists: int = IVF_LISTS,
     train_limit: int = IVF_TRAIN_LIMIT,
     iters: int = 10,
-    seed: int = PQ_SEED,
 ) -> np.ndarray:
     """(n_lists', d) coarse centroids from a bounded deterministic sample."""
     sample = np.stack(
-        corpus.select(vec_col).limit(train_limit).toPandas()[vec_col].to_numpy()
+        corpus.select("embedding").limit(train_limit).toPandas()["embedding"].to_numpy()
     ).astype(np.float64)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(PQ_SEED)
     return _kmeans(sample, n_lists, iters, rng)
 
 
 def ivf_assign(
     corpus: DataFrame,
     centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, list_id, embedding): nearest-centroid assignment, one Arrow
     pass. Persist this partitioned by list_id for probe-time pruning."""
@@ -61,18 +57,18 @@ def ivf_assign(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             d = -2.0 * (x @ cent.T) + c2[None, :]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "vec_id": pdf["vec_id"],
                     "list_id": d.argmin(axis=1).astype(np.int32),
-                    vec_col: pdf[vec_col],
+                    "embedding": pdf["embedding"],
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, list_id int, {vec_col} array<float>"
+    return corpus.select("vec_id", "embedding").mapInPandas(
+        assign, schema="vec_id long, list_id int, embedding array<float>"
     )
 
 
@@ -116,12 +112,8 @@ def ivf_topk(
 
 def ivf_pq_index(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_lists: int = IVF_LISTS,
     m: int | None = None,
-    pq_k: int | None = None,
-    seed: int = PQ_SEED,
 ):
     """(centroids, codebooks, indexed): the combined IVF-PQ index —
     coarse centroids, per-subspace PQ codebooks, and the corpus with
@@ -130,25 +122,18 @@ def ivf_pq_index(
     raw embedding stays in the indexed table for the exact rerank — at
     deployment the table is stored partitioned by list_id so probes
     prune partitions (Jégou et al. 2011 §IV: IVFADC)."""
-    from yams_spark.operators.pq import (
-        PQ_CENTROIDS,
-        PQ_SUBQUANTIZERS,
-        pq_encode,
-        train_pq,
-    )
+    from yams_spark.operators.pq import PQ_SUBQUANTIZERS, pq_encode, train_pq
 
-    dim = len(corpus.select(vec_col).first()[0])
+    dim = len(corpus.select("embedding").first()[0])
     if m is None:
         m = PQ_SUBQUANTIZERS if dim % PQ_SUBQUANTIZERS == 0 else (
             max(d for d in (16, 8, 4, 2, 1) if dim % d == 0)
         )
-    centroids = train_ivf(corpus, vec_col, n_lists=n_lists, seed=seed)
-    codebooks = train_pq(
-        corpus, vec_col, m=m, k=pq_k or PQ_CENTROIDS, seed=seed
-    )
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    codes = pq_encode(corpus, codebooks, id_col, vec_col)
-    indexed = assigned.join(codes, id_col)
+    centroids = train_ivf(corpus, n_lists=n_lists)
+    codebooks = train_pq(corpus, m=m)
+    assigned = ivf_assign(corpus, centroids)
+    codes = pq_encode(corpus, codebooks)
+    indexed = assigned.join(codes, "vec_id")
     return centroids, codebooks, indexed
 
 
@@ -159,19 +144,14 @@ def ivf_pq_topk_multi(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = IVF_NPROBE,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    round_to: int = 5,
 ) -> DataFrame:
     """Batched IVFADC: per query, probe the ``nprobe`` nearest lists,
     approximate candidate distances with the PQ asymmetric-distance LUT
-    (built per query inside the Arrow batch), keep the top
-    ``rerank_factor·k`` by ADC, exact-cosine rerank those against the
-    uncompressed vectors, return the final (query_id, vec_id, cosine,
-    rk). With nprobe = n_lists and a rerank pool covering the corpus the
-    result EQUALS exact search (property-tested) — the rerank is exact.
+    (built per query inside the Arrow batch), keep the top ``4·k`` by
+    ADC, exact-cosine rerank those against the uncompressed vectors,
+    return the final (query_id, vec_id, cosine, rk). The rerank is exact:
+    with nprobe = n_lists and a rerank pool holding the true top-k the
+    result EQUALS exact search.
 
     Scale shape: probe selection is one narrow pass over queries; the
     candidate join prunes by list_id; the ADC scan touches only codes
@@ -186,7 +166,7 @@ def ivf_pq_topk_multi(
         [c.astype(np.float64) for c in codebooks]
     )
     np_probe = max(1, nprobe)
-    pool = max(k * rerank_factor, k)
+    pool = 4 * k
 
     def probes(iterator):
         cent = bc_cent.value
@@ -194,30 +174,30 @@ def ivf_pq_topk_multi(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            q = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             d = c2[None, :] - 2.0 * (q @ cent.T)
             lists = np.argsort(d, axis=1)[:, :np_probe]
-            out = pdf[[query_id_col, vec_col]].loc[
+            out = pdf[["query_id", "embedding"]].loc[
                 pdf.index.repeat(np_probe)
             ].reset_index(drop=True)
             out["list_id"] = lists.reshape(-1).astype(np.int32)
             yield out
 
     q_lists = queries.select(
-        F.col(query_id_col).cast("long"), F.col(vec_col)
+        F.col("query_id").cast("long"), F.col("embedding")
     ).mapInPandas(
-        probes, schema=f"{query_id_col} long, {vec_col} array<float>, list_id int"
+        probes, schema="query_id long, embedding array<float>, list_id int"
     )
     cand = (
         q_lists.join(
             indexed.select(
-                "list_id", F.col(id_col).alias("id_b"),
-                F.col("codes"), F.col(vec_col).alias("vec_b"),
+                "list_id", F.col("vec_id").alias("id_b"),
+                F.col("codes"), F.col("embedding").alias("vec_b"),
             ),
             "list_id",
         )
-        .where(F.col(query_id_col) != F.col("id_b"))
-        .dropDuplicates([query_id_col, "id_b"])
+        .where(F.col("query_id") != F.col("id_b"))
+        .dropDuplicates(["query_id", "id_b"])
     )
 
     def adc(iterator):
@@ -228,8 +208,8 @@ def ivf_pq_topk_multi(
             if len(pdf) == 0:
                 continue
             out_rows = []
-            for qid, grp in pdf.groupby(query_id_col, sort=False):
-                q = np.asarray(grp[vec_col].iloc[0], dtype=np.float64)
+            for qid, grp in pdf.groupby("query_id", sort=False):
+                q = np.asarray(grp["embedding"].iloc[0], dtype=np.float64)
                 lut = [
                     ((books[j] - q[j * dsub : (j + 1) * dsub]) ** 2).sum(axis=1)
                     for j in range(m)
@@ -240,37 +220,37 @@ def ivf_pq_topk_multi(
                     dist += lut[j][c[:, j]]
                 out_rows.append(
                     pd.DataFrame(
-                        {query_id_col: qid, "id_b": grp["id_b"], "adc_l2": dist}
+                        {"query_id": qid, "id_b": grp["id_b"], "adc_l2": dist}
                     )
                 )
             yield pd.concat(out_rows, ignore_index=True)
 
-    approx = cand.select(query_id_col, vec_col, "id_b", "codes").mapInPandas(
-        adc, schema=f"{query_id_col} long, id_b long, adc_l2 double"
+    approx = cand.select("query_id", "embedding", "id_b", "codes").mapInPandas(
+        adc, schema="query_id long, id_b long, adc_l2 double"
     )
-    wa = Window.partitionBy(query_id_col).orderBy(
+    wa = Window.partitionBy("query_id").orderBy(
         F.col("adc_l2").asc(), F.col("id_b").asc()
     )
     shortlist = (
         approx.withColumn("ark", F.row_number().over(wa))
         .where(F.col("ark") <= pool)
-        .select(query_id_col, "id_b")
+        .select("query_id", "id_b")
     )
     rerank = shortlist.join(
         cand.select(
-            query_id_col, F.col(vec_col).alias("vec_a"), "id_b", "vec_b"
+            "query_id", F.col("embedding").alias("vec_a"), "id_b", "vec_b"
         ),
-        [query_id_col, "id_b"],
+        ["query_id", "id_b"],
     ).select(
-        F.col(query_id_col).alias("id_a"), "vec_a", "id_b", "vec_b"
+        F.col("query_id").alias("id_a"), "vec_a", "id_b", "vec_b"
     )
-    scored = _pair_cosine(rerank, ("id_a", "id_b"), round_to)
+    scored = _pair_cosine(rerank, ("id_a", "id_b"))
     w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b").asc())
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .select(
-            F.col("id_a").alias(query_id_col), F.col("id_b").alias(id_col),
+            F.col("id_a").alias("query_id"), F.col("id_b").alias("vec_id"),
             "cosine", F.col("rk").cast("int"),
         )
     )

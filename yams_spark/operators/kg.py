@@ -340,22 +340,17 @@ def populate_kg(
     id_col: str = "doc_id",
     text_col: str = "text",
     pagerank_iters: int = 20,
-    doc_embeddings: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """The whole PostIngestQueue KG stage in one call: returns
-    {kg_doc_entities, kg_nodes, kg_aliases, kg_edges, kg_node_stats}, plus
-    kg_node_embeddings when a (vec_id, embedding) table is supplied.
+    {kg_doc_entities, kg_nodes, kg_aliases, kg_edges, kg_node_stats}.
     The mentions table feeds every downstream table, so it is persisted —
     otherwise the extraction pass re-runs once per output table."""
     ents = extract_doc_entities(docs, id_col, text_col).persist()
     edges = build_kg_edges(ents).persist()
-    out = {
+    return {
         "kg_doc_entities": ents,
         "kg_nodes": build_kg_nodes(ents),
         "kg_aliases": build_kg_aliases(ents),
         "kg_edges": edges,
         "kg_node_stats": kg_node_stats(edges, pagerank_iters=pagerank_iters),
     }
-    if doc_embeddings is not None:
-        out["kg_node_embeddings"] = build_kg_node_embeddings(ents, doc_embeddings)
-    return out

@@ -6,10 +6,9 @@ signatures) is real and tested, and the decode step is REAL for every
 format with a from-scratch codec in this repo — PPM/PGM, PNG, GIF, JPEG,
 BMP images; PCM16 WAV, FLAC, MPEG-1 Layer I/II audio; Motion-JPEG MP4
 video frames (``functions/media_codecs`` + ``jpeg_codec`` /
-``flac_codec`` / ``mpeg_audio`` / ``mp4_meta``). The remaining strict
+``flac_codec`` / ``mpeg_audio`` / ``mp4_meta``). The remaining
 boundaries — MP3 (Layer III) sample decode and inter-frame video codecs
-(avc1/hevc) — either raise ``NotImplementedError`` (strict mode) or
-produce a deterministic fake feature (test mode). This mirrors the
+(avc1/hevc) — produce a deterministic fake feature. This mirrors the
 reference's plugin extractor boundary
 (src/extraction/external_plugin_extractor.cpp): the engine defines the
 dataflow, the codec is a pluggable worker-side function.
@@ -42,16 +41,13 @@ def _fake_decode_features(payload: bytes) -> np.ndarray:
     return (v / n if n else v).astype(np.float32)
 
 
-def extract_media_features(
-    media: DataFrame,
-    strict: bool = False,
-) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """(media_id, kind, mime, decoded boolean, feature array<float>,
     payload_sha256, n_bytes) via one Arrow-batched mapInPandas pass.
 
     Per row: a REAL decoder is used when one exists for the mime
-    (PPM/PGM, PCM16 WAV — media_codecs.decode_features), else
-    strict-raise / deterministic fake.
+    (PPM/PGM, PCM16 WAV — media_codecs.decode_features), else the
+    deterministic fake.
     ``decoded`` records which path ran."""
 
     def compute(iterator):
@@ -75,10 +71,6 @@ def extract_media_features(
                     real = decode_features(data, mime or "")
                     if real is not None:
                         feat, decoded = real.tolist(), True
-                    elif strict:
-                        raise NotImplementedError(
-                            f"no decoder for mime {mime!r} in this environment"
-                        )
                     else:
                         feat = _fake_decode_features(data).tolist()
                 else:
@@ -324,7 +316,7 @@ def synth_media_table(spark, n: int = 64) -> DataFrame:
             # metadata). Every third video row is a Motion-JPEG track
             # with real JPEG frame samples in mdat (+ full stsz/stco
             # tables) — REAL pixel decode; avc1 rows keep the documented
-            # strict boundary (inter-frame codecs)
+            # fake-feature boundary (inter-frame codecs)
             from yams_spark.functions.mp4_meta import build_mp4
 
             duration = (i + 1) * 750

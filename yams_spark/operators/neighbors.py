@@ -24,7 +24,6 @@ from yams_spark.operators.search import (
     global_rank,
     normalize_bm25,
     parse_match_query,
-    topk_with_rescue,
 )
 
 
@@ -96,17 +95,7 @@ def hybrid_search(
     text_col: str = "text",
     embedding_df: DataFrame | None = None,
     limit: int = 10,
-    enable_lexical_expansion: bool = True,
-    doc_tags: DataFrame | None = None,
-    query_tags: list[str] | None = None,
-    tags_match_all: bool = True,
-    doc_metadata: DataFrame | None = None,
-    metadata_filters: dict[str, str] | None = None,
-    enable_cross_rerank: bool = False,
-    rerank_top_n: int = 5,
     auto_phrase: bool = False,
-    hotzone_df: DataFrame | None = None,
-    hotzone_weight: float = 0.0,
     include_snippets: bool = False,
     kg_doc_entities: DataFrame | None = None,
     kg_edges: DataFrame | None = None,
@@ -116,7 +105,6 @@ def hybrid_search(
     enable_simeon: bool = False,
     kg_tables: dict | None = None,
     route_gate: DataFrame | None = None,
-    enable_concept_boost: bool = False,
 ) -> DataFrame:
     """One hybrid query: BM25 lexical component + cosine vector component →
     per-component ranks → weighted-RRF fusion → deterministic top-k
@@ -133,10 +121,7 @@ def hybrid_search(
     contain the tokens adjacently in order, checked against the positional
     posting index (search_query_helpers.cpp:356-384); ``auto_phrase=True``
     additionally phrases unquoted 3-4 token natural-language queries whole,
-    like the reference's NL query builder. ``hotzone_df`` (key, boost)
-    applies the recency boost to fused scores before the final top-k:
-    score' = score · (1 + hotzone_weight · (boost - 1))
-    (enhanced_search_executor.cpp:101-110, hotzone_manager.h:15-59)."""
+    like the reference's NL query builder."""
     import numpy as np
 
     parsed = parse_match_query(query_text, auto_phrase=auto_phrase)
@@ -157,17 +142,16 @@ def hybrid_search(
     # FTS5 bm25 is negative-better; ours is positive-better → negate before
     # the reference's range normalization (lexical_scoring.cpp:18-43)
     lex = normalize_bm25(lex.withColumn("bm25", -F.col("bm25")))
-    if enable_lexical_expansion:
-        base_hits = lex.count()  # scalar — the reference counts the batch too
-        exp_terms = expansion_terms(all_tokens)
-        if base_hits < LEXICAL_EXPANSION_MIN_HITS and exp_terms:
-            expanded = bm25_scores(postings, exp_terms, match_all=False)
-            expanded = normalize_bm25(expanded.withColumn("bm25", -F.col("bm25")))
-            expanded = (
-                expanded.join(lex.select("doc_id"), "doc_id", "left_anti")
-                .withColumn("norm_score", F.col("norm_score") * F.lit(LEXICAL_EXPANSION_PENALTY))
-            )
-            lex = lex.unionByName(expanded)
+    base_hits = lex.count()  # scalar — the reference counts the batch too
+    exp_terms = expansion_terms(all_tokens)
+    if base_hits < LEXICAL_EXPANSION_MIN_HITS and exp_terms:
+        expanded = bm25_scores(postings, exp_terms, match_all=False)
+        expanded = normalize_bm25(expanded.withColumn("bm25", -F.col("bm25")))
+        expanded = (
+            expanded.join(lex.select("doc_id"), "doc_id", "left_anti")
+            .withColumn("norm_score", F.col("norm_score") * F.lit(LEXICAL_EXPANSION_PENALTY))
+        )
+        lex = lex.unionByName(expanded)
     # rank only a bounded candidate pool (the reference pools max(8, 4·topK)
     # per component): orderBy().limit() is TakeOrderedAndProject, and the
     # rank window then runs over <= pool rows — one deliberate, bounded
@@ -198,21 +182,6 @@ def hybrid_search(
             (F.col("rk") - 1).alias("rank"),
         )
         components = components.unionByName(vec_comp)
-
-    # tag / metadata evidence (the declared fusion weights' producers,
-    # search_engine.cpp:5510+): optional, appended like any other source
-    if doc_tags is not None and query_tags:
-        from yams_spark.operators.components import tag_component
-
-        components = components.unionByName(
-            tag_component(doc_tags, query_tags, tags_match_all, limit=limit * 5)
-        )
-    if doc_metadata is not None and metadata_filters:
-        from yams_spark.operators.components import metadata_component
-
-        components = components.unionByName(
-            metadata_component(doc_metadata, metadata_filters, limit=limit * 5)
-        )
 
     # kg / path_tree / entity_vector evidence (search_engine_config.h:81-94
     # weights; per-component caps :369-377) — appended like any source
@@ -304,81 +273,26 @@ def hybrid_search(
         )
 
     fused = fuse_evidence(components)
-    if hotzone_df is not None and hotzone_weight > 0.0:
-        from yams_spark.operators.search import apply_hotzone_boost
+    # final top-k (evidence_search_pipeline.cpp:250-332): orderBy().limit()
+    # is TakeOrderedAndProject, never a global rank window
+    head = fused.orderBy(F.col("fused_score").desc(), F.col("doc_id").asc()).limit(limit)
 
-        fused = apply_hotzone_boost(fused, hotzone_df, hotzone_weight)
-    # concept boost (enhanced_search_executor concept stage): extractor
-    # concepts enriched with the fallback generator
-    # (concept_resolver.cpp:11-53), then the budgeted rank-ordered boost
-    # (concept_boost.cpp:33-138) over doc text as the match haystack —
-    # joined onto the fused set only (pool-bounded rows), never corpus-wide
-    if enable_concept_boost:
-        from yams_spark.operators.concepts import (
-            apply_concept_boost,
-            resolve_query_concepts,
-        )
+    # search-result snippet hydration (search_ops.cpp:191): the
+    # best-coverage window over every query term, joined onto the (tiny)
+    # head only — never computed corpus-wide
+    if not include_snippets or not all_tokens:
+        return head
+    from yams_spark.operators.grep import snippet_multi_expr
 
-        cterms = resolve_query_concepts(query_text)
-        if cterms:
-            hay = docs.select(
-                F.col(id_col).cast("string").alias("doc_id"),
-                F.col(text_col).alias("snippet"),
-            )
-            fused = apply_concept_boost(
-                fused.join(hay, "doc_id", "left").withColumn(
-                    "snippet", F.coalesce("snippet", F.lit(""))
-                ),
-                cterms,
-                score_col="fused_score",
-            ).select("doc_id", "fused_score")
-    head = topk_with_rescue(fused, limit=limit)
-
-    def decorate(result: DataFrame) -> DataFrame:
-        # search-result snippet hydration (search_ops.cpp:191): the
-        # best-coverage window over every query term, joined onto the
-        # (tiny) head only — never computed corpus-wide
-        if not include_snippets or not all_tokens:
-            return result
-        from yams_spark.operators.grep import snippet_multi_expr
-
-        hit_docs = docs.select(
-            F.col(id_col).cast("string").alias("doc_id"), F.col(text_col)
-        ).join(result.select("doc_id"), "doc_id", "left_semi")
-        toks = F.expr(
-            f"filter(split(lower(regexp_replace({text_col}, '[^0-9a-zA-Z]+', ' ')), ' '), "
-            "x -> x <> '')"
-        )
-        snips = hit_docs.select(
-            "doc_id",
-            snippet_multi_expr(toks, all_tokens).alias("snippet"),
-        )
-        return result.join(snips, "doc_id", "left")
-
-    if not enable_cross_rerank:
-        return decorate(head)
-
-    # cross-rerank blend of the top-N (cross_rerank.cpp:60-160): rerank
-    # scores from the deterministic overlap scorer, min-max blend
-    # alpha·rerank + (1-alpha)·original; ranks below top-N keep their order
-    from yams_spark.operators.search import cross_rerank_blend, rerank_scores_overlap
-
-    order = [F.col("fused_score").desc(), F.col("doc_id").asc()]
-    top_n = head.orderBy(*order).limit(rerank_top_n)
-    rest = head.join(top_n.select("doc_id"), "doc_id", "left_anti")
-    scored = rerank_scores_overlap(top_n, docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ), query_text, id_col="doc_id", text_col="text")
-    blended = cross_rerank_blend(scored)
-    # the blend reorders only the head; tail keeps its fused order after it
-    b_ranked = global_rank(
-        blended.select("doc_id", "fused_score", "blended_score"),
-        [F.col("blended_score").desc(), F.col("doc_id").asc()],
-        "final_rank",
+    hit_docs = docs.select(
+        F.col(id_col).cast("string").alias("doc_id"), F.col(text_col)
+    ).join(head.select("doc_id"), "doc_id", "left_semi")
+    toks = F.expr(
+        f"filter(split(lower(regexp_replace({text_col}, '[^0-9a-zA-Z]+', ' ')), ' '), "
+        "x -> x <> '')"
     )
-    r_ranked = global_rank(rest, order, "__r").select(
-        "doc_id", "fused_score",
-        F.lit(None).cast("double").alias("blended_score"),
-        (F.col("__r") + rerank_top_n).alias("final_rank"),
+    snips = hit_docs.select(
+        "doc_id",
+        snippet_multi_expr(toks, all_tokens).alias("snippet"),
     )
-    return decorate(b_ranked.unionByName(r_ranked).orderBy("final_rank"))
+    return head.join(snips, "doc_id", "left")

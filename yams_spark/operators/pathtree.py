@@ -40,9 +40,8 @@ def path_tree_rollup(
     docs: DataFrame,
     path_col: str = "path",
     embedding_col: str = "embedding",
-    size_col: str | None = None,
 ) -> DataFrame:
-    """(prefix, doc_count, centroid_weight, centroid[, total_size]) per
+    """(prefix, doc_count, centroid_weight, centroid) per
     path prefix — the path_tree_nodes table as one DataFrame pipeline.
 
     ``centroid_weight`` counts member embeddings (NULL embeddings are
@@ -51,12 +50,10 @@ def path_tree_rollup(
     pref = docs.select(
         F.explode(path_prefixes(path_col)).alias("prefix"),
         F.col(embedding_col).alias("emb"),
-        *( [F.col(size_col).alias("sz")] if size_col else [] ),
     )
     counts = pref.groupBy("prefix").agg(
         F.count("*").alias("doc_count"),
         F.count("emb").alias("centroid_weight"),
-        *( [F.sum("sz").alias("total_size")] if size_col else [] ),
     )
     dims = (
         pref.where(F.col("emb").isNotNull())

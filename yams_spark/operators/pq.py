@@ -61,23 +61,21 @@ def _kmeans(x: np.ndarray, k: int, iters: int, rng: np.random.Generator) -> np.n
 
 def train_pq(
     corpus: DataFrame,
-    vec_col: str = "embedding",
     m: int = PQ_SUBQUANTIZERS,
     k: int = PQ_CENTROIDS,
     train_limit: int = PQ_TRAIN_LIMIT,
     iters: int = 10,
-    seed: int = PQ_SEED,
 ) -> list[np.ndarray]:
     """Codebooks: m arrays of (<=k, d/m) centroids, trained on a bounded
     deterministic sample (first train_limit rows by natural order of a
     limit — callers wanting strict determinism pass a sorted corpus)."""
     sample = np.stack(
-        corpus.select(vec_col).limit(train_limit).toPandas()[vec_col].to_numpy()
+        corpus.select("embedding").limit(train_limit).toPandas()["embedding"].to_numpy()
     ).astype(np.float64)
     d = sample.shape[1]
     assert d % m == 0, f"dim {d} not divisible by m={m}"
     dsub = d // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(PQ_SEED)
     return [
         _kmeans(sample[:, j * dsub : (j + 1) * dsub], k, iters, rng)
         for j in range(m)
@@ -87,8 +85,6 @@ def train_pq(
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[np.ndarray],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, codes array<int>): m nearest-centroid indices per vector."""
     spark = corpus.sparkSession
@@ -101,7 +97,7 @@ def pq_encode(
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             codes = np.empty((len(x), m), dtype=np.int32)
             for j, cb in enumerate(books):
                 sub = x[:, j * dsub : (j + 1) * dsub]
@@ -112,11 +108,11 @@ def pq_encode(
                 )
                 codes[:, j] = d.argmin(axis=1)
             yield pd.DataFrame(
-                {id_col: pdf[id_col], "codes": [list(map(int, c)) for c in codes]}
+                {"vec_id": pdf["vec_id"], "codes": [list(map(int, c)) for c in codes]}
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        encode, schema=f"{id_col} long, codes array<int>"
+    return corpus.select("vec_id", "embedding").mapInPandas(
+        encode, schema="vec_id long, codes array<int>"
     )
 
 

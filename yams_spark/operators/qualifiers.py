@@ -30,31 +30,25 @@ def metadata_query_filter(
     any_tags: list[str] = (),
     exclude_tags: list[str] = (),
     created_after: int | None = None,
-    created_before: int | None = None,
-    modified_after: int | None = None,
     modified_before: int | None = None,
     custom_fields: dict[str, str] | None = None,
-    mime_col: str = "mime_type",
-    name_col: str = "name",
-    tags_col: str = "tags",
-    created_col: str = "created_ts",
-    modified_col: str = "modified_ts",
 ):
     """MetadataQuery::matches (src/api/content_metadata.cpp:319-384) as
     one Catalyst predicate: exact mime, FULL-regex name match
     (std::regex_match semantics — the pattern is anchored), required /
-    any / exclude tag keys over the tag map, closed timestamp range
-    gates (strict < / > rejections), and custom key=value equality.
-    Pure scan-level filter — pushdown-friendly for every non-regex
+    any / exclude tag keys over the tag map, a created-after and a
+    modified-before gate (strict < / > rejections), and custom key=value
+    equality, over the ``mime_type``, ``name``, ``tags``, ``created_ts``
+    and ``modified_ts`` columns. Pure scan-level filter — pushdown-friendly for every non-regex
     clause."""
     from pyspark.sql import functions as F
 
     pred = F.lit(True)
     if mime_type is not None:
-        pred = pred & (F.col(mime_col) == mime_type)
+        pred = pred & (F.col("mime_type") == mime_type)
     if name_pattern is not None:
-        pred = pred & F.col(name_col).rlike(f"^(?:{name_pattern})$")
-    tags = F.col(tags_col)
+        pred = pred & F.col("name").rlike(f"^(?:{name_pattern})$")
+    tags = F.col("tags")
     for t in required_tags:
         pred = pred & F.map_contains_key(tags, F.lit(t))
     if any_tags:
@@ -65,13 +59,9 @@ def metadata_query_filter(
     for t in exclude_tags:
         pred = pred & ~F.map_contains_key(tags, F.lit(t))
     if created_after is not None:
-        pred = pred & ~(F.col(created_col) < F.lit(created_after))
-    if created_before is not None:
-        pred = pred & ~(F.col(created_col) > F.lit(created_before))
-    if modified_after is not None:
-        pred = pred & ~(F.col(modified_col) < F.lit(modified_after))
+        pred = pred & ~(F.col("created_ts") < F.lit(created_after))
     if modified_before is not None:
-        pred = pred & ~(F.col(modified_col) > F.lit(modified_before))
+        pred = pred & ~(F.col("modified_ts") > F.lit(modified_before))
     for k, v in (custom_fields or {}).items():
         pred = pred & (
             F.element_at(tags, F.lit(k)).isNotNull()

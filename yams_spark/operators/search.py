@@ -11,12 +11,8 @@
   (search_vector_pipeline.cpp:78-155, config :287-294)
 * weighted-RRF evidence fusion: per-(doc,source) bestRaw=max bestRank=min
   occurrences=count, contribution = weight · 1/(rrfK + rank+1) ·
-  (1 + 0.5·clamp(raw,0,1)), rrfK=12; optional lexical rank floor
+  (1 + 0.5·clamp(raw,0,1)), rrfK=12
   (evidence_search_pipeline.cpp:49-56,184-229)
-* final top-k with additive rescue slots
-  (evidence_search_pipeline.cpp:250-332)
-* cross-rerank blend of the top-5: min-max normalize both score sets,
-  final = 0.30·rerank + 0.70·original (cross_rerank.cpp:60-160)
 
 All pure DataFrame/Catalyst — no Python in the hot path.
 """
@@ -64,26 +60,19 @@ def _tokens_expr(text_col: str, tokenizer: str):
     )
 
 
-def _stem_postings(postings: DataFrame, positional: bool) -> DataFrame:
+def _stem_postings(postings: DataFrame) -> DataFrame:
     """Re-key postings by Porter stem: distinct-vocabulary stemming (one
     Arrow batch pass over |vocab| rows, joined back — AQE broadcasts the
-    stem map when small) then re-aggregate (doc, stem), summing tf and
-    merging position lists. dl is unchanged (stemming never drops or
-    splits tokens)."""
+    stem map when small) then re-aggregate (doc, stem), summing tf. dl is
+    unchanged (stemming never drops or splits tokens)."""
     from yams_spark.functions.fts_tokenizer import stem_terms
 
     vocab = postings.select("term").distinct()
     stems = stem_terms(vocab)
     joined = postings.join(stems, "term")
-    aggs = [F.sum("tf").alias("tf")]
-    if positional:
-        aggs.insert(
-            0,
-            F.array_sort(F.flatten(F.collect_list("positions"))).alias("positions"),
-        )
     return (
         joined.groupBy("doc_id", "dl", F.col("stem").alias("term"))
-        .agg(*aggs)
+        .agg(F.sum("tf").alias("tf"))
     )
 
 
@@ -104,37 +93,32 @@ def build_posting_lists(
         .agg(F.count("*").alias("tf"))
     )
     if tokenizer == "porter":
-        base = _stem_postings(base, positional=False)
+        base = _stem_postings(base)
     return base
 
 
 def build_positional_postings(
-    docs: DataFrame, id_col: str, text_col: str, tokenizer: str = "ascii"
+    docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """(doc_id, term, positions array<int>, tf, dl): posting lists WITH
     1-based token positions — the FTS5 positional index analog that phrase
     queries need (FTS5 stores position lists per (term, doc) exactly so
     ``"a b"`` can check adjacency). One tokenize + one groupBy(doc, term)
     shuffle; positions sorted for deterministic downstream intersection.
-    ``tokenizer`` as in build_posting_lists; 'porter' merges the position
-    lists of same-stem terms (FTS5's porter index stores positions under
-    the stemmed term)."""
-    toks = _tokens_expr(text_col, tokenizer)
+    Tokens are the ``ascii`` tokenize-lower of build_posting_lists."""
+    toks = _tokens_expr(text_col, "ascii")
     d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("tokens"))
     d = d.withColumn("dl", F.size("tokens"))
     exploded = d.select(
         "doc_id", "dl", F.posexplode("tokens").alias("pos0", "term")
     )
-    base = (
+    return (
         exploded.groupBy("doc_id", "dl", "term")
         .agg(
             F.array_sort(F.collect_list(F.col("pos0") + 1)).alias("positions"),
             F.count("*").alias("tf"),
         )
     )
-    if tokenizer == "porter":
-        base = _stem_postings(base, positional=True)
-    return base
 
 
 def phrase_match(
@@ -184,20 +168,11 @@ AUTO_PHRASE_MIN_TOKENS = 3
 AUTO_PHRASE_MAX_TOKENS = 4
 
 
-#: the reference prefix-renders tokens of >= 4 chars under autoPrefix
-#: (search_query_helpers.cpp:377-380, renderFts5Token)
-AUTO_PREFIX_MIN_CHARS = 4
-
-
-def parse_match_query(
-    query: str, auto_phrase: bool = True, auto_prefix: bool = False
-) -> dict:
+def parse_match_query(query: str, auto_phrase: bool = True) -> dict:
     """FTS5 MATCH query building (search_query_helpers.cpp:356-384):
     double-quoted spans become explicit phrases; an unquoted natural-
     language query of 3-4 tokens is auto-phrased whole; a token written
-    ``tok*`` is an explicit FTS5 prefix term, and ``auto_phrase``-skipped
-    queries under ``auto_prefix=True`` prefix-render every token of >= 4
-    chars like the reference's NL builder. Returns {"phrases": [[t, ...],
+    ``tok*`` is an explicit FTS5 prefix term. Returns {"phrases": [[t, ...],
     ...], "terms": [t, ...], "prefix_terms": [stem, ...]} with all tokens
     normalized by tokenize-lower."""
     import re as _re
@@ -226,10 +201,6 @@ def parse_match_query(
         and AUTO_PHRASE_MIN_TOKENS <= len(terms) <= AUTO_PHRASE_MAX_TOKENS
     ):
         return {"phrases": [terms], "terms": [], "prefix_terms": []}
-    if auto_prefix:
-        promoted = [t for t in terms if len(t) >= AUTO_PREFIX_MIN_CHARS]
-        terms = [t for t in terms if len(t) < AUTO_PREFIX_MIN_CHARS]
-        prefix_terms = prefix_terms + promoted
     return {"phrases": phrases, "terms": terms, "prefix_terms": prefix_terms}
 
 
@@ -364,14 +335,11 @@ def aggregate_chunk_scores(
     raise ValueError(f"unknown aggregation mode {mode}")
 
 
-def fuse_evidence(
-    components: DataFrame,
-    lexical_floor_boost: float = 0.0,
-) -> DataFrame:
+def fuse_evidence(components: DataFrame) -> DataFrame:
     """components (doc_id, source, score, rank) -> fused (doc_id, fused_score).
 
     evidence_search_pipeline.cpp:184-229: per-(doc,source) aggregate then
-    weighted-RRF sum; optional lexical rank floor boost/(1+rank).
+    weighted-RRF sum.
     """
     per_source = components.groupBy("doc_id", "source").agg(
         F.max("score").alias("best_raw"),
@@ -392,26 +360,7 @@ def fuse_evidence(
         * (F.lit(1.0) + 0.5 * clamped)
     )
     scored = per_source.withColumn("contribution", contribution)
-    fused = scored.groupBy("doc_id").agg(F.sum("contribution").alias("fused_score"))
-    if lexical_floor_boost > 0.0:
-        lex = (
-            scored.where(F.col("source").isin(["text", "simeon_text", "graph_text"]))
-            .groupBy("doc_id")
-            .agg(F.min("best_rank").alias("lex_rank"))
-            .withColumn(
-                "floor",
-                F.lit(min(max(lexical_floor_boost, 0.0), 1.0))
-                / (F.lit(1.0) + F.col("lex_rank")),
-            )
-        )
-        fused = (
-            fused.join(lex.select("doc_id", "floor"), "doc_id", "left")
-            .withColumn(
-                "fused_score", F.col("fused_score") + F.coalesce("floor", F.lit(0.0))
-            )
-            .drop("floor")
-        )
-    return fused
+    return scored.groupBy("doc_id").agg(F.sum("contribution").alias("fused_score"))
 
 
 def apply_hotzone_boost(
@@ -534,82 +483,3 @@ def global_rank(
     return parted.withColumn(
         rank_col, (F.row_number().over(w) + off_expr).cast("int")
     ).drop("__pid")
-
-
-def topk_with_rescue(
-    results: DataFrame,
-    limit: int,
-    rescue_slots: int = 0,
-    eligible_col: str | None = None,
-) -> DataFrame:
-    """Truncate to ``limit`` by (score desc, id asc); then additively append
-    up to ``rescue_slots`` eligible tail candidates — rescue never displaces
-    the head (evidence_search_pipeline.cpp:250-332).
-
-    Both head and tail are ``orderBy().limit()`` (TakeOrderedAndProject —
-    a per-partition top-k then a k-row merge), never a global rank window:
-    no single-partition sort at any scale.
-    """
-    order = [F.col("fused_score").desc(), F.col("doc_id").asc()]
-    head = results.orderBy(*order).limit(limit)
-    if rescue_slots > 0 and eligible_col is not None:
-        tail = (
-            results.join(head.select("doc_id"), "doc_id", "left_anti")
-            .where(F.col(eligible_col))
-            .orderBy(*order)
-            .limit(rescue_slots)
-        )
-        return head.unionByName(tail)
-    return head
-
-
-def rerank_scores_overlap(
-    head: DataFrame,
-    docs: DataFrame,
-    query_text: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Deterministic cross-encoder stand-in feeding ``cross_rerank_blend``
-    (the reference reranks its top-5 with an ONNX cross-encoder,
-    cross_rerank.cpp:60-160; model inference is out of scope here, so the
-    scorer is query↔document token-set Jaccard — same stand-in policy as
-    the feature-hash embedding). Pure Catalyst: tokenize both sides,
-    array_intersect/array_union sizes; head is already tiny (top-5), so the
-    join broadcasts."""
-    from yams_spark.functions.textnorm import tokenize_lower
-
-    q_tokens = sorted(set(tokenize_lower(query_text)))
-    q_arr = F.array(*[F.lit(t) for t in q_tokens]) if q_tokens else F.array()
-    toks = F.expr(
-        f"array_distinct(filter(split(lower(regexp_replace({text_col}, "
-        "'[^0-9a-zA-Z]+', ' ')), ' '), x -> x <> ''))"
-    )
-    scored = head.join(
-        docs.select(F.col(id_col).cast("string").alias(id_col), toks.alias("__t")),
-        id_col,
-    )
-    inter = F.size(F.array_intersect(F.col("__t"), q_arr))
-    union = F.size(F.array_union(F.col("__t"), q_arr))
-    return scored.withColumn(
-        "rerank_score",
-        F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
-            F.lit(0.0)
-        ),
-    ).drop("__t")
-
-
-def cross_rerank_blend(head: DataFrame) -> DataFrame:
-    """cross_rerank.cpp:60-160: min-max normalize both score sets over the
-    head and blend final = alpha·rerankNorm + (1-alpha)·origNorm; if either
-    set has no variance the original ordering is kept."""
-    alpha = 0.30
-    rng = head.agg(
-        F.min("fused_score").alias("omn"), F.max("fused_score").alias("omx"),
-        F.min("rerank_score").alias("rmn"), F.max("rerank_score").alias("rmx"),
-    ).collect()[0]
-    if rng["omx"] == rng["omn"] or rng["rmx"] == rng["rmn"]:
-        return head.withColumn("blended_score", F.col("fused_score"))
-    onorm = (F.col("fused_score") - rng["omn"]) / (rng["omx"] - rng["omn"])
-    rnorm = (F.col("rerank_score") - rng["rmn"]) / (rng["rmx"] - rng["rmn"])
-    return head.withColumn("blended_score", F.lit(alpha) * rnorm + F.lit(1 - alpha) * onorm)

@@ -133,21 +133,13 @@ SIGNATURE_SPARK_SCHEMA = (
 )
 
 
-def signatures_stage(pages_df, chunk_cfg: ChunkingConfig = PAGE_CHUNKING,
-                     embed_fn=None):
+def signatures_stage(pages_df, chunk_cfg: ChunkingConfig = PAGE_CHUNKING):
     """pages (url, warc_ts, html, text, lang) -> signatures DataFrame.
 
     One mapInPandas pass (Arrow-batched, no per-row Python UDF calls from
-    the JVM); narrow — no shuffle.
-
-    ``embed_fn`` is the real-model seam (the reference embeds through a
-    tokenizer + batched ONNX backend, embedding_generator.cpp:386-407):
-    a picklable callable ``list[str] -> sequence of float vectors`` invoked
-    once per Arrow batch with the extracted texts — the same batching
-    contract the reference's adaptive-batch generator has, so a user can
-    drop in any batched model (sentence-transformers, ONNX session, ...)
-    without touching the pipeline. Default None keeps the deterministic
-    feature-hash stand-in that the correctness oracles share.
+    the JVM); narrow — no shuffle. Embeddings are the deterministic
+    feature-hash stand-in the correctness oracles share; vectors from a
+    real model come in through ``run_pipeline(precomputed_embeddings=)``.
     """
 
     def compute(iterator):
@@ -158,10 +150,6 @@ def signatures_stage(pages_df, chunk_cfg: ChunkingConfig = PAGE_CHUNKING,
                 sig["warc_ts"] = r.warc_ts
                 sig["lang"] = r.lang
                 rows.append(sig)
-            if rows and embed_fn is not None:
-                embs = embed_fn([r["extracted_text"] for r in rows])
-                for r, e in zip(rows, embs):
-                    r["embedding"] = np.asarray(e, dtype=np.float32)
             if rows:
                 out = pd.DataFrame(rows)
                 yield out[

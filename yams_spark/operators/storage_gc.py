@@ -139,33 +139,26 @@ def gc_collect(
     now_ts: int,
     min_age_seconds: int = 0,
     max_blocks: int = 1000,
-    dry_run: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """One GC run (garbage_collector.cpp:116-196): returns
     ``(stats, surviving_refs)``.
 
     ``stats`` is the one-row ``GCStats`` rollup — ``blocks_scanned``
     (candidates returned), ``blocks_deleted`` / ``bytes_reclaimed``
-    (0 on dry runs, garbage_collector.cpp:85-97; bytes are the stored
-    block size, the ``getBlockSize`` the reference sums) — plus the
-    ``ref_statistics`` counter deltas ``recordCollectionStatistics``
-    applies (gc_runs / gc_blocks_collected / gc_bytes_reclaimed,
-    garbage_collector.cpp:32-41: all zero when dryRun or nothing
-    deleted). ``surviving_refs`` is the store after the run: an
-    anti-join against the deleted set (identity on dry runs), i.e. the
+    (garbage_collector.cpp:85-97; bytes are the stored block size, the
+    ``getBlockSize`` the reference sums) — plus the ``ref_statistics``
+    counter deltas ``recordCollectionStatistics`` applies (gc_runs /
+    gc_blocks_collected / gc_bytes_reclaimed, garbage_collector.cpp:32-41:
+    all zero when nothing is deleted). ``surviving_refs`` is the store
+    after the run: an anti-join against the deleted set, i.e. the
     transaction's ``pruneReference`` batch applied atomically."""
     cand = gc_candidates(refs, now_ts, min_age_seconds, max_blocks)
-    scanned = F.count(F.lit(1))
-    deleted = F.lit(0).cast("long") if dry_run else F.count(F.lit(1))
-    reclaimed = (
-        F.lit(0).cast("long")
-        if dry_run
-        else F.coalesce(F.sum("block_size"), F.lit(0))
-    )
     stats = cand.agg(
-        scanned.cast("long").alias("blocks_scanned"),
-        deleted.cast("long").alias("blocks_deleted"),
-        reclaimed.cast("long").alias("bytes_reclaimed"),
+        F.count(F.lit(1)).cast("long").alias("blocks_scanned"),
+        F.count(F.lit(1)).cast("long").alias("blocks_deleted"),
+        F.coalesce(F.sum("block_size"), F.lit(0)).cast("long").alias(
+            "bytes_reclaimed"
+        ),
     ).select(
         "*",
         F.when(F.col("blocks_deleted") > 0, F.lit(1))
@@ -175,12 +168,9 @@ def gc_collect(
         F.col("blocks_deleted").alias("gc_blocks_collected"),
         F.col("bytes_reclaimed").alias("gc_bytes_reclaimed"),
     )
-    if dry_run:
-        survivors = refs
-    else:
-        survivors = refs.join(
-            cand.select("block_hash"), on="block_hash", how="left_anti"
-        )
+    survivors = refs.join(
+        cand.select("block_hash"), on="block_hash", how="left_anti"
+    )
     return stats, survivors
 
 

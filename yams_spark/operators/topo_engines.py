@@ -37,10 +37,11 @@ the Spark way:
   (makeClusterId, :30-32), cohesion/persistence/density/bridge metrics,
   protected vs preserved pair counts, weighted-degree medoids with the
   1e-9 min-hash tie rule, float32 member-mean centroids
-  (topology_build_utils.h:27-56), per-member roles, then the
-  ``select_routing_representatives`` and ``orthogonal_boundary_spill``
-  post-passes composed from ``operators/topo_reps``. Everything is
-  keyed aggregation + windows; no driver materialisation.
+  (topology_build_utils.h:27-56) and per-member roles. Everything is
+  keyed aggregation + windows; no driver materialisation. At the
+  reference's defaults (one routing representative, no overlap) its
+  representative and spill post-passes add nothing, so they are not
+  run here; ``operators/topo_reps`` implements both.
 """
 
 from __future__ import annotations
@@ -52,11 +53,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from yams_spark.operators.topo_reps import (
-    orthogonal_boundary_spill,
-    select_routing_representatives,
-)
-
 #: same driver-finish bound class as clustering.DRIVER_CC_MAX_EDGES
 LOUVAIN_MAX_DRIVER_EDGES = 2_000_000
 
@@ -66,15 +62,13 @@ CLUSTER_ID_PREFIX = "topology.cluster."  # makeClusterId (:30-32)
 def build_pair_weights(
     neighbors: DataFrame,
     documents: DataFrame,
-    reciprocal_only: bool = True,
-    min_edge_score: float = 0.0,
 ) -> DataFrame:
     """(lo_hash, hi_hash, weight): undirected max-weight pairs from the
-    directed neighbor lists (buildPairWeights, :49-82). ``neighbors``:
-    (doc_hash, neighbor_hash, score float, reciprocal boolean);
-    ``documents`` supplies the existence filter (:58-61). The reference
-    compares ``score < float(minEdgeScore)`` in float32 (:69), hence the
-    float32 cast on the threshold."""
+    reciprocal edges of the directed neighbor lists (buildPairWeights,
+    :49-82). ``neighbors``: (doc_hash, neighbor_hash, score float,
+    reciprocal boolean); ``documents`` supplies the existence filter
+    (:58-61). The reference drops ``score < float(minEdgeScore)`` in
+    float32 (:69) at its default minEdgeScore of 0."""
     known = documents.select(F.col("doc_hash").alias("_known")).where(
         F.col("_known") != ""
     ).distinct()
@@ -84,9 +78,7 @@ def build_pair_weights(
         F.col("score").cast("float").alias("weight"),
         F.col("reciprocal").alias("reciprocal"),
     ).where((F.col("src") != "") & (F.col("dst") != "") & (F.col("src") != F.col("dst")))
-    if reciprocal_only:
-        e = e.where(F.col("reciprocal"))
-    e = e.where(F.col("weight") >= float(np.float32(min_edge_score)))
+    e = e.where(F.col("reciprocal")).where(F.col("weight") >= 0.0)
     e = e.join(known.withColumnRenamed("_known", "src"), "src", "left_semi")
     e = e.join(known.withColumnRenamed("_known", "dst"), "dst", "left_semi")
     return (
@@ -438,21 +430,16 @@ def build_batch_from_assignment(
     documents: DataFrame,
     labels: DataFrame,
     pair_weights: DataFrame,
-    routing_representative_count: int = 1,
-    allow_overlap: bool = False,
-    overlap_limit: int = 1,
-    overlap_boundary_distance_ratio: float = 1.05,
-    overlap_residual_penalty: float = 1.0,
 ) -> dict[str, DataFrame]:
-    """{'clusters', 'memberships', 'routing_reps', 'spills'}: the shared
-    assignment→artifact builder (buildBatchFromAssignment, :100-266).
+    """{'clusters', 'memberships'}: the shared assignment→artifact
+    builder (buildBatchFromAssignment, :100-266).
     ``labels`` holds opaque bucket keys (doc_hash, label); cluster ids
     are ``topology.cluster.<min member hash>`` (:141 via the hash-sorted
     member ordering at :127-135). All metrics are keyed aggregations on
     the pair table; medoids are per-cluster windows; centroids are
-    float32 member-mean applyInPandas (topology_build_utils.h:27-56);
-    the representative and spill post-passes compose from
-    ``operators/topo_reps`` (:219, :263)."""
+    float32 member-mean applyInPandas (topology_build_utils.h:27-56).
+    With one routing representative per cluster and no overlap (the
+    reference defaults) the post-passes at :219 and :263 emit no rows."""
     docs = documents.select(
         F.col("doc_hash"),
         F.col("embedding"),
@@ -641,40 +628,7 @@ def build_batch_from_assignment(
         )
     )
 
-    cent_df = clusters.select("cluster_id", "centroid").where(
-        F.size("centroid") > 0
-    )
-    reps_members = mem.select(
-        F.col("cluster_id"), "doc_hash", "embedding"
-    ).join(cent_df.select("cluster_id"), "cluster_id", "left_semi")
-    routing_reps = select_routing_representatives(
-        reps_members, cent_df, routing_representative_count,
-        cluster_col="cluster_id",
-    )
-
-    if allow_overlap:
-        spill_mem = memberships.select(
-            "doc_hash",
-            F.col("cluster_id"),
-            "role",
-            F.array().cast("array<string>").alias("overlap_cluster_ids"),
-        )
-        spills = orthogonal_boundary_spill(
-            spill_mem, cent_df, docs,
-            overlap_limit=overlap_limit,
-            boundary_ratio=overlap_boundary_distance_ratio,
-            residual_penalty=overlap_residual_penalty,
-        )
-    else:
-        spills = documents.sparkSession.createDataFrame(
-            [],
-            "doc_hash string, primary_cluster string, spill_cluster string, "
-            "spill_rank int, loss double",
-        )
-
     return {
         "clusters": clusters.drop("label"),
         "memberships": memberships,
-        "routing_reps": routing_reps,
-        "spills": spills,
     }

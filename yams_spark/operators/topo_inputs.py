@@ -16,8 +16,8 @@ Reference:
     destination, ``reciprocal`` = an incoming edge from that
     destination exists, score-desc / hash-asc order, capped at
     ``maxNeighborsPerDocument``. (The reference additionally bounds the
-    edge FETCH at ``max(4*maxN, maxN)`` rows in store order —
-    ``scan_cap`` reproduces that bound (over ``edge_id``) when wanted.)
+    edge FETCH at ``max(4*maxN, maxN)`` rows in store order; here the
+    whole edge set is the scan.)
   - ``computeVarianceWeights`` (:114-165): per-dimension population
     variance over the first ≤4096 sample embeddings, top-``targetDim``
     dims by variance, weight = sqrt(var) in a dense full-dim vector
@@ -174,37 +174,25 @@ def collect_topology_neighbors(
     edges: DataFrame,
     nodes: DataFrame,
     max_neighbors: int = 32,
-    scan_cap: int | None = None,
 ) -> DataFrame:
     """collectNeighborsForDocument (:432-506) for every document at once.
 
-    ``edges``: (src_node_id, dst_node_id, weight[, edge_id]) —
+    ``edges``: (src_node_id, dst_node_id, weight) —
     semantic_neighbor rows. ``nodes``: (node_id, node_key). Only
-    ``doc:``-prefixed destinations survive (:479-481). When ``scan_cap``
-    is given, the per-node bidirectional fetch bound
-    ``max(4*maxN, maxN)`` (:436-438) is reproduced by ranking touched
-    edges per anchor node on ``edge_id`` (the store's scan order)
-    before the dedup — omitted by default, where the whole edge set is
-    the scan.
+    ``doc:``-prefixed destinations survive (:479-481). The whole edge
+    set is the scan: the reference's per-node fetch bound
+    ``max(4*maxN, maxN)`` (:436-438) is not applied.
     """
     touched = edges.select(
         F.col("src_node_id"),
         F.col("dst_node_id"),
         F.col("weight"),
-        *([F.col("edge_id")] if scan_cap is not None else []),
         F.explode(
             F.array_distinct(
                 F.array(F.col("src_node_id"), F.col("dst_node_id"))
             )
         ).alias("anchor"),
     )
-    if scan_cap is not None:
-        w = Window.partitionBy("anchor").orderBy(F.col("edge_id").asc())
-        touched = (
-            touched.withColumn("_srk", F.row_number().over(w))
-            .where(F.col("_srk") <= scan_cap)
-            .drop("_srk", "edge_id")
-        )
     outgoing = (
         touched.where(F.col("anchor") == F.col("src_node_id"))
         .groupBy(F.col("anchor"), F.col("dst_node_id"))

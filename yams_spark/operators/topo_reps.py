@@ -22,11 +22,9 @@ the Spark way:
   codegen, the ratio gate and the SOAR loss
   ``|x-c|² + λ·⟨x-p, x-c⟩²/|x-p|²`` (:246-252) are plain column
   expressions, and the per-document rank is a doc-partitioned window.
-  At scale the docs × clusters fanout is the same shape the reference
-  bounds with its centroid ANN shortlist (:158-164): pass
-  ``candidates`` (doc_hash, cluster_id — e.g. from
-  ``ann.cosine_topk`` over the centroid table) to replace the broadcast
-  fanout with an equi-join; the gate/loss/rank pipeline is unchanged.
+  The docs × clusters fanout is a broadcast nested-loop join; the
+  reference bounds it at scale with a centroid ANN shortlist (:158-164),
+  which is not implemented here.
 
 The reference's eps-tolerant loss comparator (:264-270, ties within
 1e-12 fall back to cluster id) is realised as ``ORDER BY loss,
@@ -109,24 +107,13 @@ def select_routing_representatives(
     members: DataFrame,
     clusters: DataFrame,
     count: int,
-    cluster_col: str = "cluster_id",
 ) -> DataFrame:
     """(cluster_id, sel_order, doc_hash, sel_distance): up to ``count-1``
     extra routing representatives per cluster. ``clusters`` (id,
     centroid) is broadcast — it is bounded cluster metadata; the keyed
     ``applyInPandas`` shuffles members once on the cluster key."""
-    joined = members.select(
-        F.col(cluster_col).alias("cluster_id"),
-        F.col("doc_hash"),
-        F.col("embedding"),
-    ).join(
-        F.broadcast(
-            clusters.select(
-                F.col(cluster_col).alias("cluster_id"),
-                F.col("centroid"),
-            )
-        ),
-        "cluster_id",
+    joined = members.select("cluster_id", "doc_hash", "embedding").join(
+        F.broadcast(clusters.select("cluster_id", "centroid")), "cluster_id"
     )
 
     def pick(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -176,10 +163,6 @@ def orthogonal_boundary_spill(
     overlap_limit: int = 1,
     boundary_ratio: float = 1.05,
     residual_penalty: float = 1.0,
-    allow_overlap: bool = True,
-    candidates: DataFrame | None = None,
-    cluster_col: str = "cluster_id",
-    hash_col: str = "doc_hash",
 ) -> DataFrame:
     """(doc_hash, primary_cluster, spill_cluster, spill_rank, loss):
     bounded secondary assignments per applyOrthogonalBoundarySpill
@@ -187,10 +170,9 @@ def orthogonal_boundary_spill(
 
     ``memberships``: (doc_hash, cluster_id, role, overlap_cluster_ids);
     ``clusters``: (cluster_id, centroid array<float>); ``documents``:
-    (doc_hash, embedding array<float>). ``candidates`` optionally
-    pre-prunes the doc→cluster fanout (the ANN-shortlist seam, :204-220);
-    omitted, every other cluster is evaluated via the broadcast cluster
-    table — correct for bounded cluster counts, and the fixture path.
+    (doc_hash, embedding array<float>). Every other cluster is evaluated
+    via the broadcast cluster table (:204-220) — correct for bounded
+    cluster counts.
     """
     spark = memberships.sparkSession
     empty = spark.createDataFrame(
@@ -200,28 +182,22 @@ def orthogonal_boundary_spill(
     )
     # :96-101 config guard
     if (
-        not allow_overlap
-        or overlap_limit <= 0
+        overlap_limit <= 0
         or not math.isfinite(boundary_ratio)
         or boundary_ratio < 1.0
         or not math.isfinite(residual_penalty)
         or residual_penalty < 0.0
     ):
         return empty
-    cents = clusters.select(
-        F.col(cluster_col).alias("cluster_id"),
-        F.col("centroid").alias("centroid"),
-    ).where(F.size("centroid") > 0)
+    cents = clusters.select("cluster_id", "centroid").where(F.size("centroid") > 0)
     if len(cents.limit(2).take(2)) < 2:  # :96 — fewer than 2 clusters
         return empty
 
-    docs = documents.select(
-        F.col(hash_col).alias("doc_hash"), F.col("embedding").alias("embedding")
-    ).where((F.col("doc_hash") != "") & (F.size("embedding") > 0))
+    docs = documents.select("doc_hash", "embedding").where((F.col("doc_hash") != "") & (F.size("embedding") > 0))
     mem = memberships.select(
-        F.col(hash_col).alias("doc_hash"),
-        F.col(cluster_col).alias("cluster_id"),
-        F.col("role").alias("role"),
+        "doc_hash",
+        "cluster_id",
+        "role",
         F.coalesce(F.col("overlap_cluster_ids"), F.array()).alias("ov"),
     )
 
@@ -269,8 +245,8 @@ def orthogonal_boundary_spill(
                 "embedding", "p_res", "p2")
     )
 
-    # Candidate fanout: ANN shortlist when provided, else every other
-    # cluster via the broadcast artifact table (:204-220).
+    # Candidate fanout: every other cluster via the broadcast artifact
+    # table (:204-220).
     cand_cents = cents.select(
         F.col("cluster_id").alias("spill_cluster"),
         F.col("centroid").alias("cand_centroid"),
@@ -281,20 +257,10 @@ def orthogonal_boundary_spill(
         "spill_cluster",
         "left",
     ).withColumn("cand_r2", F.coalesce(F.col("cand_r2"), F.lit(0.0)))
-    if candidates is not None:
-        short = candidates.select(
-            F.col(hash_col).alias("doc_hash"),
-            F.col(cluster_col).alias("spill_cluster"),
-        )
-        fan = prim.join(short, "doc_hash").join(
-            F.broadcast(cand_cents), "spill_cluster"
-        )
-    else:
-        # bounded-cluster fanout: broadcast NLJ over cluster metadata,
-        # the same full scan the reference takes under its ANN-build
-        # threshold (:214-220); scale path is the `candidates` shortlist.
-        fan = prim.crossJoin(F.broadcast(cand_cents))
-    fan = fan.where(
+    # bounded-cluster fanout: broadcast NLJ over cluster metadata, the
+    # same full scan the reference takes under its ANN-build threshold
+    # (:214-220)
+    fan = prim.crossJoin(F.broadcast(cand_cents)).where(
         (F.col("spill_cluster") != F.col("primary_cluster"))
         & (F.size("cand_centroid") == F.size("embedding"))
     )

@@ -66,8 +66,6 @@ def route_clusters(
     alpha: float = 0.5,
     scoring_mode: str = "current",
     limit: int = 0,
-    hotzone: DataFrame | None = None,
-    hotzone_weight: float = 0.0,
 ) -> DataFrame:
     """clusters (cluster_id, member_count, persistence, cohesion, centroid
     [, medoid_hash]) × memberships (doc_hash, cluster_id) → scored routes.
@@ -80,13 +78,6 @@ def route_clusters(
     ``alpha`` blends sparse seed mass with the dense centroid signal;
     ``alpha >= 1`` skips the dense computation entirely, exactly like the
     reference (:871, :889).
-
-    ``hotzone`` (cluster_id, boost in [1, 2]) composes the repo's
-    recency-boost surface (streaming/hotzone.py, hotzone_manager.h:15-59)
-    onto routing the same way hybrid_search applies it to fused scores:
-    route_score' = route_score · (1 + hotzone_weight · (boost − 1)).
-    The reference keeps hotzones in the member-level rescorer only; this
-    cluster-level composition is the stated extension.
     """
     if scoring_mode not in ROUTE_SCORING_MODES:
         raise ValueError(f"scoring_mode must be one of {ROUTE_SCORING_MODES}")
@@ -151,16 +142,6 @@ def route_clusters(
     else:
         score = blended + F.col("persistence") * 0.05
 
-    if hotzone is not None and hotzone_weight > 0.0:
-        out = out.join(
-            F.broadcast(hotzone.select("cluster_id", "boost")), "cluster_id", "left"
-        )
-        score = score * (
-            1.0
-            + F.lit(float(hotzone_weight))
-            * (F.coalesce(F.col("boost"), F.lit(1.0)) - 1.0)
-        )
-
     scored = out.select(
         "cluster_id",
         score.alias("route_score"),
@@ -190,19 +171,17 @@ def select_routes_for_narrowing(
     min_clusters: int,
     max_clusters: int,
     adaptive_score_gap: float = 0.0,
-    min_boundary_margin: float = 0.0,
 ) -> dict:
     """Exact replica of ``selectTopologyRoutesForNarrowing``
     (topology_routing_session.cpp:130-160) over the ≤limit scored routes
     (already sorted by route_score desc / cluster_id asc).
 
-    Returns {routes, available_routes, boundary_score_margin, abstained}.
+    Returns {routes, available_routes, boundary_score_margin}.
     """
     sel = {
         "routes": [],
         "available_routes": len(routes),
         "boundary_score_margin": 0.0,
-        "abstained": False,
     }
     if not routes:
         return sel
@@ -221,10 +200,6 @@ def select_routes_for_narrowing(
     if selected < len(routes):
         sel["boundary_score_margin"] = (
             routes[selected - 1]["route_score"] - routes[selected]["route_score"]
-        )
-        sel["abstained"] = (
-            min_boundary_margin > 0.0
-            and sel["boundary_score_margin"] < min_boundary_margin
         )
     return sel
 

@@ -71,10 +71,6 @@ class PipelineConfig:
     #: runs that once per round to time it at measured scale
     driver_cc_max_edges: int = -1  # -1 = library default
     chunk_cfg: ChunkingConfig = field(default_factory=lambda: PAGE_CHUNKING)
-    #: real-embedding-model seam (embedding_generator.cpp:386-407): a
-    #: picklable ``list[str] -> vectors`` batch callable; None keeps the
-    #: deterministic feature-hash stand-in the oracles share
-    embed_fn: object | None = None
     checkpoint_dir: str | None = None
     run_id: str = ""
 
@@ -181,11 +177,7 @@ def run_pipeline(
     # is a free lower bound on scan parallelism — touching pages.rdd would
     # force a deserialization plan node just to ask the same question.
     par = spark.sparkContext.defaultParallelism
-    try:
-        n_splits = len(pages.inputFiles())
-    except Exception:
-        n_splits = 0
-    if n_splits < par:
+    if len(pages.inputFiles()) < par:
         pages = pages.repartition(par * 2)
 
     # Scale-adaptive shuffle partitioning (guide §2.2): never run the
@@ -194,11 +186,7 @@ def run_pipeline(
     # high core counts, while AQE's advisory-size coalescing still merges
     # anything that comes out tiny. Only ever raises, never lowers, so an
     # explicit cluster-tuned setting wins.
-    try:
-        cur_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cur_parts = 0
-    if 0 < cur_parts < 2 * par:
+    if int(spark.conf.get("spark.sql.shuffle.partitions")) < 2 * par:
         spark.conf.set("spark.sql.shuffle.partitions", str(2 * par))
 
     # The one stage rule (module docstring). Lineage is read once all of a
@@ -231,7 +219,7 @@ def run_pipeline(
         return [df for df, _ in committed]
 
     def sign():  # extract + signatures; narrow, no shuffle
-        sig = signatures_stage(pages, cfg.chunk_cfg, embed_fn=cfg.embed_fn)
+        sig = signatures_stage(pages, cfg.chunk_cfg)
         if precomputed_embeddings is not None:
             pre = precomputed_embeddings.select(
                 "url", F.col("embedding").alias("_pre_embedding")

@@ -23,46 +23,35 @@ DEFAULT_HALF_LIFE_HOURS = 24.0  # hotzone_manager.h:19
 DEFAULT_MAX_BOOST = 2.0  # hotzone_manager.h:21
 
 
-def decay_factor(hours: float, half_life_hours: float = DEFAULT_HALF_LIFE_HOURS) -> float:
+def decay_factor(hours: float) -> float:
     """hotzone_manager.cpp:18-23."""
-    if half_life_hours <= 0.0:
-        return 0.0
-    return 0.5 ** (hours / half_life_hours)
+    return 0.5 ** (hours / DEFAULT_HALF_LIFE_HOURS)
 
 
-def boost_from_score(score: float, max_boost: float = DEFAULT_MAX_BOOST) -> float:
+def boost_from_score(score: float) -> float:
     """hotzone_manager.cpp:55-60 (soft saturation)."""
-    max_b = max(1.0, max_boost)
     sat = (1.0 - math.exp(-score)) / (1.0 - math.exp(-1.0))
     sat = min(max(sat, 0.0), 1.0)
-    boost = 1.0 + (max_b - 1.0) * sat
-    return min(max(boost, 1.0), max_b)
+    boost = 1.0 + (DEFAULT_MAX_BOOST - 1.0) * sat
+    return min(max(boost, 1.0), DEFAULT_MAX_BOOST)
 
 
 def fold_events(
     events: list[tuple[datetime, float]],
-    initial_score: float = 0.0,
-    initial_ts: datetime | None = None,
 ) -> tuple[float, datetime | None]:
-    """record() semantics (hotzone_manager.cpp:25-41) folded over a sorted
-    event list: score = score·decay(elapsed) + weight. Elapsed is truncated
-    to whole minutes like the C++ duration_cast, and clamped to >= 0: the
-    reference decays against wall-clock *now*, which can never run
-    backwards, so an out-of-order event (older than the stored last_ts
-    across micro-batches) only adds weight — it must not inflate the score
-    via 0.5^(negative) > 1 inverse decay."""
-    score, last = initial_score, initial_ts
+    """record() semantics (hotzone_manager.cpp:25-41) folded over the
+    events in time order: score = score·decay(elapsed) + weight. Elapsed
+    is truncated to whole minutes like the C++ duration_cast."""
+    score, last = 0.0, None
     for ts, weight in sorted(events, key=lambda e: e[0]):
         if weight <= 0.0:
             continue
         if last is None:
             score, last = weight, ts
             continue
-        minutes = max(0, int((ts - last).total_seconds() // 60))
-        hours = minutes / 60.0
-        score = score * decay_factor(hours) + weight
-        if ts > last:
-            last = ts
+        minutes = int((ts - last).total_seconds() // 60)
+        score = score * decay_factor(minutes / 60.0) + weight
+        last = ts
     return score, last
 
 
